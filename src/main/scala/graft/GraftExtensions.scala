@@ -2,116 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{MinHashSig, ShingleHashes, SimHash64, VectorFunctions, WeekOfMonth}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Deployment-grade registration: inject the engine's functions through
   * SparkSessionExtensions so any session created with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) has them from birth — no
   * imperative register() call, which matters for SQL-only users
-  * (thrift/connect) who never touch Scala.
+  * (thrift/connect) who never touch Scala. Installs the same
+  * [[GraftFunctions.functions]] table as [[GraftFunctions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("week_of_month"),
-      info("week_of_month", "week_of_month(date) - Postgres to_char-'W' week of month (1-5)"),
-      (exprs: Seq[Expression]) => WeekOfMonth.builder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("dot_f"),
-      info("dot_f", "dot_f(a, b) - dot product of two float arrays"),
-      (exprs: Seq[Expression]) => VectorFunctions.builder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(text, n) - distinct rolling n-char window hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(hashes, k) - k-minima MinHash signature"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("topk_pairs"),
-      info("topk_pairs", "topk_pairs(score, id, k) - bounded top-k (score desc, id asc) pairs"),
-      (exprs: Seq[Expression]) => graft.functions.TopKPairs(
-        exprs.head, exprs(1), GraftFunctions.intLitOf(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("dot_l"),
-      info("dot_l", "dot_l(a, b) - integer dot product of two bigint arrays"),
-      (exprs: Seq[Expression]) => graft.functions.DotL(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("min_k_ids"),
-      info("min_k_ids", "min_k_ids(id, k) - bounded k smallest ids of the group, sorted"),
-      (exprs: Seq[Expression]) => graft.functions.MinKIds(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("char_shingles"),
-      info("char_shingles", "char_shingles(text, n) - sorted distinct character n-gram substrings"),
-      (exprs: Seq[Expression]) => graft.functions.CharShingles(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(text, n) - sorted distinct lowercased word n-gram shingles"),
-      (exprs: Seq[Expression]) => graft.functions.WordShingles(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("md5_minhash_sig"),
-      info("md5_minhash_sig", "md5_minhash_sig(text, n, k) - engine-reproducible md5/affine MinHash signature"),
-      (exprs: Seq[Expression]) => graft.functions.Md5MinhashSig(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)), GraftFunctions.intLitOf(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("md5_simhash"),
-      info("md5_simhash", "md5_simhash(tokens) - struct(sim_hi, sim_lo) md5-based SimHash halves"),
-      (exprs: Seq[Expression]) => graft.functions.Md5Simhash(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("gram_stats"),
-      info("gram_stats", "gram_stats(arr) - struct(n_distinct, max_freq) of a string array"),
-      (exprs: Seq[Expression]) => graft.functions.GramStats(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("ilog2_fp"),
-      info("ilog2_fp", "ilog2_fp(x, fracBits) - fixed-point integer log2(x) * 2^fracBits"),
-      (exprs: Seq[Expression]) => graft.functions.Ilog2Fp(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("script_counts"),
-      info("script_counts", "script_counts(text) - per-Unicode-script codepoint counts struct"),
-      (exprs: Seq[Expression]) => graft.functions.ScriptCounts(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("nfc"),
-      info("nfc", "nfc(text) - Unicode NFC normalization"),
-      (exprs: Seq[Expression]) => graft.functions.Nfc(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("script_tokens"),
-      info("script_tokens", "script_tokens(text) - script-aware tokens: one per CJK codepoint, whitespace words elsewhere"),
-      (exprs: Seq[Expression]) => graft.functions.ScriptTokens(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("repetition_stats"),
-      info("repetition_stats", "repetition_stats(tokens) - token+bigram repetition counts"),
-      (exprs: Seq[Expression]) => graft.functions.RepetitionStats(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("freq_sketch"),
-      info("freq_sketch", "freq_sketch(term, k) - Misra-Gries struct(items, total) frequency sketch"),
-      (exprs: Seq[Expression]) => graft.functions.FreqSketch(
-        exprs.head, GraftFunctions.intLitOf(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("sum_vec_l"),
-      info("sum_vec_l", "sum_vec_l(array<bigint>) - element-wise vector sum aggregate"),
-      (exprs: Seq[Expression]) => graft.functions.VectorSumL(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      info("bloom_agg", "bloom_agg(xxhash64(col)[, est_items[, num_bits]]) - binary Bloom filter aggregate"),
-      (exprs: Seq[Expression]) => GraftFunctions.bloomAggBuilder(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("might_contain"),
-      info("might_contain", "might_contain(bloom, xxhash64(col)) - Bloom filter membership probe"),
-      (exprs: Seq[Expression]) => GraftFunctions.mightContainBuilder(exprs)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.functions.foreach { case (name, usage, builder) =>
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""),
+        builder))
+    }
 }

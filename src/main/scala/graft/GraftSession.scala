@@ -47,19 +47,16 @@ object GraftSession {
       // when forced to sort). 16 keeps every <=16-reducer shuffle on
       // the bypass writer (the replay/micro-batch posture) and moves
       // session-width batch shuffles to the sort writer the 100 TB
-      // posture (>200 reducers) already uses. Env-overridable; a writer
-      // choice, not a plan change — results are identical either way.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "16"))
+      // posture (>200 reducers) already uses. A writer choice, not a
+      // plan change — results are identical either way.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "16")
       // Partition discovery of the bucketed index tables (64 hive dirs)
       // trips the default 32-path threshold and runs a DISTRIBUTED
       // listing job (~0.2 s of scheduler fixed cost) for what is a
       // handful of driver-side metadata calls; several such reads run
       // per index op. Driver-side listing stays the right call well
-      // into the hundreds of directories on HDFS-like and local stores;
-      // deployments on slow object stores can lower it back via env.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "512"))
+      // into the hundreds of directories on HDFS-like and local stores.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
 
   /** Local session for tests/benchmarks. */
   def local(appName: String, cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -80,8 +80,10 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * trip_date), and Spark's dynamic partition overwrite replaces just
     * the recomputed buckets on disk. A full refresh scans ALL history
     * every batch; at 100 TB with time-bounded batch arrivals this scans
-    * a handful of week partitions instead. Falls back to the full
-    * refresh when the view does not exist yet.
+    * a handful of week partitions instead. Rows whose date_time does
+    * not parse fall in the view's NULL bucket, recomputed from the
+    * NULL-date hist partition when the batch holds any. Falls back to
+    * the full refresh when the view does not exist yet.
     */
   def refreshSummarizedViewIncremental(batch: DataFrame): Unit = {
     import org.apache.spark.sql.{functions => F}
@@ -97,23 +99,26 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     // so collecting them to plan the prune is a scalar-sized action
     val dates = batch
       .select(F.to_date(F.col("date_time")).as("d")).distinct()
-      .collect().map(_.getDate(0).toLocalDate)
-    if (dates.isEmpty) return
+      .collect().map(r => Option(r.getDate(0)).map(_.toLocalDate))
     // affected week-of-month windows: [monthStart + 7*(w-1), +7) capped
     // at month end — the same blocks the view buckets by
-    val windows = dates.map { d =>
+    val windows = dates.flatten.map { d =>
       val start = d.withDayOfMonth(1).plusDays(((d.getDayOfMonth - 1) / 7) * 7L)
       val end0 = start.plusDays(6)
       val monthEnd = d.withDayOfMonth(d.lengthOfMonth)
       (start, if (end0.isAfter(monthEnd)) monthEnd else end0)
     }.distinct
-    val prune = windows.map { case (s, e) =>
+    val ranges = windows.map { case (s, e) =>
       F.col("trip_date").between(
         F.lit(java.sql.Date.valueOf(s)), F.lit(java.sql.Date.valueOf(e)))
-    }.reduce(_ || _)
-    val recomputed = TripQueries.weeklyAvgTripsPerRegion(hist.filter(prune))
-    catalog.overwritePartitioned(ViewTable, recomputed,
-      Seq("week_of_month"), dynamic = true)
+    }
+    val nullBucket =
+      if (dates.contains(None)) Some(F.col("trip_date").isNull) else None
+    (ranges ++ nullBucket).reduceOption(_ || _).foreach { prune =>
+      val recomputed = TripQueries.weeklyAvgTripsPerRegion(hist.filter(prune))
+      catalog.overwritePartitioned(ViewTable, recomputed,
+        Seq("week_of_month"), dynamic = true)
+    }
   }
 
   /** Declared view schema — read schema-first: bucket strings like

@@ -101,7 +101,10 @@ object Upsert {
     * range (+/- nothing — collisions require equal keys, and equal keys
     * imply equal bound values since the bound participates in the key),
     * so with a date-partitioned hist table the anti-join reads only the
-    * overlapping partitions.
+    * overlapping partitions. A NULL bound (an unparseable date) can only
+    * collide with NULL-bound history, so when the batch holds any — the
+    * same aggregate reports it, no extra job — the prune also keeps
+    * `boundCol IS NULL`; a well-formed batch keeps the plain range.
     */
   def newRowsPruned(
       batch: DataFrame,
@@ -109,12 +112,16 @@ object Upsert {
       key: String,
       boundCol: String): DataFrame = {
     val r = batch.agg(
-      F.min(F.col(boundCol)).as("lo"), F.max(F.col(boundCol)).as("hi")).head()
-    if (r.isNullAt(0)) batch.dropDuplicates(key).limit(0)
-    else {
-      val pruned = existing
-        .filter(F.col(boundCol) >= r.get(0) && F.col(boundCol) <= r.get(1))
-      newRows(batch, pruned, key)
+      F.min(F.col(boundCol)).as("lo"), F.max(F.col(boundCol)).as("hi"),
+      F.max(F.col(boundCol).isNull).as("has_null")).head()
+    val range =
+      if (r.isNullAt(0)) None
+      else Some(F.col(boundCol) >= r.get(0) && F.col(boundCol) <= r.get(1))
+    val nulls =
+      if (!r.isNullAt(2) && r.getBoolean(2)) Some(F.col(boundCol).isNull) else None
+    (range ++ nulls).reduceOption(_ || _) match {
+      case Some(prune) => newRows(batch, existing.filter(prune), key)
+      case None => batch.dropDuplicates(key).limit(0)
     }
   }
 

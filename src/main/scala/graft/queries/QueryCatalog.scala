@@ -5775,14 +5775,17 @@ object QueryCatalog {
     * keeps its 8); at 100 TB the cap hands the width back to the
     * session — an 8-partition shuffle never reaches a real corpus.
     * Derived writer widths (`clusterInto = min(width, buckets)`)
-    * inherit the same scaling transitively. */
-  private def replayShuffleWidth(
+    * inherit the same scaling transitively. Sources are sized through
+    * the Hadoop FileSystem of their scheme, so an HDFS or object-store
+    * directory scales like a local one; an absent source counts 0. */
+  private[graft] def replayShuffleWidth(
       s: SparkSession, dir: String, tables: String*): Int = {
-    def len(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(len).sum).getOrElse(0L)
-      else f.length()
-    val bytes = tables.map(t => len(new java.io.File(dir, s"$t.parquet"))).sum
+    val conf = s.sessionState.newHadoopConf()
+    val bytes = tables.map { t =>
+      val p = new org.apache.hadoop.fs.Path(dir, s"$t.parquet")
+      try p.getFileSystem(conf).getContentSummary(p).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
+    }.sum
     val session = s.conf.get("spark.sql.shuffle.partitions").toInt
     math.min(math.max(8, (bytes >> 18).toInt), math.max(8, session))
   }

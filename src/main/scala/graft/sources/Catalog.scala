@@ -695,10 +695,6 @@ class Catalog(
       .withColumn("__slot",
         F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), fileTarget.cast("long")))
     val sessionParallelism = spark.sessionState.conf.numShufflePartitions
-    if (sys.env.contains("GRAFT_COMPACT_DEBUG"))
-      System.err.println(s"[compactPartitioned] $table: targets=$rewriteTargets " +
-        s"session=$sessionParallelism arm=" +
-        (if (rewriteTargets > sessionParallelism) "sized-explicit" else "implicit-aqe"))
     def sized(df: DataFrame): DataFrame =
       if (rewriteTargets > sessionParallelism)
         // guard the Long->Int narrowing: past ~2^31 file targets the
@@ -1496,14 +1492,10 @@ class Catalog(
     * per partition), and the TTL is sized orders of magnitude above
     * the gap. Closing it entirely needs a compare-and-swap publish —
     * the [[CommitCoordinator]] seam is where a store offering one
-    * (conditional PUT) plugs in. That coordinator EXISTS and is
-    * proven, not hypothetical: [[CommitCoordinator.remote]] against a
-    * [[CoordServer]] (a journal-backed linearizable map over TCP)
-    * gives put-if-absent / atomic rename-claim across real process
-    * boundaries — CrossProcessCoordSpec races 4 child JVMs through one
-    * server (exactly one winner per contended round, state intact
-    * across a server restart), and LifecycleContractSpec runs all
-    * three index families' lease/stamp/fence traffic through it. */
+    * (conditional PUT) plugs in. LifecycleContractSpec runs all three
+    * index families' lease/stamp/fence traffic through the in-process
+    * [[CommitCoordinator.keyValue]] reference implementation of that
+    * shape, with no coordination file touching the filesystem. */
   def fenceHeldLeases(): Unit = {
     // a runDelegated worker fences against its PRINCIPAL's held leases
     // (delegation widens the lease's thread scope, never weakens it)

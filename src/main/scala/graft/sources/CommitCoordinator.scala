@@ -101,111 +101,6 @@ object CommitCoordinator {
       catch { case _: java.io.IOException => false }
   }
 
-  /** REFERENCE implementation of the external-coordinator shape: the
-    * small coordination FILES (leases, layout stamps, break-claims)
-    * live in a linearizable key-value map — the structure a lock
-    * service, a database row, or an S3 conditional-PUT provides — while
-    * DATA directories (the stage-and-swap renames, recursive deletes)
-    * still go to the filesystem via `delegate`. This is exactly the
-    * split an object-store deployment needs: the store's rename may be
-    * non-atomic, but every EXCLUSION decision happens in the
-    * coordinator, so the swap windows are single-writer anyway.
-    * Single-writer alone is NOT sufficient for readers on such a store
-    * — that claim is exercised, not asserted, in SwapConsistencySpec:
-    * over a [[copyDeleteRename]] store a raw read mid-swap IS silently
-    * torn (deterministically reproduced), [[Catalog.consistentRead]]'s
-    * marker+generation validation never returns a torn generation
-    * under concurrent publishes, and a crash anywhere inside the
-    * rename phase heals to exactly the old generation via the
-    * manifest digest the swap marker records.
-    *
-    * Process-local (a ConcurrentHashMap), so it coordinates clients
-    * that SHARE the instance — the template for a networked
-    * implementation, and the fixture the contract specs run the full
-    * index lifecycle through to prove the seam is load-bearing.
-    */
-  /** DURABLE CROSS-PROCESS coordinator: coordination keys live in a
-    * [[CoordServer]] (a journal-backed linearizable map behind a TCP
-    * line protocol — the lock-service / conditional-PUT shape), data
-    * directories stay on the filesystem via `delegate`. Same key split
-    * as [[keyValue]], but the map is OUTSIDE this process, so any
-    * number of JVMs coordinating through one server get the exclusion
-    * guarantees across process boundaries — proven by racing real child
-    * JVMs in CrossProcessCoordSpec, and durable across a server restart
-    * (the journal replays).
-    *
-    * Failure posture: a lost/unreachable server THROWS rather than
-    * falling back — silently degrading to filesystem atomics would
-    * void the exclusion decision the caller thinks it bought (on the
-    * stores this coordinator exists for, the filesystem has no
-    * atomics). One reconnect is attempted per op for the benign case
-    * (server restarted, journal intact). Connection state is
-    * per-instance and synchronized: coordination ops are a handful of
-    * sub-100-byte lines per lifecycle op span, so one multiplexed
-    * socket is never the bottleneck.
-    */
-  def remote(
-      host: String,
-      port: Int,
-      delegate: CommitCoordinator = fileAtomics): CommitCoordinator =
-    new CommitCoordinator {
-      private var sock: java.net.Socket = _
-      private var in: java.io.BufferedReader = _
-      private var out: java.io.BufferedWriter = _
-
-      private def connect(): Unit = {
-        sock = new java.net.Socket(host, port)
-        sock.setTcpNoDelay(true)
-        in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          sock.getInputStream, "UTF-8"))
-        out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          sock.getOutputStream, "UTF-8"))
-      }
-
-      private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-
-      private def request(line: String): String = synchronized {
-        def once(): String = {
-          if (sock == null || sock.isClosed) connect()
-          out.write(line); out.write("\n"); out.flush()
-          val r = in.readLine()
-          if (r == null) throw new java.io.IOException("coordinator closed connection")
-          r
-        }
-        try once()
-        catch {
-          case _: java.io.IOException =>
-            // one reconnect (server restart with journal intact is the
-            // benign case); a second failure propagates — see doc
-            try { if (sock != null) sock.close() } catch { case _: java.io.IOException => () }
-            sock = null
-            once()
-        }
-      }
-
-      def createIfAbsent(fs: FileSystem, path: Path, content: String): Boolean =
-        request(s"PIA ${enc(path.toString)} ${enc(content)}") == "OK"
-
-      def readSmall(fs: FileSystem, path: Path): Option[String] =
-        request(s"GET ${enc(path.toString)}") match {
-          case s if s.startsWith("VAL ") => Some(dec(s.stripPrefix("VAL ")))
-          case _ => delegate.readSmall(fs, path)
-        }
-
-      def rename(fs: FileSystem, src: Path, dst: Path): Boolean =
-        request(s"REN ${enc(src.toString)} ${enc(dst.toString)}") match {
-          case "OK" => true
-          case _ => delegate.rename(fs, src, dst)
-        }
-
-      def delete(fs: FileSystem, path: Path, recursive: Boolean): Boolean =
-        request(s"DEL ${enc(path.toString)}") match {
-          case "OK" => true
-          case _ => delegate.delete(fs, path, recursive)
-        }
-    }
-
   /** SIMULATION coordinator: models an object store whose "rename" is
     * COPY-THEN-DELETE — non-atomic and non-instant, with destination
     * entries appearing one by one and the source disappearing one by
@@ -280,6 +175,29 @@ object CommitCoordinator {
         } catch { case _: java.io.IOException => false }
     }
 
+  /** REFERENCE implementation of the external-coordinator shape: the
+    * small coordination FILES (leases, layout stamps, break-claims)
+    * live in a linearizable key-value map — the structure a lock
+    * service, a database row, or an S3 conditional-PUT provides — while
+    * DATA directories (the stage-and-swap renames, recursive deletes)
+    * still go to the filesystem via `delegate`. This is exactly the
+    * split an object-store deployment needs: the store's rename may be
+    * non-atomic, but every EXCLUSION decision happens in the
+    * coordinator, so the swap windows are single-writer anyway.
+    * Single-writer alone is NOT sufficient for readers on such a store
+    * — that claim is exercised, not asserted, in SwapConsistencySpec:
+    * over a [[copyDeleteRename]] store a raw read mid-swap IS silently
+    * torn (deterministically reproduced), [[Catalog.consistentRead]]'s
+    * marker+generation validation never returns a torn generation
+    * under concurrent publishes, and a crash anywhere inside the
+    * rename phase heals to exactly the old generation via the
+    * manifest digest the swap marker records.
+    *
+    * Process-local (a ConcurrentHashMap), so it coordinates clients
+    * that SHARE the instance — the template for a networked
+    * implementation, and the fixture the contract specs run the full
+    * index lifecycle through to prove the seam is load-bearing.
+    */
   def keyValue(
       delegate: CommitCoordinator = fileAtomics): CommitCoordinator =
     new CommitCoordinator {

@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 import graft.{GraftFunctions, GraftSession, SparkEntry}
 
 /** Dump the COMPLETE post-execution physical plan of NAMED catalog
-  * queries, one file per query — the per-round plan-evidence trail
-  * (plans/rNN/<query>_after.txt). Unlike [[ExplainDump]] (the fixed
-  * headline digest capped for PLANS.md), this takes an explicit list
-  * and writes untruncated plans.
+  * queries, one untruncated file per query — the plan-evidence trail
+  * (plans/rNN/<query>_after.txt) and the one tool that writes plans:
+  * pass a single name to inspect one query, or the headline list to
+  * refresh the snapshot PLANS.md quotes.
   *
   * Run: `tools/run.sh graft.tools.ExplainTo /root/testdata/sf0.001
   * plans/r21 _after q_bm25_stream q_window_stream ...`

@@ -456,8 +456,7 @@ class LifecycleContractSpec extends SparkSpec {
     // semantics that fix exists for: a thread holding family A's
     // maintenance lease must not block (or fail) a sibling thread
     // taking family B's, while the SAME scope still refuses. The
-    // wall-clock dividend is measured by tools/ConcurrencyDividend
-    // (scale/concurrency_dividend.json).
+    // wall-clock dividend is recorded in scale/concurrency_dividend.json.
     val cat = freshCat()
     cat.withMaintenanceLease("a_ops") {
       val bHeld = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -476,98 +475,71 @@ class LifecycleContractSpec extends SparkSpec {
     }
   }
 
-  test("all three families run their lifecycles through the DURABLE remote coordinator") {
+  test("all three families share one key-value coordinator across Catalogs") {
     // The object-store deployment story end-to-end: coordination state
-    // in a CoordServer (journal-backed linearizable map over TCP — the
-    // conditional-PUT / lock-service shape), data directories on the
-    // filesystem. Two independent client Catalogs per family, real
-    // ingest/delete/compact/serve, exclusion and stamps decided by the
-    // SERVER (no coordination file may touch disk) — and the stamp
-    // survives a full server stop/restart, so a LayoutMismatch refusal
-    // is durable across coordinator crashes.
-    val dir = Files.createTempDirectory("graft-remote-coord").toString
-    val journal = java.nio.file.Paths.get(dir, "coord.journal")
-    val server = graft.sources.CoordServer.start(journal)
-    def client() =
-      graft.sources.CommitCoordinator.remote("127.0.0.1", server.port)
-    try {
-      // ---- dedup family
-      val dcat = new Catalog(spark, s"$dir/dd", client())
-      val dother = new Catalog(spark, s"$dir/dd", client())
-      Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "tomb",
-        Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"))
-      intercept[Catalog.LayoutMismatch] {
-        Streams.replaceDocsInDedup(dother, "corpus", "buckets", "tomb",
-          Seq((3L, "x")).toDF("doc_id", "text"), stateBuckets = 32)
+    // in one shared key-value map (the conditional-PUT / lock-service
+    // shape), data directories on the filesystem. Independent client
+    // Catalogs per family, real ingest/delete/compact/serve, exclusion
+    // and stamps decided by the MAP (no coordination file may touch
+    // disk).
+    val dir = Files.createTempDirectory("graft-shared-kv-coord").toString
+    val kv = graft.sources.CommitCoordinator.keyValue()
+    // ---- dedup family
+    val dcat = new Catalog(spark, s"$dir/dd", kv)
+    val dother = new Catalog(spark, s"$dir/dd", kv)
+    Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "tomb",
+      Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"))
+    intercept[Catalog.LayoutMismatch] {
+      Streams.replaceDocsInDedup(dother, "corpus", "buckets", "tomb",
+        Seq((3L, "x")).toDF("doc_id", "text"), stateBuckets = 32)
+    }
+    dother.withMaintenanceLease("corpus_ops") {
+      intercept[Catalog.MaintenanceLeaseHeld] {
+        Streams.deleteDocsFromDedup(dcat, "corpus", "tomb",
+          Seq(1L).toDF("doc_id"))
       }
-      dother.withMaintenanceLease("corpus_ops") {
-        intercept[Catalog.MaintenanceLeaseHeld] {
-          Streams.deleteDocsFromDedup(dcat, "corpus", "tomb",
-            Seq(1L).toDF("doc_id"))
-        }
-        assert(!new java.io.File(s"$dir/dd/corpus_ops__lease").exists(),
-          "lease leaked to the filesystem — the remote coordinator is decorative")
-      }
-      Streams.deleteDocsFromDedup(dcat, "corpus", "tomb", Seq(1L).toDF("doc_id"))
-      Streams.compactDocDedup(dcat, "corpus", "buckets", "tomb")
-      assert(graft.operators.Tombstones.live(
-        dcat.readWithSchema("corpus", Streams.dedupCorpusSchema),
-        dcat.readWithSchema("tomb", Streams.dedupTombSchema),
-        "doc_id").select("doc_id").as[Long].collect().toSet === Set(2L))
-      assert(!new java.io.File(s"$dir/dd/corpus__layout").exists(),
-        "dedup layout stamp leaked to the filesystem")
+      assert(!new java.io.File(s"$dir/dd/corpus_ops__lease").exists(),
+        "lease leaked to the filesystem — the coordinator is decorative")
+    }
+    Streams.deleteDocsFromDedup(dcat, "corpus", "tomb", Seq(1L).toDF("doc_id"))
+    Streams.compactDocDedup(dcat, "corpus", "buckets", "tomb")
+    assert(graft.operators.Tombstones.live(
+      dcat.readWithSchema("corpus", Streams.dedupCorpusSchema),
+      dcat.readWithSchema("tomb", Streams.dedupTombSchema),
+      "doc_id").select("doc_id").as[Long].collect().toSet === Set(2L))
+    assert(!new java.io.File(s"$dir/dd/corpus__layout").exists(),
+      "dedup layout stamp leaked to the filesystem")
 
-      // ---- bm25 family
-      val bcat = new Catalog(spark, s"$dir/bm", client())
-      val idx = new Bm25Index(spark, bcat)
-      idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
-      intercept[Catalog.LayoutMismatch] {
-        new Bm25Index(spark, new Catalog(spark, s"$dir/bm", client()),
-          buckets = 32).ensure()
-      }
-      idx.delete(Seq(1L).toDF("doc_id"), idx.nextSeq)
-      idx.compact()
-      assert(idx.serve(Seq("alpha")).select("doc_id").as[Long].collect().toSet
-        === Set(2L))
-      assert(!new java.io.File(s"$dir/bm/postings__layout").exists())
+    // ---- bm25 family
+    val bcat = new Catalog(spark, s"$dir/bm", kv)
+    val idx = new Bm25Index(spark, bcat)
+    idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
+    intercept[Catalog.LayoutMismatch] {
+      new Bm25Index(spark, new Catalog(spark, s"$dir/bm", kv),
+        buckets = 32).ensure()
+    }
+    idx.delete(Seq(1L).toDF("doc_id"), idx.nextSeq)
+    idx.compact()
+    assert(idx.serve(Seq("alpha")).select("doc_id").as[Long].collect().toSet
+      === Set(2L))
+    assert(!new java.io.File(s"$dir/bm/postings__layout").exists())
 
-      // ---- vector family
-      val rnd = new scala.util.Random(7)
-      val vecs = (0L until 8L).map(i => (i, Array.fill(4)(rnd.nextFloat() * 2 - 1)))
-        .toDF("vec_id", "embedding")
-      val (model, offline) = graft.operators.Similarity.ivfPqIndex(
-        vecs, nlist = 2, m = 2, ksub = 4)
-      val codesSchema = Streams.vectorCodesSchema(offline.schema)
-      val vcat = new Catalog(spark, s"$dir/vv", client())
-      Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
-        vecs, model, nlist = 2, m = 2, ksub = 4)
-      intercept[Catalog.LayoutMismatch] {
-        Streams.replaceVectors(new Catalog(spark, s"$dir/vv", client()),
-          "codes", codesSchema, "codes_tomb",
-          vecs.limit(1), model, nlist = 2, m = 2, ksub = 8)
-      }
-      assert(!new java.io.File(s"$dir/vv/codes__layout").exists())
-
-      // ---- durability: restart the server; stamps (and their
-      // refusals) survive the coordinator crash
-      server.close()
-      val revived = graft.sources.CoordServer.start(journal)
-      try {
-        val rcat = new Catalog(spark, s"$dir/dd",
-          graft.sources.CommitCoordinator.remote("127.0.0.1", revived.port))
-        intercept[Catalog.LayoutMismatch] {
-          Streams.replaceDocsInDedup(rcat, "corpus", "buckets", "tomb",
-            Seq((9L, "y")).toDF("doc_id", "text"), stateBuckets = 32)
-        }
-        // and the original parameters still reopen and serve
-        Streams.replaceDocsInDedup(rcat, "corpus", "buckets", "tomb",
-          Seq((9L, "gamma")).toDF("doc_id", "text"))
-        assert(graft.operators.Tombstones.live(
-          rcat.readWithSchema("corpus", Streams.dedupCorpusSchema),
-          rcat.readWithSchema("tomb", Streams.dedupTombSchema),
-          "doc_id").count() === 2L)
-      } finally revived.close()
-    } finally server.close()
+    // ---- vector family
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 8L).map(i => (i, Array.fill(4)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val (model, offline) = graft.operators.Similarity.ivfPqIndex(
+      vecs, nlist = 2, m = 2, ksub = 4)
+    val codesSchema = Streams.vectorCodesSchema(offline.schema)
+    val vcat = new Catalog(spark, s"$dir/vv", kv)
+    Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
+      vecs, model, nlist = 2, m = 2, ksub = 4)
+    intercept[Catalog.LayoutMismatch] {
+      Streams.replaceVectors(new Catalog(spark, s"$dir/vv", kv),
+        "codes", codesSchema, "codes_tomb",
+        vecs.limit(1), model, nlist = 2, m = 2, ksub = 8)
+    }
+    assert(!new java.io.File(s"$dir/vv/codes__layout").exists())
   }
 
   test("a fenced op's data rows are scrubbed at compaction and serve stays exact") {

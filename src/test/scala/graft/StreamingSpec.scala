@@ -1911,4 +1911,39 @@ class StreamingSpec extends SparkSpec {
         s"era $era: maintenance moved the served corpus")
     }
   }
+
+  test("stream-replay shuffle width sizes sources on any Hadoop filesystem scheme") {
+    // 12 x 256 KiB of source bytes: 12 reduce partitions under a
+    // 64-wide session, on the local path and on the same directory
+    // reached through a non-`file:` scheme
+    val dir = Files.createTempDirectory("graft-replay-width").toString
+    val src = new java.io.File(dir, "events.parquet")
+    src.mkdirs()
+    (0 until 12).foreach { i =>
+      Files.write(new java.io.File(src, s"part-$i").toPath, new Array[Byte](256 * 1024))
+    }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    spark.conf.set("fs.graftlocal.impl", classOf[SchemeAliasedLocalFs].getName)
+    spark.conf.set("fs.graftlocal.impl.disable.cache", "true")
+    try {
+      val local = graft.queries.QueryCatalog.replayShuffleWidth(spark, dir, "events")
+      val aliased = graft.queries.QueryCatalog.replayShuffleWidth(
+        spark, s"graftlocal://$dir", "events")
+      assert(local === 12)
+      assert(aliased === local)
+      assert(graft.queries.QueryCatalog.replayShuffleWidth(spark, dir, "absent") === 8)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.unset("fs.graftlocal.impl")
+      spark.conf.unset("fs.graftlocal.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under a scheme of its own, standing in for a
+  * remote store that `java.io.File` cannot see. */
+class SchemeAliasedLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
+  override def getScheme: String = "graftlocal"
 }

@@ -26,6 +26,39 @@ class TripPipelineSpec extends SparkSpec {
     pipe.runBatch(csv)
     assert(pipe.hist.count() === before)
     assert(Upsert.holdsUniqueness(pipe.hist, "trip_key"))
+
+    // a dirty file (rows whose date_time does not parse land with a NULL
+    // trip_date) delivered twice, then a file of malformed rows only, on
+    // a warehouse of its own so the shared fixture keeps only dated
+    // buckets: each keeps hist at one row per key and the incrementally
+    // refreshed view, NULL bucket included, equal to a full recompute
+    val dir = Files.createTempDirectory("graft-trips-dirty").toString
+    val header = "region,origin_coord,destination_coord,datetime,datasource"
+    def writeCsv(name: String, rows: Seq[String]): String = {
+      val path = s"$dir/$name"
+      Files.writeString(java.nio.file.Paths.get(path), (header +: rows).mkString("\n"))
+      path
+    }
+    val dirty = writeCsv("dirty.csv",
+      TripPipelineDemo.syntheticCsv(20, 200).linesIterator.drop(1).toSeq ++ Seq(
+        "Avalon,POINT (7 45),POINT (7.3 44.8),not a date,app_one",
+        "Brighton,POINT (7 45),POINT (7.3 44.8),2024-13-45 25:00:00,cheap_mobile"))
+    val malformed = writeCsv("malformed.csv", Seq(
+      "Caldera,POINT (7 45),POINT (7.3 44.8),yesterday,app_two",
+      "Avalon,POINT (7 45),POINT (7.3 44.8),2024-02-30 10:00:00,app_three"))
+    val dirtyPipe = new Pipeline(spark, s"$dir/warehouse")
+    def viewRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("region", "week_of_month", "weekly_avg").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    Seq(csv -> 100, dirty -> 122, dirty -> 122, malformed -> 124).foreach {
+      case (file, keys) =>
+        dirtyPipe.runBatch(file)
+        assert(dirtyPipe.hist.count() === keys, file)
+        assert(Upsert.holdsUniqueness(dirtyPipe.hist, "trip_key"), file)
+        assert(viewRows(dirtyPipe.summarized) ===
+          viewRows(TripQueries.weeklyAvgTripsPerRegion(dirtyPipe.hist)), file)
+    }
+    assert(viewRows(dirtyPipe.summarized).exists(_._2 == null))
   }
 
   test("staging is truncated after each batch") {
