@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.LocalDate
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession, functions => F}
 import graft.model.Trip
 import graft.operators.{TripQueries, Upsert}
 import graft.sources.{Catalog, TripCsvSource}
@@ -31,7 +32,11 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     catalog.ensurePartitionedTable(HistTable, Trip.schemaWithDate, Seq("trip_date"))
   }
 
-  /** One batch end-to-end (populate_postgres.sql:2-34).
+  /** One batch end-to-end (populate_postgres.sql:2-34), in 7 Spark jobs
+    * on a warehouse that already holds hist and the view: the staging
+    * write (1), the pruned anti-join append into hist (3: the two
+    * sides' scans and the write), the staging truncate (1) and the
+    * touched-bucket view refresh (2: its aggregate and the write).
     *
     * The historical table is laid out partitioned by `trip_date`
     * (derived from date_time), and the upsert prunes the historical
@@ -39,31 +44,64 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * 100 TB the anti-join reads a handful of partitions instead of the
     * full key history. trip_date is derived from a keyed column, so
     * equal keys always imply equal dates and pruning cannot miss a
-    * collision.
+    * collision. The batch's dates that plan both the prune and the view
+    * refresh ride the staging write as observed metrics, so no job
+    * re-reads the batch for them.
+    *
+    * Once the hist append has committed, the truncate and the refresh
+    * touch disjoint tables (staging and the view), so they run
+    * overlapped; the first failure is rethrown once both have ended.
+    * Each step is idempotent: a crash anywhere in the batch
+    * converges when the same file is re-run, since the re-run's
+    * anti-join appends nothing already committed.
     */
   def runBatch(csvPath: String): Unit = {
     ensureTables()
-    // COPY ... FROM csv (S2): land the file positionally, all strings.
-    val raw = TripCsvSource.read(spark, csvPath)
-    // UPDATE ... SET trip_key = CONCAT(...) (P3).
-    val keyed = raw
+    val dates = landStaging(csvPath)
+    upsertHist(dates)
+    // TRUNCATE staging (S5) and REFRESH MATERIALIZED VIEW (S6)
+    catalog.runDelegated(Seq(
+      () => catalog.truncate(StagingTable, Trip.schemaWithDate),
+      () => refreshSummarizedViewIncremental(dates)))
+  }
+
+  /** COPY ... FROM csv (S2) + UPDATE ... SET trip_key = CONCAT(...) (P3):
+    * land the file positionally, all strings, keyed and dated, so
+    * staging holds exactly this batch. Returns the batch's distinct
+    * trip dates, None standing for rows whose date_time does not parse,
+    * observed on the write itself: it has no shuffle, so the observe
+    * sits in its result stage and counts each row once.
+    */
+  private[graft] def landStaging(csvPath: String): Seq[Option[LocalDate]] = {
+    val keyed = TripCsvSource.read(spark, csvPath)
       .withColumn("trip_key", Trip.tripKey)
-      .withColumn("trip_date",
-        org.apache.spark.sql.functions.to_date(
-          org.apache.spark.sql.functions.col("date_time")))
-    catalog.overwrite(StagingTable, keyed) // staging holds exactly this batch
-    // INSERT ... ON CONFLICT DO NOTHING (J3): dedup upsert into hist,
-    // pruned to the batch's date range.
-    val stg = catalog.read(StagingTable)
-    val hist = this.hist
+      .withColumn("trip_date", F.to_date(F.col("date_time")))
+    val obs = Observation()
+    catalog.overwrite(StagingTable, keyed.observe(obs,
+      F.collect_set(F.unix_date(F.col("trip_date"))).as("days"),
+      F.max(F.col("trip_date").isNull).as("has_null")))
+    // a batch with no rows reports NULL has_null (and an empty set), one
+    // whose write ran no task reports nothing at all
+    val stats = obs.get
+    val days = stats.get("days").map(_.asInstanceOf[Seq[Int]]).getOrElse(Nil)
+    days.map(d => Option(LocalDate.ofEpochDay(d.toLong))) ++
+      (if (stats.get("has_null").contains(true)) Seq(None) else Nil)
+  }
+
+  /** INSERT ... ON CONFLICT DO NOTHING (J3): dedup upsert of staging
+    * into hist, pruned to the batch's date range (and its NULL-date
+    * partition when the batch holds unparseable dates).
+    */
+  private[graft] def upsertHist(dates: Seq[Option[LocalDate]]): Unit = {
+    val known = dates.flatten
+    val range =
+      if (known.isEmpty) None
+      else Some((known.minBy(_.toEpochDay), known.maxBy(_.toEpochDay)))
+    val stg = catalog.readWithSchema(StagingTable, Trip.schemaWithDate)
     catalog.appendPartitioned(HistTable,
-      Upsert.newRowsPruned(stg, hist, "trip_key", "trip_date"),
+      Upsert.newRowsPruned(stg, hist, "trip_key", "trip_date",
+        range, dates.contains(None)),
       Seq("trip_date"))
-    // TRUNCATE staging (S5).
-    catalog.truncate(StagingTable)
-    // REFRESH MATERIALIZED VIEW (S6) — incrementally: only the week
-    // buckets this batch touched are recomputed and replaced.
-    refreshSummarizedViewIncremental(keyed)
   }
 
   /** Materialized-view full refresh: recompute + overwrite, stored
@@ -85,8 +123,7 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * NULL-date hist partition when the batch holds any. Falls back to
     * the full refresh when the view does not exist yet.
     */
-  def refreshSummarizedViewIncremental(batch: DataFrame): Unit = {
-    import org.apache.spark.sql.{functions => F}
+  def refreshSummarizedViewIncremental(dates: Seq[Option[LocalDate]]): Unit = {
     // full rewrite when the view is absent OR still in a legacy FLAT
     // layout (no week_of_month= dirs): a dynamic-partition overwrite on
     // top of flat parquet files would mix the two layouts at the table
@@ -95,11 +132,6 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
         !catalog.hasPartitionDirs(ViewTable, "week_of_month")) {
       refreshSummarizedView(); return
     }
-    // a batch's distinct trip dates are bounded (time-bounded arrival),
-    // so collecting them to plan the prune is a scalar-sized action
-    val dates = batch
-      .select(F.to_date(F.col("date_time")).as("d")).distinct()
-      .collect().map(r => Option(r.getDate(0)).map(_.toLocalDate))
     // affected week-of-month windows: [monthStart + 7*(w-1), +7) capped
     // at month end — the same blocks the view buckets by
     val windows = dates.flatten.map { d =>

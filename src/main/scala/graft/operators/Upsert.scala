@@ -96,30 +96,28 @@ object Upsert {
   /** Partition-pruned upsert for time-bounded batches: when batches are
     * known to only ever collide with a bounded window of history (trips
     * arrive within hours, events within days), scanning ALL historical
-    * keys is wasted I/O at 100 TB. This variant computes the batch's
-    * [min, max] of `boundCol` and prunes the historical side to that
-    * range (+/- nothing — collisions require equal keys, and equal keys
-    * imply equal bound values since the bound participates in the key),
-    * so with a date-partitioned hist table the anti-join reads only the
+    * keys is wasted I/O at 100 TB. This variant prunes the historical
+    * side to the batch's `range` = [min, max] of `boundCol` (+/- nothing
+    * — collisions require equal keys, and equal keys imply equal bound
+    * values since the bound participates in the key), so with a
+    * date-partitioned hist table the anti-join reads only the
     * overlapping partitions. A NULL bound (an unparseable date) can only
-    * collide with NULL-bound history, so when the batch holds any — the
-    * same aggregate reports it, no extra job — the prune also keeps
-    * `boundCol IS NULL`; a well-formed batch keeps the plain range.
+    * collide with NULL-bound history, so when the batch holds any
+    * (`hasNull`) the prune also keeps `boundCol IS NULL`; a well-formed
+    * batch keeps the plain range. The bounds come from the caller's
+    * write of the batch (observed metrics), so pruning costs no job; a
+    * batch with neither a range nor a NULL is empty and appends nothing.
     */
   def newRowsPruned(
       batch: DataFrame,
       existing: DataFrame,
       key: String,
-      boundCol: String): DataFrame = {
-    val r = batch.agg(
-      F.min(F.col(boundCol)).as("lo"), F.max(F.col(boundCol)).as("hi"),
-      F.max(F.col(boundCol).isNull).as("has_null")).head()
-    val range =
-      if (r.isNullAt(0)) None
-      else Some(F.col(boundCol) >= r.get(0) && F.col(boundCol) <= r.get(1))
-    val nulls =
-      if (!r.isNullAt(2) && r.getBoolean(2)) Some(F.col(boundCol).isNull) else None
-    (range ++ nulls).reduceOption(_ || _) match {
+      boundCol: String,
+      range: Option[(Any, Any)],
+      hasNull: Boolean): DataFrame = {
+    val inRange = range.map { case (lo, hi) => F.col(boundCol).between(lo, hi) }
+    val nulls = if (hasNull) Some(F.col(boundCol).isNull) else None
+    (inRange ++ nulls).reduceOption(_ || _) match {
       case Some(prune) => newRows(batch, existing.filter(prune), key)
       case None => batch.dropDuplicates(key).limit(0)
     }

@@ -1532,11 +1532,11 @@ class Catalog(
     }
   }
 
-  /** TRUNCATE TABLE: overwrite with an empty frame of the same schema
-    * (src/sqls/populate_postgres.sql:31).
+  /** TRUNCATE TABLE: overwrite with an empty frame of the table's
+    * declared schema (src/sqls/populate_postgres.sql:31) — schema-first,
+    * so no job infers it from the files being dropped.
     */
-  def truncate(table: String): Unit = {
-    val schema = read(table).schema
+  def truncate(table: String, schema: StructType): Unit = {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.mode(SaveMode.Overwrite).parquet(path(table))
     spark.catalog.refreshByPath(path(table))

@@ -43,7 +43,8 @@ object Streams {
 
   /** Streaming version of the reference's batch DAG: each micro-batch is
     * keyed, deduped against hist, and appended — `INSERT ... ON CONFLICT
-    * DO NOTHING`, continuously.
+    * DO NOTHING`, continuously. The caller must `ensureTable` the hist
+    * table with [[Trip.schema]], which every trigger reads it with.
     */
   def streamingUpsert(
       trips: DataFrame,
@@ -56,7 +57,8 @@ object Streams {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hist = catalog.read(histTable)
+        // schema-first: an inferring read costs a job per trigger
+        val hist = catalog.readWithSchema(histTable, Trip.schema)
         // micro-batches are bounded by maxFilesPerTrigger, so admission
         // runs as the broadcast probe (state side scanned, never
         // shuffled); a backfill-sized batch falls back to the shuffle

@@ -392,16 +392,20 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("pruned upsert equals unpruned when bounds participate in the key") {
-    val hist = Seq(("k1", 10L), ("k2", 20L)).toDF("key", "ts")
-    val batch = Seq(("k2", 20L), ("k3", 15L)).toDF("key", "ts")
-    val pruned = Upsert.newRowsPruned(batch, hist, "key", "ts")
+    val hist = Seq(("k1", Some(10L)), ("k2", Some(20L)), ("k4", None)).toDF("key", "ts")
+    val batch = Seq(("k2", Some(20L)), ("k3", Some(15L)), ("k4", None)).toDF("key", "ts")
+    // the batch's bounds, as its own write would observe them
+    val pruned = Upsert.newRowsPruned(batch, hist, "key", "ts",
+        Some((15L, 20L)), hasNull = true)
       .select("key").as[String].collect().toSeq
     val full = Upsert.newRows(batch, hist, "key")
       .select("key").as[String].collect().toSeq
     assert(pruned === full)
-    // empty batch: no rows, no crash
+    assert(pruned === Seq("k3"))
+    // empty batch: no range and no NULL, so no rows and no crash
     val empty = batch.filter($"ts" > 100)
-    assert(Upsert.newRowsPruned(empty, hist, "key", "ts").count() === 0)
+    assert(Upsert.newRowsPruned(empty, hist, "key", "ts", None, hasNull = false)
+      .count() === 0)
   }
 
   test("salted count equals plain groupBy count under heavy key skew") {

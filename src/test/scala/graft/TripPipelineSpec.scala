@@ -82,22 +82,12 @@ class TripPipelineSpec extends SparkSpec {
     // establish a healthy prior state with a first batch
     pipe.runBatch(csv)
     val histAfterB1 = pipe.hist.count()
-    // second batch, 50% overlapping keys — replay runBatch's own steps
-    // (Pipeline.runBatch:44-67) and "crash" right after the hist append
+    // second batch, 50% overlapping keys — run runBatch's own first two
+    // steps and "crash" right after the hist append
     val csv2 = s"$dir/trips2.csv"
     Files.writeString(java.nio.file.Paths.get(csv2),
       TripPipelineDemo.syntheticCsv(100, 50))
-    val raw = graft.sources.TripCsvSource.read(spark, csv2)
-    val keyed = raw
-      .withColumn("trip_key", graft.model.Trip.tripKey)
-      .withColumn("trip_date",
-        org.apache.spark.sql.functions.to_date(
-          org.apache.spark.sql.functions.col("date_time")))
-    pipe.catalog.overwrite(pipe.StagingTable, keyed)
-    pipe.catalog.appendPartitioned(pipe.HistTable,
-      Upsert.newRowsPruned(pipe.catalog.read(pipe.StagingTable), pipe.hist,
-        "trip_key", "trip_date"),
-      Seq("trip_date"))
+    pipe.upsertHist(pipe.landStaging(csv2))
     // -- crash: no staging truncate, no view refresh --
     val histAfterCrash = pipe.hist.count()
     assert(histAfterCrash > histAfterB1, "crash scenario must commit new rows")
@@ -116,6 +106,48 @@ class TripPipelineSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(recovered === full, "view after recovery must equal full recompute")
     assert(recovered.nonEmpty)
+  }
+
+  test("a batch on a warehouse with hist and view launches at most 7 jobs") {
+    // staging write (its observed dates plan the prune and the refresh),
+    // the 3-job anti-join append, truncate and the 2-job bucket refresh;
+    // re-deriving the dates or inferring staging's schema would add jobs
+    val dir = Files.createTempDirectory("graft-trips-jobs").toString
+    val csv = s"$dir/trips.csv"
+    val csv2 = s"$dir/trips2.csv"
+    Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(100))
+    Files.writeString(java.nio.file.Paths.get(csv2),
+      TripPipelineDemo.syntheticCsv(100, 50))
+    val pipe = new Pipeline(spark, s"$dir/warehouse")
+    pipe.runBatch(csv)
+    val jobs = org.apache.spark.graft.JobCount(spark.sparkContext)(pipe.runBatch(csv2))
+    assert(jobs <= 7, s"runBatch launched $jobs jobs")
+    assert(pipe.hist.count() === 150)
+  }
+
+  test("a header-only batch changes nothing and leaves staging empty") {
+    // no rows: the staging write observes no dates and no NULL flag, so
+    // the upsert appends nothing and the refresh touches no bucket; a
+    // zero-byte file plans no task at all, so its write observes nothing
+    val dir = Files.createTempDirectory("graft-trips-empty").toString
+    def write(name: String, body: String): String = {
+      val path = s"$dir/$name"
+      Files.writeString(java.nio.file.Paths.get(path), body)
+      path
+    }
+    val pipe = new Pipeline(spark, s"$dir/warehouse")
+    pipe.runBatch(write("trips.csv", TripPipelineDemo.syntheticCsv(100)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val hist = rows(pipe.hist)
+    val view = rows(pipe.summarized)
+    Seq(write("header.csv", TripPipelineDemo.syntheticCsv(0)),
+        write("zero.csv", "")).foreach { empty =>
+      assert(pipe.landStaging(empty).isEmpty, empty)
+      pipe.runBatch(empty)
+      assert(rows(pipe.hist) === hist, empty)
+      assert(rows(pipe.summarized) === view, empty)
+      assert(pipe.catalog.read(pipe.StagingTable).count() === 0, empty)
+    }
   }
 
   test("incremental view refresh equals a full recompute across batches") {

@@ -1,0 +1,34 @@
+package org.apache.spark.graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Counts the Spark jobs a body launches, from its own thread and any
+  * thread it starts (local properties are inherited by child threads).
+  * Lives under `org.apache.spark` to drain the listener bus, which
+  * Spark keeps package-private: without the drain, job-start events
+  * still queued when the body returns would go uncounted.
+  */
+object JobCount {
+  private val Tag = "graft.test.jobCount"
+
+  def apply(sc: SparkContext)(body: => Unit): Int = {
+    val id = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(Tag) == id) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(Tag, id)
+    try {
+      body
+      sc.listenerBus.waitUntilEmpty()
+      n.get
+    } finally {
+      sc.setLocalProperty(Tag, null)
+      sc.removeSparkListener(l)
+    }
+  }
+}
