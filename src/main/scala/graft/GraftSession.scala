@@ -57,6 +57,18 @@ object GraftSession {
       // per index op. Driver-side listing stays the right call well
       // into the hundreds of directories on HDFS-like and local stores.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
+      // `file:` only (HDFS, S3A and every other scheme keep their own
+      // classes): Hadoop's local filesystem without libhadoop forks
+      // `chmod` per file or directory it creates and `readlink` per
+      // link-status probe. One trip_batches run of the repo benchmark
+      // (five set-ups and a pass) forked 1,035 chmods, one per task
+      // output file, .crc file and commit-protocol directory; one
+      // catalog_slice run forked 776 readlinks and 310 chmods, mostly
+      // for stream checkpoint files written through FileContext. Both
+      // Hadoop APIs get the same in-process raw class; checksums, the
+      // committer and renames stay Hadoop's.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
   /** Local session for tests/benchmarks. */
   def local(appName: String, cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

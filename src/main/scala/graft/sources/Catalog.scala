@@ -15,7 +15,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale note: every write goes through Spark's commit protocol, so a
   * 1000-executor append is atomic per job; `refreshByPath` after overwrite
-  * keeps any cached file listings coherent.
+  * keeps any cached file listings coherent. That protocol creates a few
+  * files and directories per task; on `file:` warehouses the session's
+  * [[NioLocalFileSystem]] sets their permissions in-process instead of
+  * forking `chmod` for each (see [[graft.GraftSession]]).
   *
   * Open (not final) so fault-injection tests can override [[append]] to
   * kill a pipeline inside a multi-write crash window (the streaming

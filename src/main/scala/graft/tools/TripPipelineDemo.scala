@@ -1,8 +1,7 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
-import graft.{GraftFunctions, Pipeline}
+import graft.{GraftSession, Pipeline}
 import graft.operators.{TripQueries, Upsert}
 
 /** End-to-end drive of the trip pipeline on a synthetic batch: the
@@ -44,15 +43,7 @@ object TripPipelineDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("trip-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = GraftSession.local("trip-pipeline-demo", 4)
 
     val dir = Files.createTempDirectory("graft-demo").toString
     val csv = s"$dir/trips.csv"

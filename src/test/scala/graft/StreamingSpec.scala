@@ -37,6 +37,26 @@ class StreamingSpec extends SparkSpec {
     assert(graft.operators.Upsert.holdsUniqueness(hist, "trip_key"))
   }
 
+  test("a streaming upsert trigger spawns no shell process for its checkpoint") {
+    // offset/commit logs and source metadata go through FileContext, whose
+    // stock local class forks readlink per rename and chmod per file
+    val dir = Files.createTempDirectory("graft-stream-spawns").toString
+    val drop = s"$dir/drop"; val wh = s"$dir/wh"; val cp = s"$dir/cp"
+    new java.io.File(drop).mkdirs()
+    val catalog = new graft.sources.Catalog(spark, wh)
+    catalog.ensureTable("hist_trip_data", graft.model.Trip.schema)
+    Files.writeString(java.nio.file.Paths.get(s"$drop/b1.csv"),
+      "region,origin_coord,destination_coord,datetime,datasource\n" +
+        "A,POINT (1 2),POINT (3 4),2024-01-01 10:00:00,src1\n")
+    val spawned = ShellSpawns {
+      val q = Streams.streamingUpsert(
+        Streams.tripFileStream(spark, drop), catalog, "hist_trip_data", cp).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(spawned.size === 0, s"shell spawns, first: ${spawned.take(3)}")
+    assert(catalog.read("hist_trip_data").count() === 1)
+  }
+
   test("streaming upsert recovers from its checkpoint without duplicates") {
     // the failure a real user hits first: the query dies, restarts from
     // the checkpoint, and overlapping/re-delivered input must not break

@@ -125,6 +125,27 @@ class TripPipelineSpec extends SparkSpec {
     assert(pipe.hist.count() === 150)
   }
 
+  test("batches and compaction on a warehouse with hist and view spawn no shell process") {
+    // Hadoop's local filesystem without libhadoop forks chmod per created
+    // file or dir and readlink per link-status probe; the engine's file:
+    // filesystem does both in-process
+    val dir = Files.createTempDirectory("graft-trips-spawns").toString
+    val csvs = Seq((100, 0), (100, 50), (100, 120)).zipWithIndex.map { case ((n, off), i) =>
+      val csv = s"$dir/trips$i.csv"
+      Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(n, off))
+      csv
+    }
+    val pipe = new Pipeline(spark, s"$dir/warehouse")
+    pipe.runBatch(csvs.head)
+    val spawned = ShellSpawns {
+      pipe.runBatch(csvs(1))
+      pipe.runBatch(csvs(2))
+      pipe.compactHist(maxFilesPerPartition = 1)
+    }
+    assert(spawned.size === 0, s"shell spawns, first: ${spawned.take(3)}")
+    assert(pipe.hist.count() === 220)
+  }
+
   test("a header-only batch changes nothing and leaves staging empty") {
     // no rows: the staging write observes no dates and no NULL flag, so
     // the upsert appends nothing and the refresh touches no bucket; a
