@@ -25,18 +25,27 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
   val ViewTable = "summarized_trip_data"
 
   /** CREATE TABLE IF NOT EXISTS for the staging + historical layer
-    * (create_objects.sql:2-19).
+    * (create_objects.sql:2-19) and the view, with no Spark job: a new
+    * hist comes with an empty view, so the incremental refresh always has
+    * a view to refresh. A hist that predates its view (a crash between
+    * the two directories) gets the view recomputed in full, once. On a
+    * warehouse that has all three this is three existence checks.
     */
   def ensureTables(): Unit = {
     catalog.ensureTable(StagingTable, Trip.schemaWithDate)
-    catalog.ensurePartitionedTable(HistTable, Trip.schemaWithDate, Seq("trip_date"))
+    if (!catalog.exists(HistTable)) {
+      catalog.ensurePartitionedTable(HistTable)
+      catalog.ensurePartitionedTable(ViewTable)
+    } else if (!catalog.exists(ViewTable)) refreshSummarizedView()
   }
 
-  /** One batch end-to-end (populate_postgres.sql:2-34), in 7 Spark jobs
-    * on a warehouse that already holds hist and the view: the staging
-    * write (1), the pruned anti-join append into hist (3: the two
-    * sides' scans and the write), the staging truncate (1) and the
-    * touched-bucket view refresh (2: its aggregate and the write).
+  /** One batch end-to-end (populate_postgres.sql:2-34), in 4 Spark jobs
+    * on a fresh warehouse and on one that already holds hist and the
+    * view: the staging write (1), the pruned anti-join append into hist
+    * (2: the hist side's broadcast and the write), the staging truncate
+    * (none: a zero-row file written from the driver) and the
+    * touched-bucket view refresh (1: its aggregate runs in the write's
+    * own stage).
     *
     * The historical table is laid out partitioned by `trip_date`
     * (derived from date_time), and the upsert prunes the historical
@@ -48,21 +57,17 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * refresh ride the staging write as observed metrics, so no job
     * re-reads the batch for them.
     *
-    * Once the hist append has committed, the truncate and the refresh
-    * touch disjoint tables (staging and the view), so they run
-    * overlapped; the first failure is rethrown once both have ended.
-    * Each step is idempotent: a crash anywhere in the batch
-    * converges when the same file is re-run, since the re-run's
-    * anti-join appends nothing already committed.
+    * Each step is idempotent: a crash anywhere in the batch converges
+    * when the same file is re-run, since the re-run's anti-join appends
+    * nothing already committed.
     */
   def runBatch(csvPath: String): Unit = {
     ensureTables()
     val dates = landStaging(csvPath)
     upsertHist(dates)
     // TRUNCATE staging (S5) and REFRESH MATERIALIZED VIEW (S6)
-    catalog.runDelegated(Seq(
-      () => catalog.truncate(StagingTable, Trip.schemaWithDate),
-      () => refreshSummarizedViewIncremental(dates)))
+    catalog.truncate(StagingTable, Trip.schemaWithDate)
+    refreshSummarizedViewIncremental(dates)
   }
 
   /** COPY ... FROM csv (S2) + UPDATE ... SET trip_key = CONCAT(...) (P3):
@@ -97,12 +102,23 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     val range =
       if (known.isEmpty) None
       else Some((known.minBy(_.toEpochDay), known.maxBy(_.toEpochDay)))
-    val stg = catalog.readWithSchema(StagingTable, Trip.schemaWithDate)
+    val stg = oneTaskIfSmall(catalog.readWithSchema(StagingTable, Trip.schemaWithDate))
     catalog.appendPartitioned(HistTable,
       Upsert.newRowsPruned(stg, hist, "trip_key", "trip_date",
         range, dates.contains(None)),
       Seq("trip_date"))
   }
+
+  /** `scan` in one partition when its estimated size is at most
+    * `spark.sql.files.openCostInBytes`, the size Spark already charges as
+    * one file open: the dedup and aggregates over it then run in the
+    * scan's own task, with no exchange and no job of their own. Larger
+    * scans keep their plan.
+    */
+  private def oneTaskIfSmall(scan: DataFrame): DataFrame =
+    if (scan.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.filesOpenCostInBytes) scan.coalesce(1)
+    else scan
 
   /** Materialized-view full refresh: recompute + overwrite, stored
     * partitioned by week bucket so incremental refreshes can replace
@@ -120,18 +136,9 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * every batch; at 100 TB with time-bounded batch arrivals this scans
     * a handful of week partitions instead. Rows whose date_time does
     * not parse fall in the view's NULL bucket, recomputed from the
-    * NULL-date hist partition when the batch holds any. Falls back to
-    * the full refresh when the view does not exist yet.
+    * NULL-date hist partition when the batch holds any.
     */
   def refreshSummarizedViewIncremental(dates: Seq[Option[LocalDate]]): Unit = {
-    // full rewrite when the view is absent OR still in a legacy FLAT
-    // layout (no week_of_month= dirs): a dynamic-partition overwrite on
-    // top of flat parquet files would mix the two layouts at the table
-    // root and break subsequent reads
-    if (!catalog.exists(ViewTable) ||
-        !catalog.hasPartitionDirs(ViewTable, "week_of_month")) {
-      refreshSummarizedView(); return
-    }
     // affected week-of-month windows: [monthStart + 7*(w-1), +7) capped
     // at month end — the same blocks the view buckets by
     val windows = dates.flatten.map { d =>
@@ -147,7 +154,7 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     val nullBucket =
       if (dates.contains(None)) Some(F.col("trip_date").isNull) else None
     (ranges ++ nullBucket).reduceOption(_ || _).foreach { prune =>
-      val recomputed = TripQueries.weeklyAvgTripsPerRegion(hist.filter(prune))
+      val recomputed = TripQueries.weeklyAvgTripsPerRegion(oneTaskIfSmall(hist.filter(prune)))
       catalog.overwritePartitioned(ViewTable, recomputed,
         Seq("week_of_month"), dynamic = true)
     }

@@ -1,6 +1,15 @@
 package graft.sources
 
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  SparkToParquetSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Table lifecycle for the staging / historical / summary layer
@@ -10,11 +19,15 @@ import org.apache.spark.sql.types.StructType
   * tables under a warehouse root. Semantics preserved:
   *  - `CREATE TABLE IF NOT EXISTS` with a fixed schema ahead of data
   *    (src/sqls/create_objects.sql:2-19)  -> [[ensureTable]]
-  *  - `TRUNCATE TABLE`                    -> [[truncate]] (overwrite empty)
+  *  - `TRUNCATE TABLE`                    -> [[truncate]] (a zero-row file
+  *    written in from the driver, then the old files deleted)
   *  - materialized-view refresh           -> recompute + [[overwrite]]
   *
-  * Scale note: every write goes through Spark's commit protocol, so a
-  * 1000-executor append is atomic per job; `refreshByPath` after overwrite
+  * Scale note: every data write goes through Spark's commit protocol, so a
+  * 1000-executor append is atomic per job; the zero-row files of
+  * [[ensureTable]] and [[truncate]] and the op log's one-row appends are
+  * written from the driver instead ([[writeFileDriverSide]]), a file
+  * each, renamed in whole. `refreshByPath` after overwrite
   * keeps any cached file listings coherent. That protocol creates a few
   * files and directories per task; on `file:` warehouses the session's
   * [[NioLocalFileSystem]] sets their permissions in-process instead of
@@ -69,39 +82,65 @@ class Catalog(
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** CREATE TABLE IF NOT EXISTS: materialize an empty parquet dataset with
-    * the declared schema so downstream readers never infer.
+  /** CREATE TABLE IF NOT EXISTS, without a Spark job: the table appears
+    * holding one zero-row parquet file of the declared schema, so even a
+    * schema-inferring reader never finds it empty. The file is written
+    * into a hidden sibling directory that is then renamed into place, so
+    * a crash leaves either no table or a readable one.
     */
-  def ensureTable(table: String, schema: StructType): Unit =
-    if (!exists(table)) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(path(table))
+  def ensureTable(table: String, schema: StructType): Unit = {
+    val live = new Path(path(table))
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(live)) {
+      val tmp = new Path(live.getParent, s".${live.getName}.creating-${UUID.randomUUID()}")
+      writeFileDriverSide(tmp, schema)
+      // false: a concurrent creator won, and its table stands
+      if (!fs.rename(tmp, live)) fs.delete(tmp, true)
     }
+  }
 
-  /** CREATE TABLE IF NOT EXISTS for a hive-partitioned table: an empty
-    * partitioned write leaves only the directory + _SUCCESS (no root
-    * data files, which would conflict with partition discovery), so
-    * readers must supply the declared schema via [[readWithSchema]].
+  /** CREATE TABLE IF NOT EXISTS for a hive-partitioned table: its
+    * directory. Readers supply the declared schema via [[readWithSchema]],
+    * so an empty partitioned table needs no file (a root data file would
+    * conflict with partition discovery).
     */
-  def ensurePartitionedTable(
-      table: String,
-      schema: StructType,
-      partitionCols: Seq[String]): Unit =
-    if (!exists(table)) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path(table))
-    }
+  def ensurePartitionedTable(table: String): Unit = {
+    val p = new Path(path(table))
+    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
+  }
 
-  /** True when the stored layout has hive partition directories for
-    * `col` (`col=value/`). An empty or flat (unpartitioned) table
-    * returns false — callers use this to detect a legacy flat layout
-    * before a dynamic-partition overwrite would mix the two.
+  /** Writes one parquet file of `schema` holding `rows` (BIGINT columns
+    * only; none for a schema-only file) into `dir`, from the driver and
+    * without a Spark job: a dot-prefixed temp, invisible to every Spark
+    * listing, renamed to a visible part file, so the file appears whole
+    * or not at all. The footer carries the Spark schema under the key
+    * Spark's own writer uses, so schema inference reads back `schema`.
+    * Returns the part file.
     */
-  def hasPartitionDirs(table: String, col: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith(s"$col="))
+  private[graft] def writeFileDriverSide(
+      dir: Path, schema: StructType, rows: Seq[Seq[Option[Long]]] = Nil): Path = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = dir.getFileSystem(conf)
+    val uuid = UUID.randomUUID()
+    val tmp = new Path(dir, s".part-$uuid.inprogress")
+    val dst = new Path(dir, s"part-$uuid-driver.snappy.parquet")
+    // the converter's Configuration constructor reads SQL keys that a
+    // session Hadoop conf does not carry ("null".toBoolean throws)
+    val mt = new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf)
+      .withType(mt)
+      .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(mt)
+      schema.fields.zip(r).foreach { case (f, v) => v.foreach(g.add(f.name, _)) }
+      w.write(g)
+    } finally w.close()
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"driver-side parquet rename failed: $tmp -> $dst")
+    dst
   }
 
   def read(table: String): DataFrame = spark.read.parquet(path(table))
@@ -653,18 +692,19 @@ class Catalog(
       // directory, so they are skipped rather than risked
       val roundTrips = !value.contains("%") && value != "__HIVE_DEFAULT_PARTITION__"
       if ((files.length > maxFilesPerPartition || forceValues.contains(value))
-          && roundTrips && files.nonEmpty) {
-        val n = math.max(1L, (files.map(_.getLen).sum + targetFileBytes - 1) / targetFileBytes)
-        Some((value, n.toInt))
-      } else None
+          && roundTrips && files.nonEmpty) Some((value, files.map(_.getLen).sum))
+      else None
     }.toSeq
     if (toCompact.isEmpty) return Nil
+    def filesFor(bytes: Long): Long =
+      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     // one distributed job rewrites every accreted partition: filter
     // prunes the scan to those partitions; the (partition, slot) shuffle
     // key bounds output files per partition at its computed target
     val values = toCompact.map(_._1)
-    val fileTarget = toCompact.foldLeft(F.lit(1)) { case (acc, (v, n)) =>
-      F.when(F.col(partitionCol).cast("string") === v, F.lit(n)).otherwise(acc)
+    val fileTarget = toCompact.foldLeft(F.lit(1)) { case (acc, (v, bytes)) =>
+      F.when(F.col(partitionCol).cast("string") === v, F.lit(filesFor(bytes).toInt))
+        .otherwise(acc)
     }
     // holder-unique stage (see [[replaceTable]]): a fenced compactor's
     // stage can never be swapped in by — or overwrite — a successor's
@@ -679,32 +719,32 @@ class Catalog(
     // heal refuses loudly, and a crash during staging heals as pure
     // garbage (no __manifest yet => nothing was renamed)
     beginSwap(fs, table, "-", () => recoverCompaction(table, partitionCol))
-    // Size the rewrite's shuffle by the DATA when the data demands it:
-    // there are exactly sum(per-partition file targets) distinct
-    // (partition, slot) groups of ~targetFileBytes each. When that
-    // count exceeds the session's shuffle parallelism, pin it as the
-    // partition count so every task's working set stays ~one output
-    // file (~128 MB) at any scale — left to the session default (the 8
-    // the lifecycle twins run under, or 32 on a cluster), a big
-    // compaction packs totalBytes/N into each task and the working set
-    // grows with data toward the spill cliff. When the targets FIT the
-    // session parallelism, keep the implicit form: an explicit count
-    // disables AQE's small-shuffle coalescing, which measured 2x on
-    // the many-tiny-partition vector lifecycle at sf0.1. The
-    // per-partition output-file bound (<= its target count, however
-    // many groups share a task) holds on both arms.
-    val rewriteTargets = toCompact.map(_._2.toLong).sum
+    // Size the rewrite's shuffle by the bytes selected: at
+    // ceil(selected bytes / targetFileBytes) tasks each task's working set
+    // is ~one output file (~128 MB) at any scale. When that width exceeds
+    // the session's shuffle parallelism, pin it as the partition count —
+    // left to the session default (the 8 the lifecycle twins run under,
+    // or 32 on a cluster), a big compaction would pack totalBytes/N into
+    // each task and grow toward the spill cliff. When it fits, keep the
+    // implicit form so AQE coalesces the shuffle by bytes: a pinned count
+    // disables that coalescing (measured 2x on the many-tiny-partition
+    // vector lifecycle at sf0.1), and a width counted per selected
+    // partition, each at least one file, would launch one write task per
+    // tiny partition, each of which deserializes the session's whole
+    // Hadoop configuration. The per-partition output-file bound (<= its
+    // target count, however many groups share a task) holds on both arms.
+    val width = filesFor(toCompact.map(_._2).sum)
     def slotted(df: DataFrame): DataFrame = df
       .withColumn("__slot",
         F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), fileTarget.cast("long")))
     val sessionParallelism = spark.sessionState.conf.numShufflePartitions
     def sized(df: DataFrame): DataFrame =
-      if (rewriteTargets > sessionParallelism)
+      if (width > sessionParallelism)
         // guard the Long->Int narrowing: past ~2^31 file targets the
         // cast would wrap (negative count throws opaquely; a wrapped
         // positive silently undersizes the shuffle) — cap instead, the
         // per-task bound merely loosens toward totalBytes/2^31
-        df.repartition(math.min(rewriteTargets, Int.MaxValue.toLong).toInt,
+        df.repartition(math.min(width, Int.MaxValue.toLong).toInt,
           F.col(partitionCol), F.col("__slot"))
       else df.repartition(F.col(partitionCol), F.col("__slot"))
     try {
@@ -1535,13 +1575,19 @@ class Catalog(
     }
   }
 
-  /** TRUNCATE TABLE: overwrite with an empty frame of the table's
-    * declared schema (src/sqls/populate_postgres.sql:31) — schema-first,
-    * so no job infers it from the files being dropped.
+  /** TRUNCATE TABLE (src/sqls/populate_postgres.sql:31), without a Spark
+    * job: a zero-row file of the declared schema is written in from the
+    * driver ([[writeFileDriverSide]]), then every entry the table held
+    * before it is deleted. The table stays readable, by schema inference
+    * too, at every instant; a crash among the deletes leaves some old
+    * rows, which the next truncate or overwrite drops.
     */
   def truncate(table: String, schema: StructType): Unit = {
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode(SaveMode.Overwrite).parquet(path(table))
+    val dir = new Path(path(table))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val old = if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath) else Array.empty[Path]
+    writeFileDriverSide(dir, schema)
+    old.foreach(fs.delete(_, true))
     spark.catalog.refreshByPath(path(table))
   }
 }

@@ -76,8 +76,8 @@ final class Bm25Index(
   private val log = new OpLog(spark, cat, "ops", statsPayload)
 
   def ensure(): Unit = {
-    cat.ensurePartitionedTable("postings", postSchema, Seq("bk"))
-    cat.ensurePartitionedTable("doc_lengths", dlSchema, Seq("rk"))
+    cat.ensurePartitionedTable("postings")
+    cat.ensurePartitionedTable("doc_lengths")
     cat.ensureTable("tombstones", tombSchema)
     // bk/rk partition values bake in `buckets` (hash(x) % buckets):
     // reopening an index with a different modulus would silently miss

@@ -107,8 +107,7 @@ object Generations {
     // created the tombstone table) — reading a never-created table would
     // throw PATH_NOT_FOUND, so materialize the empty tables up front
     cat.ensureTable(tombTable, tombSchema)
-    tables.foreach(t =>
-      cat.ensurePartitionedTable(t.table, t.schema, Seq(t.partCol)))
+    tables.foreach(t => cat.ensurePartitionedTable(t.table))
     log.ensure()
     // one |ops|-row collect answers garbage seqs AND tombstone
     // visibility (single-writer lease; see OpLog.Snapshot)

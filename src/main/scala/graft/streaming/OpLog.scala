@@ -206,42 +206,13 @@ final class OpLog(
     * (attempt marker, commit row) are one-row writes whose Spark-job
     * form pays a full job + the file-commit protocol (~0.1-0.2 s each
     * at micro-batch volume — two jobs per op, measured in the ingest
-    * job profile). Write the parquet file directly on the driver
-    * instead: a dot-prefixed temp (invisible to every Spark listing)
-    * atomically renamed to a visible part file — the same
+    * job profile). [[Catalog.writeFileDriverSide]] writes the parquet
+    * file directly on the driver instead, renamed in whole — the same
     * whole-immutable-file append property the v1 committer gives the
     * job form, at fs-metadata cost. */
-  private def appendRowDriverSide(seq: Long, values: Seq[Option[Long]]): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(cat.path(table))
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val uuid = java.util.UUID.randomUUID().toString
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".part-$uuid.inprogress")
-    val dst = new org.apache.hadoop.fs.Path(dir, s"part-$uuid-oplog.snappy.parquet")
-    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message spark_schema { required int64 seq; " +
-        payload.fields.map(f => s"optional int64 ${f.name}; ").mkString + "}")
-    val gconf = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(mt, gconf)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, gconf))
-      .withConf(gconf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(mt)
-      g.add("seq", seq)
-      payload.fields.zip(values).foreach { case (f, v) =>
-        v.foreach(g.add(f.name, _))
-      }
-      w.write(g)
-    } finally w.close()
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"op-log driver-side append rename failed: $tmp -> $dst")
-  }
+  private def appendRowDriverSide(seq: Long, values: Seq[Option[Long]]): Unit =
+    cat.writeFileDriverSide(
+      new org.apache.hadoop.fs.Path(cat.path(table)), schema, Seq(Some(seq) +: values))
 
   /** Attempt marker, written BEFORE the op's first data append.
     * Duplicate attempt rows from replays are harmless (existence-only,

@@ -465,8 +465,8 @@ object Streams {
       corpusTable: String,
       bucketTable: String,
       tombTable: String): Unit = {
-    catalog.ensurePartitionedTable(corpusTable, dedupCorpusSchema, Seq("pbk"))
-    catalog.ensurePartitionedTable(bucketTable, dedupBucketSchema, Seq("pbk"))
+    catalog.ensurePartitionedTable(corpusTable)
+    catalog.ensurePartitionedTable(bucketTable)
     catalog.ensureTable(tombTable, dedupTombSchema)
     new OpLog(catalog.spark, catalog, corpusTable + "_ops",
       OpLog.countPayload).ensure()
@@ -526,7 +526,7 @@ object Streams {
     catalog.recoverReplace(tombTable)
     // first-op safety: a delete may be the first operation ever run on
     // this family — materialize the tables it reads
-    catalog.ensurePartitionedTable(corpusTable, dedupCorpusSchema, Seq("pbk"))
+    catalog.ensurePartitionedTable(corpusTable)
     catalog.ensureTable(tombTable, dedupTombSchema)
     log.ensure()
     // one |ops|-row collect answers base-seq derivation, replay flags
@@ -980,7 +980,7 @@ object Streams {
       codesTable: String,
       tombTable: String,
       codesSchema: StructType): Unit = {
-    catalog.ensurePartitionedTable(codesTable, codesSchema, Seq("pbk"))
+    catalog.ensurePartitionedTable(codesTable)
     catalog.ensureTable(tombTable, vectorTombSchema)
     new OpLog(catalog.spark, catalog, codesTable + "_ops",
       OpLog.countPayload).ensure()

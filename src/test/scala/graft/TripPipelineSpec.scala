@@ -108,10 +108,12 @@ class TripPipelineSpec extends SparkSpec {
     assert(recovered.nonEmpty)
   }
 
-  test("a batch on a warehouse with hist and view launches at most 7 jobs") {
+  test("a batch on a warehouse with hist and view launches at most 4 jobs") {
     // staging write (its observed dates plan the prune and the refresh),
-    // the 3-job anti-join append, truncate and the 2-job bucket refresh;
-    // re-deriving the dates or inferring staging's schema would add jobs
+    // the 2-job anti-join append (hist keys' broadcast, the write) and
+    // the 1-job bucket refresh; tables are created and staging truncated
+    // from the driver. Re-deriving the dates, inferring staging's schema
+    // or an exchange in the dedup or the refresh would add jobs
     val dir = Files.createTempDirectory("graft-trips-jobs").toString
     val csv = s"$dir/trips.csv"
     val csv2 = s"$dir/trips2.csv"
@@ -119,10 +121,42 @@ class TripPipelineSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(csv2),
       TripPipelineDemo.syntheticCsv(100, 50))
     val pipe = new Pipeline(spark, s"$dir/warehouse")
-    pipe.runBatch(csv)
+    val first = org.apache.spark.graft.JobCount(spark.sparkContext)(pipe.runBatch(csv))
+    assert(first <= 4, s"runBatch on a fresh warehouse launched $first jobs")
     val jobs = org.apache.spark.graft.JobCount(spark.sparkContext)(pipe.runBatch(csv2))
-    assert(jobs <= 7, s"runBatch launched $jobs jobs")
+    assert(jobs <= 4, s"runBatch launched $jobs jobs")
     assert(pipe.hist.count() === 150)
+  }
+
+  test("batches on a session whose file-open cost is 1 KB keep their exchanges and results") {
+    // staging and hist scans above spark.sql.files.openCostInBytes keep
+    // the shuffled plan; the result must not depend on the branch
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val dir = Files.createTempDirectory("graft-trips-opencost").toString
+    val csvs = Seq((100, 0), (100, 50)).zipWithIndex.map { case ((n, off), i) =>
+      val csv = s"$dir/trips$i.csv"
+      Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(n, off))
+      csv
+    }
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.openCostInBytes", "1024")
+    object Plans extends AdaptiveSparkPlanHelper
+    def run(session: org.apache.spark.sql.SparkSession, wh: String) = {
+      val pipe = new Pipeline(session, s"$dir/$wh")
+      val plans = org.apache.spark.graft.ExecutedPlans(session)(csvs.foreach(pipe.runBatch))
+      val shuffles = plans.flatMap(p => Plans.collect(p) { case e: ShuffleExchangeLike => e })
+      (pipe.hist.collect().map(_.toSeq).toSet,
+        pipe.summarized.collect().map(_.toSeq).toSet, shuffles.size)
+    }
+    val (hist, view, coalescedShuffles) = run(spark, "one-task")
+    val (histX, viewX, shuffles) = run(small, "exchange")
+    assert(coalescedShuffles === 0)
+    assert(shuffles > 0)
+    assert(histX === hist)
+    assert(viewX === view)
+    assert(hist.size === 150)
+    assert(view.nonEmpty)
   }
 
   test("batches and compaction on a warehouse with hist and view spawn no shell process") {
@@ -194,29 +228,6 @@ class TripPipelineSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(incremental === full)
     assert(incremental.nonEmpty)
-  }
-
-  test("incremental refresh migrates a legacy flat view layout") {
-    val dir = Files.createTempDirectory("graft-trips-flat").toString
-    val csv = s"$dir/trips.csv"
-    Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(40))
-    val pipe = new Pipeline(spark, s"$dir/warehouse")
-    pipe.runBatch(csv)
-    // simulate a warehouse written by a pre-partitioning version: the
-    // same rows, flat parquet at the table root
-    val legacy = pipe.summarized.select("region", "weekly_avg", "week_of_month")
-      .localCheckpoint() // materialize before overwriting the path it reads
-    pipe.catalog.overwrite(pipe.ViewTable, legacy)
-    val viewDir = new java.io.File(pipe.catalog.path(pipe.ViewTable))
-    assert(viewDir.listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")))
-    // an incremental refresh on the flat layout must fall back to a full
-    // partitioned rewrite, not mix dynamic-partition dirs into it
-    pipe.runBatch(csv)
-    val entries = viewDir.listFiles()
-    assert(entries.exists(_.getName.startsWith("week_of_month=")))
-    assert(!entries.exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      entries.map(_.getName).mkString(","))
-    assert(pipe.summarized.count() > 0)
   }
 
   test("compaction bounds per-partition files and preserves content") {
@@ -525,11 +536,9 @@ class TripPipelineSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-lease-compact").toString
     val cat = new graft.sources.Catalog(spark, dir)
     val foreign = new graft.sources.Catalog(spark, dir)
-    val schema = graft.streaming.Streams.dedupCorpusSchema
     // minimal empty family: compaction must still enter its lease window
-    cat.ensurePartitionedTable("corpus", schema, Seq("pbk"))
-    cat.ensurePartitionedTable("buckets",
-      graft.streaming.Streams.dedupBucketSchema, Seq("pbk"))
+    cat.ensurePartitionedTable("corpus")
+    cat.ensurePartitionedTable("buckets")
     foreign.withMaintenanceLease("corpus_ops") {
       intercept[graft.sources.Catalog.MaintenanceLeaseHeld] {
         graft.streaming.Streams.compactDocDedup(cat, "corpus", "buckets", "corpus_tomb")
