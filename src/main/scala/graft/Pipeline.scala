@@ -39,13 +39,13 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     } else if (!catalog.exists(ViewTable)) refreshSummarizedView()
   }
 
-  /** One batch end-to-end (populate_postgres.sql:2-34), in 4 Spark jobs
+  /** One batch end-to-end (populate_postgres.sql:2-34), in 3 Spark jobs
     * on a fresh warehouse and on one that already holds hist and the
     * view: the staging write (1), the pruned anti-join append into hist
-    * (2: the hist side's broadcast and the write), the staging truncate
-    * (none: a zero-row file written from the driver) and the
-    * touched-bucket view refresh (1: its aggregate runs in the write's
-    * own stage).
+    * (1: at batch size the dedup, the anti-join and the write share one
+    * task), the staging truncate (none: a zero-row file written from the
+    * driver) and the touched-bucket view refresh (1: its aggregate runs
+    * in the write's own stage).
     *
     * The historical table is laid out partitioned by `trip_date`
     * (derived from date_time), and the upsert prunes the historical
@@ -102,23 +102,22 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     val range =
       if (known.isEmpty) None
       else Some((known.minBy(_.toEpochDay), known.maxBy(_.toEpochDay)))
-    val stg = oneTaskIfSmall(catalog.readWithSchema(StagingTable, Trip.schemaWithDate))
+    val stg = catalog.readWithSchema(StagingTable, Trip.schemaWithDate)
+    val existing = hist
+    // when the batch and the whole hist both fit one task, join them in
+    // it: a shuffled hash join of two single-partition sides needs no
+    // exchange, and the hinted hist side no broadcast job, so the dedup,
+    // the anti-join and the write share one stage. A larger hist keeps
+    // the planner's choice
+    val (batch, keys) =
+      if (catalog.fitsOneTask(stg) && catalog.fitsOneTask(existing))
+        (stg.coalesce(1), existing.coalesce(1).hint("shuffle_hash"))
+      else (catalog.oneTaskIfSmall(stg), existing)
     catalog.appendPartitioned(HistTable,
-      Upsert.newRowsPruned(stg, hist, "trip_key", "trip_date",
+      Upsert.newRowsPruned(batch, keys, "trip_key", "trip_date",
         range, dates.contains(None)),
       Seq("trip_date"))
   }
-
-  /** `scan` in one partition when its estimated size is at most
-    * `spark.sql.files.openCostInBytes`, the size Spark already charges as
-    * one file open: the dedup and aggregates over it then run in the
-    * scan's own task, with no exchange and no job of their own. Larger
-    * scans keep their plan.
-    */
-  private def oneTaskIfSmall(scan: DataFrame): DataFrame =
-    if (scan.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        spark.sessionState.conf.filesOpenCostInBytes) scan.coalesce(1)
-    else scan
 
   /** Materialized-view full refresh: recompute + overwrite, stored
     * partitioned by week bucket so incremental refreshes can replace
@@ -154,7 +153,8 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     val nullBucket =
       if (dates.contains(None)) Some(F.col("trip_date").isNull) else None
     (ranges ++ nullBucket).reduceOption(_ || _).foreach { prune =>
-      val recomputed = TripQueries.weeklyAvgTripsPerRegion(oneTaskIfSmall(hist.filter(prune)))
+      val recomputed =
+        TripQueries.weeklyAvgTripsPerRegion(catalog.oneTaskIfSmall(hist.filter(prune)))
       catalog.overwritePartitioned(ViewTable, recomputed,
         Seq("week_of_month"), dynamic = true)
     }

@@ -642,6 +642,26 @@ class Catalog(
     }
   }
 
+  /** True when `bytes` is at most `spark.sql.files.openCostInBytes`, the
+    * size Spark already charges as one file open: below it a split costs
+    * more than the work it spreads, so a dedup, aggregate, join or
+    * rewrite over such an input runs in one task, with no exchange and
+    * no job of its own. The one size rule of the trip ETL's staging,
+    * hist and view-refresh scans and of [[compactPartitioned]].
+    */
+  private[graft] def fitsOneTask(bytes: BigInt): Boolean =
+    bytes <= spark.sessionState.conf.filesOpenCostInBytes
+
+  /** [[fitsOneTask]] on `scan`'s estimated (partition-pruned) size. */
+  private[graft] def fitsOneTask(scan: DataFrame): Boolean =
+    fitsOneTask(scan.queryExecution.optimizedPlan.stats.sizeInBytes)
+
+  /** `scan` in one partition when it [[fitsOneTask]]; larger scans keep
+    * their plan.
+    */
+  private[graft] def oneTaskIfSmall(scan: DataFrame): DataFrame =
+    if (fitsOneTask(scan)) scan.coalesce(1) else scan
+
   /** Small-file compaction for a hive-partitioned table. Repeated
     * incremental appends / dynamic-partition overwrites accrete one file
     * per task per batch; over months a hot date partition holds
@@ -719,38 +739,45 @@ class Catalog(
     // heal refuses loudly, and a crash during staging heals as pure
     // garbage (no __manifest yet => nothing was renamed)
     beginSwap(fs, table, "-", () => recoverCompaction(table, partitionCol))
-    // Size the rewrite's shuffle by the bytes selected: at
-    // ceil(selected bytes / targetFileBytes) tasks each task's working set
-    // is ~one output file (~128 MB) at any scale. When that width exceeds
-    // the session's shuffle parallelism, pin it as the partition count —
-    // left to the session default (the 8 the lifecycle twins run under,
-    // or 32 on a cluster), a big compaction would pack totalBytes/N into
-    // each task and grow toward the spill cliff. When it fits, keep the
-    // implicit form so AQE coalesces the shuffle by bytes: a pinned count
-    // disables that coalescing (measured 2x on the many-tiny-partition
-    // vector lifecycle at sf0.1), and a width counted per selected
-    // partition, each at least one file, would launch one write task per
-    // tiny partition, each of which deserializes the session's whole
-    // Hadoop configuration. The per-partition output-file bound (<= its
-    // target count, however many groups share a task) holds on both arms.
-    val width = filesFor(toCompact.map(_._2).sum)
-    def slotted(df: DataFrame): DataFrame = df
-      .withColumn("__slot",
-        F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), fileTarget.cast("long")))
+    // Size the rewrite by the bytes selected. A selection that fits one
+    // task and one output file ([[fitsOneTask]], at most
+    // `targetFileBytes`) is read and written in a single coalesced task:
+    // the writer sorts its rows by partition, so each partition gets
+    // exactly one file, and no shuffle or second job runs. A larger one is
+    // shuffled on (partition, __slot) into ceil(selected bytes /
+    // targetFileBytes) tasks, so each task's working set is ~one output
+    // file (~128 MB) at any scale. When that width exceeds the session's
+    // shuffle parallelism it is pinned as the partition count — left to
+    // the session default (the 8 the lifecycle twins run under, or 32 on
+    // a cluster), a big compaction would pack totalBytes/N into each task
+    // and grow toward the spill cliff. When it fits, the implicit form
+    // lets AQE coalesce the shuffle by bytes: a pinned count disables that
+    // coalescing (measured 2x on the many-tiny-partition vector lifecycle
+    // at sf0.1). The per-partition output-file bound (<= its target count,
+    // however many groups share a task) holds on every branch.
+    val selectedBytes = toCompact.map(_._2).sum
+    val width = filesFor(selectedBytes)
     val sessionParallelism = spark.sessionState.conf.numShufflePartitions
     def sized(df: DataFrame): DataFrame =
-      if (width > sessionParallelism)
-        // guard the Long->Int narrowing: past ~2^31 file targets the
-        // cast would wrap (negative count throws opaquely; a wrapped
-        // positive silently undersizes the shuffle) — cap instead, the
-        // per-task bound merely loosens toward totalBytes/2^31
-        df.repartition(math.min(width, Int.MaxValue.toLong).toInt,
-          F.col(partitionCol), F.col("__slot"))
-      else df.repartition(F.col(partitionCol), F.col("__slot"))
+      if (fitsOneTask(selectedBytes) && selectedBytes <= targetFileBytes) df.coalesce(1)
+      else {
+        val slotted = df.withColumn("__slot",
+          F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(),
+            fileTarget.cast("long")))
+        val shuffled =
+          if (width > sessionParallelism)
+            // guard the Long->Int narrowing: past ~2^31 file targets the
+            // cast would wrap (negative count throws opaquely; a wrapped
+            // positive silently undersizes the shuffle) — cap instead,
+            // the per-task bound merely loosens toward totalBytes/2^31
+            slotted.repartition(math.min(width, Int.MaxValue.toLong).toInt,
+              F.col(partitionCol), F.col("__slot"))
+          else slotted.repartition(F.col(partitionCol), F.col("__slot"))
+        shuffled.drop("__slot")
+      }
     try {
-      sized(slotted(transform(readWithSchema(table, schema)
-          .filter(F.col(partitionCol).cast("string").isin(values: _*)))))
-        .drop("__slot")
+      sized(transform(readWithSchema(table, schema)
+          .filter(F.col(partitionCol).cast("string").isin(values: _*))))
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
         .parquet(staging.toString)
     } catch { case t: Throwable =>

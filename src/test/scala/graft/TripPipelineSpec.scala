@@ -108,12 +108,13 @@ class TripPipelineSpec extends SparkSpec {
     assert(recovered.nonEmpty)
   }
 
-  test("a batch on a warehouse with hist and view launches at most 4 jobs") {
+  test("a batch on a warehouse with hist and view launches at most 3 jobs") {
     // staging write (its observed dates plan the prune and the refresh),
-    // the 2-job anti-join append (hist keys' broadcast, the write) and
-    // the 1-job bucket refresh; tables are created and staging truncated
-    // from the driver. Re-deriving the dates, inferring staging's schema
-    // or an exchange in the dedup or the refresh would add jobs
+    // the 1-job anti-join append (dedup, anti-join and write in one task)
+    // and the 1-job bucket refresh; tables are created and staging
+    // truncated from the driver. Re-deriving the dates, inferring
+    // staging's schema, broadcasting the hist keys or an exchange in the
+    // dedup or the refresh would add jobs
     val dir = Files.createTempDirectory("graft-trips-jobs").toString
     val csv = s"$dir/trips.csv"
     val csv2 = s"$dir/trips2.csv"
@@ -122,41 +123,98 @@ class TripPipelineSpec extends SparkSpec {
       TripPipelineDemo.syntheticCsv(100, 50))
     val pipe = new Pipeline(spark, s"$dir/warehouse")
     val first = org.apache.spark.graft.JobCount(spark.sparkContext)(pipe.runBatch(csv))
-    assert(first <= 4, s"runBatch on a fresh warehouse launched $first jobs")
+    assert(first <= 3, s"runBatch on a fresh warehouse launched $first jobs")
     val jobs = org.apache.spark.graft.JobCount(spark.sparkContext)(pipe.runBatch(csv2))
-    assert(jobs <= 4, s"runBatch launched $jobs jobs")
+    assert(jobs <= 3, s"runBatch launched $jobs jobs")
     assert(pipe.hist.count() === 150)
   }
 
-  test("batches on a session whose file-open cost is 1 KB keep their exchanges and results") {
-    // staging and hist scans above spark.sql.files.openCostInBytes keep
-    // the shuffled plan; the result must not depend on the branch
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val dir = Files.createTempDirectory("graft-trips-opencost").toString
-    val csvs = Seq((100, 0), (100, 50)).zipWithIndex.map { case ((n, off), i) =>
+  /** Trip CSVs of `(rows, offset)` under `dir`, for the per-session tests. */
+  private def tripCsvs(dir: String, shapes: Seq[(Int, Int)]): Seq[String] =
+    shapes.zipWithIndex.map { case ((n, off), i) =>
       val csv = s"$dir/trips$i.csv"
       Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(n, off))
       csv
     }
+
+  /** A child session whose `spark.sql.files.openCostInBytes` is 1 KB, so
+    * no scan or compaction of the fixtures fits one task. */
+  private def kilobyteOpenCost: org.apache.spark.sql.SparkSession = {
     val small = spark.newSession()
     small.conf.set("spark.sql.files.openCostInBytes", "1024")
-    object Plans extends AdaptiveSparkPlanHelper
+    small
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The shuffle and broadcast exchanges of `plans`, AQE stages included. */
+  private def exchanges(plans: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    plans.flatMap(p => Plans.collect(p) {
+      case e: ShuffleExchangeLike => e
+      case e: BroadcastExchangeLike => e
+    })
+  }
+
+  test("batches on a session whose file-open cost is 1 KB keep their exchanges and results") {
+    // staging and hist scans above spark.sql.files.openCostInBytes keep
+    // the shuffled or broadcast plan; at or below it a batch runs with
+    // neither, and the result must not depend on the branch
+    val dir = Files.createTempDirectory("graft-trips-opencost").toString
+    val csvs = tripCsvs(dir, Seq((100, 0), (100, 50)))
     def run(session: org.apache.spark.sql.SparkSession, wh: String) = {
       val pipe = new Pipeline(session, s"$dir/$wh")
       val plans = org.apache.spark.graft.ExecutedPlans(session)(csvs.foreach(pipe.runBatch))
-      val shuffles = plans.flatMap(p => Plans.collect(p) { case e: ShuffleExchangeLike => e })
       (pipe.hist.collect().map(_.toSeq).toSet,
-        pipe.summarized.collect().map(_.toSeq).toSet, shuffles.size)
+        pipe.summarized.collect().map(_.toSeq).toSet, exchanges(plans))
     }
-    val (hist, view, coalescedShuffles) = run(spark, "one-task")
-    val (histX, viewX, shuffles) = run(small, "exchange")
-    assert(coalescedShuffles === 0)
-    assert(shuffles > 0)
+    val (hist, view, oneTask) = run(spark, "one-task")
+    val (histX, viewX, exchanged) = run(kilobyteOpenCost, "exchange")
+    assert(oneTask.isEmpty, oneTask.map(_.nodeName).mkString(", "))
+    assert(exchanged.nonEmpty)
     assert(histX === hist)
     assert(viewX === view)
     assert(hist.size === 150)
     assert(view.nonEmpty)
+  }
+
+  test("compaction of a selection that fits one task runs one job; a 1 KB open cost shuffles") {
+    // three overlapping batches leave three files in every trip_date
+    // partition; both branches must end at one file per partition with
+    // the same rows
+    val dir = Files.createTempDirectory("graft-trips-compact1").toString
+    val csvs = tripCsvs(dir, Seq((100, 0), (100, 50), (100, 120)))
+    def filesPerPartition(pipe: Pipeline): Map[String, Int] =
+      new java.io.File(pipe.catalog.path(pipe.HistTable)).listFiles()
+        .filter(d => d.isDirectory && d.getName.startsWith("trip_date="))
+        .map(d => d.getName -> d.listFiles().count(f =>
+          f.isFile && f.getName.endsWith(".parquet"))).toMap
+    def compacted(session: org.apache.spark.sql.SparkSession, wh: String) = {
+      val pipe = new Pipeline(session, s"$dir/$wh")
+      csvs.foreach(pipe.runBatch)
+      val before = pipe.hist.collect().map(_.toSeq).toSet
+      assert(filesPerPartition(pipe).values.min > 1, wh)
+      var jobs = 0
+      val plans = org.apache.spark.graft.ExecutedPlans(session) {
+        jobs = org.apache.spark.graft.JobCount(session.sparkContext) {
+          assert(pipe.compactHist(maxFilesPerPartition = 1).nonEmpty, wh)
+        }
+      }
+      val after = filesPerPartition(pipe)
+      assert(after.size === 28, wh)
+      assert(after.values.max === 1, s"$wh: $after")
+      assert(pipe.hist.collect().map(_.toSeq).toSet === before, wh)
+      (jobs, exchanges(plans), before)
+    }
+    val (jobs, oneTask, rows) = compacted(spark, "one-task")
+    assert(jobs === 1)
+    assert(oneTask.isEmpty, oneTask.map(_.nodeName).mkString(", "))
+    val (_, shuffled, rowsX) = compacted(kilobyteOpenCost, "shuffle")
+    assert(shuffled.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]))
+    assert(rowsX === rows)
+    assert(rows.size === 220)
   }
 
   test("batches and compaction on a warehouse with hist and view spawn no shell process") {
@@ -164,11 +222,7 @@ class TripPipelineSpec extends SparkSpec {
     // file or dir and readlink per link-status probe; the engine's file:
     // filesystem does both in-process
     val dir = Files.createTempDirectory("graft-trips-spawns").toString
-    val csvs = Seq((100, 0), (100, 50), (100, 120)).zipWithIndex.map { case ((n, off), i) =>
-      val csv = s"$dir/trips$i.csv"
-      Files.writeString(java.nio.file.Paths.get(csv), TripPipelineDemo.syntheticCsv(n, off))
-      csv
-    }
+    val csvs = tripCsvs(dir, Seq((100, 0), (100, 50), (100, 120)))
     val pipe = new Pipeline(spark, s"$dir/warehouse")
     pipe.runBatch(csvs.head)
     val spawned = ShellSpawns {
