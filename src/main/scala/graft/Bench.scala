@@ -653,19 +653,11 @@ object Bench {
       try {
         val catalog = new graft.sources.Catalog(s, s"$dir/warehouse")
         catalog.ensureTable("hist_trip_data", graft.model.Trip.schema)
-        // AvailableNow: same per-file batch boundaries as the default
-        // trigger (admission control honors maxFilesPerTrigger), but
-        // the query drains and self-terminates instead of paying the
-        // idle trigger-scheduling gaps processAllAvailable polls over
-        val q = graft.streaming.Streams.streamingUpsert(
-          graft.streaming.Streams.tripFileStream(s, drop, maxFilesPerTrigger = 1),
-          catalog, "hist_trip_data", s"$dir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        // stop in finally: a failed micro-batch must not leave the
-        // stream's listing/microbatch threads competing with whatever
-        // the bench measures next
-        try q.awaitTermination()
-        finally q.stop()
+        graft.queries.Replay(s, dir, None) { r =>
+          r.run(graft.streaming.Streams.streamingUpsert(
+            graft.streaming.Streams.tripFileStream(r.session, drop, maxFilesPerTrigger = 1),
+            catalog, "hist_trip_data", r.cp))
+        }
         (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] streaming failed: ${e.getMessage}")
@@ -702,32 +694,26 @@ object Bench {
       batchFile("b1.jsonl", docs until 2 * docs,
         i => if (i % 10 < 3) i - docs else i) // 30% dups of b0
       val t0 = System.nanoTime()
-      // right-size shuffle width to the micro-batch (the twins'
-      // withFewShufflePartitions rationale): a 1500-doc batch through
-      // a ~7-job foreachBatch chain pays task-launch overhead per
-      // shuffle partition per job; 32-wide shuffles are the 100 TB
-      // posture, not the micro-batch one. Restored after the stream.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       try {
-        val catalog = new graft.sources.Catalog(s, s"$dir/warehouse")
-        val ddl = org.apache.spark.sql.types.StructType.fromDDL _
-        catalog.ensureTable("corpus", ddl("doc_id BIGINT, text STRING"))
-        catalog.ensureTable("corpus_buckets", ddl("id BIGINT, band INT, bk BIGINT"))
-        // AvailableNow (see the streaming entry): identical two-batch
-        // schedule — the cross-batch dedup property still exercises the
-        // persisted index — minus the idle trigger-poll gaps
-        val q = graft.streaming.Streams.streamingDocDedup(
-          graft.streaming.Streams.docFileStream(s, drop, maxFilesPerTrigger = 1),
-          catalog, "corpus", "corpus_buckets", s"$dir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        try q.awaitTermination()
-        finally q.stop()
+        // right-size shuffle width to the micro-batch (the twins'
+        // replay-width rationale): a 1500-doc batch through a ~7-job
+        // foreachBatch chain pays task-launch overhead per shuffle
+        // partition per job; 32-wide shuffles are the 100 TB posture,
+        // not the micro-batch one
+        graft.queries.Replay(s, dir, Some(4)) { r =>
+          val catalog = new graft.sources.Catalog(r.session, s"$dir/warehouse")
+          val ddl = org.apache.spark.sql.types.StructType.fromDDL _
+          catalog.ensureTable("corpus", ddl("doc_id BIGINT, text STRING"))
+          catalog.ensureTable("corpus_buckets", ddl("id BIGINT, band INT, bk BIGINT"))
+          r.run(graft.streaming.Streams.streamingDocDedup(
+            graft.streaming.Streams.docFileStream(r.session, drop, maxFilesPerTrigger = 1),
+            catalog, "corpus", "corpus_buckets", r.cp))
+        }
         (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] streaming_dedup failed: ${e.getMessage}")
         Double.NaN
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }
     // Tiny-volume warm-up of every selected composite path (r12): the
     // composites session is a fresh JVM-context whose FIRST measured

@@ -937,36 +937,12 @@ class Catalog(
     * re-admitting live docs as duplicate generations and double-counting
     * global stats. One fs read per check; idempotent.
     */
-  def ensureLayoutMeta(family: String, stamp: String,
-      acceptLegacy: String => Boolean = _ => false): Unit = {
+  def ensureLayoutMeta(family: String, stamp: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path(family) + "__layout")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val existing = coordinator.readSmall(fs, p)
     existing match {
       case Some(s) if s == stamp => ()
-      case Some(s) if acceptLegacy(s) =>
-        // ONE-TIME STAMP UPGRADE: the caller vouches that rows written
-        // under the legacy stamp `s` are bit-compatible with `stamp`
-        // (e.g. a v1 stamp recorded only the id-hash modulus; rows
-        // written under it with the historical default banding are
-        // exactly what the widened v2 stamp describes). Rewrite the
-        // stamp so future reopens verify against the FULL v2 scheme.
-        // Race posture: concurrent upgraders rewrite the identical v2
-        // stamp (benign); a concurrent opener with DIFFERENT v2 params
-        // either loses the create (re-read → LayoutMismatch, loud) or
-        // wins it, in which case THIS upgrader's re-read mismatches and
-        // throws before any row lands. Op paths additionally stamp
-        // under the family's single-writer span, so in practice the
-        // delete/create pair is uncontended.
-        coordinator.delete(fs, p, false)
-        if (!coordinator.createIfAbsent(fs, p, stamp)) {
-          val s2 = coordinator.readSmall(fs, p).getOrElse(
-            throw new java.io.IOException(
-              s"layout stamp for '$family' unreadable after upgrade race"))
-          if (s2 != stamp) throw new Catalog.LayoutMismatch(
-            s"family '$family' concurrently restamped to [$s2] during a " +
-              s"legacy upgrade from [$s]; this opener wanted [$stamp]")
-        }
       case Some(s) =>
         throw new Catalog.LayoutMismatch(
           s"family '$family' was created with layout [$s] but is being " +

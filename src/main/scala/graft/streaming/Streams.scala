@@ -299,8 +299,7 @@ object Streams {
         // probe rows written under another scheme — silently admitting
         // near-duplicates of all prior content (LayoutMismatch instead)
         catalog.ensureLayoutMeta(corpusTable, dedupLayoutStamp(
-          stateBuckets, shingleLen, numHashes, bands),
-          dedupLegacyV1(stateBuckets, shingleLen, numHashes, bands))
+          stateBuckets, shingleLen, numHashes, bands))
         val log = new OpLog(s, catalog, corpusTable + "_ops", OpLog.countPayload)
         val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
         def pbkOf(c: org.apache.spark.sql.Column) =
@@ -414,22 +413,6 @@ object Streams {
     s"dedup v2 stateBuckets=$stateBuckets shingle=$shingleLen " +
       s"mh=$numHashes bands=$bands"
 
-  /** One-time v1→v2 stamp upgrade for warehouses written before the
-    * stamp widened (v1 recorded only `stateBuckets`). A v1 warehouse's
-    * rows were necessarily written under the HISTORICAL DEFAULT banding
-    * (shingle=5, mh=64, bands=4 — the only values the v1 code paths
-    * ever shipped as defaults), so a v1 stamp whose stateBuckets
-    * matches is accepted iff the caller passes exactly those defaults;
-    * [[Catalog.ensureLayoutMeta]] then rewrites the stamp to v2 and
-    * every later reopen verifies the full scheme. Any other parameters
-    * still refuse with LayoutMismatch — the forced rebuild is real
-    * there, because v1 recorded nothing that could prove compatibility. */
-  def dedupLegacyV1(
-      stateBuckets: Int, shingleLen: Int, numHashes: Int,
-      bands: Int): String => Boolean =
-    s => s == s"dedup v1 stateBuckets=$stateBuckets" &&
-      shingleLen == 5 && numHashes == 64 && bands == 4
-
   /** The vector family's stamp: `stateBuckets` shapes `pbk`,
     * (nlist, m, ksub) shape every code row (cell ids < nlist, code
     * arrays of length m with values < ksub). A model retrain
@@ -440,18 +423,6 @@ object Streams {
   def vectorLayoutStamp(
       stateBuckets: Int, nlist: Int, m: Int, ksub: Int): String =
     s"vector v2 stateBuckets=$stateBuckets nlist=$nlist m=$m ksub=$ksub"
-
-  /** v1→v2 upgrade for the vector family. v1 recorded only
-    * `stateBuckets`; the PQ constants were never defaulted (every
-    * caller passed its model's nlist/m/ksub explicitly), so a v1-era
-    * reopen always TRUSTED the caller's constants — exactly the trust
-    * this acceptance preserves for the first v2 opener: a v1 stamp with
-    * matching stateBuckets upgrades to v2 carrying the caller's
-    * constants, which every subsequent reopen then verifies. The
-    * upgrade narrows trust (one trusted open, enforced forever after)
-    * rather than widening it. */
-  def vectorLegacyV1(stateBuckets: Int): String => Boolean =
-    s => s == s"vector v1 stateBuckets=$stateBuckets"
 
   val dedupCorpusSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, text STRING, seq BIGINT, pbk INT")
@@ -604,8 +575,7 @@ object Streams {
     // first-op safety: replace may be the first operation on the family
     ensureDedupIndexTables(catalog, corpusTable, bucketTable, tombTable)
     catalog.ensureLayoutMeta(corpusTable, dedupLayoutStamp(
-      stateBuckets, shingleLen, numHashes, bands),
-      dedupLegacyV1(stateBuckets, shingleLen, numHashes, bands))
+      stateBuckets, shingleLen, numHashes, bands))
     def pbkOf(c: org.apache.spark.sql.Column) =
       F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
     // one |ops|-row collect answers base-seq derivation, replay flags
@@ -893,8 +863,7 @@ object Streams {
         // stored pbk values bake in the id-hash modulus and code rows
         // bake in the PQ constants: refuse a mismatched reopen loudly
         catalog.ensureLayoutMeta(codesTable,
-          vectorLayoutStamp(stateBuckets, nlist, m, ksub),
-          vectorLegacyV1(stateBuckets))
+          vectorLayoutStamp(stateBuckets, nlist, m, ksub))
         val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
         def pbkOf(c: org.apache.spark.sql.Column) =
           F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
@@ -1078,8 +1047,7 @@ object Streams {
     // first-op safety: replace may be the first operation on the family
     ensureVectorIndexTables(catalog, codesTable, tombTable, codesSchema)
     catalog.ensureLayoutMeta(codesTable,
-      vectorLayoutStamp(stateBuckets, nlist, m, ksub),
-      vectorLegacyV1(stateBuckets))
+      vectorLayoutStamp(stateBuckets, nlist, m, ksub))
     def pbkOf(c: org.apache.spark.sql.Column) =
       F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
     // one |ops|-row collect: base seq, replay flags, both tables'
@@ -1261,8 +1229,7 @@ object Streams {
     catalog.recoverReplace(modelTable)
     catalog.ensureTable(modelTable, vectorModelSchema)
     catalog.ensureLayoutMeta(codesTable,
-      vectorLayoutStamp(stateBuckets, nlist, m, ksub),
-      vectorLegacyV1(stateBuckets))
+      vectorLayoutStamp(stateBuckets, nlist, m, ksub))
     val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
       OpLog.countPayload)
     log.ensure()

@@ -62,8 +62,6 @@ object AttribPlateau {
       horizon: String,
       lateness: String): Result = {
     val dir = java.nio.file.Files.createTempDirectory("graft-attrib-plateau").toString
-    val in = s"$dir/in"; val cp = s"$dir/cp"
-    new java.io.File(in).mkdirs()
     val tiles = (n + tileRows - 1) / tileRows
     // event i: ts = epoch + i/rate sec (fixed event-time rate), user
     // cycling, strict view/purchase alternation so every purchase has
@@ -74,46 +72,29 @@ object AttribPlateau {
       F.col("id").as("event_id"),
       (F.col("id") % users).as("user_id"),
       F.when(F.col("id") % 2 === 0, "view").otherwise("purchase").as("event_type"))
-    (0 until tiles).foreach { t =>
-      val tmp = s"$dir/tmp"
-      ev.filter(F.col("id") >= t.toLong * tileRows &&
-          F.col("id") < (t + 1).toLong * tileRows)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      val dst = new java.io.File(in, f"b$t%05d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1700000000000L + t * 60000L)
-    }
-    def src() = spark.readStream.schema(ev.drop("id").schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val joined = graft.streaming.Streams.attributedPurchases(
-      src().filter(F.col("event_type") === "purchase"),
-      src().filter(F.col("event_type") === "view"),
-      horizon = horizon, lateness = lateness)
     val outRows = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val t0 = System.nanoTime()
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        outRows.addAndGet(b.count()); ()
-      }.start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    graft.queries.Replay(spark, dir, Some(8)) { r =>
+      r.tiles(ev.withColumn("__tile", (F.col("event_id") / tileRows).cast("int") + 1),
+        tiles, dir)
+      def src() = r.source(ev.schema)
+      val joined = graft.streaming.Streams.attributedPurchases(
+        src().filter(F.col("event_type") === "purchase"),
+        src().filter(F.col("event_type") === "view"),
+        horizon = horizon, lateness = lateness)
+      val t0 = System.nanoTime()
+      val progress = r.run(joined.writeStream.outputMode("append")
+        .option("checkpointLocation", r.cp)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          outRows.addAndGet(b.count()); ()
+        })
+      val sec = (System.nanoTime() - t0) / 1e9
+      // recentProgress keeps the latest ~100 batch snapshots; tiles are
+      // sized so every batch's end-of-batch state snapshot is retained
+      val states = progress.flatMap(p => Option(p.stateOperators)).flatten
+      Result(outRows.get,
+        if (states.isEmpty) 0L else states.map(_.numRowsTotal).max,
+        if (states.isEmpty) 0L else states.map(_.memoryUsedBytes).max,
+        sec)
     }
-    val sec = (System.nanoTime() - t0) / 1e9
-    // recentProgress keeps the latest ~100 batch snapshots; tiles are
-    // sized so every batch's end-of-batch state snapshot is retained
-    val states = q.recentProgress.flatMap(p => Option(p.stateOperators))
-      .flatten.toSeq
-    Result(outRows.get,
-      if (states.isEmpty) 0L else states.map(_.numRowsTotal).max,
-      if (states.isEmpty) 0L else states.map(_.memoryUsedBytes).max,
-      sec)
   }
 }

@@ -735,54 +735,23 @@ class LifecycleContractSpec extends SparkSpec {
     }
   }
 
-  test("a v1 layout stamp upgrades one-time to v2; anything unprovable still refuses") {
-    // Warehouses written before the stamp widened carry
-    // 'dedup v1 stateBuckets=N' / 'vector v1 stateBuckets=N'. Their
-    // rows ARE compatible when the reopen parameters match what v1-era
-    // code actually wrote (dedup: the historical default banding;
-    // vector: the caller-supplied constants v1 always trusted) — the
-    // upgrade accepts exactly those cases, rewrites the stamp to v2,
-    // and everything else keeps refusing with LayoutMismatch.
-    val dir = Files.createTempDirectory("graft-layout-upgrade").toString
+  test("a v1 layout stamp refuses and stays untouched on disk") {
+    // No writer produces a v1 stamp ('dedup v1 stateBuckets=N' /
+    // 'vector v1 stateBuckets=N'); one found on disk is an unknown
+    // layout like any other mismatch: refuse, and leave it as it is.
+    val dir = Files.createTempDirectory("graft-layout-v1").toString
 
-    // ---- dedup: build a warehouse, then regress its stamp to v1
     val dcat = new Catalog(spark, s"$dir/dd")
     Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "corpus_tomb",
-      Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")) // 16/5/64/4
+      Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"))
     val dstamp = java.nio.file.Paths.get(s"$dir/dd/corpus__layout")
     java.nio.file.Files.writeString(dstamp, "dedup v1 stateBuckets=16")
-    // non-default banding: v1 recorded nothing that could prove
-    // compatibility — refuse, and leave the v1 stamp untouched
     intercept[Catalog.LayoutMismatch] {
       Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "corpus_tomb",
-        Seq((2L, "x y z")).toDF("doc_id", "text"), bands = 8)
+        Seq((2L, "second doc text")).toDF("doc_id", "text"))
     }
-    assert(java.nio.file.Files.readString(dstamp).trim
-      === "dedup v1 stateBuckets=16")
-    // mismatched modulus: refuse even at default banding
-    intercept[Catalog.LayoutMismatch] {
-      Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "corpus_tomb",
-        Seq((2L, "x y z")).toDF("doc_id", "text"), stateBuckets = 32)
-    }
-    // the historical defaults: accepted, and the stamp rewrites to v2
-    Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "corpus_tomb",
-      Seq((2L, "second doc text")).toDF("doc_id", "text"))
-    assert(java.nio.file.Files.readString(dstamp).trim
-      === "dedup v2 stateBuckets=16 shingle=5 mh=64 bands=4")
-    // pre- and post-upgrade rows both serve
-    assert(graft.operators.Tombstones.live(
-      dcat.readWithSchema("corpus", Streams.dedupCorpusSchema),
-      dcat.readWithSchema("corpus_tomb", Streams.dedupTombSchema),
-      "doc_id").count() === 2L)
-    // the upgrade happened ONCE: the v2 stamp now enforces the banding
-    intercept[Catalog.LayoutMismatch] {
-      Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "corpus_tomb",
-        Seq((3L, "w")).toDF("doc_id", "text"), bands = 8)
-    }
+    assert(java.nio.file.Files.readString(dstamp) === "dedup v1 stateBuckets=16")
 
-    // ---- vector: v1 trusted the caller's PQ constants; the upgrade
-    // carries the first v2 opener's constants into the stamp, then
-    // enforces them forever after
     val rnd = new scala.util.Random(13)
     val vecs = (0L until 6L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
       .toDF("vec_id", "embedding")
@@ -794,19 +763,10 @@ class LifecycleContractSpec extends SparkSpec {
       vecs.limit(3), model, nlist = 4, m = 4, ksub = 8)
     val vstamp = java.nio.file.Paths.get(s"$dir/vv/codes__layout")
     java.nio.file.Files.writeString(vstamp, "vector v1 stateBuckets=16")
-    Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
-      vecs.limit(2), model, nlist = 4, m = 4, ksub = 8)
-    assert(java.nio.file.Files.readString(vstamp).trim
-      === "vector v2 stateBuckets=16 nlist=4 m=4 ksub=8")
     intercept[Catalog.LayoutMismatch] {
       Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
-        vecs.limit(1), model, nlist = 4, m = 2, ksub = 8)
+        vecs.limit(2), model, nlist = 4, m = 4, ksub = 8)
     }
-    // mismatched modulus on a v1 stamp refuses too
-    java.nio.file.Files.writeString(vstamp, "vector v1 stateBuckets=8")
-    intercept[Catalog.LayoutMismatch] {
-      Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
-        vecs.limit(1), model, nlist = 4, m = 4, ksub = 8)
-    }
+    assert(java.nio.file.Files.readString(vstamp) === "vector v1 stateBuckets=16")
   }
 }

@@ -1932,6 +1932,69 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  private val sf001 = "/root/testdata/sf0.01"
+
+  test("a stream replay never shows its width on the shared session") {
+    val width = graft.queries.QueryCatalog.replayShuffleWidth(spark, sf001, "events")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") !== width.toString)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sampler = new Thread(() =>
+      while (running.get) {
+        seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+        Thread.sleep(1)
+      })
+    sampler.start()
+    try SparkEntry.queries("q_sessionize_stream")(spark, sf001).collect()
+    finally { running.set(false); sampler.join() }
+    assert(!seen.contains(width.toString), s"shared session read $seen")
+  }
+
+  test("the shared session's listeners see a stream replay's progress and collects") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val progress = new java.util.concurrent.atomic.AtomicInteger
+    val collects = new java.util.concurrent.atomic.AtomicInteger
+    val sl = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.streams.addListener(sl)
+    spark.listenerManager.register(ql)
+    try {
+      // the result is not collected: every collect seen is a micro-batch's
+      SparkEntry.queries("q_sessionize_stream")(spark, sf001)
+      org.apache.spark.sql.graftshim.ClonedSession.drainListeners(spark)
+    } finally {
+      spark.streams.removeListener(sl)
+      spark.listenerManager.unregister(ql)
+    }
+    assert(progress.get >= 1)
+    assert(collects.get >= 1)
+  }
+
+  test("a stream replay reports its stateful operator at the replay width") {
+    val width = graft.queries.QueryCatalog.replayShuffleWidth(spark, sf001, "events")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") !== width.toString)
+    val ev = spark.read.parquet(s"$sf001/events.parquet").select("user_id", "event_id")
+    val progress = graft.queries.Replay(spark,
+        graft.queries.Replay.scratch("spec_replay_width"), Some(width)) { r =>
+      r.tiles(ev.withColumn("__tile", (F.col("event_id") % 2 + 1).cast("int")), 2, sf001)
+      r.collect(r.source(ev.schema).groupBy("user_id").count(), "update")(_ => ())
+    }
+    val widths = progress.flatMap(_.stateOperators).map(_.numShufflePartitions)
+    assert(widths.nonEmpty)
+    assert(widths.toSet === Set(width.toLong))
+  }
+
   test("stream-replay shuffle width sizes sources on any Hadoop filesystem scheme") {
     // 12 x 256 KiB of source bytes: 12 reduce partitions under a
     // 64-wide session, on the local path and on the same directory
