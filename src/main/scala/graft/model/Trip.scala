@@ -59,17 +59,4 @@ object Trip {
     F.concat_ws("",
       F.col("region"), F.col("origin_coord"), F.col("destination_coord"),
       F.col("date_time"), F.col("datasource"))
-
-  /** Scale-ready variant of the key (SURVEY.md §7.4): the raw 5-field concat
-    * is both huge (~200 bytes/row at 100 TB) and ambiguous (CONCAT without a
-    * separator makes ("ab","c") collide with ("a","bc")). A separator-delimited
-    * sha2 fixes both; the anti-join then shuffles 32-byte keys instead of
-    * full rows of text.
-    */
-  def tripKeyHashed: Column =
-    F.sha2(
-      F.concat_ws("\u0001",
-        F.col("region"), F.col("origin_coord"), F.col("destination_coord"),
-        F.col("date_time"), F.col("datasource")),
-      256)
 }

@@ -196,17 +196,6 @@ object Hygiene {
   /** Long digit runs — the phone/account-number heuristic. */
   val DigitRunRe = "[0-9]{5,}"
 
-  /** Exact per-document PII indicator counts (map-only, codegen'd
-    * regexp): emails and long digit runs.
-    */
-  def piiStats(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    docs.select(F.col(idCol),
-      F.regexp_count(F.col(textCol), F.lit(EmailRe)).cast("long").as("n_emails"),
-      F.regexp_count(F.col(textCol), F.lit(DigitRunRe)).cast("long").as("n_digit_runs"))
-
   /** Mask PII in place: emails first (their local parts contain digit
     * runs), then remaining long digit runs. Map-only; deterministic, so
     * the redacted text is oracle-checkable by md5.

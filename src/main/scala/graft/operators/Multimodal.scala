@@ -36,11 +36,6 @@ object Multimodal {
     StructField("height", IntegerType, nullable = true),
     StructField("duration_ms", LongType, nullable = true)))
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", mediaMetaSchema, nullable = true)))
-
   /** Decoded feature batch row: fixed-width feature vector per payload. */
   final case class MediaFeatures(media_id: Long, n_bytes: Int, features: Array[Float])
 

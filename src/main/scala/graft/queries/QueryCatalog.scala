@@ -27,8 +27,7 @@ object QueryCatalog {
   final case class Q(
       name: String,
       run: (SparkSession, String) => DataFrame,
-      oracle: Option[String],
-      headline: Boolean = true)
+      oracle: Option[String])
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -5335,8 +5334,8 @@ object QueryCatalog {
     // tables (build-once fixture — re-shingling the 400-doc corpus per
     // invocation measured the seed, not the replace under grade)
     copyDir(fixtureWh("incr_dedup_seed", dir, "f2") { froot =>
-      graft.streaming.Streams.ensureDedupIndexTables(
-        new graft.sources.Catalog(s, s"$froot/wh"), "corpus", "buckets", "tomb")
+      graft.streaming.Streams.dedupFamily(
+        new graft.sources.Catalog(s, s"$froot/wh"), "corpus", Some("buckets"), "tomb").ensure()
       Replay(s, froot, width) { r =>
         val fcat = new graft.sources.Catalog(r.session, s"$froot/wh")
         // seed generation 0 (registered in the op log so derived seqs
@@ -5859,8 +5858,8 @@ object QueryCatalog {
         r.tiles(
           emb.withColumn("__tile", (F.pmod(F.col("vec_id"), F.lit(3)) + 1).cast("int")),
           3, dir)
-        graft.streaming.Streams.ensureVectorIndexTables(
-          fcat, "codes", "codes_tomb", codesSchema)
+        graft.streaming.Streams.vectorFamily(
+          fcat, "codes", codesSchema, "codes_tomb").ensure()
         r.run(graft.streaming.Streams.streamingIvfPqIndex(
           r.source(emb.schema), model, fcat, "codes", r.cp,
           tombTable = Some("codes_tomb"), codesSchema = Some(codesSchema)))
@@ -5940,8 +5939,8 @@ object QueryCatalog {
         r.tiles(
           emb.withColumn("__tile", (F.pmod(F.col("vec_id"), F.lit(3)) + 1).cast("int")),
           3, dir)
-        graft.streaming.Streams.ensureVectorIndexTables(
-          fcat, "codes", "codes_tomb", codesSchema)
+        graft.streaming.Streams.vectorFamily(
+          fcat, "codes", codesSchema, "codes_tomb").ensure()
         r.run(graft.streaming.Streams.streamingIvfPqIndex(
           r.source(emb.schema), model, fcat, "codes", r.cp,
           tombTable = Some("codes_tomb"), codesSchema = Some(codesSchema)))
@@ -6137,8 +6136,8 @@ object QueryCatalog {
           drifted.withColumn("__tile",
             (F.pmod(F.col("vec_id"), F.lit(3)) + 1).cast("int")),
           3, dir)
-        graft.streaming.Streams.ensureVectorIndexTables(
-          fcat, "codes", "codes_tomb", codesSchema)
+        graft.streaming.Streams.vectorFamily(
+          fcat, "codes", codesSchema, "codes_tomb").ensure()
         graft.streaming.Streams.seedVectorIndexModel(
           fcat, "codes", "model", model0, seq = 0L)
         r.run(graft.streaming.Streams.streamingIvfPqIndex(

@@ -37,9 +37,10 @@ import graft.sources.Catalog
   *    total_dl) is a sum over this |ops|-row table instead of an
   *    O(corpus) registry scan.
   *
-  * Exactly-once and replay: the [[OpLog]] protocol (attempt marker →
-  * scrub-then-redo → atomic commit-with-stats; see its scaladoc for why
-  * probe-and-skip is unsound under partial multi-file append commits).
+  * Exactly-once and replay: every op runs through the family's
+  * [[OpLog.span]] (attempt marker → scrub-then-redo → atomic
+  * commit-with-stats; see [[OpLog]] for why probe-and-skip is unsound
+  * under partial multi-file append commits).
   * All reads — admission, victim selection, serving — are COMMITTED
   * generations only, so a crashed half-written op is invisible
   * everywhere until its replay commits. That also makes seq assignment
@@ -73,71 +74,32 @@ final class Bm25Index(
     maxProbeIds: Long = 4L * 1024 * 1024) {
   import Bm25Index._
 
-  private val log = new OpLog(spark, cat, "ops", statsPayload)
+  // bk/rk partition values bake in `buckets` (hash(x) % buckets):
+  // reopening an index with a different modulus would silently miss
+  // every stored row in the pruned admission/serve scans — the family's
+  // layout stamp refuses a mismatch loudly (LayoutMismatch).
+  // Row-shaping parameter audit: `buckets` is the only constructor
+  // knob baked into stored rows. Tokenization (Retrieval.postings'
+  // split regex) shapes stored terms but is CODE, not a parameter —
+  // the literal "v2" is its version; any tokenizer change must bump
+  // it. k1/b/maxProbeIds are serve/admission-time only: stored rows
+  // carry raw tf/dl, so rescoring under different k1/b is legitimate.
+  // doc_lengths is id-hash-partitioned (rk = hash(doc_id) % buckets),
+  // so compaction derives its affected partitions driver-side from the
+  // tombstone ids; postings' bk is a TERM hash and keeps the probe scan.
+  private val family = Generations.Family(cat,
+    new OpLog(spark, cat, "ops", statsPayload), "tombstones", tombSchema, "doc_id",
+    Seq(Generations.Stamped("postings", "bk", postSchema, "doc_id"),
+      Generations.Stamped("doc_lengths", "rk", dlSchema, "doc_id",
+        partOfId = Some(Generations.idHashPartition(buckets)))),
+    stamp = Some(s"bm25 v2 buckets=$buckets"))
+  private def log = family.log
 
-  def ensure(): Unit = {
-    cat.ensurePartitionedTable("postings")
-    cat.ensurePartitionedTable("doc_lengths")
-    cat.ensureTable("tombstones", tombSchema)
-    // bk/rk partition values bake in `buckets` (hash(x) % buckets):
-    // reopening an index with a different modulus would silently miss
-    // every stored row in the pruned admission/serve scans — persist
-    // the layout stamp and refuse a mismatch loudly (LayoutMismatch).
-    // Row-shaping parameter audit: `buckets` is the only constructor
-    // knob baked into stored rows. Tokenization (Retrieval.postings'
-    // split regex) shapes stored terms but is CODE, not a parameter —
-    // the literal "v2" is its version; any tokenizer change must bump
-    // it. k1/b/maxProbeIds are serve/admission-time only: stored rows
-    // carry raw tf/dl, so rescoring under different k1/b is legitimate.
-    cat.ensureLayoutMeta("postings", s"bm25 v2 buckets=$buckets")
-    log.ensure()
-  }
+  def ensure(): Unit = family.ensure()
 
   private def postings: DataFrame = cat.readWithSchema("postings", postSchema)
   private def registry: DataFrame = cat.readWithSchema("doc_lengths", dlSchema)
   private def tombs: DataFrame = cat.readWithSchema("tombstones", tombSchema)
-
-  /** Unconditional crash-window healing, run at EVERY op/serve entry
-    * before any table is probed or read. Two windows it closes, both
-    * fatal if a probe ran first:
-    *  - a crash inside a partitioned compaction's swap (between
-    *    move-aside and move-in) leaves a partition's only copy in the
-    *    staging dir; scrubOp's per-seq probe would then see no rows
-    *    for the crashed seq, skip the scrub, and the redo's append
-    *    would recreate the partition dir — after which the next
-    *    compaction's staging delete destroys the orphaned committed
-    *    rows of OTHER ops permanently;
-    *  - a crash inside the tombstone table's replaceTable (between
-    *    move-aside and swap-in) leaves the live dir missing, and every
-    *    subsequent read throws path-not-found before any code path
-    *    would reach recovery — wedging the pipeline.
-    * Both recoveries are idempotent fs-metadata probes (no jobs), so
-    * running them per op is noise next to the op's own work. */
-  private def heal(lenient: Boolean = false): Unit = {
-    // `lenient` for READ entries (serve/serveBatch): an in-flight
-    // publish's swap marker means nothing is crashed — skip rather than
-    // throw SwapInFlight (write entries stay strict: appending under a
-    // marker would poison the crash-heal's manifest comparison). The
-    // marker also protects a live writer's staging from this very heal
-    // — the pre-r17 racing-heal abort, closed.
-    cat.recoverCompaction("postings", "bk", lenient)
-    cat.recoverCompaction("doc_lengths", "rk", lenient)
-    cat.recoverReplace("tombstones", lenient)
-  }
-
-  /** Crashed-replay rollback: remove EVERY row the crashed attempt may
-    * have written (its `seq` stamp) from the data tables, so the redo
-    * appends against a clean slate (see [[OpLog]] for why
-    * scrub-then-redo, not probe-and-skip). Each scrub probes which
-    * partitions hold the seq (bounded: ≤ `buckets` values) and
-    * rewrites exactly those; the flat tombstone table goes through the
-    * crash-safe [[graft.sources.Catalog.replaceTable]]. */
-  private def scrubOp(seq: Long): Unit = {
-    cat.scrubSeqs("postings", "bk", postSchema, Seq(seq))
-    cat.scrubSeqs("doc_lengths", "rk", dlSchema, Seq(seq))
-    if (!tombs.filter(F.col("seq") === seq).isEmpty)
-      cat.replaceTable("tombstones", tombs.filter(F.col("seq") =!= seq))
-  }
 
   private def bucketOf = F.pmod(F.xxhash64(F.col("term")), F.lit(buckets.toLong))
     .cast("int")
@@ -170,22 +132,7 @@ final class Bm25Index(
     * re-ingests as a fresh generation (the replace arm). Exactly-once
     * under replay (see class doc).
     */
-  def ingest(batch: DataFrame, seq: Long): Unit = log.withWriter() {
-    // the op's full span — heal, replay probe, appends, commit — runs
-    // as THE single writer of the family: a concurrent writer (racing
-    // beginAttempt on the same derived seq) or a concurrent log
-    // rewrite (which would discard a commit row appended inside its
-    // stage→swap window) refuses loudly instead of interleaving
-    heal()
-    ensure()
-    // one |ops|-row collect answers replay flags AND all visibility for
-    // the whole op (single-writer lease: the captured prefix stays
-    // current through the op's own appends)
-    val snap = log.snapshot()
-    val (done, crashed) = snap.replayState(seq)
-    if (done) return
-    log.beginAttempt(seq)
-    if (crashed) scrubOp(seq)
+  def ingest(batch: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
     // both admission questions — the batch's id-hash partition values
     // (≤ `buckets` ints — prunes the registry scan) and its key count
     // (guards the broadcast probe) — RIDE the checkpoint
@@ -229,9 +176,7 @@ final class Bm25Index(
     cat.appendPartitioned("doc_lengths", dls.withColumn("rk", rkOf), Seq("rk"),
       clusterInto = Some(writeWidth))
     val st = statsObs.get
-    log.commitValues(seq, Seq(
-      Some(st("n_docs").asInstanceOf[Long]),
-      Some(st("total_dl").asInstanceOf[Long])))
+    Seq(st("n_docs").asInstanceOf[Long], st("total_dl").asInstanceOf[Long])
   }
 
   /** Delete documents by id as op `seq`: tombstone the LIVE generations
@@ -241,14 +186,7 @@ final class Bm25Index(
     * Exactly-once under replay; pass [[nextSeq]] when the caller does
     * not manage its own sequence.
     */
-  def delete(ids: DataFrame, seq: Long): Unit = log.withWriter() {
-    heal()
-    ensure()
-    val snap = log.snapshot()
-    val (done, crashed) = snap.replayState(seq)
-    if (done) return
-    log.beginAttempt(seq)
-    if (crashed) scrubOp(seq)
+  def delete(ids: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
     // the rk probe rides the id-set checkpoint as an observed metric
     // (one fewer job; the observe sits in the checkpoint's result stage)
     val rkObs = org.apache.spark.sql.Observation()
@@ -271,13 +209,11 @@ final class Bm25Index(
     cat.append("tombstones",
       victims.select(F.col("doc_id"), F.lit(seq).as("seq")))
     val st = statsObs.get
-    log.commitValues(seq, Seq(
-      Some(-st("n").asInstanceOf[Long]),
-      Some(-st("sdl").asInstanceOf[Long])))
+    Seq(-st("n").asInstanceOf[Long], -st("sdl").asInstanceOf[Long])
   }
 
   /** The next free op seq — one |ops|-row probe. */
-  def nextSeq: Long = { heal(); log.nextBaseSeq }
+  def nextSeq: Long = { family.heal(); log.nextBaseSeq }
 
   /** REPLACE one batch of (doc_id, text) as ONE exactly-once op — the
     * reference's `ON CONFLICT DO UPDATE` arm in a single statement.
@@ -293,14 +229,7 @@ final class Bm25Index(
     * crashed replace is invisible in FULL, not per-half. Replays
     * converge by the standard scrub-then-redo.
     */
-  def replace(batch: DataFrame, seq: Long): Unit = log.withWriter() {
-    heal()
-    ensure()
-    val snap = log.snapshot()
-    val (done, crashed) = snap.replayState(seq)
-    if (done) return
-    log.beginAttempt(seq)
-    if (crashed) scrubOp(seq)
+  def replace(batch: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
     // the rk probe and the ADDED-side stats ride the batch checkpoint
     // as observed metrics; the KILLED-side stats ride the victim
     // checkpoint — the old form paid three extra jobs (probe, added
@@ -338,9 +267,8 @@ final class Bm25Index(
       victims.select(F.col("doc_id"), F.lit(seq).as("seq")))
     // ONE commit row carries the net delta: adds minus kills
     val kill = killObs.get
-    log.commitValues(seq, Seq(
-      Some(add("an").asInstanceOf[Long] - kill("kn").asInstanceOf[Long]),
-      Some(add("adl").asInstanceOf[Long] - kill("kdl").asInstanceOf[Long])))
+    Seq(add("an").asInstanceOf[Long] - kill("kn").asInstanceOf[Long],
+      add("adl").asInstanceOf[Long] - kill("kdl").asInstanceOf[Long])
   }
 
   /** A continuous ingestion stream: each micro-batch runs [[ingest]]
@@ -367,7 +295,7 @@ final class Bm25Index(
       checkpoint: String,
       baseSeq: Option[Long] = None,
       replaceMode: Boolean = false): DataStreamWriter[Row] = {
-    heal()
+    family.heal()
     val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
     docs.writeStream
       .outputMode(OutputMode.Append)
@@ -390,7 +318,7 @@ final class Bm25Index(
     * (spec-pinned at score granularity in SwapConsistencySpec). */
   def serve(terms: Seq[String], k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "serve needs at least one query term")
-    heal(lenient = true)
+    family.heal(lenient = true)
     val snap = log.snapshot()
     // the query terms' bucket ids — same hash the writer used, so
     // pruning can never disagree with placement; one 1-row collect
@@ -443,7 +371,7 @@ final class Bm25Index(
     * Returns (query_id, doc_id, score, rank).
     */
   def serveBatch(queries: DataFrame, k: Int = 20): DataFrame = {
-    heal(lenient = true)
+    family.heal(lenient = true)
     // one pinned committed-prefix snapshot for the whole batch: every
     // query in the batch scores against the SAME committed state
     // (visibility and global stats can never mix adjacent commits)
@@ -502,19 +430,8 @@ final class Bm25Index(
     */
   def compact(
       maxFilesPerPartition: Int = 2,
-      checkpointOps: Boolean = false): Unit = {
-    heal()
-    // doc_lengths is id-hash-partitioned (rk = hash(doc_id) % buckets,
-    // `buckets` stamp-verified at every open), so its affected
-    // partitions derive driver-side from the tombstone ids — zero probe
-    // jobs. postings' bk is a TERM hash, not derivable from ids: it
-    // keeps the probe scan.
-    Generations.compact(cat, log, "tombstones", tombSchema, "doc_id",
-      Seq(Generations.Stamped("postings", "bk", postSchema, "doc_id"),
-        Generations.Stamped("doc_lengths", "rk", dlSchema, "doc_id",
-          partOfId = Some(Generations.idHashPartition(buckets)))),
-      maxFilesPerPartition, checkpointLog = checkpointOps)
-  }
+      checkpointOps: Boolean = false): Unit =
+    Generations.compact(family, maxFilesPerPartition, checkpointLog = checkpointOps)
 }
 
 object Bm25Index {

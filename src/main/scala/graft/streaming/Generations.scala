@@ -67,6 +67,101 @@ object Generations {
       idCol: String,
       partOfId: Option[Long => String] = None)
 
+  /** One index family: its op log, its flat tombstone table
+    * (`tombIdCol` is the id a tombstone kills) and its stamped
+    * partitioned tables. Every op and maintenance pass of the family
+    * goes through this one description:
+    *  - [[ensure]] materializes the tables (an op may be the first one
+    *    ever run on the family) and checks the layout `stamp` on the
+    *    first table when the opener knows it;
+    *  - [[heal]] closes the crash windows of the stamped tables'
+    *    partition swaps and the tombstone table's replace, before any
+    *    probe or read;
+    *  - [[scrub]] removes one crashed attempt's rows from every table;
+    *  - [[op]] runs an op body through [[OpLog.span]];
+    *  - [[Generations.compact]] is its maintenance pass.
+    * A view that omits a table (a delete, which writes tombstones only
+    * and reads the first table) heals and scrubs only what it names. */
+  final case class Family(
+      cat: Catalog,
+      log: OpLog,
+      tombTable: String,
+      tombSchema: StructType,
+      tombIdCol: String,
+      tables: Seq[Stamped],
+      stamp: Option[String] = None) {
+
+    def ensure(): Unit = {
+      tables.foreach(t => cat.ensurePartitionedTable(t.table))
+      cat.ensureTable(tombTable, tombSchema)
+      // stored partition values (and, for dedup/vector, row contents)
+      // bake in the family's hash moduli: refuse a mismatched reopen
+      stamp.foreach(cat.ensureLayoutMeta(tables.head.table, _))
+      log.ensure()
+    }
+
+    /** Idempotent fs-metadata probes, no jobs. `lenient` for READ
+      * entries: an in-flight publish's swap marker means nothing is
+      * crashed — skip rather than throw SwapInFlight (write entries stay
+      * strict: appending under a marker would poison the crash-heal's
+      * manifest comparison). Two windows it closes, both fatal if a
+      * probe ran first:
+      *  - a crash inside a partitioned compaction's swap leaves a
+      *    partition's only copy in the staging dir; a scrub probe would
+      *    then miss the crashed seq's rows and the redo's append would
+      *    recreate the partition dir, after which the next compaction's
+      *    staging delete destroys other ops' committed rows;
+      *  - a crash inside the tombstone table's replace leaves the live
+      *    dir missing, and every read throws path-not-found. */
+    def heal(lenient: Boolean = false): Unit = {
+      tables.foreach(t => cat.recoverCompaction(t.table, t.partCol, lenient))
+      cat.recoverReplace(tombTable, lenient)
+    }
+
+    /** Crashed-replay rollback: remove every row stamped `seq` (see
+      * [[OpLog]] for why scrub-then-redo, not probe-and-skip). Each
+      * stamped table rewrites only the partitions holding the seq
+      * ([[Catalog.scrubSeqs]]); the flat tombstone table is rewritten
+      * through the crash-safe [[Catalog.replaceTable]] only when it
+      * holds the seq. */
+    def scrub(seq: Long): Unit = {
+      tables.foreach(t => cat.scrubSeqs(t.table, t.partCol, t.schema, Seq(seq)))
+      val tombs = cat.readWithSchema(tombTable, tombSchema)
+      if (!tombs.filter(F.col("seq") === seq).isEmpty)
+        cat.replaceTable(tombTable, tombs.filter(F.col("seq") =!= seq))
+    }
+
+    /** One exactly-once op of this family: heal and ensure, then
+      * [[OpLog.span]]. `body` gets the op's snapshot and seq and returns
+      * the commit values. */
+    def op(seq: Option[Long])(body: (OpLog.Snapshot, Long) => Seq[Long]): Unit =
+      log.span(seq, { heal(); ensure() }, scrub)(body)
+
+    /** Delete ids as one op: tombstone the COMMITTED LIVE generations of
+      * `ids` (a frame carrying `tombIdCol`) in the first table. One
+      * tombstone row kills the id's generation in every table of the
+      * family, since one op wrote them all under one seq. Ids not
+      * currently live are ignored; the commit carries the tombstone
+      * count. Omit `seq` to derive the next one; pass the same seq to
+      * replay a crashed delete. */
+    def delete(ids: DataFrame, seq: Option[Long]): Unit = op(seq) { (snap, sv) =>
+      // the commit count rides the victim checkpoint as an observed
+      // metric (result-stage observe: exactly-once) — one fewer job
+      val countObs = org.apache.spark.sql.Observation()
+      val victims = Tombstones.live(
+          snap.visible(cat.readWithSchema(tables.head.table, tables.head.schema)),
+          snap.visible(cat.readWithSchema(tombTable, tombSchema)),
+          tombIdCol)
+        .join(ids.select(F.col(tombIdCol).cast("long").as(tombIdCol))
+          .dropDuplicates(tombIdCol), Seq(tombIdCol), "leftsemi")
+        .select(F.col(tombIdCol), F.lit(sv).as("seq"))
+        .observe(countObs, F.count(F.lit(1)).as("n"))
+        .localCheckpoint() // referenced by the append below
+      cat.append(tombTable, victims)
+      Seq(countObs.get("n").asInstanceOf[Long])
+    }
+  }
+
   /** The driver-side twin of the writers' partition expression
     * `pmod(xxhash64(id), lit(buckets)).cast("int")` — same XXH64 seed
     * (42), same sign-safe modulus (spec-pinned against the Column form
@@ -88,27 +183,20 @@ object Generations {
       .map(_.group(1).toInt)
 
   def compact(
-      cat: Catalog,
-      log: OpLog,
-      tombTable: String,
-      tombSchema: StructType,
-      tombIdCol: String,
-      tables: Seq[Stamped],
-      maxFilesPerPartition: Int = 2,
-      checkpointLog: Boolean = false): Unit =
+      family: Family,
+      maxFilesPerPartition: Int,
+      checkpointLog: Boolean): Unit = {
+    import family._
     // one lease per index family (scoped by its op log) covers the
     // whole multi-table window — the documented single-writer
     // maintenance discipline, enforced instead of assumed
     cat.withMaintenanceLease(log.table) {
-    tables.foreach(t => cat.recoverCompaction(t.table, t.partCol))
-    cat.recoverReplace(tombTable)
+    heal()
     // first-op safety: compaction may be the FIRST operation ever run on
     // this family (e.g. scheduled maintenance firing before any delete has
     // created the tombstone table) — reading a never-created table would
     // throw PATH_NOT_FOUND, so materialize the empty tables up front
-    cat.ensureTable(tombTable, tombSchema)
-    tables.foreach(t => cat.ensurePartitionedTable(t.table))
-    log.ensure()
+    ensure()
     // one |ops|-row collect answers garbage seqs AND tombstone
     // visibility (single-writer lease; see OpLog.Snapshot)
     val snap = log.snapshot()
@@ -215,5 +303,6 @@ object Generations {
     // staleness guard on replays ([[OpLog.replayState]]).
     if (checkpointLog) log.checkpointFromSnapshot(snap)
     else log.compactFromSnapshot(snap)
+    }
   }
 }

@@ -50,6 +50,11 @@ final class OpLog(
     val table: String,
     payload: StructType) {
 
+  // commit and attempt rows are written driver-side as BIGINT columns,
+  // and checkpoint sums every payload column
+  require(payload.fields.nonEmpty && payload.fields.forall(_.dataType == LongType),
+    s"op-log payloads are all-BIGINT; got ${payload.simpleString}")
+
   val schema: StructType = StructType(
     StructField("seq", LongType, nullable = false) +:
       payload.fields.map(_.copy(nullable = true)))
@@ -91,7 +96,7 @@ final class OpLog(
     *
     * FENCED past the TTL: a span that outruns `ttlMs` loses its lease
     * to the next contender's atomic break — from that instant the
-    * commit points ([[commit]]/[[commitCount]], the replace/compact
+    * commit point ([[commitValues]], the replace/compact
     * swaps) refuse with [[graft.sources.Catalog.WriterFenced]] instead
     * of publishing over the successor; the fenced op's data rows stay
     * uncommitted garbage and are scrubbed at compaction. Size the TTL
@@ -103,7 +108,7 @@ final class OpLog(
   // in-flight publish's marker means nothing is crashed; skipping keeps
   // a sibling thread's serve from throwing SwapInFlight (or, pre-r17,
   // from deleting the publisher's in-flight staging). Write entries
-  // (ensure/beginAttempt/commit) stay strict.
+  // (ensure/beginAttempt/commitValues) stay strict.
   def rows: DataFrame =
     { heal(lenient = true); cat.readWithSchema(table, schema) }
 
@@ -127,7 +132,7 @@ final class OpLog(
     * appended directly to the table) count as committed, because the
     * attempt marker lands BEFORE any data append, so stream-written
     * rows always have a log row. Seeders SHOULD still register their
-    * generation (one [[commit]]/[[commitCount]] row) so [[maxSeq]]
+    * generation (one [[commitValues]]/[[commitCount]] row) so [[maxSeq]]
     * derives bases above it and no future op can collide with — and
     * scrub — the seeded generation.
     *
@@ -196,12 +201,6 @@ final class OpLog(
     (done, attempted)
   }
 
-  /** Whether every payload column is a plain BIGINT — true for every
-    * live payload (BM25 stats, the count logs); gates the driver-side
-    * single-row append below. */
-  private val allLongPayload =
-    payload.fields.forall(_.dataType == LongType)
-
   /** Driver-side single-row append. The op log's two per-op appends
     * (attempt marker, commit row) are one-row writes whose Spark-job
     * form pays a full job + the file-commit protocol (~0.1-0.2 s each
@@ -219,41 +218,16 @@ final class OpLog(
     * null payload). */
   def beginAttempt(seq: Long): Unit = {
     heal()
-    if (allLongPayload)
-      appendRowDriverSide(seq, payload.fields.map(_ => None))
-    else cat.append(table, spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(seq +: payload.fields.map(_ => null).toSeq)),
-      schema))
+    appendRowDriverSide(seq, payload.fields.map(_ => None))
   }
 
-  /** Commit = the op's payload row, one atomic append. `stats` must be
-    * EXACTLY a 1-row frame whose columns match the payload (first
-    * column non-null) — enforced loudly: an empty frame used to write
-    * zero rows (op left uncommitted) and extra rows were silently
-    * dropped by the old head(). Fenced: a writer whose lease was broken
-    * mid-op (TTL overrun) refuses here with [[Catalog.WriterFenced]]
-    * instead of publishing — its data rows stay uncommitted garbage. */
-  def commit(seq: Long, stats: DataFrame): Unit = {
-    heal()
-    assertSameThreadSpan()
-    cat.fenceHeldLeases()
-    val rs = stats.select(payload.fields.map(f =>
-      F.col(f.name).cast(f.dataType).as(f.name)): _*).collect()
-    require(rs.length == 1,
-      s"op-log commit payload for seq $seq must be exactly one row, " +
-        s"got ${rs.length} — an aggregate over an empty/grouped frame?")
-    val r = rs(0)
-    if (allLongPayload)
-      appendRowDriverSide(seq, payload.fields.indices.map(i =>
-        if (r.isNullAt(i)) None else Some(r.getLong(i))))
-    else cat.append(table, spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(seq +: r.toSeq)), schema))
-  }
-
-  /** Commit with DRIVER-KNOWN payload values — the form for ops whose
-    * stats rode an [[org.apache.spark.sql.Observation]] on an append
-    * job they already ran (no extra aggregation job). Same fencing and
-    * same-thread discipline as [[commit]]. */
+  /** Commit = the op's payload row, one atomic append, with DRIVER-KNOWN
+    * values — ops ride their stats on an
+    * [[org.apache.spark.sql.Observation]] of an append job they already
+    * run (no extra aggregation job). Fenced: a writer whose lease was
+    * broken mid-op (TTL overrun) refuses here with
+    * [[Catalog.WriterFenced]] instead of publishing — its data rows stay
+    * uncommitted garbage. */
   def commitValues(seq: Long, values: Seq[Option[Long]]): Unit = {
     require(values.length == payload.fields.length,
       s"commitValues needs ${payload.fields.length} values, got ${values.length}")
@@ -262,10 +236,47 @@ final class OpLog(
     heal()
     assertSameThreadSpan()
     cat.fenceHeldLeases()
-    if (allLongPayload) appendRowDriverSide(seq, values)
-    else cat.append(table, spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(
-        seq +: values.map(_.map(Long.box).orNull))), schema))
+    appendRowDriverSide(seq, values)
+  }
+
+  /** [[commitValues]] for a bare count payload (single-long-payload logs). */
+  def commitCount(seq: Long, n: Long): Unit = commitValues(seq, Seq(Some(n)))
+
+  /** THE exactly-once op span every index family op runs through, as
+    * the family's single writer ([[withWriter]]):
+    *  1. `prepare` — the family's crash heal and table ensure, before
+    *     any probe or read;
+    *  2. one [[snapshot]], which answers the replay flags and all of
+    *     the op's visibility; the seq is derived from it when none is
+    *     given;
+    *  3. a committed seq returns at once (replays are no-ops);
+    *  4. the attempt marker lands, then a crashed prior attempt's rows
+    *     are removed (`scrub`, scrub-then-redo);
+    *  5. `body` writes the op's rows and returns its commit values;
+    *  6. the commit row.
+    * The snapshot stays current through the op's own appends: nothing
+    * commits concurrently under the writer lease. */
+  def span(seq: Option[Long], prepare: => Unit, scrub: Long => Unit)(
+      body: (OpLog.Snapshot, Long) => Seq[Long]): Unit = withWriter() {
+    prepare
+    val snap = snapshot()
+    val sv = seq.getOrElse(snap.nextSeq)
+    val (done, crashed) = snap.replayState(sv)
+    if (!done) {
+      beginAttempt(sv)
+      if (crashed) scrub(sv)
+      commitValues(sv, body(snap, sv).map(Some(_)))
+    }
+  }
+
+  /** An op at the seq after `snap`'s high-water mark, for a maintenance
+    * pass that captured `snap` under this log's writer lease and then
+    * decided to write (the vector index rebalance). A derived seq was
+    * never attempted, so there is no replay probe and nothing to scrub. */
+  def derivedOp(snap: OpLog.Snapshot)(body: Long => Seq[Long]): Unit = {
+    val sv = snap.nextSeq
+    beginAttempt(sv)
+    commitValues(sv, body(sv).map(Some(_)))
   }
 
   /** Fencing is keyed on the lease-OWNING thread: a commit running on a
@@ -283,17 +294,6 @@ final class OpLog(
           "than the writer lease's owner: fencing is thread-scoped, so " +
           "this commit would publish UNFENCED. Keep the whole op span — " +
           "withWriter through commit — on one thread")
-
-  /** Commit with a bare count payload (single-long-payload logs). */
-  def commitCount(seq: Long, n: Long): Unit = {
-    require(payload.fields.length == 1, "commitCount needs a 1-col payload")
-    heal()
-    assertSameThreadSpan()
-    cat.fenceHeldLeases()
-    if (allLongPayload) appendRowDriverSide(seq, Seq(Some(n)))
-    else cat.append(table, spark.createDataFrame(
-      java.util.List.of(Row(seq, n)), schema))
-  }
 
   /** Highest seq EVER ATTEMPTED (committed or not) — the derived-base
     * authority: a new stream's base above this can never collide with
@@ -403,10 +403,7 @@ final class OpLog(
   /** [[checkpoint]] fed by an already-captured snapshot — the same
     * single-summary-row fold, computed driver-side (see
     * [[compactFromSnapshot]] for the validity contract). */
-  def checkpointFromSnapshot(snap: OpLog.Snapshot): Unit = {
-    require(payload.fields.forall(_.dataType == LongType),
-      "checkpoint needs an all-BIGINT additive payload; " +
-        s"got ${payload.simpleString}")
+  def checkpointFromSnapshot(snap: OpLog.Snapshot): Unit =
     withWriter() {
       ensure()
       cat.replaceTable(table,
@@ -414,7 +411,6 @@ final class OpLog(
           java.util.Arrays.asList(snap.checkpointRows(marker): _*), schema)
           .coalesce(1))
     }
-  }
 
   /** Maintenance, one step past [[compact]]: fold the ENTIRE committed
     * history into ONE summary row at the committed high-water mark
@@ -424,8 +420,7 @@ final class OpLog(
     * |ops|-row scan; after a checkpoint it is a
     * |1 + opens + ops-since|-row scan, so serve cost stops growing
     * with op history entirely. Open-attempt rows are kept verbatim
-    * (they must still replay or be GC'd). Requires an all-LongType
-    * payload (checked loudly).
+    * (they must still replay or be GC'd).
     *
     * What a checkpoint gives up: per-op history. A replay probe for a
     * folded seq finds no row, so [[replayState]]'s staleness guard —
@@ -435,10 +430,7 @@ final class OpLog(
     * [[requireFreshBase]]) already keeps writers above the HWM, so
     * checkpointing changes nothing for them. Crash-safe via
     * [[Catalog.replaceTable]], like [[compact]]. */
-  def checkpoint(): Unit = {
-    require(payload.fields.forall(_.dataType == LongType),
-      "checkpoint needs an all-BIGINT additive payload; " +
-        s"got ${payload.simpleString}")
+  def checkpoint(): Unit =
     withWriter() {
       ensure()
       val r = rows
@@ -458,7 +450,6 @@ final class OpLog(
         cat.replaceTable(table, summary.unionByName(openRows).coalesce(1))
       }
     }
-  }
 }
 
 object OpLog {
@@ -496,6 +487,9 @@ object OpLog {
     /** Highest seq EVER ATTEMPTED at capture — the visibility ceiling. */
     val maxSeq: Option[Long] =
       if (all.isEmpty) None else Some(all.map(_.getLong(0)).max)
+
+    /** The seq above every attempt at capture — [[OpLog.nextBaseSeq]]. */
+    def nextSeq: Long = maxSeq.map(_ + 1L).getOrElse(0L)
 
     /** Seqs open at capture: attempted, not committed. Bounded by crash
       * count since the last compaction — always literal-sized. */

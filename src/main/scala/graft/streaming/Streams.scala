@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 import graft.model.Trip
 import graft.operators.Upsert
@@ -290,17 +290,16 @@ object Streams {
         // replays never lose partial appends, and
         // [[compactDocDedup]] scrubs dead generations physically,
         // partition-locally.
-        val s = docs.sparkSession
-        ensureDedupIndexTables(catalog, corpusTable, bucketTable, tt)
         // EVERY row-shaping parameter is stamped, not just the id-hash
         // modulus: stored bucket rows' (band, bk) values are a function
         // of (shingleLen, numHashes, bands), so a reopen with a
         // different banding scheme would pass a modulus-only check yet
         // probe rows written under another scheme — silently admitting
         // near-duplicates of all prior content (LayoutMismatch instead)
-        catalog.ensureLayoutMeta(corpusTable, dedupLayoutStamp(
-          stateBuckets, shingleLen, numHashes, bands))
-        val log = new OpLog(s, catalog, corpusTable + "_ops", OpLog.countPayload)
+        val family = dedupFamily(catalog, corpusTable, Some(bucketTable), tt,
+          Some(dedupLayoutStamp(stateBuckets, shingleLen, numHashes, bands)))
+        family.ensure()
+        val log = family.log
         val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
         def pbkOf(c: org.apache.spark.sql.Column) =
           F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
@@ -320,28 +319,10 @@ object Streams {
               shingleLen = shingleLen, numHashes = numHashes, bands = bands)
           }
         writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // single-writer op span: the whole micro-batch op — heal,
-          // replay probe, appends, commit — holds the family writer
-          // lease, so a concurrent writer or a concurrent log rewrite
-          // refuses loudly (OpLog.withWriter)
-          log.withWriter() {
-          // heal any crashed maintenance/scrub swap BEFORE the first
-          // probe or read (idempotent fs-metadata checks, no jobs)
-          catalog.recoverCompaction(corpusTable, "pbk")
-          catalog.recoverCompaction(bucketTable, "pbk")
-          catalog.recoverReplace(tt)
-          val seq = base + batchId
-          // one |ops|-row collect answers replay flags and all three
-          // tables' visibility as literal pushed filters (valid under
-          // the single-writer lease — see OpLog.Snapshot)
-          val snap = log.snapshot()
-          val (done, crashed) = snap.replayState(seq)
-          if (!done) {
-            log.beginAttempt(seq)
-            if (crashed) {
-              catalog.scrubSeqs(corpusTable, "pbk", dedupCorpusSchema, Seq(seq))
-              catalog.scrubSeqs(bucketTable, "pbk", dedupBucketSchema, Seq(seq))
-            }
+          // one op of the family (Generations.Family.op): the snapshot
+          // answers replay flags and all three tables' visibility as
+          // literal pushed filters
+          family.op(Some(base + batchId)) { (snap, seq) =>
             val tomb = snap.visible(catalog.read(tt))
             val corpus = graft.operators.Tombstones.live(
               snap.visible(
@@ -386,8 +367,7 @@ object Streams {
                 .withColumn("pbk", pbkOf(F.col("doc_id"))),
               Seq("pbk"),
               clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-            log.commitCount(seq, admitted.count())
-          }
+            Seq(admitted.count())
           }
         }
     }
@@ -431,17 +411,26 @@ object Streams {
   val dedupTombSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, seq BIGINT")
 
-  def ensureDedupIndexTables(
+  /** A family's count-payload op log, named after its first table. */
+  private def opsLog(catalog: Catalog, table: String): OpLog =
+    new OpLog(catalog.spark, catalog, table + "_ops", OpLog.countPayload)
+
+  /** The tombstone-aware dedup family ([[Generations.Family]]). A
+    * delete writes tombstones only and reads the corpus, so its view
+    * omits the bucket table (`bucketTable = None`); `stamp` is given by
+    * openers that know the banding scheme, `partOf` by compaction. */
+  def dedupFamily(
       catalog: Catalog,
       corpusTable: String,
-      bucketTable: String,
-      tombTable: String): Unit = {
-    catalog.ensurePartitionedTable(corpusTable)
-    catalog.ensurePartitionedTable(bucketTable)
-    catalog.ensureTable(tombTable, dedupTombSchema)
-    new OpLog(catalog.spark, catalog, corpusTable + "_ops",
-      OpLog.countPayload).ensure()
-  }
+      bucketTable: Option[String],
+      tombTable: String,
+      stamp: Option[String] = None,
+      partOf: Option[Long => String] = None): Generations.Family =
+    Generations.Family(catalog, opsLog(catalog, corpusTable),
+      tombTable, dedupTombSchema, "doc_id",
+      Generations.Stamped(corpusTable, "pbk", dedupCorpusSchema, "doc_id", partOf) +:
+        bucketTable.toSeq.map(Generations.Stamped(_, "pbk", dedupBucketSchema, "id", partOf)),
+      stamp)
 
   /** The dedup family's SERVE path — the registry probe: the committed
     * live corpus (doc_id, text, seq, pbk), exactly what admission
@@ -462,10 +451,9 @@ object Streams {
       catalog: Catalog,
       corpusTable: String,
       tombTable: String): DataFrame = {
-    catalog.recoverCompaction(corpusTable, "pbk", lenient = true)
-    catalog.recoverReplace(tombTable, lenient = true)
-    val snap = new OpLog(catalog.spark, catalog, corpusTable + "_ops",
-      OpLog.countPayload).snapshot()
+    val family = dedupFamily(catalog, corpusTable, None, tombTable)
+    family.heal(lenient = true)
+    val snap = family.log.snapshot()
     graft.operators.Tombstones.live(
       snap.visible(catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
       snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
@@ -473,63 +461,20 @@ object Streams {
   }
 
   /** Delete documents from a tombstone-aware dedup corpus
-    * ([[streamingDocDedup]] with `tombTable`): one exactly-once
-    * [[OpLog]] op that tombstones the COMMITTED LIVE generations of
-    * `ids`. One tombstone row kills the doc's generation in BOTH the
-    * corpus and the bucket index (they were written by the same op, so
-    * they share the seq) — the deleted doc immediately stops rejecting
-    * near-duplicates, and its id is free for a fresh generation. Ids
-    * not currently live are ignored. Omit `seq` to derive the next one
-    * from the op log; pass the same seq to replay a crashed delete.
+    * ([[streamingDocDedup]] with `tombTable`) as one op
+    * ([[Generations.Family.delete]]): one tombstone row kills the doc's
+    * generation in BOTH the corpus and the bucket index (they were
+    * written by the same op, so they share the seq) — the deleted doc
+    * immediately stops rejecting near-duplicates, and its id is free
+    * for a fresh generation.
     */
   def deleteDocsFromDedup(
       catalog: Catalog,
       corpusTable: String,
       tombTable: String,
       ids: DataFrame,
-      seq: Option[Long] = None): Unit = {
-    val log = new OpLog(catalog.spark, catalog, corpusTable + "_ops",
-      OpLog.countPayload)
-    // single-writer op span: heal, replay probe, append, commit — a
-    // concurrent writer or log rewrite refuses loudly (OpLog.withWriter)
-    log.withWriter() {
-    catalog.recoverCompaction(corpusTable, "pbk")
-    catalog.recoverReplace(tombTable)
-    // first-op safety: a delete may be the first operation ever run on
-    // this family — materialize the tables it reads
-    catalog.ensurePartitionedTable(corpusTable)
-    catalog.ensureTable(tombTable, dedupTombSchema)
-    log.ensure()
-    // one |ops|-row collect answers base-seq derivation, replay flags
-    // and both tables' visibility (single-writer lease; see
-    // OpLog.Snapshot)
-    val snap = log.snapshot()
-    val sv = seq.getOrElse(snap.maxSeq.map(_ + 1L).getOrElse(0L))
-    val (done, crashed) = snap.replayState(sv)
-    if (done) return
-    log.beginAttempt(sv)
-    if (crashed) {
-      val tombs = catalog.readWithSchema(tombTable, dedupTombSchema)
-      if (!tombs.filter(F.col("seq") === sv).isEmpty)
-        catalog.replaceTable(tombTable, tombs.filter(F.col("seq") =!= sv))
-    }
-    // the commit count rides the victim checkpoint as an observed
-    // metric (result-stage observe: exactly-once) — one fewer job
-    val countObs = org.apache.spark.sql.Observation()
-    val victims = graft.operators.Tombstones.live(
-        snap.visible(
-          catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
-        snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
-        "doc_id")
-      .join(ids.select(F.col("doc_id").cast("long").as("doc_id"))
-        .dropDuplicates("doc_id"), Seq("doc_id"), "leftsemi")
-      .select(F.col("doc_id"), F.lit(sv).as("seq"))
-      .observe(countObs, F.count(F.lit(1)).as("n"))
-      .localCheckpoint() // referenced by the append below
-    catalog.append(tombTable, victims)
-    log.commitCount(sv, countObs.get("n").asInstanceOf[Long])
-    }
-  }
+      seq: Option[Long] = None): Unit =
+    dedupFamily(catalog, corpusTable, None, tombTable).delete(ids, seq)
 
   /** REPLACE documents in a tombstone-aware dedup corpus as ONE
     * exactly-once [[OpLog]] op — the reference's `ON CONFLICT DO
@@ -565,75 +510,52 @@ object Streams {
       shingleLen: Int = 5,
       numHashes: Int = 64,
       bands: Int = 4): Unit = {
-    val log = new OpLog(catalog.spark, catalog, corpusTable + "_ops",
-      OpLog.countPayload)
-    // single-writer op span (OpLog.withWriter)
-    log.withWriter() {
-    catalog.recoverCompaction(corpusTable, "pbk")
-    catalog.recoverCompaction(bucketTable, "pbk")
-    catalog.recoverReplace(tombTable)
-    // first-op safety: replace may be the first operation on the family
-    ensureDedupIndexTables(catalog, corpusTable, bucketTable, tombTable)
-    catalog.ensureLayoutMeta(corpusTable, dedupLayoutStamp(
-      stateBuckets, shingleLen, numHashes, bands))
     def pbkOf(c: org.apache.spark.sql.Column) =
       F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-    // one |ops|-row collect answers base-seq derivation, replay flags
-    // and both tables' visibility (single-writer lease; see
-    // OpLog.Snapshot)
-    val snap = log.snapshot()
-    val sv = seq.getOrElse(snap.maxSeq.map(_ + 1L).getOrElse(0L))
-    val (done, crashed) = snap.replayState(sv)
-    if (done) return
-    log.beginAttempt(sv)
-    if (crashed) {
-      catalog.scrubSeqs(corpusTable, "pbk", dedupCorpusSchema, Seq(sv))
-      catalog.scrubSeqs(bucketTable, "pbk", dedupBucketSchema, Seq(sv))
-      val tombs = catalog.readWithSchema(tombTable, dedupTombSchema)
-      if (!tombs.filter(F.col("seq") === sv).isEmpty)
-        catalog.replaceTable(tombTable, tombs.filter(F.col("seq") =!= sv))
-    }
-    // in-batch id dups resolve deterministically (see Bm25Index.ingest);
-    // the pbk probe and the commit count ride the checkpoint as
-    // observed metrics (result-stage observe: exactly-once)
-    val probeObs = org.apache.spark.sql.Observation()
-    val deduped = batch
-      .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
-      .groupBy("doc_id").agg(F.max("text").as("text"))
-      .observe(probeObs,
-        F.collect_set(pbkOf(F.col("doc_id"))).as("pbks"),
-        F.count(F.lit(1)).as("n"))
-      .localCheckpoint() // reused: victims + appends
-    val pbks = probeObs.get("pbks").asInstanceOf[Seq[Any]]
-    // the batch ids' currently-live generations die at `sv`; same
-    // zero-state-shuffle probe plan as admission, semi instead of anti
-    val victims = graft.operators.Tombstones.live(
-        snap.visible(catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
-        snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
-        "doc_id")
-      .filter(F.col("pbk").isin(pbks: _*))
-      .join(F.broadcast(deduped.select("doc_id")), Seq("doc_id"), "leftsemi")
-      .select(F.col("doc_id"), F.lit(sv).as("seq"))
-      .localCheckpoint() // referenced by tombstone append
-    catalog.appendPartitioned(bucketTable,
-      // MUST use the stream's banding scheme: bucket rows written under
-      // different (shingleLen, numHashes, bands) would never join the
-      // ingest path's (band, bk) probes — silently missing near-dups of
-      // replaced content
-      graft.operators.Dedup.bucketTableMd5(deduped,
-          shingleLen = shingleLen, numHashes = numHashes, bands = bands)
-        .withColumn("seq", F.lit(sv))
-        .withColumn("pbk", pbkOf(F.col("id"))),
-      Seq("pbk"),
-      clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-    catalog.appendPartitioned(corpusTable, deduped
-        .select("doc_id", "text")
-        .withColumn("seq", F.lit(sv))
-        .withColumn("pbk", pbkOf(F.col("doc_id"))),
-      Seq("pbk"),
-      clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-    catalog.append(tombTable, victims)
-    log.commitCount(sv, probeObs.get("n").asInstanceOf[Long])
+    dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable,
+      Some(dedupLayoutStamp(stateBuckets, shingleLen, numHashes, bands))
+    ).op(seq) { (snap, sv) =>
+      // in-batch id dups resolve deterministically (see Bm25Index.ingest);
+      // the pbk probe and the commit count ride the checkpoint as
+      // observed metrics (result-stage observe: exactly-once)
+      val probeObs = org.apache.spark.sql.Observation()
+      val deduped = batch
+        .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
+        .groupBy("doc_id").agg(F.max("text").as("text"))
+        .observe(probeObs,
+          F.collect_set(pbkOf(F.col("doc_id"))).as("pbks"),
+          F.count(F.lit(1)).as("n"))
+        .localCheckpoint() // reused: victims + appends
+      val pbks = probeObs.get("pbks").asInstanceOf[Seq[Any]]
+      // the batch ids' currently-live generations die at `sv`; same
+      // zero-state-shuffle probe plan as admission, semi instead of anti
+      val victims = graft.operators.Tombstones.live(
+          snap.visible(catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
+          snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
+          "doc_id")
+        .filter(F.col("pbk").isin(pbks: _*))
+        .join(F.broadcast(deduped.select("doc_id")), Seq("doc_id"), "leftsemi")
+        .select(F.col("doc_id"), F.lit(sv).as("seq"))
+        .localCheckpoint() // referenced by tombstone append
+      catalog.appendPartitioned(bucketTable,
+        // MUST use the stream's banding scheme: bucket rows written under
+        // different (shingleLen, numHashes, bands) would never join the
+        // ingest path's (band, bk) probes — silently missing near-dups of
+        // replaced content
+        graft.operators.Dedup.bucketTableMd5(deduped,
+            shingleLen = shingleLen, numHashes = numHashes, bands = bands)
+          .withColumn("seq", F.lit(sv))
+          .withColumn("pbk", pbkOf(F.col("id"))),
+        Seq("pbk"),
+        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+      catalog.appendPartitioned(corpusTable, deduped
+          .select("doc_id", "text")
+          .withColumn("seq", F.lit(sv))
+          .withColumn("pbk", pbkOf(F.col("doc_id"))),
+        Seq("pbk"),
+        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+      catalog.append(tombTable, victims)
+      Seq(probeObs.get("n").asInstanceOf[Long])
     }
   }
 
@@ -657,15 +579,8 @@ object Streams {
     // falls back to the probe scan.
     val partOf = Generations.stampBuckets(catalog.readLayoutMeta(corpusTable))
       .map(Generations.idHashPartition)
-    Generations.compact(catalog,
-      new OpLog(catalog.spark, catalog, corpusTable + "_ops",
-        OpLog.countPayload),
-      tombTable, dedupTombSchema, "doc_id",
-      Seq(
-        Generations.Stamped(corpusTable, "pbk", dedupCorpusSchema, "doc_id",
-          partOfId = partOf),
-        Generations.Stamped(bucketTable, "pbk", dedupBucketSchema, "id",
-          partOfId = partOf)),
+    Generations.compact(
+      dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable, partOf = partOf),
       maxFilesPerPartition, checkpointLog = checkpointOps)
   }
 
@@ -857,13 +772,12 @@ object Streams {
         val schema = codesSchema.getOrElse(throw new IllegalArgumentException(
           "tombstone-aware streamingIvfPqIndex needs codesSchema " +
             "(the ivfPqCodeTable schema + seq BIGINT + pbk INT)"))
-        val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-          OpLog.countPayload)
-        log.ensure()
         // stored pbk values bake in the id-hash modulus and code rows
         // bake in the PQ constants: refuse a mismatched reopen loudly
-        catalog.ensureLayoutMeta(codesTable,
-          vectorLayoutStamp(stateBuckets, nlist, m, ksub))
+        val family = vectorFamily(catalog, codesTable, schema, tt,
+          Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub)))
+        family.ensure()
+        val log = family.log
         val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
         def pbkOf(c: org.apache.spark.sql.Column) =
           F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
@@ -880,20 +794,9 @@ object Streams {
               seq = Some(base + id))
           }
         writer.foreachBatch { (batch: DataFrame, id: Long) =>
-          // single-writer op span (OpLog.withWriter): concurrent
-          // writers and log rewrites refuse loudly
-          log.withWriter() {
-          catalog.recoverCompaction(codesTable, "pbk")
-          catalog.recoverReplace(tt)
-          val seq = base + id
-          // one |ops|-row collect for replay flags + both tables'
-          // visibility (single-writer lease; see OpLog.Snapshot)
-          val snap = log.snapshot()
-          val (done, crashed) = snap.replayState(seq)
-          if (!done) {
-            log.beginAttempt(seq)
-            if (crashed)
-              catalog.scrubSeqs(codesTable, "pbk", schema, Seq(seq))
+          // one op of the family (Generations.Family.op): the snapshot
+          // answers replay flags and both tables' visibility
+          family.op(Some(base + id)) { (snap, seq) =>
             val live = graft.operators.Tombstones.live(
               snap.visible(catalog.readWithSchema(codesTable, schema)),
               snap.visible(catalog.readWithSchema(tt, vectorTombSchema)),
@@ -928,8 +831,7 @@ object Streams {
                 .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
               Seq("pbk"),
               clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-            log.commitCount(seq, countObs.get("n").asInstanceOf[Long])
-          }
+            Seq(countObs.get("n").asInstanceOf[Long])
           }
         }
     }
@@ -944,25 +846,27 @@ object Streams {
     StructType(codeTableSchema.fields ++ StructType.fromDDL(
       "seq BIGINT, pbk INT").fields)
 
-  def ensureVectorIndexTables(
+  /** The tombstone-aware vector family ([[Generations.Family]]):
+    * `stamp` is given by openers that know the PQ constants, `partOf`
+    * by compaction. */
+  def vectorFamily(
       catalog: Catalog,
       codesTable: String,
+      codesSchema: StructType,
       tombTable: String,
-      codesSchema: StructType): Unit = {
-    catalog.ensurePartitionedTable(codesTable)
-    catalog.ensureTable(tombTable, vectorTombSchema)
-    new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload).ensure()
-  }
+      stamp: Option[String] = None,
+      partOf: Option[Long => String] = None): Generations.Family =
+    Generations.Family(catalog, opsLog(catalog, codesTable),
+      tombTable, vectorTombSchema, "neighbor_id",
+      Seq(Generations.Stamped(codesTable, "pbk", codesSchema, "neighbor_id", partOf)),
+      stamp)
 
   /** Delete vectors from a tombstone-aware codes table
-    * ([[streamingIvfPqIndex]] with `tombTable`): one exactly-once
-    * [[OpLog]] op tombstoning the COMMITTED LIVE generations of `ids`
-    * (a frame carrying `neighbor_id`). Ids not currently live are
-    * ignored. Omit `seq` to derive the next one from the op log; pass
-    * the same seq to replay a crashed delete. Serving anti-joins the
-    * tombstones ([[graft.operators.Tombstones.live]]) until
-    * [[compactVectorIndex]] applies them physically.
+    * ([[streamingIvfPqIndex]] with `tombTable`) as one op
+    * ([[Generations.Family.delete]]; `ids` carries `neighbor_id`).
+    * Serving anti-joins the tombstones
+    * ([[graft.operators.Tombstones.live]]) until [[compactVectorIndex]]
+    * applies them physically.
     */
   def deleteVectors(
       catalog: Catalog,
@@ -970,44 +874,8 @@ object Streams {
       codesSchema: StructType,
       tombTable: String,
       ids: DataFrame,
-      seq: Option[Long] = None): Unit = {
-    val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload)
-    // single-writer op span (OpLog.withWriter)
-    log.withWriter() {
-    catalog.recoverCompaction(codesTable, "pbk")
-    catalog.recoverReplace(tombTable)
-    // first-op safety: a delete may be the first operation ever run on
-    // this family — materialize the tables it reads
-    ensureVectorIndexTables(catalog, codesTable, tombTable, codesSchema)
-    // one |ops|-row collect: base seq, replay flags, both tables'
-    // visibility (single-writer lease; see OpLog.Snapshot)
-    val snap = log.snapshot()
-    val sv = seq.getOrElse(snap.maxSeq.map(_ + 1L).getOrElse(0L))
-    val (done, crashed) = snap.replayState(sv)
-    if (done) return
-    log.beginAttempt(sv)
-    if (crashed) {
-      val tombs = catalog.readWithSchema(tombTable, vectorTombSchema)
-      if (!tombs.filter(F.col("seq") === sv).isEmpty)
-        catalog.replaceTable(tombTable, tombs.filter(F.col("seq") =!= sv))
-    }
-    // the commit count rides the victim checkpoint as an observed
-    // metric (result-stage observe: exactly-once) — one fewer job
-    val countObs = org.apache.spark.sql.Observation()
-    val victims = graft.operators.Tombstones.live(
-        snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
-        snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
-        "neighbor_id")
-      .join(ids.select(F.col("neighbor_id").cast("long").as("neighbor_id"))
-        .dropDuplicates("neighbor_id"), Seq("neighbor_id"), "leftsemi")
-      .select(F.col("neighbor_id"), F.lit(sv).as("seq"))
-      .observe(countObs, F.count(F.lit(1)).as("n"))
-      .localCheckpoint() // referenced by the append below
-    catalog.append(tombTable, victims)
-    log.commitCount(sv, countObs.get("n").asInstanceOf[Long])
-    }
-  }
+      seq: Option[Long] = None): Unit =
+    vectorFamily(catalog, codesTable, codesSchema, tombTable).delete(ids, seq)
 
   /** REPLACE vectors in a tombstone-aware codes table as ONE
     * exactly-once [[OpLog]] op — the `ON CONFLICT DO UPDATE` arm for
@@ -1038,60 +906,40 @@ object Streams {
       seq: Option[Long] = None): Unit = {
     val pool = graft.operators.Similarity.collectPool(model)
     require(pool.nonEmpty, "replaceVectors needs a non-empty model")
-    val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload)
-    // single-writer op span (OpLog.withWriter)
-    log.withWriter() {
-    catalog.recoverCompaction(codesTable, "pbk")
-    catalog.recoverReplace(tombTable)
-    // first-op safety: replace may be the first operation on the family
-    ensureVectorIndexTables(catalog, codesTable, tombTable, codesSchema)
-    catalog.ensureLayoutMeta(codesTable,
-      vectorLayoutStamp(stateBuckets, nlist, m, ksub))
     def pbkOf(c: org.apache.spark.sql.Column) =
       F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-    // one |ops|-row collect: base seq, replay flags, both tables'
-    // visibility (single-writer lease; see OpLog.Snapshot)
-    val snap = log.snapshot()
-    val sv = seq.getOrElse(snap.maxSeq.map(_ + 1L).getOrElse(0L))
-    val (done, crashed) = snap.replayState(sv)
-    if (done) return
-    log.beginAttempt(sv)
-    if (crashed) {
-      catalog.scrubSeqs(codesTable, "pbk", codesSchema, Seq(sv))
-      val tombs = catalog.readWithSchema(tombTable, vectorTombSchema)
-      if (!tombs.filter(F.col("seq") === sv).isEmpty)
-        catalog.replaceTable(tombTable, tombs.filter(F.col("seq") =!= sv))
-    }
-    // a vector's code is a pure function of the embedding, so any
-    // in-batch dup winner codes identically; pbk probe + commit count
-    // ride the checkpoint as observed metrics (result-stage observe)
-    val probeObs = org.apache.spark.sql.Observation()
-    val coded = graft.operators.Similarity.ivfPqCodeTable(
-        batch, pool, nlist, m, ksub, idCol, vecCol)
-      .dropDuplicates("neighbor_id")
-      .observe(probeObs,
-        F.collect_set(pbkOf(F.col("neighbor_id"))).as("pbks"),
-        F.count(F.lit(1)).as("n"))
-      .localCheckpoint() // reused: victims + append
-    val probeVals = probeObs.get
-    val pbks = probeVals("pbks").asInstanceOf[Seq[Any]]
-    val victims = graft.operators.Tombstones.live(
-        snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
-        snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
-        "neighbor_id")
-      .filter(F.col("pbk").isin(pbks: _*))
-      .join(F.broadcast(coded.select("neighbor_id")), Seq("neighbor_id"),
-        "leftsemi")
-      .select(F.col("neighbor_id"), F.lit(sv).as("seq"))
-      .localCheckpoint() // referenced by tombstone append
-    catalog.appendPartitioned(codesTable, coded
-        .withColumn("seq", F.lit(sv))
-        .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
-      Seq("pbk"),
-      clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-    catalog.append(tombTable, victims)
-    log.commitCount(sv, probeVals("n").asInstanceOf[Long])
+    vectorFamily(catalog, codesTable, codesSchema, tombTable,
+      Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub))
+    ).op(seq) { (snap, sv) =>
+      // a vector's code is a pure function of the embedding, so any
+      // in-batch dup winner codes identically; pbk probe + commit count
+      // ride the checkpoint as observed metrics (result-stage observe)
+      val probeObs = org.apache.spark.sql.Observation()
+      val coded = graft.operators.Similarity.ivfPqCodeTable(
+          batch, pool, nlist, m, ksub, idCol, vecCol)
+        .dropDuplicates("neighbor_id")
+        .observe(probeObs,
+          F.collect_set(pbkOf(F.col("neighbor_id"))).as("pbks"),
+          F.count(F.lit(1)).as("n"))
+        .localCheckpoint() // reused: victims + append
+      val probeVals = probeObs.get
+      val pbks = probeVals("pbks").asInstanceOf[Seq[Any]]
+      val victims = graft.operators.Tombstones.live(
+          snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
+          snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
+          "neighbor_id")
+        .filter(F.col("pbk").isin(pbks: _*))
+        .join(F.broadcast(coded.select("neighbor_id")), Seq("neighbor_id"),
+          "leftsemi")
+        .select(F.col("neighbor_id"), F.lit(sv).as("seq"))
+        .localCheckpoint() // referenced by tombstone append
+      catalog.appendPartitioned(codesTable, coded
+          .withColumn("seq", F.lit(sv))
+          .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
+        Seq("pbk"),
+        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+      catalog.append(tombTable, victims)
+      Seq(probeVals("n").asInstanceOf[Long])
     }
   }
 
@@ -1108,16 +956,13 @@ object Streams {
       tombTable: String,
       maxFilesPerPartition: Int = 2,
       checkpointOps: Boolean = false): Unit =
-    Generations.compact(catalog,
-      new OpLog(catalog.spark, catalog, codesTable + "_ops",
-        OpLog.countPayload),
-      tombTable, vectorTombSchema, "neighbor_id",
-      // pbk = hash(neighbor_id) % stateBuckets, the modulus recorded in
-      // the family's verified layout stamp: affected partitions derive
-      // driver-side from the tombstone ids (probe fallback if unstamped)
-      Seq(Generations.Stamped(codesTable, "pbk", codesSchema, "neighbor_id",
-        partOfId = Generations.stampBuckets(catalog.readLayoutMeta(codesTable))
-          .map(Generations.idHashPartition))),
+    // pbk = hash(neighbor_id) % stateBuckets, the modulus recorded in
+    // the family's verified layout stamp: affected partitions derive
+    // driver-side from the tombstone ids (probe fallback if unstamped)
+    Generations.compact(
+      vectorFamily(catalog, codesTable, codesSchema, tombTable,
+        partOf = Generations.stampBuckets(catalog.readLayoutMeta(codesTable))
+          .map(Generations.idHashPartition)),
       maxFilesPerPartition, checkpointLog = checkpointOps)
 
   /** Model-table layout for the tombstone-aware vector index: one row
@@ -1149,8 +994,7 @@ object Streams {
       case Some(s) =>
         s.visible(catalog.readWithSchema(modelTable, vectorModelSchema))
       case None =>
-        new OpLog(catalog.spark, catalog, codesTable + "_ops",
-          OpLog.countPayload).visible(
+        opsLog(catalog, codesTable).visible(
           catalog.readWithSchema(modelTable, vectorModelSchema))
     }
     val mx = vis.agg(F.max("seq")).head().get(0)
@@ -1173,8 +1017,7 @@ object Streams {
     // the moved-aside rows as a dead stage
     catalog.recoverReplace(modelTable)
     catalog.ensureTable(modelTable, vectorModelSchema)
-    val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload)
+    val log = opsLog(catalog, codesTable)
     log.ensure()
     catalog.append(modelTable, model.withColumn("seq", F.lit(seq)))
     log.commitCount(seq, model.count())
@@ -1224,15 +1067,13 @@ object Streams {
     // maintenance, so it shares the family lease with
     // [[compactVectorIndex]] (same scope: the family's op log)
     catalog.withMaintenanceLease(codesTable + "_ops") {
-    catalog.recoverCompaction(codesTable, "pbk")
-    catalog.recoverReplace(tombTable)
+    val family = vectorFamily(catalog, codesTable, codesSchema, tombTable,
+      Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub)))
+    family.heal()
     catalog.recoverReplace(modelTable)
     catalog.ensureTable(modelTable, vectorModelSchema)
-    catalog.ensureLayoutMeta(codesTable,
-      vectorLayoutStamp(stateBuckets, nlist, m, ksub))
-    val log = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload)
-    log.ensure()
+    family.ensure()
+    val log = family.log
     // GC abandoned-rebuild model rows while here (codes/tombstone
     // garbage is compactVectorIndex's job; the model table is the one
     // flat table no other maintenance pass touches)
@@ -1258,25 +1099,25 @@ object Streams {
     val (mx, tot) = (row.getLong(0), row.getLong(1))
     if (tot == 0L || mx * nlist * 1000L <= maxCellMilli * tot) false
     else {
-      // fired: rebuild model + codes on the live corpus as ONE op (the
-      // derived seq sits above every attempt, so no scrub arm is needed —
-      // a crashed rebuild's seq is never reused; the snapshot is still
+      // fired: rebuild model + codes on the live corpus as ONE op at
+      // the derived seq (never attempted, so no scrub arm is needed — a
+      // crashed rebuild's seq is never reused; the snapshot is still
       // current — nothing commits mid-span under the writer lease)
-      val sv = snap.maxSeq.map(_ + 1L).getOrElse(0L)
-      log.beginAttempt(sv)
       def pbkOf(c: org.apache.spark.sql.Column) =
         F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-      val (newModel, newCodes) = graft.operators.Similarity.ivfPqIndex(
-        vectors, nlist, m, ksub, idCol, vecCol)
-      catalog.append(modelTable, newModel.withColumn("seq", F.lit(sv)))
-      catalog.appendPartitioned(codesTable, newCodes
-          .withColumn("seq", F.lit(sv))
-          .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
-        Seq("pbk"),
-        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-      catalog.append(tombTable,
-        live.select(F.col("neighbor_id"), F.lit(sv).as("seq")))
-      log.commitCount(sv, newCodes.count())
+      log.derivedOp(snap) { sv =>
+        val (newModel, newCodes) = graft.operators.Similarity.ivfPqIndex(
+          vectors, nlist, m, ksub, idCol, vecCol)
+        catalog.append(modelTable, newModel.withColumn("seq", F.lit(sv)))
+        catalog.appendPartitioned(codesTable, newCodes
+            .withColumn("seq", F.lit(sv))
+            .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
+          Seq("pbk"),
+          clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+        catalog.append(tombTable,
+          live.select(F.col("neighbor_id"), F.lit(sv).as("seq")))
+        Seq(newCodes.count())
+      }
       true
     }
   }
@@ -1299,15 +1140,14 @@ object Streams {
       ksub: Int = 8,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    catalog.recoverCompaction(codesTable, "pbk")
-    catalog.recoverReplace(tombTable)
+    val family = vectorFamily(catalog, codesTable, codesSchema, tombTable)
+    family.heal()
     catalog.recoverReplace(modelTable)
     // one pinned committed-prefix snapshot answers visibility for codes,
     // tombstones AND the model generation pick — a commit landing
     // mid-serve can never pair a new model with old codes (or skew the
     // live set between the two scans)
-    val snap = new OpLog(catalog.spark, catalog, codesTable + "_ops",
-      OpLog.countPayload).snapshot()
+    val snap = family.log.snapshot()
     val live = graft.operators.Tombstones.live(
       snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
       snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
@@ -1473,19 +1313,5 @@ object Streams {
       s"user_id = v_user_id AND vts BETWEEN ts - INTERVAL $horizon AND ts"))
       .select(F.col("user_id"), F.col("purchase_id"), F.col("view_id"),
         F.col("ts"), F.col("vts"))
-  }
-
-  /** Start a memory-sink query for tests/demos and drain all available
-    * input synchronously.
-    */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q
   }
 }

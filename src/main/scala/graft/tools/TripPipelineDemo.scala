@@ -33,7 +33,10 @@ object TripPipelineDemo {
     (offset until offset + rows).foreach { i =>
       val r = regions(i % (if (i % 7 == 0) 2 else 3)) // skew region counts
       val s = sources(i % sources.length)
-      val lon = 7.0 + (i % 50) * 0.01
+      // every other field's period divides 4,200: whole degrees of
+      // longitude per 4,200 rows keep every row's key distinct (and rows
+      // below 4,200 as they were)
+      val lon = 7.0 + (i % 50) * 0.01 + i / 4200
       val lat = 45.0 + (i % 40) * 0.01
       val day = 1 + (i % 28)
       val ts = f"2024-03-$day%02d ${i % 24}%02d:${i % 60}%02d:${(i * 7) % 60}%02d"

@@ -606,7 +606,7 @@ class LifecycleContractSpec extends SparkSpec {
           Seq("bk"))
         Thread.sleep(10)
         bforeign.withMaintenanceLease("ops") {}
-        blog.commit(sv, Seq((1L, 5L)).toDF("n_docs", "total_dl"))
+        blog.commitValues(sv, Seq(Some(1L), Some(5L)))
       }
     }
     idx.ingest(Seq((3L, "beta")).toDF("doc_id", "text"), blog.nextBaseSeq)

@@ -734,8 +734,8 @@ class StreamingSpec extends SparkSpec {
     val (model, offline) = graft.operators.Similarity.ivfPqIndex(
       vecs, nlist = 8, m = 4, ksub = 8)
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
-    graft.streaming.Streams.ensureVectorIndexTables(
-      cat, "codes", "codes_tomb", codesSchema)
+    graft.streaming.Streams.vectorFamily(
+      cat, "codes", codesSchema, "codes_tomb").ensure()
     val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     val pool = graft.operators.Similarity.collectPool(model)
@@ -801,8 +801,8 @@ class StreamingSpec extends SparkSpec {
     val (model, offline) = graft.operators.Similarity.ivfPqIndex(
       vecs, nlist = 8, m = 4, ksub = 8)
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
-    graft.streaming.Streams.ensureVectorIndexTables(
-      cat, "codes", "codes_tomb", codesSchema)
+    graft.streaming.Streams.vectorFamily(
+      cat, "codes", codesSchema, "codes_tomb").ensure()
     val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     val pool = graft.operators.Similarity.collectPool(model)
@@ -872,8 +872,8 @@ class StreamingSpec extends SparkSpec {
     val (model, offline) = graft.operators.Similarity.ivfPqIndex(
       vecs, nlist = 8, m = 4, ksub = 8)
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
-    graft.streaming.Streams.ensureVectorIndexTables(
-      cat, "codes", "codes_tomb", codesSchema)
+    graft.streaming.Streams.vectorFamily(
+      cat, "codes", codesSchema, "codes_tomb").ensure()
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     vecs.coalesce(1).write.parquet(s"$in/b1")
     def src = spark.readStream.schema(vecs.schema)
@@ -934,8 +934,8 @@ class StreamingSpec extends SparkSpec {
     val (model0, offline) = graft.operators.Similarity.ivfPqIndex(
       drifted.filter($"vec_id" < 15), nlist = 8, m = 4, ksub = 8)
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
-    graft.streaming.Streams.ensureVectorIndexTables(
-      cat, "codes", "codes_tomb", codesSchema)
+    graft.streaming.Streams.vectorFamily(
+      cat, "codes", codesSchema, "codes_tomb").ensure()
     graft.streaming.Streams.seedVectorIndexModel(
       cat, "codes", "model", model0, seq = 0L)
     val pool0 = graft.operators.Similarity.collectPool(model0)
@@ -1011,8 +1011,8 @@ class StreamingSpec extends SparkSpec {
     val catalog = new graft.sources.Catalog(spark, wh)
     val corpusSchema = Streams.dedupCorpusSchema
     val bucketSchema = Streams.dedupBucketSchema
-    Streams.ensureDedupIndexTables(
-      catalog, "corpus", "corpus_buckets", "corpus_tomb")
+    Streams.dedupFamily(
+      catalog, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
     def drop1(d: String, file: String, rows: (Long, String)*): Unit =
       Files.writeString(java.nio.file.Paths.get(s"$d/$file"),
         rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }.mkString("\n"))
@@ -1068,8 +1068,8 @@ class StreamingSpec extends SparkSpec {
   test("dedup single-op replace: new text re-buckets and old generation dies in ONE op; replays converge") {
     val dir = Files.createTempDirectory("graft-dedupreplace").toString
     val catalog = new graft.sources.Catalog(spark, s"$dir/wh")
-    Streams.ensureDedupIndexTables(
-      catalog, "corpus", "corpus_buckets", "corpus_tomb")
+    Streams.dedupFamily(
+      catalog, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
     val log = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     def pbkOf(c: org.apache.spark.sql.Column) =
@@ -1141,8 +1141,8 @@ class StreamingSpec extends SparkSpec {
     val drop = s"$dir/drop"
     new java.io.File(drop).mkdirs()
     val catalog = new graft.sources.Catalog(spark, s"$dir/wh")
-    Streams.ensureDedupIndexTables(
-      catalog, "corpus", "corpus_buckets", "corpus_tomb")
+    Streams.dedupFamily(
+      catalog, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
     val t1 = "original page body before the recrawl found newer content"
     Files.writeString(java.nio.file.Paths.get(s"$drop/b1.jsonl"),
       s"""{"doc_id":1,"text":"$t1"}""")
@@ -1210,7 +1210,7 @@ class StreamingSpec extends SparkSpec {
         super.appendPartitioned(table, df, partitionCols, clusterInto, sortWithin)
       }
     }
-    Streams.ensureDedupIndexTables(catalog, "corpus", "corpus_buckets", "corpus_tomb")
+    Streams.dedupFamily(catalog, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
     Files.writeString(java.nio.file.Paths.get(s"$drop/b1.jsonl"),
       Seq(1L -> "first document body with enough words to shingle cleanly",
         2L -> "second document body that is entirely different text")
@@ -1605,10 +1605,9 @@ class StreamingSpec extends SparkSpec {
     val log = new graft.streaming.OpLog(spark, cat, "t_ops",
       graft.streaming.Bm25Index.statsPayload)
     log.ensure()
-    def stats(n: Long, dl: Long) = Seq((n, dl)).toDF("n_docs", "total_dl")
-    log.beginAttempt(0L); log.commit(0L, stats(5L, 50L))
+    log.beginAttempt(0L); log.commitValues(0L, Seq(Some(5L), Some(50L)))
     log.beginAttempt(1L) // abandoned (never commits, below the HWM)
-    log.beginAttempt(2L); log.commit(2L, stats(3L, 30L))
+    log.beginAttempt(2L); log.commitValues(2L, Seq(Some(3L), Some(30L)))
     log.beginAttempt(3L) // crashed in-flight at the HWM — must survive
     def opsFiles: Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -1796,8 +1795,8 @@ class StreamingSpec extends SparkSpec {
     val (model0, offline) = graft.operators.Similarity.ivfPqIndex(
       batch(seedIds), nlist = 8, m = 4, ksub = 8)
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
-    graft.streaming.Streams.ensureVectorIndexTables(
-      cat, "codes", "codes_tomb", codesSchema)
+    graft.streaming.Streams.vectorFamily(
+      cat, "codes", codesSchema, "codes_tomb").ensure()
     graft.streaming.Streams.seedVectorIndexModel(
       cat, "codes", "model", model0, seq = 0L)
     val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
@@ -1868,8 +1867,8 @@ class StreamingSpec extends SparkSpec {
     // live one at every step.
     val dir = Files.createTempDirectory("graft-flatserve-dedup").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    graft.streaming.Streams.ensureDedupIndexTables(
-      cat, "corpus", "corpus_buckets", "corpus_tomb")
+    graft.streaming.Streams.dedupFamily(
+      cat, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
     val log = new graft.streaming.OpLog(spark, cat, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     val live = scala.collection.mutable.Map.empty[Long, String]

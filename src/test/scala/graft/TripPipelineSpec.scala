@@ -19,6 +19,16 @@ class TripPipelineSpec extends SparkSpec {
     (pipe, csv)
   }
 
+  test("synthetic trips carry a distinct key per row index, so offsets overlap by exactly their shared rows") {
+    // the key is Trip.tripKey: the five fields concatenated
+    def keys(rows: Int, offset: Int): Set[String] =
+      TripPipelineDemo.syntheticCsv(rows, offset).linesIterator.drop(1)
+        .map(_.split(",").mkString).toSet
+    val first = keys(20000, 0)
+    assert(first.size === 20000)
+    assert((first intersect keys(20000, 10000)).size === 10000)
+  }
+
   test("batch load is idempotent: re-running the same file does not grow hist") {
     val (pipe, csv) = env
     val before = pipe.hist.count()
