@@ -41,57 +41,61 @@ object Upsert {
       .dropDuplicates(key)
       .join(existing.select(key), Seq(key), "left_anti")
 
+  /** Admission batches above this many keys take the shuffle anti-join
+    * of [[newRows]] instead of the broadcast probe: a backfill-sized
+    * batch genuinely wants the shuffle, and its key set would no longer
+    * be broadcast-sized. */
+  val maxProbeKeys: Long = 4L * 1024 * 1024
+
   /** Probe-side upsert for micro-batches against a corpus-sized key
-    * set: the anti-join runs as two BROADCASTS of batch-bounded key
-    * sets instead of a full-table key shuffle.
+    * set, for callers that have not counted the batch: one count job
+    * (bounded by [[maxProbeKeys]]) decides the plan of [[newRowsSized]].
+    * `batch` must be cheap to evaluate twice (micro-batch sources are;
+    * callers with expensive upstreams should localCheckpoint first).
+    */
+  def newRowsProbed(batch: DataFrame, existing: DataFrame, key: String): DataFrame = {
+    val deduped = batch.dropDuplicates(key)
+    newRowsSized(deduped, existing, key,
+      deduped.select(key).limit(maxProbeKeys.toInt + 1).count())
+  }
+
+  /** Insert-if-absent admission of an already-deduped batch whose key
+    * count `keys` the caller observed (e.g. riding the batch's
+    * checkpoint as a metric): no extra count job. At most
+    * [[maxProbeKeys]] keys run the probe plan, which turns the
+    * anti-join into two BROADCASTS of batch-bounded key sets instead
+    * of a full-table key shuffle.
     *
     * [[newRows]] plans as a shuffle join when `existing` is big — at
     * 10B registered ids that is an O(corpus) key shuffle per
     * MICRO-BATCH, the one corpus-sized cost left in the incremental
     * index path. But a micro-batch is bounded by construction
-    * (`maxFilesPerTrigger`), so flip the lookup around:
-    *   1. broadcast the batch's (deduped) keys and semi-join the
-    *      existing side against them — the state side is ONLY SCANNED
-    *      (key column, parquet-pruned), never shuffled; the hits are a
-    *      subset of the batch's keys, so they are broadcast-sized too;
+    * (`maxFilesPerTrigger`), so the probe flips the lookup around:
+    *   1. broadcast the batch's keys and semi-join the existing side
+    *      against them — the state side is ONLY SCANNED (key column,
+    *      parquet-pruned), never shuffled; the hits are a subset of the
+    *      batch's keys, so they are broadcast-sized too;
     *   2. broadcast the hits back and anti-join the batch against
     *      them.
     * Zero Exchange touches the state side (pinned in PlanSpec); the
     * two broadcasts move O(|batch|) bytes. With the state table
     * hive-partitioned by a key-hash bucket, callers additionally prune
     * the scan to the batch's bucket values before passing it in.
-    *
-    * `batch` must be cheap to evaluate twice (micro-batch sources are;
-    * callers with expensive upstreams should localCheckpoint first).
-    * Batches larger than `maxBroadcastRows` keys fall back to the
-    * shuffle plan of [[newRows]] — a backfill-sized batch genuinely
-    * wants the shuffle.
+    * Larger batches fall back to the anti-join of [[newRows]], whose
+    * in-batch dedup the caller has already done.
     */
-  def newRowsProbed(
-      batch: DataFrame,
-      existing: DataFrame,
-      key: String,
-      maxBroadcastRows: Long = 4L * 1024 * 1024): DataFrame = {
-    val deduped = batch.dropDuplicates(key)
-    // clamp: a caller-supplied bound >= Int.MaxValue must degrade to the
-    // shuffle-plan check, not overflow limit() into a negative argument
-    val probeLimit = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
-    if (deduped.select(key).limit(probeLimit).count() > maxBroadcastRows)
-      newRows(batch, existing, key)
-    else newRowsViaProbe(deduped, existing, key)
-  }
-
-  /** The probe plan itself, for callers that already deduped the batch
-    * and established its boundedness (e.g. with a combined
-    * count/partition-value probe): no extra count job. */
-  def newRowsViaProbe(
+  def newRowsSized(
       dedupedBatch: DataFrame,
       existing: DataFrame,
-      key: String): DataFrame = {
-    val keys = dedupedBatch.select(key)
-    val hits = existing.select(key).join(F.broadcast(keys), Seq(key), "leftsemi")
-    dedupedBatch.join(F.broadcast(hits), Seq(key), "leftanti")
-  }
+      key: String,
+      keys: Long): DataFrame =
+    if (keys > maxProbeKeys)
+      dedupedBatch.join(existing.select(key), Seq(key), "left_anti")
+    else {
+      val hits = existing.select(key)
+        .join(F.broadcast(dedupedBatch.select(key)), Seq(key), "leftsemi")
+      dedupedBatch.join(F.broadcast(hits), Seq(key), "leftanti")
+    }
 
   /** Partition-pruned upsert for time-bounded batches: when batches are
     * known to only ever collide with a bounded window of history (trips

@@ -52,7 +52,7 @@ import graft.sources.Catalog
   * scrubbed at [[compact]].
   *
   * Scale shape of an ingest: admission is the broadcast-probe upsert
-  * ([[graft.operators.Upsert.newRowsProbed]]) against the registry
+  * ([[graft.operators.Upsert.newRowsSized]]) against the registry
   * PRUNED to the batch's id-hash partitions — the state side is
   * scanned (one pruned key column), never shuffled; the op's appends
   * are batch-sized. A serve: bucket-partition pruning (the query
@@ -67,11 +67,7 @@ final class Bm25Index(
     cat: Catalog,
     buckets: Int = 64,
     k1: Double = 1.2,
-    b: Double = 0.75,
-    // admission batches above this many keys fall back from the
-    // broadcast probe to the shuffle anti-join (backfill-sized batches
-    // genuinely want the shuffle)
-    maxProbeIds: Long = 4L * 1024 * 1024) {
+    b: Double = 0.75) {
   import Bm25Index._
 
   // bk/rk partition values bake in `buckets` (hash(x) % buckets):
@@ -82,8 +78,8 @@ final class Bm25Index(
   // knob baked into stored rows. Tokenization (Retrieval.postings'
   // split regex) shapes stored terms but is CODE, not a parameter —
   // the literal "v2" is its version; any tokenizer change must bump
-  // it. k1/b/maxProbeIds are serve/admission-time only: stored rows
-  // carry raw tf/dl, so rescoring under different k1/b is legitimate.
+  // it. k1/b are serve-time only: stored rows carry raw tf/dl, so
+  // rescoring under different k1/b is legitimate.
   // doc_lengths is id-hash-partitioned (rk = hash(doc_id) % buckets),
   // so compaction derives its affected partitions driver-side from the
   // tombstone ids; postings' bk is a TERM hash and keeps the probe scan.
@@ -159,10 +155,8 @@ final class Bm25Index(
     // a write's repartition exchange) — the old 1-row agg job
     // re-tokenized `admitted` a third time
     val statsObs = org.apache.spark.sql.Observation()
-    val admitted = (
-        if (probe("n").asInstanceOf[Long] > maxProbeIds)
-          Upsert.newRows(deduped, pruned, "doc_id")
-        else Upsert.newRowsViaProbe(deduped, pruned, "doc_id"))
+    val admitted = Upsert.newRowsSized(deduped, pruned, "doc_id",
+        probe("n").asInstanceOf[Long])
       .observe(statsObs,
         F.count(F.lit(1)).as("n_docs"),
         F.coalesce(F.sum(Retrieval.dlOf(F.col("text"))), F.lit(0L))
@@ -212,7 +206,7 @@ final class Bm25Index(
     Seq(-st("n").asInstanceOf[Long], -st("sdl").asInstanceOf[Long])
   }
 
-  /** The next free op seq — one |ops|-row probe. */
+  /** The next free op seq — one |ops|-row collect. */
   def nextSeq: Long = { family.heal(); log.nextBaseSeq }
 
   /** REPLACE one batch of (doc_id, text) as ONE exactly-once op — the

@@ -8,9 +8,9 @@ import graft.sources.Catalog
 /** Maintenance for a generation-stamped index family (the BM25
   * postings/registry pair, the dedup corpus/bucket pair, the IVF-PQ
   * codes table): physically apply the COMMITTED tombstones and scrub
-  * abandoned-attempt garbage ([[OpLog.garbageSeqs]]), rewriting ONLY
-  * the hive partitions that hold affected rows, then clear exactly the
-  * tombstone snapshot that was applied.
+  * abandoned-attempt garbage ([[OpLog.Snapshot.garbageSeqs]]),
+  * rewriting ONLY the hive partitions that hold affected rows, then
+  * clear exactly the tombstone snapshot that was applied.
   *
   * Partition-local by construction: each table's affected partitions
   * are derived DRIVER-SIDE from the collected tombstone ids when the
@@ -297,12 +297,12 @@ object Generations {
     // (nothing appended to the log since — this pass writes no ops), so
     // it costs one local-relation write instead of a log re-scan.
     // checkpointLog additionally folds the committed HISTORY into one
-    // summed summary row ([[OpLog.checkpointFromSnapshot]]) — opt-in,
-    // for long-lived tenants whose serve-side |ops|-row stats aggregate
-    // has grown past noise; it trades per-op history for the loud
-    // staleness guard on replays ([[OpLog.replayState]]).
-    if (checkpointLog) log.checkpointFromSnapshot(snap)
-    else log.compactFromSnapshot(snap)
+    // summed summary row ([[OpLog.checkpoint]]) — opt-in, for
+    // long-lived tenants whose serve-side |ops|-row stats aggregate has
+    // grown past noise; it trades per-op history for the loud staleness
+    // guard on replays ([[OpLog.Snapshot.replayState]]).
+    if (checkpointLog) log.checkpoint(snap)
+    else log.compact(snap)
     }
   }
 }

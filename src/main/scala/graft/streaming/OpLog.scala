@@ -21,13 +21,18 @@ import graft.sources.Catalog
   *    is ONE atomic append, so there is no window where marker and
   *    stats disagree;
   *  - the committed `seq` set is the READ authority: admission, victim
-  *    selection, and serving join data tables semi against
-  *    [[committedSeqs]] (|ops|-row, always broadcast), so a crashed
-  *    half-written op is INVISIBLE everywhere until its replay commits
-  *    it. That committed-only discipline is what makes seq assignment
-  *    free: a replayed batch may run under a brand-new seq (a restarted
-  *    stream with a derived base) and still converge, because the
-  *    crashed attempt's partial rows never influenced any decision.
+  *    selection, and serving restrict data tables through one
+  *    [[snapshot]] (one |ops|-row collect, literal seq filters), so a
+  *    crashed half-written op is INVISIBLE everywhere until its replay
+  *    commits it. That committed-only discipline is what makes seq
+  *    assignment free: a replayed batch may run under a brand-new seq
+  *    (a restarted stream with a derived base) and still converge,
+  *    because the crashed attempt's partial rows never influenced any
+  *    decision.
+  *
+  * [[snapshot]] is the log's one read path: replay flags, visibility,
+  * garbage seqs, the high-water marks and both maintenance folds are
+  * all answered from its single collect.
   *
   * Scrub-then-redo rather than probe-and-skip: a multi-file append job
   * is not atomic under a crash during job commit (a subset of task
@@ -38,11 +43,12 @@ import graft.sources.Catalog
   *
   * Abandoned attempts (a stream that crashed mid-op and was restarted
   * with a fresh derived base, so the old seq never replays) leave
-  * invisible garbage rows in the data tables; [[garbageSeqs]] names
-  * them — every attempt with no commit below the committed high-water
-  * mark, safe to scrub at compaction under the single-writer
-  * maintenance discipline (ops execute in seq order, so a LIVE op's
-  * seq is always above every committed seq).
+  * invisible garbage rows in the data tables;
+  * [[OpLog.Snapshot.garbageSeqs]] names them — every attempt with no
+  * commit below the committed high-water mark, safe to scrub at
+  * compaction under the single-writer maintenance discipline (ops
+  * execute in seq order, so a LIVE op's seq is always above every
+  * committed seq).
   */
 final class OpLog(
     spark: SparkSession,
@@ -104,101 +110,34 @@ final class OpLog(
   def withWriter[T](ttlMs: Long = 15 * 60 * 1000L)(body: => T): T =
     cat.withMaintenanceLease(table, ttlMs)(body)
 
-  // READ path (committed/openSeqs/visible feed serves): lenient — an
-  // in-flight publish's marker means nothing is crashed; skipping keeps
-  // a sibling thread's serve from throwing SwapInFlight (or, pre-r17,
-  // from deleting the publisher's in-flight staging). Write entries
+  // READ entries (rows, snapshot) heal leniently — an in-flight
+  // publish's marker means nothing is crashed; skipping keeps a sibling
+  // thread's serve from throwing SwapInFlight (or, pre-r17, from
+  // deleting the publisher's in-flight staging). Write entries
   // (ensure/beginAttempt/commitValues) stay strict.
+  /** The stored log rows, re-scanned by every action — for inspection
+    * only; ops, serves and maintenance read through [[snapshot]]. */
   def rows: DataFrame =
     { heal(lenient = true); cat.readWithSchema(table, schema) }
 
-  /** Commit rows only (attempt rows carry a null first payload col). */
-  def committed: DataFrame = rows.filter(F.col(marker).isNotNull)
-
-  /** The committed seq set — |ops|-row; always broadcast into joins. */
-  def committedSeqs: DataFrame = committed.select("seq")
-
-  /** Seqs currently OPEN: attempted, never committed — a crashed
-    * attempt awaiting replay, or an abandoned one awaiting GC. Tiny
-    * (bounded by crash count since last compaction). */
-  def openSeqs: DataFrame =
-    rows.groupBy("seq").agg(F.max(F.col(marker).isNotNull).as("done"))
-      .filter(!F.col("done")).select("seq")
-
-  /** Restrict `df` to rows of generations NOT currently open — the read
-    * discipline for admission, victim selection, and serving. A crashed
-    * half-written op's rows are invisible until its replay commits;
-    * rows of generations the log has never seen (an offline-built seed
-    * appended directly to the table) count as committed, because the
-    * attempt marker lands BEFORE any data append, so stream-written
-    * rows always have a log row. Seeders SHOULD still register their
-    * generation (one [[commitValues]]/[[commitCount]] row) so [[maxSeq]]
-    * derives bases above it and no future op can collide with — and
-    * scrub — the seeded generation.
-    *
-    * This form re-reads the log lazily at action time; ops running
-    * under the single-writer lease use it freely (nothing commits
-    * concurrently within the span). SERVE paths that consult the log
-    * more than once (visibility on several tables, a global-stats sum)
-    * must use [[snapshot]] instead: each lazy read here is its own
-    * scan, so a commit landing between two of them yields a read
-    * mixing adjacent committed states. */
-  def visible(df: DataFrame, seqCol: String = "seq"): DataFrame =
-    df.join(F.broadcast(openSeqs.withColumnRenamed("seq", seqCol)),
-      Seq(seqCol), "leftanti")
-
-  /** Pin ONE committed-prefix view of the log for a whole serve call —
-    * the snapshot-isolation primitive. The log is read exactly once
-    * (one |ops|-row collect; the same cardinality class as the
-    * broadcasts [[visible]] already ships), and every downstream
-    * question — visibility on any number of tables, the global-stats
-    * sum, the model high-water mark — is answered from that single
-    * captured state, so a serve composed over one snapshot can never
-    * mix two adjacent committed states no matter how many commits land
-    * mid-read. The capture itself is consistent: each op appends its
-    * attempt row BEFORE any data and its commit row last, and parquet
-    * appends are whole immutable files, so one file-listing pass sees
-    * exactly "some committed prefix + some still-open attempts". */
+  /** Pin ONE committed-prefix view of the log — the log's only read
+    * path and the snapshot-isolation primitive. The log is read exactly
+    * once (one |ops|-row collect), and every downstream question —
+    * replay flags, visibility on any number of tables, the global-stats
+    * sum, the model high-water mark, garbage seqs, the maintenance
+    * folds — is answered from that single captured state, so a serve
+    * composed over one snapshot can never mix two adjacent committed
+    * states no matter how many commits land mid-read. The capture
+    * itself is consistent: each op appends its attempt row BEFORE any
+    * data and its commit row last, and parquet appends are whole
+    * immutable files, so one file-listing pass sees exactly "some
+    * committed prefix + some still-open attempts". An op running under
+    * the single-writer lease may hold its snapshot through its own
+    * appends: nothing commits concurrently within the span. */
   def snapshot(): OpLog.Snapshot = {
     heal(lenient = true)
     new OpLog.Snapshot(spark, schema, marker,
       cat.readWithSchema(table, schema).collect())
-  }
-
-  /** One probe for both replay flags: ≤ |rows-for-this-seq| tiny rows
-    * answer "already committed?" and "did a prior attempt write?" in a
-    * single job. */
-  def state(seq: Long): (Boolean, Boolean) = {
-    val r = rows.filter(F.col("seq") === seq).select(marker).collect()
-    (r.exists(!_.isNullAt(0)), r.nonEmpty)
-  }
-
-  /** [[state]] for an op entry point: additionally REFUSES a stale seq
-    * — never attempted yet at-or-below the committed high-water mark.
-    * Ops execute in seq order (single-writer discipline), so such a
-    * seq cannot be a legitimate replay: either the caller is replaying
-    * out of order with a hand-tracked seq, or the seq's history was
-    * folded away by [[checkpoint]] — and actually RUNNING the op there
-    * would redo it against state that already absorbed it (harmless
-    * for the anti-join admission arms, which converge to a zero
-    * no-op, but a REPLACE would append a duplicate generation next to
-    * the original's surviving rows). Loud beats silent: derive seqs
-    * from [[nextBaseSeq]]. One |ops|-row job, same cost as [[state]]. */
-  def replayState(seq: Long): (Boolean, Boolean) = {
-    val a = rows.agg(
-      F.max(F.when(F.col("seq") === seq && F.col(marker).isNotNull, true))
-        .as("done"),
-      F.max(F.when(F.col("seq") === seq, true)).as("attempted"),
-      F.max(F.when(F.col(marker).isNotNull, F.col("seq"))).as("hwm")).head()
-    def flag(i: Int) = !a.isNullAt(i) && a.getBoolean(i)
-    val (done, attempted) = (flag(0), flag(1))
-    if (!attempted && !a.isNullAt(2) && seq <= a.getLong(2))
-      throw new IllegalStateException(
-        s"op seq $seq has no log row but is at or below the committed " +
-          s"high-water mark ${a.getLong(2)}: out-of-order or " +
-          "checkpointed-away — running it would double-apply; derive " +
-          "seqs from nextBaseSeq")
-    (done, attempted)
   }
 
   /** Driver-side single-row append. The op log's two per-op appends
@@ -295,20 +234,16 @@ final class OpLog(
           "this commit would publish UNFENCED. Keep the whole op span — " +
           "withWriter through commit — on one thread")
 
-  /** Highest seq EVER ATTEMPTED (committed or not) — the derived-base
-    * authority: a new stream's base above this can never collide with
-    * a committed op (silent no-op) nor an abandoned attempt. */
-  def maxSeq: Option[Long] =
-    Option(rows.agg(F.max("seq")).head().get(0)).map(_.asInstanceOf[Long])
-
-  /** Base seq for a new stream: one |ops|-row probe instead of trusting
-    * the caller to remember what was committed. */
-  def nextBaseSeq: Long = maxSeq.map(_ + 1L).getOrElse(0L)
+  /** Base seq for a new stream, above every seq ever attempted: it can
+    * never collide with a committed op (silent no-op) nor an abandoned
+    * attempt. One |ops|-row collect instead of trusting the caller to
+    * remember what was committed. */
+  def nextBaseSeq: Long = snapshot().nextSeq
 
   /** Validate a caller-supplied base loudly instead of letting a stale
     * one silently no-op every batch against the committed short-circuit. */
   def requireFreshBase(base: Long): Long = {
-    val mx = maxSeq
+    val mx = snapshot().maxSeq
     require(mx.forall(base > _),
       s"base seq $base is not above the op log's high-water mark ${mx.getOrElse(-1L)}: " +
         "a fresh stream reusing an attempted seq would silently drop its batches " +
@@ -316,101 +251,34 @@ final class OpLog(
     base
   }
 
-  /** Seqs of ABANDONED attempts: attempted, never committed, below the
-    * committed high-water mark — their data rows are invisible
-    * everywhere (committed-only reads) and safe to scrub at
-    * compaction. An in-flight op is never below the mark because ops
-    * execute in seq order (single-writer discipline). */
-  def garbageSeqs: Seq[Long] = {
-    val r = rows.groupBy("seq")
-      .agg(F.max(F.col(marker).isNotNull).as("done"))
-      .collect()
-    val hwm = r.filter(_.getBoolean(1)).map(_.getLong(0))
-    if (hwm.isEmpty) Nil
-    else {
-      val mark = hwm.max
-      r.filter(x => !x.getBoolean(1) && x.getLong(0) < mark)
-        .map(_.getLong(0)).toSeq
-    }
-  }
-
-  /** Maintenance: rewrite the log to its minimal equivalent, coalesced
-    * to one file. Every op appends two one-row parquet files, so an
-    * uncompacted log's read cost grows with TOTAL OPS EVER (file
-    * listing + a footer per file) — and the log is read several times
-    * per op. After this rewrite it is one file of one row per
-    * committed op: attempt rows of COMMITTED seqs drop (they answer no
-    * question [[state]] can still ask — the commit row already proves
-    * both flags), attempt rows of OPEN seqs are kept one-per-seq (a
-    * crashed attempt must still replay as scrub-then-redo, an
-    * abandoned one must stay visible to [[garbageSeqs]] and
-    * [[visible]]'s anti-join). `scrubbedSeqs` names abandoned attempts
-    * whose data rows the caller has JUST scrubbed from EVERY table of
-    * the family — only then may their log rows drop (returning the seq
-    * to never-seen = committed-by-convention): a seq with surviving
-    * rows in ANY table, including privately owned sidecars the
-    * compaction pass does not manage (the vector index's model table),
-    * must keep its attempt row or those rows resurrect.
-    * Generations.compact therefore passes nothing and keeps abandoned
-    * rows — bounded by crash count, one tiny row each.
-    * Additive payload sums, [[maxSeq]] (the fold keeps every
-    * committed seq and every surviving open seq verbatim), [[state]],
-    * [[openSeqs]] and [[visible]] are all preserved exactly
-    * (spec-pinned). Crash-safe via [[Catalog.replaceTable]]; every
-    * accessor heals at entry, so a crashed rewrite can never wedge a
-    * reader or corrupt a subsequent append. Single-writer maintenance
-    * discipline, like every compaction in this family. */
-  def compact(scrubbedSeqs: Seq[Long] = Nil, targetFiles: Int = 1): Unit =
-    withWriter() {
-    ensure()
-    val r = rows
-    val open = r.groupBy("seq")
-      .agg(F.max(F.col(marker).isNotNull).as("done"))
-      .filter(!F.col("done")).select("seq")
-    val openRows = r.join(open, Seq("seq"), "leftsemi")
-      .dropDuplicates("seq") // duplicate attempt rows collapse
-    val survivingOpen =
-      if (scrubbedSeqs.isEmpty) openRows
-      else openRows.filter(!F.col("seq").isin(scrubbedSeqs: _*))
-    // replaceTable materializes the staged copy BEFORE any rename, so
-    // reading the live table inside the rewrite plan is safe.
-    // targetFiles bounds the rewrite's parallelism floor: one file is
-    // right up to tens of millions of ops (a few hundred MB through
-    // one task); a tenant folding a vastly larger log raises it.
-    cat.replaceTable(table,
-      r.filter(F.col(marker).isNotNull).unionByName(survivingOpen)
-        .coalesce(math.max(1, targetFiles)))
-    }
-
-  /** [[compact]] fed by an already-captured snapshot: the fold is
-    * computed DRIVER-SIDE from the collected rows (zero further scans
+  /** Maintenance: rewrite the log to its minimal equivalent, one file.
+    * Every op appends two one-row parquet files, so an uncompacted
+    * log's read cost grows with TOTAL OPS EVER (file listing + a footer
+    * per file) — and the log is read several times per op. After this
+    * rewrite it is one file of one row per committed op: attempt rows
+    * of COMMITTED seqs drop (they answer no question a replay probe can
+    * still ask — the commit row already proves both flags), attempt
+    * rows of OPEN seqs are kept one per seq (a crashed attempt must
+    * still replay as scrub-then-redo, an abandoned one must stay
+    * visible to [[OpLog.Snapshot.garbageSeqs]] and its rows invisible
+    * to [[OpLog.Snapshot.visible]]). Abandoned attempts are never
+    * dropped here: a seq with surviving rows in ANY table, including
+    * privately owned sidecars the compaction pass does not manage (the
+    * vector index's model table), must keep its attempt row or those
+    * rows resurrect — bounded by crash count, one tiny row each.
+    * Additive payload sums, the high-water marks, replay flags, open
+    * seqs and visibility are all preserved exactly (spec-pinned).
+    *
+    * The fold is computed DRIVER-SIDE from `snap` (zero further scans
     * of the stored table — the staged rewrite is one local-relation
     * write). Valid ONLY when the caller holds the family writer lease
-    * and has appended nothing to the log since the capture — exactly
-    * the [[graft.streaming.Generations.compact]] shape, which captures
-    * one snapshot at entry and never writes log rows. Same surviving
-    * set as [[compact]]: every committed row verbatim, one attempt row
-    * per still-open seq (spec-pinned alongside the job form). */
-  def compactFromSnapshot(snap: OpLog.Snapshot, targetFiles: Int = 1): Unit =
-    withWriter() {
-      ensure()
-      cat.replaceTable(table,
-        spark.createDataFrame(
-          java.util.Arrays.asList(snap.foldedRows(marker): _*), schema)
-          .coalesce(math.max(1, targetFiles)))
-    }
-
-  /** [[checkpoint]] fed by an already-captured snapshot — the same
-    * single-summary-row fold, computed driver-side (see
-    * [[compactFromSnapshot]] for the validity contract). */
-  def checkpointFromSnapshot(snap: OpLog.Snapshot): Unit =
-    withWriter() {
-      ensure()
-      cat.replaceTable(table,
-        spark.createDataFrame(
-          java.util.Arrays.asList(snap.checkpointRows(marker): _*), schema)
-          .coalesce(1))
-    }
+    * and has appended nothing to the log since the capture — the
+    * [[graft.streaming.Generations.compact]] shape, which captures one
+    * snapshot at entry and never writes log rows. Crash-safe via
+    * [[Catalog.replaceTable]]; every accessor heals at entry, so a
+    * crashed rewrite can never wedge a reader or corrupt a subsequent
+    * append. */
+  def compact(snap: OpLog.Snapshot): Unit = rewrite(snap.foldedRows)
 
   /** Maintenance, one step past [[compact]]: fold the ENTIRE committed
     * history into ONE summary row at the committed high-water mark
@@ -419,37 +287,24 @@ final class OpLog(
     * logs), which is what makes the serve-side global aggregate an
     * |ops|-row scan; after a checkpoint it is a
     * |1 + opens + ops-since|-row scan, so serve cost stops growing
-    * with op history entirely. Open-attempt rows are kept verbatim
-    * (they must still replay or be GC'd).
+    * with op history entirely. Open-attempt rows are kept one per seq
+    * (they must still replay or be GC'd). Same validity contract as
+    * [[compact]].
     *
     * What a checkpoint gives up: per-op history. A replay probe for a
-    * folded seq finds no row, so [[replayState]]'s staleness guard —
-    * no row AND at-or-below the HWM — is what keeps a hand-tracked
-    * stale seq from double-applying; every op entry point uses it.
-    * The derived-base discipline ([[nextBaseSeq]] /
-    * [[requireFreshBase]]) already keeps writers above the HWM, so
-    * checkpointing changes nothing for them. Crash-safe via
-    * [[Catalog.replaceTable]], like [[compact]]. */
-  def checkpoint(): Unit =
-    withWriter() {
-      ensure()
-      val r = rows
-      val committedRows = r.filter(F.col(marker).isNotNull)
-      if (committedRows.isEmpty) compact()
-      else {
-        val summary = committedRows.agg(
-          F.max("seq").as("seq"),
-          payload.fields.map(f =>
-            F.coalesce(F.sum(f.name), F.lit(0L)).as(f.name)): _*)
-          .select("seq", payload.fields.map(_.name): _*)
-        val open = r.groupBy("seq")
-          .agg(F.max(F.col(marker).isNotNull).as("done"))
-          .filter(!F.col("done")).select("seq")
-        val openRows = r.join(open, Seq("seq"), "leftsemi")
-          .dropDuplicates("seq")
-        cat.replaceTable(table, summary.unionByName(openRows).coalesce(1))
-      }
-    }
+    * folded seq finds no row, so [[OpLog.Snapshot.replayState]]'s
+    * staleness guard — no row AND at-or-below the high-water mark — is
+    * what keeps a hand-tracked stale seq from double-applying; every op
+    * entry point uses it. The derived-base discipline ([[nextBaseSeq]]
+    * / [[requireFreshBase]]) already keeps writers above the mark, so
+    * checkpointing changes nothing for them. */
+  def checkpoint(snap: OpLog.Snapshot): Unit = rewrite(snap.checkpointRows)
+
+  private def rewrite(kept: Array[Row]): Unit = withWriter() {
+    ensure()
+    cat.replaceTable(table,
+      spark.createDataFrame(java.util.Arrays.asList(kept: _*), schema).coalesce(1))
+  }
 }
 
 object OpLog {
@@ -463,9 +318,8 @@ object OpLog {
     * here) necessarily runs at a seq above the captured [[maxSeq]]
     * (derived bases, [[OpLog.requireFreshBase]]), so its data rows —
     * which a data-table scan later in the same serve may physically
-    * see — are excluded by the `seq <= hwm` bound that the lazy
-    * [[OpLog.visible]] anti-join cannot express. Never-seen seqs AT or
-    * BELOW the mark keep the seeder convention (committed unless an
+    * see — are excluded by the `seq <= hwm` bound. Never-seen seqs AT
+    * or BELOW the mark keep the seeder convention (committed unless an
     * open attempt says otherwise); an UNREGISTERED seed stamped above
     * the current mark is invisible to snapshot reads until a
     * registration row lands — which the seeding helpers already write.
@@ -478,6 +332,8 @@ object OpLog {
       all: Array[Row]) {
 
     private val markerIdx = schema.fieldIndex(marker)
+    private val bySeq = all.groupBy(_.getLong(0))
+    private val committedRows = all.filter(!_.isNullAt(markerIdx))
 
     /** The captured log rows as a local relation — same schema as
       * [[OpLog.rows]], zero further scans of the stored table. */
@@ -485,44 +341,45 @@ object OpLog {
       spark.createDataFrame(java.util.Arrays.asList(all: _*), schema)
 
     /** Highest seq EVER ATTEMPTED at capture — the visibility ceiling. */
-    val maxSeq: Option[Long] =
-      if (all.isEmpty) None else Some(all.map(_.getLong(0)).max)
+    val maxSeq: Option[Long] = bySeq.keys.maxOption
 
     /** The seq above every attempt at capture — [[OpLog.nextBaseSeq]]. */
     def nextSeq: Long = maxSeq.map(_ + 1L).getOrElse(0L)
 
     /** Seqs open at capture: attempted, not committed. Bounded by crash
       * count since the last compaction — always literal-sized. */
-    val openSeqs: Seq[Long] = {
-      val bySeq = all.groupBy(_.getLong(0))
-      bySeq.collect {
-        case (s, rs) if rs.forall(_.isNullAt(markerIdx)) => s
-      }.toSeq.sorted
-    }
+    val openSeqs: Seq[Long] = bySeq.collect {
+      case (s, rs) if rs.forall(_.isNullAt(markerIdx)) => s
+    }.toSeq.sorted
 
     /** Highest COMMITTED seq at capture (vs [[maxSeq]]'s ever-attempted). */
-    val committedHwm: Option[Long] =
-      all.filter(!_.isNullAt(markerIdx)).map(_.getLong(0)).maxOption
+    val committedHwm: Option[Long] = committedRows.map(_.getLong(0)).maxOption
 
-    /** [[OpLog.garbageSeqs]] at capture: open seqs strictly below the
-      * committed high-water mark — abandoned attempts safe to GC. */
+    /** Open seqs strictly below the committed high-water mark at
+      * capture — abandoned attempts, safe to GC. An in-flight op is
+      * never below the mark because ops execute in seq order
+      * (single-writer discipline). */
     def garbageSeqs: Seq[Long] =
       committedHwm.map(h => openSeqs.filter(_ < h)).getOrElse(Nil)
 
-    /** [[OpLog.replayState]] answered from the captured rows — zero
+    /** The replay flags (already committed?, did a prior attempt
+      * write?) for `seq`, answered from the captured rows — zero
       * further jobs. Valid for a WRITE op's entry probe because the op
       * runs under the single-writer lease: nothing commits between the
       * capture and the op's own appends, so the captured prefix IS the
-      * current log. The staleness guard is STRICTER than the lazy
-      * form's: a never-seen seq at or below the captured [[maxSeq]]
-      * (not just the committed mark) refuses — under [[visible]]'s
-      * `seq <= maxSeq` ceiling such an op's own uncommitted appends
-      * would be visible to its mid-op snapshot reads (the lazy
-      * openSeqs anti-join used to hide them), and the derived-base
-      * discipline ([[OpLog.nextBaseSeq]]) never legitimately issues
-      * one. */
+      * current log. REFUSES a stale seq — never attempted, yet at or
+      * below the captured [[maxSeq]]. Ops execute in seq order, so such
+      * a seq cannot be a legitimate replay: the caller is replaying out
+      * of order with a hand-tracked seq, or the seq's history was
+      * folded away by [[OpLog.checkpoint]] — and RUNNING the op would
+      * redo it against state that already absorbed it (a REPLACE would
+      * append a duplicate generation next to the original's surviving
+      * rows), or, below an open attempt, let its own uncommitted
+      * appends show through [[visible]]'s `seq <= maxSeq` ceiling to
+      * its mid-op reads. The derived-base discipline
+      * ([[OpLog.nextBaseSeq]]) never issues one. */
     def replayState(seq: Long): (Boolean, Boolean) = {
-      val mine = all.filter(_.getLong(0) == seq)
+      val mine = bySeq.getOrElse(seq, Array.empty[Row])
       val done = mine.exists(!_.isNullAt(markerIdx))
       val attempted = mine.nonEmpty
       if (!attempted && maxSeq.exists(seq <= _))
@@ -543,43 +400,40 @@ object OpLog {
       case Some(hwm) => seq <= hwm && !openSeqs.contains(seq)
     }
 
-    /** The [[OpLog.compact]] surviving set, computed from the captured
-      * rows: every committed row verbatim plus ONE attempt row per
-      * still-open seq. */
-    private[streaming] def foldedRows(marker: String): Array[Row] = {
-      val committedRows = all.filter(!_.isNullAt(markerIdx))
-      val committedSet = committedRows.map(_.getLong(0)).toSet
-      val openOnce = all.filter(r => !committedSet.contains(r.getLong(0)))
-        .groupBy(_.getLong(0)).map(_._2.head).toArray
-      committedRows ++ openOnce
-    }
+    /** One attempt row per open seq — all both folds keep of the
+      * uncommitted log. */
+    private def openAttemptRows: Seq[Row] = openSeqs.map(bySeq(_).head)
+
+    /** The [[OpLog.compact]] surviving set: every committed row verbatim
+      * plus one attempt row per open seq. */
+    private[streaming] def foldedRows: Array[Row] = committedRows ++ openAttemptRows
 
     /** The [[OpLog.checkpoint]] surviving set: one summary row at the
       * committed high-water mark carrying column-wise payload sums
-      * (null-skipping, 0 when all null — the coalesce(sum) semantics),
-      * plus the open attempt rows. Falls back to [[foldedRows]] when
-      * nothing is committed. */
-    private[streaming] def checkpointRows(marker: String): Array[Row] = {
-      val committedRows = all.filter(!_.isNullAt(markerIdx))
-      if (committedRows.isEmpty) foldedRows(marker)
-      else {
-        val width = schema.fields.length
-        val sums = (1 until width).map { i =>
+      * (null-skipping, 0 when all null), plus one attempt row per open
+      * seq. Falls back to [[foldedRows]] when nothing is committed. */
+    private[streaming] def checkpointRows: Array[Row] = committedHwm match {
+      case None => foldedRows
+      case Some(hwm) =>
+        val sums = (1 until schema.fields.length).map { i =>
           committedRows.foldLeft(0L)((acc, r) =>
             if (r.isNullAt(i)) acc else acc + r.getLong(i))
         }
-        val summary = Row.fromSeq(
-          committedRows.map(_.getLong(0)).max +: sums)
-        val committedSet = committedRows.map(_.getLong(0)).toSet
-        val openOnce = all.filter(r => !committedSet.contains(r.getLong(0)))
-          .groupBy(_.getLong(0)).map(_._2.head).toArray
-        summary +: openOnce
-      }
+        (Row.fromSeq(hwm +: sums) +: openAttemptRows).toArray
     }
 
-    /** [[OpLog.visible]] pinned to this snapshot: committed-at-capture
-      * generations only, as pure literal filters (parquet-pushable). An
-      * empty log keeps every row — the pure-seed convention. */
+    /** Restrict `df` to generations committed at capture — the read
+      * discipline for admission, victim selection, and serving — as
+      * pure literal filters (parquet-pushable). A crashed half-written
+      * op's rows are invisible until its replay commits. Rows of a
+      * generation the log has never seen, at or below the mark (an
+      * offline-built seed appended directly to the table), count as
+      * committed: the attempt marker lands BEFORE any data append, so
+      * stream-written rows always have a log row. Seeders SHOULD still
+      * register their generation (one commit row) so derived bases land
+      * above it and no future op can collide with — and scrub — the
+      * seeded generation. An empty log keeps every row — the pure-seed
+      * convention. */
     def visible(df: DataFrame, seqCol: String = "seq"): DataFrame =
       maxSeq match {
         case None => df

@@ -134,7 +134,6 @@ object Streams {
       tombTable: Option[String] = None,
       baseSeq: Option[Long] = None,
       stateBuckets: Int = 16,
-      maxProbeIds: Long = 4L * 1024 * 1024,
       replaceMode: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(!replaceMode || tombTable.nonEmpty,
       "replaceMode needs the tombstone-aware layout (tombTable)")
@@ -350,10 +349,8 @@ object Streams {
             val pbks = probe("pbks").asInstanceOf[Seq[Any]]
             val prunedIds = corpus
               .filter(F.col("pbk").isin(pbks: _*)).select("doc_id")
-            val fresh = hygiene(
-              if (probe("n").asInstanceOf[Long] > maxProbeIds)
-                Upsert.newRows(deduped, prunedIds, "doc_id")
-              else Upsert.newRowsViaProbe(deduped, prunedIds, "doc_id"))
+            val fresh = hygiene(Upsert.newRowsSized(deduped, prunedIds,
+              "doc_id", probe("n").asInstanceOf[Long]))
             val (newBuckets, admitted) = screen(fresh, corpus, liveBuckets)
             catalog.appendPartitioned(bucketTable, newBuckets
                 .join(admitted.select(F.col("doc_id").as("id")), Seq("id"), "leftsemi")
@@ -727,7 +724,6 @@ object Streams {
       baseSeq: Option[Long] = None,
       codesSchema: Option[StructType] = None,
       stateBuckets: Int = 16,
-      maxProbeIds: Long = 4L * 1024 * 1024,
       replaceMode: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
     val pool = graft.operators.Similarity.collectPool(model)
     require(pool.nonEmpty, "streamingIvfPqIndex needs a non-empty model")
@@ -820,10 +816,8 @@ object Streams {
             val prunedIds = live
               .filter(F.col("pbk").isin(pbks: _*)).select("neighbor_id")
             val countObs = org.apache.spark.sql.Observation()
-            val admitted = (
-                if (probe("n").asInstanceOf[Long] > maxProbeIds)
-                  Upsert.newRows(deduped, prunedIds, "neighbor_id")
-                else Upsert.newRowsViaProbe(deduped, prunedIds, "neighbor_id"))
+            val admitted = Upsert.newRowsSized(deduped, prunedIds,
+                "neighbor_id", probe("n").asInstanceOf[Long])
               .observe(countObs, F.count(F.lit(1)).as("n"))
               .localCheckpoint() // referenced by the append below
             catalog.appendPartitioned(codesTable, admitted
@@ -974,29 +968,22 @@ object Streams {
   val vectorModelSchema: StructType = StructType.fromDDL(
     "cid INT, centroid ARRAY<BIGINT>, seq BIGINT")
 
-  /** The live model of a tombstone-aware vector index: the rows of the
-    * HIGHEST visible generation (open attempts excluded — a crashed
-    * rebuild's model rows never serve). One |model|-row probe. */
+  /** The live model of a tombstone-aware vector index under
+    * `snapshot` (of the codes table's op log): the rows of the HIGHEST
+    * visible generation (open attempts excluded — a crashed rebuild's
+    * model rows never serve). Serve paths pass the snapshot their
+    * code/tombstone visibility uses, so the model pick and the live
+    * codes agree on one committed prefix. One |model|-row probe. */
   def liveVectorModel(
       catalog: Catalog,
-      codesTable: String,
       modelTable: String,
-      snapshot: Option[OpLog.Snapshot] = None): DataFrame = {
+      snapshot: OpLog.Snapshot): DataFrame = {
     // heal a GC replaceTable that crashed between move-aside and
     // swap-in BEFORE reading — without this the read throws
     // path-not-found until some maintenance entry happens to run
     catalog.recoverReplace(modelTable)
-    // serve paths pass their pinned snapshot so the model pick and the
-    // code/tombstone visibility agree on one committed prefix;
-    // maintenance entries (running under the writer lease, nothing
-    // committing concurrently) omit it and read the log lazily
-    val vis = snapshot match {
-      case Some(s) =>
-        s.visible(catalog.readWithSchema(modelTable, vectorModelSchema))
-      case None =>
-        opsLog(catalog, codesTable).visible(
-          catalog.readWithSchema(modelTable, vectorModelSchema))
-    }
+    val vis = snapshot.visible(
+      catalog.readWithSchema(modelTable, vectorModelSchema))
     val mx = vis.agg(F.max("seq")).head().get(0)
     require(mx != null, s"$modelTable holds no visible model generation")
     vis.filter(F.col("seq") === mx.asInstanceOf[Long]).drop("seq")
@@ -1153,7 +1140,7 @@ object Streams {
       snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
       "neighbor_id")
     graft.operators.Similarity.ivfPqTopKFromIndex(
-      liveVectorModel(catalog, codesTable, modelTable, Some(snap)),
+      liveVectorModel(catalog, modelTable, snap),
       live.drop("seq", "pbk"), queries, k, nlist, nprobe, m, ksub,
       idCol, vecCol)
   }

@@ -30,6 +30,10 @@ class LifecycleContractSpec extends SparkSpec {
   private def freshCat(): Catalog =
     new Catalog(spark, Files.createTempDirectory("graft-lifecycle").toString)
 
+  /** Committed ops in a count-payload log (commit rows carry `n_rows`). */
+  private def committedOps(log: OpLog): Long =
+    log.snapshot().rows.filter(F.col("n_rows").isNotNull).count()
+
   // ---------------------------------------------------------------- dedup
 
   test("dedup family: delete, replace, compact each work as the first-ever op") {
@@ -122,12 +126,9 @@ class LifecycleContractSpec extends SparkSpec {
       // writer-vs-maintenance shares the same scope, so the log rewrite
       // arms (compact/checkpoint) refuse too — a commit row can never be
       // appended inside a rewrite's stage→swap window
-      intercept[Catalog.MaintenanceLeaseHeld] {
-        new OpLog(spark, cat, "corpus_ops", OpLog.countPayload).compact()
-      }
-      intercept[Catalog.MaintenanceLeaseHeld] {
-        new OpLog(spark, cat, "corpus_ops", OpLog.countPayload).checkpoint()
-      }
+      val log = new OpLog(spark, cat, "corpus_ops", OpLog.countPayload)
+      intercept[Catalog.MaintenanceLeaseHeld] { log.compact(log.snapshot()) }
+      intercept[Catalog.MaintenanceLeaseHeld] { log.checkpoint(log.snapshot()) }
     }
     // window over: the identical op goes through and the doc dies
     Streams.deleteDocsFromDedup(cat, "corpus", "corpus_tomb",
@@ -276,10 +277,10 @@ class LifecycleContractSpec extends SparkSpec {
     assert(thrown.isInstanceOf[IllegalStateException]
         && thrown.getMessage.contains("different thread"),
       s"wrong failure: $thrown")
-    assert(log.committedSeqs.isEmpty)
+    assert(committedOps(log) === 0L)
     // same-thread commit inside the span still works
     log.withWriter() { log.commitCount(0L, 1L) }
-    assert(log.committedSeqs.count() === 1L)
+    assert(committedOps(log) === 1L)
   }
 
   // --------------------------------------------------------------- fencing
@@ -300,7 +301,7 @@ class LifecycleContractSpec extends SparkSpec {
         log.commitCount(0L, 1L) // fenced: the lease no longer exists/is ours
       }
     }
-    assert(log.committedSeqs.isEmpty,
+    assert(committedOps(log) === 0L,
       "the fenced writer must not have published a commit row")
     // the same overrun fences a maintenance swap (replaceTable path)
     cat.ensureTable("t", org.apache.spark.sql.types.StructType.fromDDL("a BIGINT"))
@@ -313,7 +314,7 @@ class LifecycleContractSpec extends SparkSpec {
     }
     // an in-TTL span commits normally (the fence is a no-op for a live lease)
     log.withWriter() { log.commitCount(1L, 1L) }
-    assert(log.committedSeqs.count() === 1L)
+    assert(committedOps(log) === 1L)
     // the fence is THREAD-scoped: another thread's healthy span must not
     // be aborted by THIS thread's lapsed lease (two streams on different
     // families in one process fail independently)
@@ -333,7 +334,7 @@ class LifecycleContractSpec extends SparkSpec {
       }
     }
     assert(otherOk, "a healthy writer on another thread was falsely fenced")
-    assert(otherLog.committedSeqs.count() === 1L)
+    assert(committedOps(otherLog) === 1L)
   }
 
   test("the full lifecycle runs through a non-file coordinator (external lock-service shape)") {
@@ -442,10 +443,10 @@ class LifecycleContractSpec extends SparkSpec {
     Streams.deleteVectors(vcat, "codes", codesSchema, "codes_tomb",
       Seq(0L).toDF("neighbor_id"))
     Streams.compactVectorIndex(vcat, "codes", codesSchema, "codes_tomb")
-    val vlog = new OpLog(spark, vcat, "codes_ops", OpLog.countPayload)
+    val vsnap = new OpLog(spark, vcat, "codes_ops", OpLog.countPayload).snapshot()
     val live = graft.operators.Tombstones.live(
-      vlog.visible(vcat.readWithSchema("codes", codesSchema)),
-      vlog.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
+      vsnap.visible(vcat.readWithSchema("codes", codesSchema)),
+      vsnap.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
       "neighbor_id").select("neighbor_id").as[Long].collect().toSet
     assert(live === (1L to 7L).toSet)
   }
@@ -575,10 +576,13 @@ class LifecycleContractSpec extends SparkSpec {
     // a successor committing ABOVE the fenced seq turns it into garbage
     Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "tomb",
       Seq((3L, "gamma")).toDF("doc_id", "text"))
-    def dedupLive = graft.operators.Tombstones.live(
-      dlog.visible(dcat.readWithSchema("corpus", Streams.dedupCorpusSchema)),
-      dlog.visible(dcat.readWithSchema("tomb", Streams.dedupTombSchema)),
-      "doc_id").select("doc_id", "text")
+    def dedupLive = {
+      val snap = dlog.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(dcat.readWithSchema("corpus", Streams.dedupCorpusSchema)),
+        snap.visible(dcat.readWithSchema("tomb", Streams.dedupTombSchema)),
+        "doc_id").select("doc_id", "text")
+    }
     val dBefore = dedupLive.collect().map(_.toSeq).toSet
     assert(!dBefore.exists(_.head == 9L), "fenced row leaked into the live view")
     Streams.compactDocDedup(dcat, "corpus", "buckets", "tomb")
@@ -649,10 +653,13 @@ class LifecycleContractSpec extends SparkSpec {
     }
     Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
       vecs.limit(2), model, nlist = 4, m = 4, ksub = 8)
-    def vectorLive = graft.operators.Tombstones.live(
-      vlog.visible(vcat.readWithSchema("codes", codesSchema)),
-      vlog.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
-      "neighbor_id").select("neighbor_id", "cell").collect().map(_.toSeq).toSet
+    def vectorLive = {
+      val snap = vlog.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(vcat.readWithSchema("codes", codesSchema)),
+        snap.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
+        "neighbor_id").select("neighbor_id", "cell").collect().map(_.toSeq).toSet
+    }
     val vBefore = vectorLive
     assert(!vBefore.exists(_.head == 99L), "fenced code leaked into the live view")
     Streams.compactVectorIndex(vcat, "codes", codesSchema, "codes_tomb")

@@ -7,11 +7,11 @@ import graft.streaming.{Generations, OpLog}
 
 /** Pins for the r22 maintenance-pass optimizations: the driver-side
   * forced-partition derivation must agree bit-for-bit with the writers'
-  * partition expression, the snapshot-fed op-log folds must preserve
-  * exactly what the job-form folds preserved, the stricter snapshot
-  * staleness guard must refuse the newly-covered window, and lease
-  * delegation must extend fencing to worker threads instead of
-  * silently no-opping it.
+  * partition expression, the snapshot-fed op-log folds must keep every
+  * committed row (or their exact sums) and one attempt row per open
+  * seq, the snapshot staleness guard must refuse a never-seen seq below
+  * an open attempt, and lease delegation must extend fencing to worker
+  * threads instead of silently no-opping it.
   */
 class MaintenanceFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -54,29 +54,29 @@ class MaintenanceFoldSpec extends SparkSpec {
         F.coalesce(F.sum("total_dl"), F.lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    val snap = log.snapshot()
-    log.compactFromSnapshot(snap)
+    log.compact(log.snapshot())
     def opsFiles = new java.io.File(s"$dir/wh/t_ops").listFiles()
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     assert(opsFiles === 1, "the folded log must be one file")
     assert(sums === ((8L, 80L)), "the additive payload sum must not move")
-    assert(log.maxSeq === Some(3L))
-    assert(log.state(0L) === ((true, true)) && log.state(2L) === ((true, true)))
-    assert(log.state(1L) === ((false, true)),
+    val snap = log.snapshot()
+    assert(snap.maxSeq === Some(3L))
+    assert(snap.replayState(0L) === ((true, true)) &&
+      snap.replayState(2L) === ((true, true)))
+    assert(snap.replayState(1L) === ((false, true)),
       "abandoned attempts are KEPT by the plain fold (sidecar-table safety)")
-    assert(log.state(3L) === ((false, true)),
+    assert(snap.replayState(3L) === ((false, true)),
       "the open attempt must survive, collapsed to one row")
     assert(log.rows.count() === 4L, "2 committed + 2 surviving attempts")
 
-    // checkpointFromSnapshot: summary at the committed HWM + open rows
-    val snap2 = log.snapshot()
-    log.checkpointFromSnapshot(snap2)
+    // checkpoint: summary at the committed HWM + open rows
+    log.checkpoint(log.snapshot())
     assert(log.rows.count() === 3L, "summary + two open attempts")
     val s = log.rows.filter(F.col("n_docs").isNotNull).head()
     assert(s.getLong(0) === 2L && s.getLong(1) === 8L && s.getLong(2) === 80L,
       "summary at committed HWM carrying the exact column-wise sums")
     assert(sums === ((8L, 80L)))
-    assert(log.maxSeq === Some(3L))
+    assert(log.snapshot().maxSeq === Some(3L))
   }
 
   test("snapshot replayState refuses a never-seen seq below an OPEN attempt's mark") {

@@ -527,9 +527,13 @@ class PlanSpec extends SparkSpec {
       .collect().map(_.getInt(0)).toSeq
     val pruned = cat.readWithSchema("doc_lengths", dlSchema)
       .filter(F.col("rk").isin(rks: _*)).select("doc_id")
-    val admitted = graft.operators.Upsert.newRowsViaProbe(deduped, pruned, "doc_id")
-    assert(admitted.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      === (500L until 520L).toSeq, "only unregistered ids may be admitted")
+    import graft.operators.Upsert
+    def admittedIds(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    // a key count at the bound runs the probe
+    val admitted = Upsert.newRowsSized(deduped, pruned, "doc_id", Upsert.maxProbeKeys)
+    assert(admittedIds(admitted) === (500L until 520L).toSeq,
+      "only unregistered ids may be admitted")
     val p = admitted.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
       "admission must not shuffle any side: " + p.take(1200))
@@ -538,6 +542,26 @@ class PlanSpec extends SparkSpec {
       "probe shape must be broadcast semi + broadcast anti: " + p.take(1200))
     assert("""PartitionFilters: \[[^\]]*rk""".r.findFirstIn(p).isDefined,
       "the state scan must prune the batch's id-hash partitions: " + p.take(1200))
+    // a count above the bound takes the shuffle anti-join, planned with
+    // broadcasts off as it is for a state side too big to broadcast,
+    // and admits the same rows
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(k)
+    try {
+      spark.conf.set(k, "-1")
+      val shuffled =
+        Upsert.newRowsSized(deduped, pruned, "doc_id", Upsert.maxProbeKeys + 1)
+      assert(admittedIds(shuffled) === (500L until 520L).toSeq,
+        "the shuffle arm must admit exactly what the probe admits")
+      val sp = shuffled.queryExecution.executedPlan.toString
+      assert(sp.contains("Exchange hashpartitioning") &&
+        "SortMergeJoin.*LeftAnti".r.findFirstIn(sp).isDefined &&
+        !sp.contains("LeftSemi"),
+        "above the bound admission must be one shuffle anti-join: " + sp.take(1200))
+    } finally prev match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    }
   }
 
   test("source health panel: one partial-aggregated shuffle, no joins") {

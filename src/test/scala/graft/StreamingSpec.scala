@@ -820,9 +820,12 @@ class StreamingSpec extends SparkSpec {
         F.transform($"embedding", x => -x.cast("double")).as("embedding"))
     graft.streaming.Streams.replaceVectors(cat, "codes", codesSchema,
       "codes_tomb", modified, model, nlist = 8, m = 4, ksub = 8)
-    def liveCodes = graft.operators.Tombstones.live(
-      log.visible(cat.readWithSchema("codes", codesSchema)),
-      log.visible(cat.read("codes_tomb")), "neighbor_id")
+    def liveCodes = {
+      val snap = log.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(cat.readWithSchema("codes", codesSchema)),
+        snap.visible(cat.read("codes_tomb")), "neighbor_id")
+    }
     assert(liveCodes.filter($"neighbor_id" === 3L).count() === 1L,
       "exactly one live generation for the replaced id")
     val expected = graft.operators.Similarity
@@ -832,7 +835,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet === expected,
       "the live code must be the NEW embedding's code")
     // replaying the committed op is a no-op (done short-circuit)
-    val seqUsed = log.maxSeq.get
+    val seqUsed = log.snapshot().maxSeq.get
     val before = liveCodes.collect().map(_.toSeq).toSet
     graft.streaming.Streams.replaceVectors(cat, "codes", codesSchema,
       "codes_tomb", modified, model, nlist = 8, m = 4, ksub = 8,
@@ -892,9 +895,12 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(s"$in2/b1")
     val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
-    def liveCodes = graft.operators.Tombstones.live(
-      log.visible(cat.readWithSchema("codes", codesSchema)),
-      log.visible(cat.read("codes_tomb")), "neighbor_id")
+    def liveCodes = {
+      val snap = log.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(cat.readWithSchema("codes", codesSchema)),
+        snap.visible(cat.read("codes_tomb")), "neighbor_id")
+    }
     val pool = graft.operators.Similarity.collectPool(model)
     val oldCode = liveCodes.filter($"neighbor_id" === 4L)
       .drop("seq", "pbk").collect().map(_.toSeq).toSet
@@ -955,7 +961,7 @@ class StreamingSpec extends SparkSpec {
     log.beginAttempt(crashSeq)
     cat.append("model", model0.withColumn("seq", F.lit(crashSeq)))
     val modelBefore = graft.streaming.Streams
-      .liveVectorModel(cat, "codes", "model").collect().map(_.toSeq).toSet
+      .liveVectorModel(cat, "model", log.snapshot()).collect().map(_.toSeq).toSet
     assert(modelBefore === model0.collect().map(_.toSeq).toSet,
       "a crashed rebuild's model rows must not become live")
     // the drift fires the trigger; the rebuild must equal a fresh build
@@ -965,7 +971,7 @@ class StreamingSpec extends SparkSpec {
     assert(fired, "planted drift must fire the trigger")
     val (freshModel, freshCodes) = graft.operators.Similarity.ivfPqIndex(
       drifted, nlist = 8, m = 4, ksub = 8)
-    assert(graft.streaming.Streams.liveVectorModel(cat, "codes", "model")
+    assert(graft.streaming.Streams.liveVectorModel(cat, "model", log.snapshot())
       .collect().map(_.toSeq).toSet ===
       freshModel.collect().map(_.toSeq).toSet,
       "the live model must be the fresh pool")
@@ -997,7 +1003,7 @@ class StreamingSpec extends SparkSpec {
       "the crashed rebuild's model rows must be GC'd at the next entry")
     if (!firedAgain) {
       // passthrough arm: live view untouched by a no-fire entry
-      assert(graft.streaming.Streams.liveVectorModel(cat, "codes", "model")
+      assert(graft.streaming.Streams.liveVectorModel(cat, "model", log.snapshot())
         .collect().map(_.toSeq).toSet ===
         freshModel.collect().map(_.toSeq).toSet)
     }
@@ -1088,14 +1094,20 @@ class StreamingSpec extends SparkSpec {
     val newText = "a completely rewritten body with entirely different shingles"
     Streams.replaceDocsInDedup(catalog, "corpus", "corpus_buckets",
       "corpus_tomb", Seq(1L -> newText).toDF("doc_id", "text"))
-    def live = graft.operators.Tombstones.live(
-      log.visible(catalog.readWithSchema("corpus", Streams.dedupCorpusSchema)),
-      log.visible(catalog.read("corpus_tomb")), "doc_id")
-    def liveBuckets = graft.operators.Tombstones.live(
-      log.visible(
-        catalog.readWithSchema("corpus_buckets", Streams.dedupBucketSchema)),
-      log.visible(catalog.read("corpus_tomb"))
-        .withColumnRenamed("doc_id", "id"), "id")
+    def live = {
+      val snap = log.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(catalog.readWithSchema("corpus", Streams.dedupCorpusSchema)),
+        snap.visible(catalog.read("corpus_tomb")), "doc_id")
+    }
+    def liveBuckets = {
+      val snap = log.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(
+          catalog.readWithSchema("corpus_buckets", Streams.dedupBucketSchema)),
+        snap.visible(catalog.read("corpus_tomb"))
+          .withColumnRenamed("doc_id", "id"), "id")
+    }
     assert(live.filter($"doc_id" === 1L).count() === 1L &&
       live.filter($"doc_id" === 1L).select("text").head().getString(0) === newText,
       "the live corpus must carry exactly the new generation's text")
@@ -1122,7 +1134,7 @@ class StreamingSpec extends SparkSpec {
       "the replacement text's near-copies must hit the new buckets")
     // replaying the committed op is a no-op; compaction scrubs the dead
     // generation from BOTH tables
-    val seqUsed = log.maxSeq.get
+    val seqUsed = log.snapshot().maxSeq.get
     val before = live.select("doc_id", "text").collect().toSet
     Streams.replaceDocsInDedup(catalog, "corpus", "corpus_buckets",
       "corpus_tomb", Seq(1L -> newText).toDF("doc_id", "text"),
@@ -1164,9 +1176,12 @@ class StreamingSpec extends SparkSpec {
     qAdmit.processAllAvailable(); qAdmit.stop()
     val log = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
-    def live = graft.operators.Tombstones.live(
-      log.visible(catalog.readWithSchema("corpus", Streams.dedupCorpusSchema)),
-      log.visible(catalog.read("corpus_tomb")), "doc_id")
+    def live = {
+      val snap = log.snapshot()
+      graft.operators.Tombstones.live(
+        snap.visible(catalog.readWithSchema("corpus", Streams.dedupCorpusSchema)),
+        snap.visible(catalog.read("corpus_tomb")), "doc_id")
+    }
     assert(live.select("text").head().getString(0) === t1,
       "admit-mode must drop the already-live id")
     val qRepl = Streams.streamingDocDedup(
@@ -1178,10 +1193,11 @@ class StreamingSpec extends SparkSpec {
       live.select("text").head().getString(0) === t2,
       "replace-mode must overwrite the live generation")
     // the index mirrors the NEW text's shingles
+    val snap = log.snapshot()
     val liveBuckets = graft.operators.Tombstones.live(
-      log.visible(
+      snap.visible(
         catalog.readWithSchema("corpus_buckets", Streams.dedupBucketSchema)),
-      log.visible(catalog.read("corpus_tomb"))
+      snap.visible(catalog.read("corpus_tomb"))
         .withColumnRenamed("doc_id", "id"), "id")
     val expected = graft.operators.Dedup
       .bucketTableMd5(Seq(1L -> t2).toDF("doc_id", "text"))
@@ -1240,9 +1256,10 @@ class StreamingSpec extends SparkSpec {
     // already be exactly-once
     val ops = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
-    val corpus = ops.visible(
+    val snap = ops.snapshot()
+    val corpus = snap.visible(
       catalog.readWithSchema("corpus", Streams.dedupCorpusSchema))
-    val buckets = ops.visible(
+    val buckets = snap.visible(
       catalog.readWithSchema("corpus_buckets", Streams.dedupBucketSchema))
     assert(corpus.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
     assert(corpus.select("seq").distinct().count() === 1L,
@@ -1251,7 +1268,8 @@ class StreamingSpec extends SparkSpec {
       "every visible doc must carry the full band set exactly once")
     assert(buckets.select("seq").distinct().count() === 1L,
       "visible bucket rows must all belong to the committed redo generation")
-    assert(ops.committed.count() === 1L, "exactly one committed op")
+    assert(snap.rows.filter(F.col("n_rows").isNotNull).count() === 1L,
+      "exactly one committed op")
     // compaction scrubs the abandoned attempt's garbage physically
     Streams.compactDocDedup(catalog, "corpus", "corpus_buckets", "corpus_tomb")
     assert(catalog.readWithSchema("corpus_buckets", Streams.dedupBucketSchema)
@@ -1599,7 +1617,7 @@ class StreamingSpec extends SparkSpec {
       "tombstones must heal from the aside copy")
   }
 
-  test("op log compaction: one file, sums/state/visibility preserved, scrubbed attempts fold away") {
+  test("op log compaction: one file, sums/state/visibility preserved, attempts kept") {
     val dir = Files.createTempDirectory("graft-oplogcompact").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
     val log = new graft.streaming.OpLog(spark, cat, "t_ops",
@@ -1624,25 +1642,29 @@ class StreamingSpec extends SparkSpec {
     val filesBefore = opsFiles
     assert(filesBefore >= 6, s"six appends should leave >= 6 files: $filesBefore")
     assert(sums === ((8L, 80L)))
-    assert(log.garbageSeqs === Seq(1L))
-    log.compact(scrubbedSeqs = log.garbageSeqs)
+    assert(log.snapshot().garbageSeqs === Seq(1L))
+    log.compact(log.snapshot())
     assert(opsFiles === 1, "the folded log must be one file")
     assert(sums === ((8L, 80L)), "the additive payload sum must not move")
-    assert(log.maxSeq === Some(3L), "derived bases must still clear the HWM")
-    assert(log.state(0L) === ((true, true)) && log.state(2L) === ((true, true)),
+    val snap = log.snapshot()
+    assert(snap.maxSeq === Some(3L), "derived bases must still clear the HWM")
+    assert(snap.replayState(0L) === ((true, true)) &&
+      snap.replayState(2L) === ((true, true)),
       "committed ops stay done (a replay with a stale seq must still no-op)")
-    assert(log.state(3L) === ((false, true)),
+    assert(snap.replayState(3L) === ((false, true)),
       "the crashed in-flight attempt must still replay as scrub-then-redo")
-    assert(log.state(1L) === ((false, false)),
-      "the scrubbed abandoned attempt returns to never-seen")
-    assert(log.garbageSeqs.isEmpty)
+    assert(snap.replayState(1L) === ((false, true)),
+      "the abandoned attempt keeps its row: a table the fold does not " +
+        "scrub may still hold its rows")
+    assert(snap.garbageSeqs === Seq(1L))
     val data = Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("seq", "v")
-    assert(log.visible(data).select("v").as[String].collect().sorted
-      === Seq("a", "b", "c"),
-      "only the open seq is invisible; committed and never-seen rows serve")
+    assert(snap.visible(data).select("v").as[String].collect().sorted
+      === Seq("a", "c"),
+      "only the open seqs are invisible; committed rows serve")
     // a second compaction of the already-minimal log is a no-op rewrite
-    log.compact()
-    assert(opsFiles === 1 && sums === ((8L, 80L)) && log.state(3L) === ((false, true)))
+    log.compact(log.snapshot())
+    assert(opsFiles === 1 && sums === ((8L, 80L)) &&
+      log.snapshot().replayState(3L) === ((false, true)))
     // crash window: live dir moved aside mid-replace — the next accessor
     // heals instead of throwing path-not-found or, worse, ensure()
     // creating a fresh empty log over the aside copy
@@ -1651,7 +1673,7 @@ class StreamingSpec extends SparkSpec {
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/wh/t_ops"),
       new org.apache.hadoop.fs.Path(s"$dir/wh/t_ops__replaced")))
     log.ensure()
-    assert(log.maxSeq === Some(3L),
+    assert(log.snapshot().maxSeq === Some(3L),
       "ensure() on a mid-replace log must heal, not recreate empty")
   }
 
@@ -1667,21 +1689,22 @@ class StreamingSpec extends SparkSpec {
     log.beginAttempt(3L) // crashed in-flight — must survive the fold
     val servedBefore = idx.serve(Seq("alpha", "beta"), k = 10)
       .collect().map(_.toSeq)
-    log.checkpoint()
+    log.checkpoint(log.snapshot())
     assert(log.rows.count() === 2L,
       "one summary row plus the open attempt")
     val s = log.rows.filter(F.col("n_docs").isNotNull).head()
     assert(s.getLong(0) === 2L && s.getLong(1) === 3L,
       "the summary sits at the committed HWM and carries the exact sums")
-    assert(log.maxSeq === Some(3L))
+    assert(log.snapshot().maxSeq === Some(3L))
     // serve reads ONLY the summary + open rows now — bit-identical
     assert(idx.serve(Seq("alpha", "beta"), k = 10).collect().map(_.toSeq)
       === servedBefore, "a checkpoint must not move a served bit")
     // replay probes: open attempt still replayable; fresh seqs fine;
     // folded seqs refuse loudly instead of double-applying
-    assert(log.replayState(3L) === ((false, true)))
-    assert(log.replayState(7L) === ((false, false)))
-    val ex = intercept[IllegalStateException](log.replayState(1L))
+    val snap = log.snapshot()
+    assert(snap.replayState(3L) === ((false, true)))
+    assert(snap.replayState(7L) === ((false, false)))
+    val ex = intercept[IllegalStateException](snap.replayState(1L))
     assert(ex.getMessage.contains("high-water mark"))
     // the guard is wired into the op entry points: a hand-tracked
     // stale seq on a REPLACE (the arm that would duplicate a
@@ -1805,7 +1828,7 @@ class StreamingSpec extends SparkSpec {
     def ingest(rows: Seq[(Long, Int)]): Unit = {
       graft.streaming.Streams.replaceVectors(cat, "codes", codesSchema,
         "codes_tomb", batch(rows),
-        graft.streaming.Streams.liveVectorModel(cat, "codes", "model"),
+        graft.streaming.Streams.liveVectorModel(cat, "model", log.snapshot()),
         nlist = 8, m = 4, ksub = 8)
       rows.foreach { case (id, salt) => live(id) = salt }
     }

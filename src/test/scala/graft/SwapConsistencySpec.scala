@@ -309,11 +309,11 @@ class SwapConsistencySpec extends SparkSpec {
     val codesSchema = Streams.vectorCodesSchema(offline.schema)
     val tables = Seq("codes", "codes_tomb", "codes_ops")
     def liveSet(): Set[Long] = {
-      val vlog = new graft.streaming.OpLog(spark, cat, "codes_ops",
-        graft.streaming.OpLog.countPayload)
+      val snap = new graft.streaming.OpLog(spark, cat, "codes_ops",
+        graft.streaming.OpLog.countPayload).snapshot()
       graft.operators.Tombstones.live(
-        vlog.visible(cat.readWithSchema("codes", codesSchema)),
-        vlog.visible(cat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
+        snap.visible(cat.readWithSchema("codes", codesSchema)),
+        snap.visible(cat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
         "neighbor_id").select("neighbor_id").as[Long].collect().toSet
     }
     val valid = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]
@@ -475,11 +475,11 @@ class SwapConsistencySpec extends SparkSpec {
     Streams.deleteVectors(vcat, "codes", codesSchema, "codes_tomb",
       Seq(0L).toDF("neighbor_id"))
     Streams.compactVectorIndex(vcat, "codes", codesSchema, "codes_tomb")
-    val vlog = new graft.streaming.OpLog(spark, vcat, "codes_ops",
-      graft.streaming.OpLog.countPayload)
+    val vsnap = new graft.streaming.OpLog(spark, vcat, "codes_ops",
+      graft.streaming.OpLog.countPayload).snapshot()
     val live = graft.operators.Tombstones.live(
-      vlog.visible(vcat.readWithSchema("codes", codesSchema)),
-      vlog.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
+      vsnap.visible(vcat.readWithSchema("codes", codesSchema)),
+      vsnap.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
       "neighbor_id").select("neighbor_id").as[Long].collect().toSet
     assert(live === (1L to 7L).toSet)
   }
