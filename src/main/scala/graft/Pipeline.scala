@@ -173,10 +173,9 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * pruned anti-join append adds files to the dates it touches). Run
     * periodically, like the reference's cron cadence (README.md:27).
     */
-  def compactHist(maxFilesPerPartition: Int = 8,
-      targetFileBytes: Long = 128L * 1024 * 1024): Seq[String] =
+  def compactHist(maxFilesPerPartition: Int = 8): Seq[String] =
     catalog.compactPartitioned(HistTable, "trip_date", Trip.schemaWithDate,
-      maxFilesPerPartition, targetFileBytes)
+      maxFilesPerPartition)
 
   def hist: DataFrame = catalog.readWithSchema(HistTable, Trip.schemaWithDate)
   def summarized: DataFrame =

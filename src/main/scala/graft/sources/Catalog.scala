@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -45,18 +45,19 @@ class Catalog(
     // (see [[CommitCoordinator]]); the default is correct on HDFS-like
     // stores and the local filesystem
     coordinator: CommitCoordinator = CommitCoordinator.fileAtomics,
-    // TTL for SWAP-WINDOW markers (begin/endSwap around replaceTable /
-    // compactPartitioned publishes): past it a marker is treated as a
-    // crashed swapper's and healed. Sized to the MAINTENANCE-OP bound
-    // (the lease default), NOT the rename phase: the marker covers the
-    // staged write too, and a data-sized staging job outrunning a
-    // short TTL would let a healer discard a live stage mid-write. The
-    // phase flip ([[markSwapPhase]]) refreshes the expiry, so the
-    // rename window always runs under a fresh TTL, and a writer whose
-    // marker was healed away (staging outran even this bound) is
-    // FENCED at the flip rather than renaming over a successor. Short
-    // values are for crash-heal tests only.
-    swapTtlMs: Long = 15 * 60 * 1000L) {
+    // TTL for this catalog's maintenance leases ([[withMaintenanceLease]])
+    // and SWAP-WINDOW markers (begin/endSwap around replaceTable /
+    // compactPartitioned publishes): past it a lease is treated as a
+    // crashed holder's and broken, a marker as a crashed swapper's and
+    // healed. Sized to the MAINTENANCE-OP bound, NOT the rename phase:
+    // the marker covers the staged write too, and a data-sized staging
+    // job outrunning a short TTL would let a healer discard a live
+    // stage mid-write. The phase flip ([[markSwapPhase]]) refreshes
+    // the expiry, so the rename window always runs under a fresh TTL,
+    // and a writer whose marker was healed away (staging outran even
+    // this bound) is FENCED at the flip rather than renaming over a
+    // successor. Short values are for crash-heal tests only.
+    ttlMs: Long = 15 * 60 * 1000L) {
 
   def path(table: String): String = s"$warehouse/$table"
 
@@ -66,8 +67,8 @@ class Catalog(
     * can never be confused with, overwritten by, or swapped in as a
     * successor's. Matches the legacy fixed names too (pure prefix). */
   private def stagingSiblings(
-      table: String, marker: String): Seq[org.apache.hadoop.fs.Path] = {
-    val live = new org.apache.hadoop.fs.Path(path(table))
+      table: String, marker: String): Seq[Path] = {
+    val live = new Path(path(table))
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     val parent = live.getParent
     val prefix = live.getName + marker
@@ -78,7 +79,7 @@ class Catalog(
 
 
   def exists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
+    val p = new Path(path(table))
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
@@ -238,48 +239,19 @@ class Catalog(
     * — at least one complete copy is addressable at every instant.
     */
   def replaceTable(table: String, df: DataFrame): Unit = {
-    recoverReplace(table)
-    val live = new org.apache.hadoop.fs.Path(path(table))
+    val live = new Path(path(table))
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(
-      path(table) + "__replacing." + leaseHolder)
-    val aside = new org.apache.hadoop.fs.Path(path(table) + "__replaced")
-    // early fence: a lease already lost means the staging job below is
-    // wasted work and its output immediate garbage — refuse up front
-    fenceHeldLeases()
-    // SWAP WINDOW, opened BEFORE the staging job: a concurrent heal
-    // (another client's crash-window recovery at ITS entry) must see
-    // this publish as in-flight and keep its hands off the staging —
-    // pre-r17 a racing heal could delete a live writer's stage and
-    // abort the op (documented then, surfaced by SwapConsistencySpec's
-    // concurrent-serve test, closed now). The marker opens in "stage"
-    // phase, which readers ignore (live tables untouched until the
-    // renames); [[markSwapPhase]] flips it just before the first
-    // rename. The manifest (pre-swap live tree) is stable through
-    // staging because this is the scope's single writer.
-    beginSwap(fs, table, treeDigest(fs, live), () => recoverReplace(table))
-    try {
+    val staging = new Path(path(table) + "__replacing." + leaseHolder)
+    val aside = new Path(path(table) + "__replaced")
+    // the manifest (pre-swap live tree) is stable through staging
+    // because this is the scope's single writer
+    stageAndSwap(fs, table, () => recoverReplace(table), treeDigest(fs, live)) {
       df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
       // as-late-as-possible fence: the staging job above may have
       // outrun a lease TTL — refuse the swap rather than clobber a
       // successor
       fenceHeldLeases()
-    } catch { case t: Throwable =>
-      // nothing renamed yet: heal our own marker immediately (live
-      // matches the manifest by construction) instead of leaving the
-      // family blocked until the TTL
-      inFlightSwaps.remove(table)
-      try recoverReplace(table)
-      catch { case scala.util.control.NonFatal(_) => () }
-      throw t
-    }
-    // From here every failure LEAVES the marker: rename=false is
-    // ambiguous under non-atomic rename (the failure may have torn
-    // live), so readers stay fenced off until recovery compares
-    // manifests — fail-safe beats fail-open. (The in-process in-flight
-    // mark still clears, so this instance's next entry can heal.)
-    try {
-      markSwapPhase(fs, table)
+    } {
       if (fs.exists(live) && !coordinator.rename(fs, live, aside))
         throw new java.io.IOException(
           s"replaceTable move-aside failed for $table — swap marker left " +
@@ -288,10 +260,54 @@ class Catalog(
         throw new java.io.IOException(
           s"replaceTable swap failed for $table — staged data left at " +
             s"$staging, swap marker left for recovery to heal")
-      endSwap(fs, table)
-    } finally inFlightSwaps.remove(table)
+    }
     coordinator.delete(fs, aside, true)
     spark.catalog.refreshByPath(path(table))
+  }
+
+  /** The one stage-and-swap publish sequence of [[replaceTable]] and
+    * [[compactPartitioned]]: heal any crashed publish (`recover`), fence,
+    * open the swap window, run `stage`, flip to the rename phase, run
+    * `swap`, close the window.
+    *
+    * The SWAP WINDOW opens BEFORE the staged write: a concurrent heal
+    * (another client's crash-window recovery at ITS entry) must see
+    * this publish as in-flight and keep its hands off the staging, or
+    * it could delete a live writer's stage and abort the op. The
+    * marker opens in "stage" phase, which readers ignore
+    * (live tables are untouched until the renames); [[markSwapPhase]]
+    * flips it just before the first rename. `manifest` (the marker's
+    * pre-swap digest) is evaluated after `recover`.
+    *
+    * A failed `stage` has renamed nothing, so its own marker heals at
+    * once (live matches the manifest by construction) instead of
+    * blocking the table until the TTL. From the flip on every failure
+    * LEAVES the marker: rename=false is ambiguous under non-atomic
+    * rename (the failure may have torn live), so readers stay fenced
+    * off until recovery compares manifests — fail-safe beats
+    * fail-open. The in-process in-flight mark always clears, so this
+    * instance's next entry can heal. */
+  private def stageAndSwap[T](
+      fs: FileSystem, table: String, recover: () => Unit, manifest: => String)(
+      stage: => Unit)(swap: => T): T = {
+    recover()
+    // early fence: a lease already lost means the staged write is
+    // wasted work and its output immediate garbage — refuse up front
+    fenceHeldLeases()
+    beginSwap(fs, table, manifest, recover)
+    try stage
+    catch { case t: Throwable =>
+      inFlightSwaps.remove(table)
+      try recover()
+      catch { case scala.util.control.NonFatal(_) => () }
+      throw t
+    }
+    try {
+      markSwapPhase(fs, table)
+      val out = swap
+      endSwap(fs, table)
+      out
+    } finally inFlightSwaps.remove(table)
   }
 
   /** Heal any [[replaceTable]] crash window (idempotent; also safe when
@@ -310,111 +326,43 @@ class Catalog(
     * compaction, which is the discipline this family documents
     * everywhere. */
   def recoverReplace(table: String, lenient: Boolean = false): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path(table))
+    val live = new Path(path(table))
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new org.apache.hadoop.fs.Path(path(table) + "__replaced")
-    // SWAP-MARKER healing (non-atomic-rename stores): a marker present
-    // here is a swap that never closed. Unexpired + foreign = a LIVE
-    // writer mid-swap — touching its aside/stages would sabotage it,
-    // so leave everything alone (the old racing-heal caveat, now
-    // detected instead of documented). Expired (or our own — this
-    // entry IS the table's single writer now) = crashed: the manifest
+    val aside = new Path(path(table) + "__replaced")
+    // SWAP-MARKER healing (non-atomic-rename stores): the manifest
     // digest recorded at beginSwap decides which copy is the complete
     // original, which the filesystem alone cannot (a copy-then-delete
-    // rename can die leaving live OR aside partial).
-    readSwapMarker(fs, table) match {
-      case Some((h, exp, _, _))
-          if exp >= System.currentTimeMillis() &&
-            (h != leaseHolder || inFlightSwaps.contains(table)) =>
-        // a FOREIGN publish within its TTL: in flight (or crashed
-        // moments ago). WRITE entries must refuse loudly — appending
-        // under it would poison the manifest comparison. READ entries
-        // (`lenient`, e.g. a serve's crash-window heal) skip instead:
-        // an in-flight marker means nothing is crashed from THEIR
-        // perspective, the owner (or its TTL) heals, and live tables
-        // are intact through the whole stage phase
-        if (lenient) return
-        throw new Catalog.SwapInFlight(
-          s"a swap of '$table' by holder $h is within its TTL — retry " +
-            "after it closes or expires")
-      case Some(_) =>
-        // EXPIRED (or own stale) marker: the heal below is DESTRUCTIVE
-        // (delete-then-rename on digest decisions computed up front), so
-        // exactly one healer may run it — claim the heal key first; a
-        // loser's concurrent heal would destroy both copies (see
-        // [[acquireHealClaim]])
-        if (!acquireHealClaim(fs, table)) {
-          if (lenient) return
-          throw new Catalog.SwapInFlight(
-            s"another healer holds the heal claim for '$table' — its " +
-              "heal is in flight; retry after it completes or its claim " +
-              "expires")
-        }
-        try {
-          // re-read UNDER the claim: between our first read and the
-          // claim, the predecessor may have finished the heal (marker
-          // gone) or a new writer begun a fresh swap (unexpired foreign)
-          readSwapMarker(fs, table) match {
-            case Some((h2, exp2, _, _))
-                if exp2 >= System.currentTimeMillis() &&
-                  (h2 != leaseHolder || inFlightSwaps.contains(table)) =>
-              if (lenient) return
-              throw new Catalog.SwapInFlight(
-                s"a swap of '$table' by holder $h2 began while claiming " +
-                  "its heal — retry after it closes or expires")
-            case Some((_, _, _, manifest)) =>
-              if (treeDigest(fs, live) == manifest) {
-                // live IS the pre-swap original (died before/mid
-                // move-aside): drop the partial aside remnant; the op
-                // never landed, replays
-                coordinator.delete(fs, aside, true)
-              } else if (treeDigest(fs, aside) == manifest) {
-                // aside holds the complete original; live is partial
-                // (died mid move-aside delete phase, mid move-in copy)
-                // or the complete new generation (died inside endSwap)
-                // — roll BACK, the unambiguous heal: the op never
-                // returned, so it replays
-                coordinator.delete(fs, live, true)
-                if (!coordinator.rename(fs, aside, live))
-                  throw new java.io.IOException(
-                    s"swap-crash roll-back failed for $table")
-              } else if (manifest == "-") {
-                // first-ever publish: no original existed — drop the
-                // partial live remnant; the roll-forward below
-                // republishes a complete (_SUCCESS-marked) stage
-                coordinator.delete(fs, live, true)
-              } else {
-                throw new java.io.IOException(
-                  s"swap-crash state for $table matches neither the " +
-                    "recorded manifest (live or aside) nor a first-ever " +
-                    "publish — refusing to guess; inspect " +
-                    "__replaced/__replacing siblings")
-              }
-              bumpSwapGen(fs, table) // readers spanning the heal invalidate
-              coordinator.delete(fs, swapMarkerPath(table), false)
-            case None => () // predecessor healed it; nothing left to do
-          }
-        } finally releaseHealClaim(fs, table)
-      case None => ()
+    // rename can die leaving live OR aside partial)
+    val healed = healSwapMarker(fs, table, lenient) { case (_, _, _, manifest) =>
+      if (treeDigest(fs, live) == manifest) {
+        // live IS the pre-swap original (died before/mid move-aside):
+        // drop the partial aside remnant; the op never landed, replays
+        coordinator.delete(fs, aside, true)
+      } else if (treeDigest(fs, aside) == manifest) {
+        // aside holds the complete original; live is partial (died mid
+        // move-aside delete phase, mid move-in copy) or the complete new
+        // generation (died inside endSwap) — roll BACK, the unambiguous
+        // heal: the op never returned, so it replays
+        coordinator.delete(fs, live, true)
+        if (!coordinator.rename(fs, aside, live))
+          throw new java.io.IOException(s"swap-crash roll-back failed for $table")
+      } else if (manifest == "-") {
+        // first-ever publish: no original existed — drop the partial
+        // live remnant; the roll-forward below republishes a complete
+        // (_SUCCESS-marked) stage
+        coordinator.delete(fs, live, true)
+      } else {
+        throw new java.io.IOException(
+          s"swap-crash state for $table matches neither the " +
+            "recorded manifest (live or aside) nor a first-ever " +
+            "publish — refusing to guess; inspect " +
+            "__replaced/__replacing siblings")
+      }
     }
-    // The tail below acts DESTRUCTIVELY (rollback renames, stage
-    // sweeps) on probes taken after the marker check above — but a
-    // publish that begins in between writes its marker BEFORE staging
-    // (beginSwap precedes the staged write in both replaceTable and
-    // compactPartitioned), so a stale "no marker" read here could
-    // sweep a LIVE writer's stage or roll its move-aside back from
-    // under it (observed: a lenient OpLog-read heal deleting a
-    // concurrent compact's staged replaceTable dir, aborting the op).
-    // Re-read at decision time: every window in which a stage is live
-    // or the live dir is mid-rename is covered by an unexpired marker,
-    // plus the in-process mark when the writer shares this Catalog.
-    if (inFlightSwaps.contains(table) ||
-        readSwapMarker(fs, table).exists(_._2 >= System.currentTimeMillis())) {
-      if (lenient) return
-      throw new Catalog.SwapInFlight(
-        s"a publish of '$table' began during its recovery scan — retry " +
-          "after it closes or expires")
-    }
+    // the tail acts DESTRUCTIVELY (rollback renames, stage sweeps) on
+    // probes taken after the marker check: re-check at decision time
+    // (see [[publishBegan]])
+    if (!healed || publishBegan(fs, table, lenient)) return
     if (!fs.exists(live)) {
       if (fs.exists(aside)) {
         // roll BACK: the unambiguous heal. With holder-unique stages a
@@ -431,18 +379,18 @@ class Catalog(
         // (_SUCCESS-marked) stage so the table appears. Tie-break by
         // EVIDENCE first, mtime second: a holder with a fenced
         // tombstone on record (its lease was broken by a contender —
-        // [[withMaintenanceLease]].breakStale persists the identity at
-        // the break) is excluded outright, so a fenced first-writer's
-        // stage can never beat the legitimate successor's just by
-        // having finished staging later. Among the remaining
-        // (non-fenced) candidates newest-mtime still decides; legacy
-        // fixed-name stages carry no holder and are never excluded.
-        // Under the op-log-driven flows this is belt-and-suspenders
-        // (the successor's op never committed, so replay redoes it);
-        // for bare-replaceTable callers it closes the documented
+        // [[withMaintenanceLease]] persists the identity at the break)
+        // is excluded outright, so a fenced first-writer's stage can
+        // never beat the legitimate successor's just by having
+        // finished staging later. Among the remaining (non-fenced)
+        // candidates newest-mtime still decides; legacy fixed-name
+        // stages carry no holder and are never excluded. Under the
+        // op-log-driven flows this is belt-and-suspenders (the
+        // successor's op never committed, so replay redoes it); for
+        // bare-replaceTable callers it closes the documented
         // fenced-content window.
         val complete = stagingSiblings(table, "__replacing")
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+          .filter(p => fs.exists(new Path(p, "_SUCCESS")))
           .filterNot { p =>
             val name = p.getName
             val sep = name.lastIndexOf("__replacing.")
@@ -458,28 +406,8 @@ class Catalog(
         }
       }
     }
-    if (fs.exists(live)) {
-      // re-read IMMEDIATELY before each destructive delete (ADVICE r21):
-      // a publish that began after the tail's entry check writes its
-      // marker BEFORE staging, so a per-delete marker read closes the
-      // window in which its fresh stage (or live move-aside) could be
-      // swept — the residual exposure shrinks from "everything since the
-      // tail entered" to the microseconds between this read and the
-      // delete, which only a compare-and-swap store (the
-      // [[CommitCoordinator]] seam) can remove entirely.
-      def publishBegan(): Boolean =
-        inFlightSwaps.contains(table) ||
-          readSwapMarker(fs, table).exists(_._2 >= System.currentTimeMillis())
-      def guardedDelete(p: org.apache.hadoop.fs.Path): Boolean =
-        if (publishBegan()) {
-          if (lenient) false
-          else throw new Catalog.SwapInFlight(
-            s"a publish of '$table' began during its recovery sweep — " +
-              "retry after it closes or expires")
-        } else { coordinator.delete(fs, p, true); true }
-      if (guardedDelete(aside))
-        stagingSiblings(table, "__replacing").forall(guardedDelete)
-    }
+    if (fs.exists(live) && guardedDelete(fs, table, aside, lenient))
+      stagingSiblings(table, "__replacing").forall(guardedDelete(fs, table, _, lenient))
   }
 
   /** Heal any [[compactPartitioned]] crash window, then discard the
@@ -503,144 +431,161 @@ class Catalog(
     */
   def recoverCompaction(table: String, partitionCol: String,
       lenient: Boolean = false): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path(table))
+    val root = new Path(path(table))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // SWAP-MARKER healing (see [[recoverReplace]] for the posture): a
-    // marker here is a compaction swap loop that never closed. Foreign
-    // and within TTL -> refuse loudly (appending under it would poison
-    // the manifest comparison). Expired or our own -> heal: the staged
-    // manifest written before the first rename decides, PER PARTITION,
-    // whether the staged rewrite landed (drop the source remnant),
-    // didn't (roll it forward — the staged content is the
-    // row-equivalent of the old under `transform`), or was an
-    // intentional emptying (complete the removal). All states converge:
-    // a heal interrupted mid-rename re-enters the same branches.
-    readSwapMarker(fs, table) match {
-      case Some((h, exp, _, _))
-          if exp >= System.currentTimeMillis() &&
-            (h != leaseHolder || inFlightSwaps.contains(table)) =>
-        if (lenient) return // see recoverReplace — read entries skip
-        throw new Catalog.SwapInFlight(
-          s"a compaction swap of '$table' by holder $h is within its " +
-            "TTL — retry after it closes or expires")
-      case Some(_) =>
-        // EXPIRED (or own stale) marker: destructive heal — claim first
-        // (see [[acquireHealClaim]]; same posture as recoverReplace)
-        if (!acquireHealClaim(fs, table)) {
-          if (lenient) return
-          throw new Catalog.SwapInFlight(
-            s"another healer holds the heal claim for '$table' — its " +
-              "heal is in flight; retry after it completes or its claim " +
-              "expires")
+    // SWAP-MARKER healing: the staged manifest written before the first
+    // rename decides, PER PARTITION, whether the staged rewrite landed
+    // (drop the source remnant), didn't (roll it forward — the staged
+    // content is the row-equivalent of the old under `transform`), or
+    // was an intentional emptying (complete the removal). All states
+    // converge: a heal interrupted mid-rename re-enters the same
+    // branches.
+    val healed = healSwapMarker(fs, table, lenient) { case (holder, _, _, _) =>
+      val staging = new Path(path(table) + "__compacting." + holder)
+      val manifest = new Path(staging, "__manifest")
+      // parse the WHOLE manifest before acting on any line: the
+      // manifest is staged (and only then renamed from) BEFORE the
+      // first swap rename, so a malformed line — a crash mid-write
+      // tearing the tail — means the manifest was never complete and
+      // NOTHING was renamed; the stage is died-during-staged-write
+      // garbage. Acting line-by-line and discovering the tear
+      // mid-iteration would have already rolled staged partitions
+      // forward for a swap that never started.
+      val parsed: Option[Seq[(String, String)]] =
+        coordinator.readSmall(fs, manifest).flatMap { txt =>
+          val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
+          val split = lines.map(_.split(" ", 2))
+          if (split.forall(_.length == 2))
+            Some(split.map(a => (a(0), a(1))))
+          else None
         }
-        try {
-          readSwapMarker(fs, table) match {
-            case Some((h2, exp2, _, _))
-                if exp2 >= System.currentTimeMillis() &&
-                  (h2 != leaseHolder || inFlightSwaps.contains(table)) =>
-              if (lenient) return
-              throw new Catalog.SwapInFlight(
-                s"a compaction swap of '$table' by holder $h2 began " +
-                  "while claiming its heal — retry after it closes or " +
-                  "expires")
-            case Some((h2, _, _, _)) =>
-              val staging = new org.apache.hadoop.fs.Path(
-                path(table) + "__compacting." + h2)
-              val manifest = new org.apache.hadoop.fs.Path(staging, "__manifest")
-              // parse the WHOLE manifest before acting on any line: the
-              // manifest is staged (and only then renamed from) BEFORE
-              // the first swap rename, so a malformed line — a crash
-              // mid-write tearing the tail — means the manifest was
-              // never complete and NOTHING was renamed; the stage is
-              // died-during-staged-write garbage. Acting line-by-line
-              // and discovering the tear mid-iteration would have
-              // already rolled staged partitions forward for a swap
-              // that never started.
-              val parsed: Option[Seq[(String, String)]] =
-                coordinator.readSmall(fs, manifest).flatMap { txt =>
-                  val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
-                  val split = lines.map(_.split(" ", 2))
-                  if (split.forall(_.length == 2))
-                    Some(split.map(a => (a(0), a(1))))
-                  else None
-                }
-              if (parsed.isEmpty)
-                // absent OR torn manifest: died during the STAGED WRITE
-                // (the marker covers it) — nothing was renamed, live
-                // tables are intact, the partial stage is pure garbage
-                coordinator.delete(fs, staging, true)
-              parsed.foreach { entries =>
-                entries.foreach { case (encValue, digest) =>
-                  val dir = s"$partitionCol=" +
-                    java.net.URLDecoder.decode(encValue, "UTF-8")
-                  val src = new org.apache.hadoop.fs.Path(staging, dir)
-                  val dst = new org.apache.hadoop.fs.Path(root, dir)
-                  val old = new org.apache.hadoop.fs.Path(staging, s"__old__$dir")
-                  if (digest == "EMPTY") {
-                    coordinator.delete(fs, dst, true)
-                    coordinator.delete(fs, old, true)
-                  } else if (treeDigest(fs, dst) == digest) {
-                    coordinator.delete(fs, src, true)
-                    coordinator.delete(fs, old, true)
-                  } else if (treeDigest(fs, src) == digest) {
-                    coordinator.delete(fs, dst, true)
-                    if (!coordinator.rename(fs, src, dst))
-                      throw new java.io.IOException(
-                        s"compaction swap-crash roll-forward failed for $dir")
-                    coordinator.delete(fs, old, true)
-                  } else throw new java.io.IOException(
-                    s"compaction swap-crash state for $dir matches neither " +
-                      "the live nor the staged manifest digest — refusing " +
-                      "to guess")
-                }
-                coordinator.delete(fs, staging, true)
-              }
-              bumpSwapGen(fs, table)
-              coordinator.delete(fs, swapMarkerPath(table), false)
-            case None => () // predecessor healed it; nothing left to do
-          }
-        } finally releaseHealClaim(fs, table)
-      case None => ()
+      // absent OR torn manifest: died during the STAGED WRITE (the
+      // marker covers it) — nothing was renamed, live tables are
+      // intact, the partial stage is pure garbage
+      parsed.getOrElse(Nil).foreach { case (encValue, digest) =>
+        val dir = s"$partitionCol=" + java.net.URLDecoder.decode(encValue, "UTF-8")
+        val src = new Path(staging, dir)
+        val dst = new Path(root, dir)
+        val old = new Path(staging, s"__old__$dir")
+        if (digest == "EMPTY") {
+          coordinator.delete(fs, dst, true)
+          coordinator.delete(fs, old, true)
+        } else if (treeDigest(fs, dst) == digest) {
+          coordinator.delete(fs, src, true)
+          coordinator.delete(fs, old, true)
+        } else if (treeDigest(fs, src) == digest) {
+          coordinator.delete(fs, dst, true)
+          if (!coordinator.rename(fs, src, dst))
+            throw new java.io.IOException(
+              s"compaction swap-crash roll-forward failed for $dir")
+          coordinator.delete(fs, old, true)
+        } else throw new java.io.IOException(
+          s"compaction swap-crash state for $dir matches neither " +
+            "the live nor the staged manifest digest — refusing " +
+            "to guess")
+      }
+      coordinator.delete(fs, staging, true)
     }
     // every surviving stage (crashed writers AND fenced ones — stages
     // are holder-unique) is scanned: orphaned partitions restore, the
-    // rest is dead-stage garbage.
-    // Decision-time in-flight re-check first (see [[recoverReplace]]'s
-    // tail): a compaction that began after the marker probe above has
-    // a live stage this sweep would otherwise delete — its marker
-    // (written at beginSwap, before the staged write) is the signal.
-    if (inFlightSwaps.contains(table) ||
-        readSwapMarker(fs, table).exists(_._2 >= System.currentTimeMillis())) {
-      if (lenient) return
-      throw new Catalog.SwapInFlight(
-        s"a compaction of '$table' began during its recovery scan — " +
-          "retry after it closes or expires")
-    }
-    stagingSiblings(table, "__compacting").foreach { staging =>
+    // rest is dead-stage garbage. Decision-time re-checks first and
+    // before each stage delete (see [[publishBegan]]).
+    if (!healed || publishBegan(fs, table, lenient)) return
+    stagingSiblings(table, "__compacting").forall { staging =>
       fs.listStatus(staging)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol="))
         .foreach { st =>
-          val live = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
+          val live = new Path(root, st.getPath.getName)
           if (!fs.exists(live) && !coordinator.rename(fs, st.getPath, live))
             throw new java.io.IOException(
               s"compaction recovery failed restoring ${st.getPath} to $live")
         }
-      // re-read IMMEDIATELY before the destructive stage delete (ADVICE
-      // r21): a compaction that began after the sweep's entry check
-      // writes its marker BEFORE staging, so this per-delete read closes
-      // the window in which its fresh stage could be swept; the residual
-      // exposure is the microseconds to the delete, removable only by a
-      // compare-and-swap store (the [[CommitCoordinator]] seam).
-      if (inFlightSwaps.contains(table) ||
-          readSwapMarker(fs, table).exists(_._2 >= System.currentTimeMillis())) {
-        if (lenient) return
-        throw new Catalog.SwapInFlight(
-          s"a compaction of '$table' began during its recovery sweep — " +
-            "retry after it closes or expires")
-      }
-      coordinator.delete(fs, staging, true)
+      guardedDelete(fs, table, staging, lenient)
     }
   }
+
+  /** SWAP-MARKER triage, shared by [[recoverReplace]] and
+    * [[recoverCompaction]]: a marker present here is a swap that never
+    * closed. Unexpired + foreign = a LIVE writer mid-swap — touching
+    * its aside/stages would sabotage it, so refuse. Expired (or our own
+    * and not in flight — this entry IS the table's single writer now) =
+    * crashed: take the heal claim, re-read the marker under it, run the
+    * table's `heal` on the marker (holder, expiresAt, phase, manifest),
+    * bump the generation so spanning readers invalidate, and drop the
+    * marker.
+    *
+    * A refusal THROWS [[Catalog.SwapInFlight]] for WRITE entries
+    * (appending under a live marker would poison the manifest
+    * comparison) and returns false for READ entries (`lenient`, e.g. a
+    * serve's crash-window heal), which skip: an in-flight marker means
+    * nothing is crashed from their perspective, the owner (or its TTL)
+    * heals, and live tables are intact through the whole stage phase.
+    * True when the caller may go on to its sweep. */
+  private def healSwapMarker(fs: FileSystem, table: String, lenient: Boolean)(
+      heal: ((String, Long, String, String)) => Unit): Boolean = {
+    def refuse(why: String): Boolean =
+      if (lenient) false
+      else throw new Catalog.SwapInFlight(s"$why — retry after it closes or expires")
+    def active(m: (String, Long, String, String)): Boolean =
+      m._2 >= System.currentTimeMillis() &&
+        (m._1 != leaseHolder || inFlightSwaps.contains(table))
+    readSwapMarker(fs, table) match {
+      case None => true
+      case Some(m) if active(m) =>
+        refuse(s"a swap of '$table' by holder ${m._1} is within its TTL")
+      case Some(_) =>
+        // the heal is DESTRUCTIVE (delete-then-rename on digest
+        // decisions computed up front), so exactly one healer may run
+        // it — claim the heal key first (see [[healClaimTtlMs]])
+        if (!acquireLease(fs, healClaimPath(table), healClaimTtlMs))
+          refuse(s"another healer holds the heal claim for '$table' — its " +
+            "heal is in flight")
+        else try {
+          // re-read UNDER the claim: between our first read and the
+          // claim, the predecessor may have finished the heal (marker
+          // gone) or a new writer begun a fresh swap (unexpired foreign)
+          readSwapMarker(fs, table) match {
+            case None => true // predecessor healed it
+            case Some(m) if active(m) =>
+              refuse(s"a swap of '$table' by holder ${m._1} began while " +
+                "claiming its heal")
+            case Some(m) =>
+              heal(m)
+              bumpSwapGen(fs, table)
+              coordinator.delete(fs, swapMarkerPath(table), false)
+              true
+          }
+        } finally releaseLease(fs, healClaimPath(table))
+    }
+  }
+
+  /** True when a publish of `table` began after the caller's marker
+    * probe (and the entry is `lenient`; a write entry throws
+    * [[Catalog.SwapInFlight]] instead). A publish writes its marker
+    * BEFORE staging, so a stale "no marker" read could sweep a LIVE
+    * writer's stage or roll its move-aside back from under it
+    * (observed: a lenient OpLog-read heal deleting a concurrent
+    * compact's staged replaceTable dir, aborting the op). Every window
+    * in which a stage is live or the live dir is mid-rename is covered
+    * by an unexpired marker, plus the in-process mark when the writer
+    * shares this Catalog. */
+  private def publishBegan(fs: FileSystem, table: String, lenient: Boolean): Boolean = {
+    val began = inFlightSwaps.contains(table) ||
+      readSwapMarker(fs, table).exists(_._2 >= System.currentTimeMillis())
+    if (began && !lenient)
+      throw new Catalog.SwapInFlight(s"a publish of '$table' began during " +
+        "its recovery — retry after it closes or expires")
+    began
+  }
+
+  /** Recovery's one destructive delete, re-checking [[publishBegan]]
+    * IMMEDIATELY before it: the residual exposure shrinks to the
+    * microseconds between this read and the delete, which only a
+    * compare-and-swap store (the [[CommitCoordinator]] seam) can remove
+    * entirely. False when a lenient entry must stop. */
+  private def guardedDelete(
+      fs: FileSystem, table: String, p: Path, lenient: Boolean): Boolean =
+    !publishBegan(fs, table, lenient) && { coordinator.delete(fs, p, true); true }
 
   /** True when `bytes` is at most `spark.sql.files.openCostInBytes`, the
     * size Spark already charges as one file open: below it a split costs
@@ -668,8 +613,7 @@ class Catalog(
     * thousands of tiny files and every scan pays their open/seek cost.
     *
     * Rewrites ONLY partitions whose data-file count exceeds
-    * `maxFilesPerPartition`, each to ceil(bytes / targetFileBytes)
-    * files. The rewrite is stage-and-swap: compacted partitions are
+    * `maxFilesPerPartition`, each to ceil(bytes / 128 MB) files. The rewrite is stage-and-swap: compacted partitions are
     * written to a sibling staging directory (a normal distributed
     * parquet job — no driver materialization, no read-overwrite cycle
     * on the table path), then swapped in with per-partition renames —
@@ -693,11 +637,10 @@ class Catalog(
       partitionCol: String,
       schema: StructType,
       maxFilesPerPartition: Int = 8,
-      targetFileBytes: Long = 128L * 1024 * 1024,
       transform: DataFrame => DataFrame = identity,
       forceValues: Seq[String] = Nil): Seq[String] = {
     import org.apache.spark.sql.{functions => F}
-    val root = new org.apache.hadoop.fs.Path(path(table))
+    val root = new Path(path(table))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
     val parts = fs.listStatus(root)
@@ -716,6 +659,7 @@ class Catalog(
       else None
     }.toSeq
     if (toCompact.isEmpty) return Nil
+    val targetFileBytes = 128L * 1024 * 1024
     def filesFor(bytes: Long): Long =
       math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     // one distributed job rewrites every accreted partition: filter
@@ -728,17 +672,7 @@ class Catalog(
     }
     // holder-unique stage (see [[replaceTable]]): a fenced compactor's
     // stage can never be swapped in by — or overwrite — a successor's
-    val staging = new org.apache.hadoop.fs.Path(
-      path(table) + "__compacting." + leaseHolder)
-    recoverCompaction(table, partitionCol)
-    // early fence: don't pay the staged rewrite if the lease is lost
-    fenceHeldLeases()
-    // SWAP WINDOW opened BEFORE the staged write (stage phase — readers
-    // ignore it; see replaceTable): a concurrent lenient heal skips an
-    // in-flight stage instead of deleting it, a strict (write-entry)
-    // heal refuses loudly, and a crash during staging heals as pure
-    // garbage (no __manifest yet => nothing was renamed)
-    beginSwap(fs, table, "-", () => recoverCompaction(table, partitionCol))
+    val staging = new Path(path(table) + "__compacting." + leaseHolder)
     // Size the rewrite by the bytes selected. A selection that fits one
     // task and one output file ([[fitsOneTask]], at most
     // `targetFileBytes`) is read and written in a single coalesced task:
@@ -775,87 +709,73 @@ class Catalog(
           else slotted.repartition(F.col(partitionCol), F.col("__slot"))
         shuffled.drop("__slot")
       }
-    try {
+    // the swap window's manifest is "-": a crash during staging heals as
+    // pure garbage (no __manifest yet => nothing was renamed)
+    val swapped = stageAndSwap(
+        fs, table, () => recoverCompaction(table, partitionCol), "-") {
       sized(transform(readWithSchema(table, schema)
           .filter(F.col(partitionCol).cast("string").isin(values: _*))))
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
         .parquet(staging.toString)
-    } catch { case t: Throwable =>
-      inFlightSwaps.remove(table)
-      try recoverCompaction(table, partitionCol)
-      catch { case scala.util.control.NonFatal(_) => () }
-      throw t
-    }
-    // STAGED MANIFEST: per selected partition, the digest of its staged
-    // rewrite (or EMPTY when transform dropped every row). This is what
-    // lets a crash ANYWHERE in the swap loop heal unambiguously on a
-    // store whose rename is copy-then-delete — "which copy is complete"
-    // is undecidable from the filesystem alone (see
-    // [[recoverCompaction]]'s marker branch). One small file, written
-    // before the first rename; data-path (lives with the stage on fs).
-    locally {
+      // STAGED MANIFEST: per selected partition, the digest of its staged
+      // rewrite (or EMPTY when transform dropped every row). This is what
+      // lets a crash ANYWHERE in the swap loop heal unambiguously on a
+      // store whose rename is copy-then-delete — "which copy is complete"
+      // is undecidable from the filesystem alone (see
+      // [[recoverCompaction]]'s marker branch). One small file, written
+      // before the first rename; data-path (lives with the stage on fs).
       val lines = toCompact.map { case (value, _) =>
-        val src = new org.apache.hadoop.fs.Path(staging, s"$partitionCol=$value")
+        val src = new Path(staging, s"$partitionCol=$value")
         val d = if (fs.exists(src)) treeDigest(fs, src) else "EMPTY"
         java.net.URLEncoder.encode(value, "UTF-8") + " " + d
       }
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, "__manifest"), true)
+      val out = fs.create(new Path(staging, "__manifest"), true)
       try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
-    }
-    // RENAME phase for the whole per-partition swap loop: readers
-    // using [[consistentRead]] see entirely-old or entirely-new; a
-    // crash leaves the marker and the manifest-driven heal rolls the
-    // interrupted partitions FORWARD (the staged rewrite is the
-    // row-equivalent of the old content under `transform`)
-    markSwapPhase(fs, table)
-    try {
-    val swapped = toCompact.flatMap { case (value, _) =>
-      // PER-PARTITION fence: the swap loop can run long (many accreted
-      // partitions), and a single pre-loop fence would let a writer
-      // whose TTL lapses mid-loop keep swapping over a successor's
-      // partitions — one small fs read per held lease per partition,
-      // noise next to the renames it protects
-      fenceHeldLeases()
-      val dir = s"$partitionCol=$value"
-      val src = new org.apache.hadoop.fs.Path(staging, dir)
-      val dst = new org.apache.hadoop.fs.Path(root, dir)
-      // move-aside -> move-in -> drop: a crash at ANY point leaves at
-      // least one complete copy addressable — live at dst, or staged at
-      // src (restored by the entry recovery above on the next run). The
-      // aside lives INSIDE staging under a prefix that does not parse
-      // as a partition dir, so readers never see two copies and the
-      // recovery scan never mistakes it for a staged replacement.
-      if (!fs.exists(src)) {
-        // the staged job completed but wrote nothing for this selected
-        // partition: transform dropped every row — remove the live dir
-        // via the same aside dance (never a bare delete of live data)
-        if (fs.exists(dst)) {
-          val aside = new org.apache.hadoop.fs.Path(staging, s"__old__$dir")
-          if (!coordinator.rename(fs, dst, aside))
+    } {
+      // RENAME phase for the whole per-partition swap loop: readers
+      // using [[consistentRead]] see entirely-old or entirely-new; a
+      // crash leaves the marker and the manifest-driven heal rolls the
+      // interrupted partitions FORWARD (the staged rewrite is the
+      // row-equivalent of the old content under `transform`)
+      toCompact.flatMap { case (value, _) =>
+        // PER-PARTITION fence: the swap loop can run long (many accreted
+        // partitions), and a single pre-loop fence would let a writer
+        // whose TTL lapses mid-loop keep swapping over a successor's
+        // partitions — one small fs read per held lease per partition,
+        // noise next to the renames it protects
+        fenceHeldLeases()
+        val dir = s"$partitionCol=$value"
+        val src = new Path(staging, dir)
+        val dst = new Path(root, dir)
+        val aside = new Path(staging, s"__old__$dir")
+        // move-aside -> move-in -> drop: a crash at ANY point leaves at
+        // least one complete copy addressable — live at dst, or staged at
+        // src (restored by the entry recovery on the next run). The
+        // aside lives INSIDE staging under a prefix that does not parse
+        // as a partition dir, so readers never see two copies and the
+        // recovery scan never mistakes it for a staged replacement. No
+        // staged output means transform dropped every row: the live dir
+        // goes through the same aside dance (never a bare delete of live
+        // data) and nothing moves in.
+        val staged = fs.exists(src)
+        val hadLive = fs.exists(dst)
+        if (!staged && !hadLive) None
+        else {
+          if (hadLive && !coordinator.rename(fs, dst, aside))
             throw new java.io.IOException(
-              s"compaction move-aside failed for emptied $dir — table untouched")
+              s"compaction move-aside failed for $dir — table untouched")
+          if (staged && !coordinator.rename(fs, src, dst))
+            throw new java.io.IOException(
+              s"compaction rename failed for $dir — staged data left at $src")
           coordinator.delete(fs, aside, true)
           Some(value)
-        } else None
-      }
-      else {
-        val aside = new org.apache.hadoop.fs.Path(staging, s"__old__$dir")
-        if (fs.exists(dst) && !coordinator.rename(fs, dst, aside))
-          throw new java.io.IOException(
-            s"compaction move-aside failed for $dir — table untouched")
-        if (!coordinator.rename(fs, src, dst))
-          throw new java.io.IOException(
-            s"compaction rename failed for $dir — staged data left at $src")
-        coordinator.delete(fs, aside, true)
-        Some(value)
+        }
       }
     }
-    endSwap(fs, table)
     coordinator.delete(fs, staging, true)
     spark.catalog.refreshByPath(path(table))
     swapped
-    } finally inFlightSwaps.remove(table)
   }
 
   /** Remove every row stamped with one of `seqs` from a
@@ -938,7 +858,7 @@ class Catalog(
     * global stats. One fs read per check; idempotent.
     */
   def ensureLayoutMeta(family: String, stamp: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(family) + "__layout")
+    val p = new Path(path(family) + "__layout")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val existing = coordinator.readSmall(fs, p)
     existing match {
@@ -1015,7 +935,7 @@ class Catalog(
     * id-hash modulus) without widening their public signatures. One fs
     * read; None for a family never stamped. */
   def readLayoutMeta(family: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path(family) + "__layout")
+    val p = new Path(path(family) + "__layout")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     coordinator.readSmall(fs, p)
   }
@@ -1059,75 +979,98 @@ class Catalog(
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def swapMarkerPath(table: String) =
-    new org.apache.hadoop.fs.Path(path(table) + "__swapping")
+    new Path(path(table) + "__swapping")
   private def swapGenPath(table: String) =
-    new org.apache.hadoop.fs.Path(path(table) + "__swapgen")
+    new Path(path(table) + "__swapgen")
   private def healClaimPath(table: String) =
-    new org.apache.hadoop.fs.Path(path(table) + "__swapheal")
+    new Path(path(table) + "__swapheal")
+  private def leasePath(scope: String) = new Path(path(scope) + "__lease")
   // warehouse-level tombstone recording that `holder` was fenced (its
   // stale lease broken by a contender) — written at the break
-  // ([[withMaintenanceLease]].breakStale), read by recovery tie-breaks
+  // ([[withMaintenanceLease]]), read by recovery tie-breaks
   private def fencedTombPath(holder: String) =
-    new org.apache.hadoop.fs.Path(path(s"__fenced.$holder"))
+    new Path(path(s"__fenced.$holder"))
 
   /** True when `holder` has a fenced tombstone on record. */
   private def isFencedHolder(
-      fs: org.apache.hadoop.fs.FileSystem, holder: String): Boolean =
+      fs: FileSystem, holder: String): Boolean =
     coordinator.readSmall(fs, fencedTombPath(holder)).isDefined
   // a heal is renames + sidecar-sized tree listings — seconds, not a
-  // staging job; a crashed healer's claim ages out on this bound
+  // staging job; a crashed healer's claim ages out on this bound.
+  // The claim serializes DESTRUCTIVE expired-marker heals: every
+  // read/append entry calls recovery, so N concurrent readers can all
+  // observe one expired swap marker and race its heal — and the heal's
+  // delete-then-rename body is only convergent for ONE actor (healer A
+  // renames aside->live; healer B, which computed its digests earlier,
+  // then deletes live and fails its own rename because aside is gone —
+  // both copies destroyed). Losers skip (lenient entries) or refuse
+  // loudly (write entries retry); the next claimant after a crashed
+  // healer re-enters the same convergent branches.
   private val healClaimTtlMs = 60 * 1000L
 
-  /** Serialize DESTRUCTIVE expired-marker heals: every read/append
-    * entry calls recovery, so N concurrent readers can all observe one
-    * expired swap marker and race its heal — and the heal's
-    * delete-then-rename body is only convergent for ONE actor (healer A
-    * renames aside->live; healer B, which computed its digests earlier,
-    * then deletes live and fails its own rename because aside is gone —
-    * both copies destroyed). Exactly one healer may act: claim the
-    * table's heal key first (atomic create-if-absent through the
-    * coordinator, the lease pattern), losers skip (lenient entries) or
-    * refuse loudly (write entries retry). A healer that crashes
-    * mid-heal leaves its claim to age out on [[healClaimTtlMs]]; the
-    * next claimant re-enters the same convergent branches. The acquire
-    * section reuses the per-path monitor ([[Catalog.leaseLock]]) so
-    * in-process healers serialize without a coordinator round-trip.
-    * Caller MUST pair with [[releaseHealClaim]] in a finally. */
-  private def acquireHealClaim(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Boolean = {
-    val p = healClaimPath(table)
+  /** Take the LEASE FILE `p` — content `holder expiresAt` — for this
+    * holder, through the coordinator's atomic create-if-absent. The one
+    * lease primitive behind [[withMaintenanceLease]] (`<scope>__lease`)
+    * and the swap-marker heal claim (`<table>__swapheal`).
+    *
+    * A file whose expiry has passed is a crashed holder's: it is BROKEN
+    * and re-created. Unreadable content (a holder that crashed
+    * mid-write) ages by the file's mtime against `ttl` instead; a file
+    * that vanished between the failed create and the read reports
+    * not-expired, and the caller's retry re-probes. The break must be
+    * ATOMIC: delete-then-create lets two contenders both observe
+    * expiry, the second delete removing the first's fresh lease — both
+    * acquire. Renaming the stale file to a unique `<p>_broken_<uuid>`
+    * lets exactly one rename win; the loser backs off and loses
+    * create-if-absent against the winner's fresh file. `onBreak` runs
+    * on the broken file before it is dropped.
+    *
+    * The critical section is additionally serialized on a
+    * PER-LEASE-PATH monitor ([[Catalog.leaseLock]]; one slow remote-FS
+    * call must not block unrelated leases process-wide), so in-process
+    * contenders serialize without a coordinator round-trip;
+    * cross-process exclusion rests on the coordinator — O_EXCL on the
+    * local filesystem, namespace-atomic create on HDFS, a conditional
+    * put on a plugged-in object-store coordinator. Pair with
+    * [[releaseLease]] in a finally. */
+  private def acquireLease(
+      fs: FileSystem, p: Path, ttl: Long, onBreak: Path => Unit = _ => ()): Boolean = {
     def tryCreate(): Boolean = coordinator.createIfAbsent(fs, p,
-      s"$leaseHolder ${System.currentTimeMillis() + healClaimTtlMs}")
+      s"$leaseHolder ${System.currentTimeMillis() + ttl}")
     def expired(): Boolean =
       coordinator.readSmall(fs, p) match {
         case Some(content) => content.split("\\s+") match {
           case Array(_, exp) if exp.forall(_.isDigit) =>
             exp.toLong < System.currentTimeMillis()
-          case _ => // unreadable content: age the FILE (see lease twin)
-            try fs.getFileStatus(p).getModificationTime + healClaimTtlMs <
+          case _ =>
+            try fs.getFileStatus(p).getModificationTime + ttl <
               System.currentTimeMillis()
             catch { case _: java.io.IOException => false }
         }
         case None => false
       }
     def breakStale(): Boolean = {
-      val tomb = new org.apache.hadoop.fs.Path(
-        path(table) + "__swapheal_broken_" + java.util.UUID.randomUUID())
-      val won = coordinator.rename(fs, p, tomb)
-      if (won) coordinator.delete(fs, tomb, false)
+      val claimed = p.suffix("_broken_" + UUID.randomUUID())
+      val won = coordinator.rename(fs, p, claimed)
+      if (won) {
+        onBreak(claimed)
+        coordinator.delete(fs, claimed, false)
+      }
       won
     }
     Catalog.leaseLock(p.toString).synchronized {
-      tryCreate() || { if (expired()) breakStale() && tryCreate() else false }
+      tryCreate() || (expired() && breakStale() && tryCreate())
     }
   }
 
-  private def releaseHealClaim(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Unit =
-    Catalog.leaseLock(healClaimPath(table).toString).synchronized {
-      if (coordinator.readSmall(fs, healClaimPath(table))
-          .exists(_.startsWith(leaseHolder + " ")))
-        coordinator.delete(fs, healClaimPath(table), false)
+  /** Release the lease file `p` ONLY if it still carries this holder:
+    * a holder that overran its TTL may have been broken and succeeded,
+    * and an unconditional delete would strip the successor's
+    * protection mid-pass. */
+  private def releaseLease(fs: FileSystem, p: Path): Unit =
+    Catalog.leaseLock(p.toString).synchronized {
+      if (coordinator.readSmall(fs, p).exists(_.startsWith(leaseHolder + " ")))
+        coordinator.delete(fs, p, false)
     }
 
   /** Digest of a directory tree's (relative-name, length) set — the
@@ -1136,11 +1079,11 @@ class Catalog(
     * Cost: one recursive listing of a SIDECAR-SIZED table (replaceTable
     * is documented as not-for-data-sized tables); never reads data. */
   private def treeDigest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): String = {
+      fs: FileSystem,
+      root: Path): String = {
     if (!fs.exists(root)) return "-"
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(p: org.apache.hadoop.fs.Path, prefix: String): Unit =
+    def walk(p: Path, prefix: String): Unit =
       fs.listStatus(p).foreach { st =>
         val name = prefix + st.getPath.getName
         if (st.isDirectory) walk(st.getPath, name + "/")
@@ -1160,7 +1103,7 @@ class Catalog(
     * rewrite must not block [[consistentRead]]; only the rename window
     * (seconds) does. */
   private def readSwapMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       table: String): Option[(String, Long, String, String)] =
     coordinator.readSmall(fs, swapMarkerPath(table)).flatMap { s =>
       s.split(" ") match {
@@ -1185,7 +1128,7 @@ class Catalog(
     * reader catching the absent instant reads 0 ≠ its first read and
     * correctly invalidates. */
   private def bumpSwapGen(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Unit = {
+      fs: FileSystem, table: String): Unit = {
     val g = coordinator.readSmall(fs, swapGenPath(table))
       .flatMap(_.trim.toLongOption).getOrElse(0L)
     coordinator.delete(fs, swapGenPath(table), false)
@@ -1211,11 +1154,11 @@ class Catalog(
     * have healed; heal-and-retry once covers the race where it expired
     * after that recovery ran. */
   private def beginSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       table: String,
       manifestDigest: String,
       healExpired: () => Unit): Unit = {
-    val content = s"$leaseHolder ${System.currentTimeMillis() + swapTtlMs} " +
+    val content = s"$leaseHolder ${System.currentTimeMillis() + ttlMs} " +
       s"stage $manifestDigest"
     // mark in-flight BEFORE the marker lands: a sibling thread's heal
     // between marker-create and set-add would read our fresh marker as
@@ -1260,7 +1203,7 @@ class Catalog(
     * loudly, exactly like lease fencing. Delete+create runs
     * single-writer (we hold the marker and the maintenance lease). */
   private def markSwapPhase(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Unit =
+      fs: FileSystem, table: String): Unit =
     readSwapMarker(fs, table).filter(_._1 == leaseHolder) match {
       case Some((h, _, _, d)) =>
         // the flip must CHECK both primitives: a silently failed delete
@@ -1270,7 +1213,7 @@ class Catalog(
         // this writer is no longer fenced and must NOT rename
         val flipped = coordinator.delete(fs, swapMarkerPath(table), false) &&
           coordinator.createIfAbsent(fs, swapMarkerPath(table),
-            s"$h ${System.currentTimeMillis() + swapTtlMs} swap $d")
+            s"$h ${System.currentTimeMillis() + ttlMs} swap $d")
         if (!flipped) {
           inFlightSwaps.remove(table)
           throw new Catalog.SwapInFlight(
@@ -1291,7 +1234,7 @@ class Catalog(
     * then drop the marker. Order matters — a reader that never saw the
     * marker must already see the new generation number. */
   private def endSwap(
-      fs: org.apache.hadoop.fs.FileSystem, table: String): Unit = {
+      fs: FileSystem, table: String): Unit = {
     bumpSwapGen(fs, table)
     coordinator.delete(fs, swapMarkerPath(table), false)
     inFlightSwaps.remove(table)
@@ -1307,17 +1250,17 @@ class Catalog(
     *
     * `body` MUST MATERIALIZE what it reads (collect/count/write) — a
     * lazy DataFrame escapes the validation window. Retries are bounded
-    * by `maxWaitMs`; a persistent marker past that means a crashed
+    * by a minute; a persistent marker past that means a crashed
     * swapper nobody healed — run the family's recovery (every write
     * entry does) and retry.
     *
     * Cost: 2 coordinator reads per table per attempt — nothing
     * data-sized, safe at any scale. Readers that tolerate the
     * documented maintenance windows simply don't call this. */
-  def consistentRead[T](
-      tables: Seq[String], maxWaitMs: Long = 60 * 1000L)(body: => T): T = {
+  def consistentRead[T](tables: Seq[String])(body: => T): T = {
     val fs = swapGenPath(tables.head)
       .getFileSystem(spark.sessionState.newHadoopConf())
+    val maxWaitMs = 60 * 1000L
     val deadline = System.currentTimeMillis() + maxWaitMs
     while (System.currentTimeMillis() < deadline) {
       def renamePhase(t: String): Boolean =
@@ -1366,12 +1309,11 @@ class Catalog(
     * [[CommitCoordinator]] to the constructor; every lease / break /
     * fence / swap point inherits it). The file carries
     * `holder expiryMillis`. A
-    * CRASHED holder's lease heals by expiry: past `ttlMs` the next
-    * contender breaks the stale file and re-acquires (the break is an
-    * atomic RENAME of the stale file to a unique tomb path — exactly one
-    * of two simultaneous breakers wins the rename, so the race resolves
-    * to one winner and one loud loser; release likewise deletes only a
-    * file still carrying this holder's id). Size the TTL above the longest
+    * CRASHED holder's lease heals by expiry: past the catalog's `ttlMs`
+    * the next contender breaks the stale file and re-acquires
+    * ([[acquireLease]]: exactly one of two simultaneous breakers wins,
+    * so the race resolves to one winner and one loud loser; release
+    * deletes only a file still carrying this holder's id). Size the TTL above the longest
     * expected maintenance pass — a too-short TTL turns a slow
     * compaction into two writers, which is exactly the state the
     * reader-heal race doc proves data-safe but op-unsafe.
@@ -1387,106 +1329,49 @@ class Catalog(
     * serialize. Nested helpers always run on their caller's thread
     * (every op/maintenance body here is synchronous), so same-thread
     * depth counting is exactly the re-entrancy the family needs. */
-  def withMaintenanceLease[T](scope: String, ttlMs: Long = 15 * 60 * 1000L)(body: => T): T = {
-    val depthKey = scope
+  def withMaintenanceLease[T](scope: String)(body: => T): T = {
     val self = Thread.currentThread().getId
     val reentered = leaseDepth.synchronized {
-      leaseDepth.get(depthKey) match {
+      leaseDepth.get(scope) match {
         case Some((owner, d)) if d > 0 && owner == self =>
-          leaseDepth(depthKey) = (owner, d + 1); true
+          leaseDepth(scope) = (owner, d + 1); true
         case _ => false
       }
     }
+    def leave(): Unit = leaseDepth.synchronized {
+      val (o, d) = leaseDepth(scope); leaseDepth(scope) = (o, d - 1)
+    }
     if (reentered) {
-      try body
-      finally leaseDepth.synchronized {
-        val (o, d) = leaseDepth(depthKey); leaseDepth(depthKey) = (o, d - 1)
-      }
+      try body finally leave()
     } else {
-      val p = new org.apache.hadoop.fs.Path(path(scope) + "__lease")
+      val p = leasePath(scope)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      def tryCreate(): Boolean = coordinator.createIfAbsent(fs, p,
-        s"$leaseHolder ${System.currentTimeMillis() + ttlMs}")
-      def expired(): Boolean =
-        coordinator.readSmall(fs, p) match {
-          case Some(content) => content.split("\\s+") match {
-            case Array(_, exp) if exp.forall(_.isDigit) =>
-              exp.toLong < System.currentTimeMillis()
-            case _ => // unreadable content (holder crashed mid-write):
-              // age the FILE instead of the recorded expiry
-              try fs.getFileStatus(p).getModificationTime + ttlMs <
-                System.currentTimeMillis()
-              catch { case _: java.io.IOException => false }
+      // persist a FENCED-HOLDER TOMBSTONE at the break: the break is the
+      // instant the old holder becomes fenced, and the broken file is
+      // the only durable record of its identity — without this,
+      // recovery paths that must tie-break between a fenced writer's
+      // orphaned stage and a legitimate successor's (first-ever-replace
+      // roll-forward) have nothing but mtime to go on. Tombstones are a
+      // few bytes each, bounded by fencing EVENTS (TTL overruns — rare
+      // by construction), and read by [[isFencedHolder]].
+      def fenceOld(broken: Path): Unit =
+        coordinator.readSmall(fs, broken)
+          .flatMap(_.split("\\s+").headOption).filter(_.nonEmpty)
+          .foreach { old =>
+            coordinator.createIfAbsent(fs, fencedTombPath(old),
+              s"fenced by $leaseHolder at ${System.currentTimeMillis()} " +
+                s"breaking scope $scope")
           }
-          // vanished between create-failure and read — contender won a
-          // break race or released; report not-expired and let the
-          // caller's retry re-probe
-          case None => false
-        }
-      // breaking a stale lease must be ATOMIC: delete-then-create lets
-      // two contenders both observe expiry, the second delete removing
-      // the first's freshly created lease — both acquire. Rename the
-      // stale file to a unique tomb path instead: exactly one rename
-      // succeeds (the claim), the loser's rename fails and it backs off
-      // to lose tryCreate against the winner's fresh file.
-      def breakStale(): Boolean = {
-        val claimed = new org.apache.hadoop.fs.Path(
-          path(scope) + "__lease_broken_" + java.util.UUID.randomUUID().toString)
-        val won = coordinator.rename(fs, p, claimed)
-        if (won) {
-          // persist a FENCED-HOLDER TOMBSTONE before dropping the claim:
-          // the break is the instant the old holder becomes fenced, and
-          // the claimed file is the only durable record of its identity
-          // — without this, recovery paths that must tie-break between
-          // a fenced writer's orphaned stage and a legitimate
-          // successor's (first-ever-replace roll-forward) have nothing
-          // but mtime to go on. Tombstones are a few bytes each,
-          // bounded by fencing EVENTS (TTL overruns — rare by
-          // construction), and read by [[fencedHolder]].
-          coordinator.readSmall(fs, claimed)
-            .flatMap(_.split("\\s+").headOption).filter(_.nonEmpty)
-            .foreach { old =>
-              coordinator.createIfAbsent(fs, fencedTombPath(old),
-                s"fenced by $leaseHolder at ${System.currentTimeMillis()} " +
-                  s"breaking scope $scope")
-            }
-          coordinator.delete(fs, claimed, false)
-        }
-        won
-      }
-      // the acquire critical section is additionally serialized on a
-      // PER-LEASE-PATH monitor (one slow remote-FS call must not block
-      // unrelated scopes' lease traffic process-wide). The monitor is
-      // belt-and-suspenders for in-process contenders; cross-process
-      // exclusion rests on the coordinator's atomic create-if-absent —
-      // O_EXCL on the local filesystem, namespace-atomic create on
-      // HDFS, a conditional put on a plugged-in object-store
-      // coordinator.
-      val acquired = Catalog.leaseLock(p.toString).synchronized {
-        tryCreate() || {
-          if (expired()) breakStale() && tryCreate() else false
-        }
-      }
-      if (!acquired)
+      if (!acquireLease(fs, p, ttlMs, fenceOld))
         throw new Catalog.MaintenanceLeaseHeld(
           s"maintenance lease for scope '$scope' is held " +
             s"(${p.toString}); concurrent maintenance refused — wait for " +
             "the holder or for lease expiry")
-      leaseDepth.synchronized { leaseDepth(depthKey) = (self, 1) }
+      leaseDepth.synchronized { leaseDepth(scope) = (self, 1) }
       try body
       finally {
-        leaseDepth.synchronized {
-          val (o, d) = leaseDepth(depthKey); leaseDepth(depthKey) = (o, d - 1)
-        }
-        // release ONLY our own lease: if this holder overran its TTL and
-        // a contender broke + re-acquired, the file now carries the
-        // successor's id — an unconditional delete would strip the
-        // successor's protection mid-pass
-        Catalog.leaseLock(p.toString).synchronized {
-          if (coordinator.readSmall(fs, p)
-              .exists(_.startsWith(leaseHolder + " ")))
-            coordinator.delete(fs, p, false)
-        }
+        leave()
+        releaseLease(fs, p)
       }
     }
   }
@@ -1550,7 +1435,7 @@ class Catalog(
       leaseDepth.collect { case (s, (o, d)) if d > 0 && o == self => s }.toSeq
     }
     held.foreach { scope =>
-      val p = new org.apache.hadoop.fs.Path(path(scope) + "__lease")
+      val p = leasePath(scope)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       // a transient FS read hiccup on a healthy lease must not abort
       // the op with a spurious TTL-overrun claim: retry the read once
@@ -1597,7 +1482,7 @@ class Catalog(
 
 object Catalog {
   /** Per-lease-path monitors for the acquire/release critical sections
-    * (see [[Catalog.withMaintenanceLease]]): one slow or hung FS call
+    * (see [[Catalog.acquireLease]]): one slow or hung FS call
     * on one lease must not serialize every unrelated lease operation
     * in the process. Never evicted — bounded by the number of distinct
     * scopes the process touches, a handful of bytes each. */

@@ -100,15 +100,15 @@ final class OpLog(
     * the exclusion is per-process/per-Catalog — the deployment shape
     * the one-stream-per-family contract already implies.
     *
-    * FENCED past the TTL: a span that outruns `ttlMs` loses its lease
-    * to the next contender's atomic break — from that instant the
+    * FENCED past the TTL: a span that outruns the catalog's `ttlMs`
+    * loses its lease to the next contender's atomic break — from that
+    * instant the
     * commit point ([[commitValues]], the replace/compact
     * swaps) refuse with [[graft.sources.Catalog.WriterFenced]] instead
     * of publishing over the successor; the fenced op's data rows stay
     * uncommitted garbage and are scrubbed at compaction. Size the TTL
     * above the longest expected op. */
-  def withWriter[T](ttlMs: Long = 15 * 60 * 1000L)(body: => T): T =
-    cat.withMaintenanceLease(table, ttlMs)(body)
+  def withWriter[T](body: => T): T = cat.withMaintenanceLease(table)(body)
 
   // READ entries (rows, snapshot) heal leniently — an in-flight
   // publish's marker means nothing is crashed; skipping keeps a sibling
@@ -196,7 +196,7 @@ final class OpLog(
     * The snapshot stays current through the op's own appends: nothing
     * commits concurrently under the writer lease. */
   def span(seq: Option[Long], prepare: => Unit, scrub: Long => Unit)(
-      body: (OpLog.Snapshot, Long) => Seq[Long]): Unit = withWriter() {
+      body: (OpLog.Snapshot, Long) => Seq[Long]): Unit = withWriter {
     prepare
     val snap = snapshot()
     val sv = seq.getOrElse(snap.nextSeq)
@@ -300,7 +300,7 @@ final class OpLog(
     * checkpointing changes nothing for them. */
   def checkpoint(snap: OpLog.Snapshot): Unit = rewrite(snap.checkpointRows)
 
-  private def rewrite(kept: Array[Row]): Unit = withWriter() {
+  private def rewrite(kept: Array[Row]): Unit = withWriter {
     ensure()
     cat.replaceTable(table,
       spark.createDataFrame(java.util.Arrays.asList(kept: _*), schema).coalesce(1))

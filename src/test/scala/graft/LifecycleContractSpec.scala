@@ -267,7 +267,7 @@ class LifecycleContractSpec extends SparkSpec {
     val log = new OpLog(spark, cat, "ops", OpLog.countPayload)
     log.ensure()
     @volatile var thrown: Throwable = null
-    log.withWriter() {
+    log.withWriter {
       val t = new Thread(() =>
         try log.commitCount(0L, 1L)
         catch { case e: Throwable => thrown = e })
@@ -279,7 +279,7 @@ class LifecycleContractSpec extends SparkSpec {
       s"wrong failure: $thrown")
     assert(committedOps(log) === 0L)
     // same-thread commit inside the span still works
-    log.withWriter() { log.commitCount(0L, 1L) }
+    log.withWriter { log.commitCount(0L, 1L) }
     assert(committedOps(log) === 1L)
   }
 
@@ -288,17 +288,19 @@ class LifecycleContractSpec extends SparkSpec {
   test("a writer that overruns its lease TTL is fenced at commit, not interleaved") {
     val dir = Files.createTempDirectory("graft-fence").toString
     val cat = new Catalog(spark, s"$dir/wh")
+    val short = new Catalog(spark, s"$dir/wh", ttlMs = 1L)
     val foreign = new Catalog(spark, s"$dir/wh")
     val log = new OpLog(spark, cat, "ops", OpLog.countPayload)
+    val shortLog = new OpLog(spark, short, "ops", OpLog.countPayload)
     log.ensure()
     // overrun: a 1ms-TTL span sleeps past expiry, a contender breaks the
     // stale lease and runs its own span (then releases). The overrunner
     // must now refuse to publish: commit is the first fence point.
     intercept[Catalog.WriterFenced] {
-      log.withWriter(ttlMs = 1L) {
+      shortLog.withWriter {
         Thread.sleep(10)
         foreign.withMaintenanceLease("ops") { /* successor's window */ }
-        log.commitCount(0L, 1L) // fenced: the lease no longer exists/is ours
+        shortLog.commitCount(0L, 1L) // fenced: the lease no longer exists/is ours
       }
     }
     assert(committedOps(log) === 0L,
@@ -306,31 +308,31 @@ class LifecycleContractSpec extends SparkSpec {
     // the same overrun fences a maintenance swap (replaceTable path)
     cat.ensureTable("t", org.apache.spark.sql.types.StructType.fromDDL("a BIGINT"))
     intercept[Catalog.WriterFenced] {
-      cat.withMaintenanceLease("t", ttlMs = 1L) {
+      short.withMaintenanceLease("t") {
         Thread.sleep(10)
         foreign.withMaintenanceLease("t") {}
-        cat.replaceTable("t", Seq(1L).toDF("a"))
+        short.replaceTable("t", Seq(1L).toDF("a"))
       }
     }
     // an in-TTL span commits normally (the fence is a no-op for a live lease)
-    log.withWriter() { log.commitCount(1L, 1L) }
+    log.withWriter { log.commitCount(1L, 1L) }
     assert(committedOps(log) === 1L)
     // the fence is THREAD-scoped: another thread's healthy span must not
     // be aborted by THIS thread's lapsed lease (two streams on different
     // families in one process fail independently)
-    val otherLog = new OpLog(spark, cat, "ops_b", OpLog.countPayload)
+    val otherLog = new OpLog(spark, short, "ops_b", OpLog.countPayload)
     otherLog.ensure()
     @volatile var otherOk = false
     intercept[Catalog.WriterFenced] {
-      cat.withMaintenanceLease("t", ttlMs = 1L) {
+      short.withMaintenanceLease("t") {
         Thread.sleep(10)
         foreign.withMaintenanceLease("t") {}
         val worker = new Thread(() => {
-          otherLog.withWriter() { otherLog.commitCount(0L, 1L) }
+          otherLog.withWriter { otherLog.commitCount(0L, 1L) }
           otherOk = true
         })
         worker.start(); worker.join()
-        cat.replaceTable("t", Seq(2L).toDF("a")) // this thread IS fenced
+        short.replaceTable("t", Seq(2L).toDF("a")) // this thread IS fenced
       }
     }
     assert(otherOk, "a healthy writer on another thread was falsely fenced")
@@ -370,9 +372,10 @@ class LifecycleContractSpec extends SparkSpec {
       cat.readWithSchema("tomb", Streams.dedupTombSchema), "doc_id")
     assert(live.select("doc_id").as[Long].collect().toSet === Set(2L))
     // fencing through the map: a TTL overrun broken by the other client
-    val log = new OpLog(spark, cat, "corpus_ops", OpLog.countPayload)
+    val short = new Catalog(spark, s"$dir/wh", kv, ttlMs = 1L)
+    val log = new OpLog(spark, short, "corpus_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
-      log.withWriter(ttlMs = 1L) {
+      log.withWriter {
         Thread.sleep(10)
         other.withMaintenanceLease("corpus_ops") {}
         log.commitCount(log.nextBaseSeq, 1L)
@@ -559,9 +562,10 @@ class LifecycleContractSpec extends SparkSpec {
     val dforeign = new Catalog(spark, s"$dir/dd")
     Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "tomb",
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"))
-    val dlog = new OpLog(spark, dcat, "corpus_ops", OpLog.countPayload)
+    val dlog = new OpLog(spark,
+      new Catalog(spark, s"$dir/dd", ttlMs = 1L), "corpus_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
-      dlog.withWriter(ttlMs = 1L) {
+      dlog.withWriter {
         val sv = dlog.nextBaseSeq
         dlog.beginAttempt(sv)
         dcat.appendPartitioned("corpus",
@@ -597,9 +601,10 @@ class LifecycleContractSpec extends SparkSpec {
     val bforeign = new Catalog(spark, s"$dir/bm")
     val idx = new Bm25Index(spark, bcat)
     idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
-    val blog = new OpLog(spark, bcat, "ops", Bm25Index.statsPayload)
+    val blog = new OpLog(spark,
+      new Catalog(spark, s"$dir/bm", ttlMs = 1L), "ops", Bm25Index.statsPayload)
     intercept[Catalog.WriterFenced] {
-      blog.withWriter(ttlMs = 1L) {
+      blog.withWriter {
         val sv = blog.nextBaseSeq
         blog.beginAttempt(sv)
         bcat.appendPartitioned("postings",
@@ -635,9 +640,10 @@ class LifecycleContractSpec extends SparkSpec {
     val vforeign = new Catalog(spark, s"$dir/vv")
     Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
       vecs, model, nlist = 4, m = 4, ksub = 8)
-    val vlog = new OpLog(spark, vcat, "codes_ops", OpLog.countPayload)
+    val vlog = new OpLog(spark,
+      new Catalog(spark, s"$dir/vv", ttlMs = 1L), "codes_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
-      vlog.withWriter(ttlMs = 1L) {
+      vlog.withWriter {
         val sv = vlog.nextBaseSeq
         vlog.beginAttempt(sv)
         val ghost = vcat.readWithSchema("codes", codesSchema)

@@ -167,7 +167,7 @@ class SwapConsistencySpec extends SparkSpec {
     val coordC = CommitCoordinator.copyDeleteRename(pause = () => {
       if (nC.incrementAndGet() == 10) throw new Boom
     })
-    val catC = new Catalog(spark, s"$dir/wh", coordC, swapTtlMs = 50L)
+    val catC = new Catalog(spark, s"$dir/wh", coordC, ttlMs = 50L)
     intercept[Boom] { catC.replaceTable("t", (1L to 10L).toDF("v").repartition(3)) }
     Thread.sleep(80)
     plain.recoverReplace("t") // foreign, but the marker is expired now
@@ -360,7 +360,7 @@ class SwapConsistencySpec extends SparkSpec {
     // latch while a foreign catalog waits out the tiny TTL and heals.
     val dir = Files.createTempDirectory("graft-swap-fence").toString
     val slow = new Catalog(spark, s"$dir/wh",
-      CommitCoordinator.fileAtomics, swapTtlMs = 100L)
+      CommitCoordinator.fileAtomics, ttlMs = 100L)
     val foreign = new Catalog(spark, s"$dir/wh")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("v BIGINT")
     foreign.overwrite("t", (1L to 50L).toDF("v"))
@@ -396,12 +396,12 @@ class SwapConsistencySpec extends SparkSpec {
     // longer win recovery just by being newer on the filesystem.
     val dir = Files.createTempDirectory("graft-fenced-stage").toString
     val wh = s"$dir/wh"
-    val catA = new Catalog(spark, wh)
+    val catA = new Catalog(spark, wh, ttlMs = 30L)
     val catB = new Catalog(spark, wh)
     // writer A overruns a tiny lease TTL; contender B breaks the stale
     // lease — the break is the instant A becomes fenced, and it must
     // durably record A's identity
-    catA.withMaintenanceLease("t", ttlMs = 30L) {
+    catA.withMaintenanceLease("t") {
       Thread.sleep(80)
       catB.withMaintenanceLease("t") { () }
     }

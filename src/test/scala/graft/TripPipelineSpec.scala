@@ -640,6 +640,9 @@ class TripPipelineSpec extends SparkSpec {
     }.count()
     watcher.join(35000)
     assert(sawRunning.get(), "status never reported the running job")
+    // the status store learns of the job's end from the listener bus,
+    // asynchronously: drain it so the idle read sees that event
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
     assert(activeJobs() === 0, "status must return to idle after the job")
   }
 }

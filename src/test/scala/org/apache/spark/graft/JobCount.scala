@@ -24,11 +24,19 @@ object JobCount {
     sc.setLocalProperty(Tag, id)
     try {
       body
-      sc.listenerBus.waitUntilEmpty()
+      ListenerBus.drain(sc)
       n.get
     } finally {
       sc.setLocalProperty(Tag, null)
       sc.removeSparkListener(l)
     }
   }
+}
+
+/** Waits until the listener bus has delivered every event posted so
+  * far, so state fed by listeners (the status store behind
+  * `SparkContext.statusTracker`, a [[JobCount]] tally) is current.
+  */
+object ListenerBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
