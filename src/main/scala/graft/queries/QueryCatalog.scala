@@ -4523,7 +4523,7 @@ object QueryCatalog {
     Replay(s, root, Some(replayShuffleWidth(s, dir, "documents"))) { r =>
       r.tiles(docs.withColumn("__tile", F.ntile(3).over(w)), 3, dir)
       val idx = new graft.streaming.Bm25Index(
-        r.session, new graft.sources.Catalog(r.session, wh))
+        new graft.sources.Catalog(r.session, wh))
       idx.ensure()
       r.run(idx.writer(r.source(docs.schema), r.cp))
       idx.compact(maxFilesPerPartition = 2)
@@ -4564,7 +4564,7 @@ object QueryCatalog {
       Replay(s, root, Some(replayShuffleWidth(s, dir, "documents"))) { r =>
         r.tiles(docs.withColumn("__tile", F.ntile(3).over(w)), 3, dir)
         val idx = new graft.streaming.Bm25Index(
-          r.session, new graft.sources.Catalog(r.session, s"$root/wh"))
+          new graft.sources.Catalog(r.session, s"$root/wh"))
         idx.ensure()
         r.run(idx.writer(r.source(docs.schema), r.cp))
       }
@@ -4584,7 +4584,7 @@ object QueryCatalog {
     Replay(s, root, Some(replayShuffleWidth(s, dir, "documents"))) { r =>
       r.tiles(modified.withColumn("__tile", F.ntile(2).over(w)), 2, dir)
       val idx = new graft.streaming.Bm25Index(
-        r.session, new graft.sources.Catalog(r.session, wh))
+        new graft.sources.Catalog(r.session, wh))
       idx.delete(r.adopt(docs.filter(F.col("doc_id") % 7 === 3).select("doc_id")),
         seq = 10L)
       r.run(idx.writer(r.source(docs.schema), r.cp))
@@ -4625,7 +4625,7 @@ object QueryCatalog {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     Replay(s, root, Some(replayShuffleWidth(s, dir, "documents"))) { r =>
       val idx = new graft.streaming.Bm25Index(
-        r.session, new graft.sources.Catalog(r.session, wh))
+        new graft.sources.Catalog(r.session, wh))
       idx.replace(
         r.adopt(docs.filter(F.col("doc_id") % 9 === 4)
           .select(F.col("doc_id"),
@@ -4663,7 +4663,7 @@ object QueryCatalog {
     Replay(s, root, Some(replayShuffleWidth(s, dir, "documents"))) { r =>
       import r.session.implicits._
       val idx = new graft.streaming.Bm25Index(
-        r.session, new graft.sources.Catalog(r.session, wh))
+        new graft.sources.Catalog(r.session, wh))
       val queries = serveBatchQueries.zipWithIndex.flatMap { case (ts, qi) =>
         ts.map(t => (qi.toLong, t))
       }.toDF("query_id", "term")
@@ -5351,7 +5351,7 @@ object QueryCatalog {
             .withColumn("seq", F.lit(0L))
             .withColumn("pbk", pbkOf(F.col("id"))),
           Seq("pbk"))
-        new graft.streaming.OpLog(r.session, fcat, "corpus_ops",
+        new graft.streaming.OpLog(fcat, "corpus_ops",
           graft.streaming.OpLog.countPayload).commitCount(0L, corpus0.count())
       }
     }, wh)

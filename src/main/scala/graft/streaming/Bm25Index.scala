@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
-import graft.operators.{Retrieval, Tombstones, Upsert}
+import graft.operators.{Retrieval, Upsert}
 import graft.sources.Catalog
 
 /** Incrementally-maintained BM25 inverted index with full
@@ -63,7 +63,6 @@ import graft.sources.Catalog
   * path.
   */
 final class Bm25Index(
-    spark: SparkSession,
     cat: Catalog,
     buckets: Int = 64,
     k1: Double = 1.2,
@@ -83,44 +82,31 @@ final class Bm25Index(
   // doc_lengths is id-hash-partitioned (rk = hash(doc_id) % buckets),
   // so compaction derives its affected partitions driver-side from the
   // tombstone ids; postings' bk is a TERM hash and keeps the probe scan.
+  // Postings files are clustered by term for row-group `term IN` pruning.
   private val family = Generations.Family(cat,
-    new OpLog(spark, cat, "ops", statsPayload), "tombstones", tombSchema, "doc_id",
-    Seq(Generations.Stamped("postings", "bk", postSchema, "doc_id"),
-      Generations.Stamped("doc_lengths", "rk", dlSchema, "doc_id",
-        partOfId = Some(Generations.idHashPartition(buckets)))),
+    new OpLog(cat, "ops", statsPayload), "tombstones", tombSchema, "doc_id",
+    Seq(Generations.Stamped("postings", "bk", postSchema, "doc_id", "term",
+        sortWithin = Seq("term")),
+      Generations.Stamped("doc_lengths", "rk", dlSchema, "doc_id", "doc_id")),
     stamp = Some(s"bm25 v2 buckets=$buckets"))
   private def log = family.log
 
   def ensure(): Unit = family.ensure()
 
-  private def postings: DataFrame = cat.readWithSchema("postings", postSchema)
-  private def registry: DataFrame = cat.readWithSchema("doc_lengths", dlSchema)
-  private def tombs: DataFrame = cat.readWithSchema("tombstones", tombSchema)
+  /** The batch's (doc_id, text), one row per id: duplicate ids within
+    * one batch resolve to the lexicographically greatest text — an
+    * arbitrary but DETERMINISTIC winner (dropDuplicates keeps whichever
+    * row a partition scan meets first, which need not repeat across a
+    * crash replay). */
+  private def dedupe(batch: DataFrame): DataFrame = batch
+    .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
+    .groupBy("doc_id").agg(F.max("text").as("text"))
 
-  private def bucketOf = F.pmod(F.xxhash64(F.col("term")), F.lit(buckets.toLong))
-    .cast("int")
-
-  /** Writer width for clustered partitioned appends: the session's
-    * shuffle width capped at the bucket count (hashing by the bucket
-    * column alone can never fill more tasks than there are buckets). */
-  private def writeWidth: Int = math.min(
-    spark.conf.get("spark.sql.shuffle.partitions").toInt, buckets)
-
-  private def rkOf = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(buckets.toLong))
-    .cast("int")
-
-  /** The LIVE registry as of the committed ops: committed generations
-    * minus committed tombstones. Uncommitted (crashed / in-flight)
-    * rows never influence admission or victim selection — the property
-    * that makes replay-under-a-new-seq converge.
-    *
-    * Pinned to the op's ONE log snapshot (valid under the single-writer
-    * lease — nothing commits mid-op): visibility is literal seq
-    * filters pushed into the parquet scans instead of a broadcast
-    * anti-join against a live openSeqs subquery, which cost every op
-    * two extra ops-table scans and their AQE broadcast stages. */
-  private def liveRegistry(snap: OpLog.Snapshot): DataFrame =
-    Tombstones.live(snap.visible(registry), snap.visible(tombs))
+  /** Both appends of a generation: the postings and the registry. */
+  private def appendDocs(docs: DataFrame, seq: Long): Unit = {
+    family.append("postings", Retrieval.postingsWithDl(docs), seq)
+    family.append("doc_lengths", Retrieval.docLengths(docs), seq)
+  }
 
   /** Ingest one batch of (doc_id, text) as op `seq` — the foreachBatch
     * body. Insert-if-absent against the LIVE registry: an id currently
@@ -131,44 +117,22 @@ final class Bm25Index(
   def ingest(batch: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
     // both admission questions — the batch's id-hash partition values
     // (≤ `buckets` ints — prunes the registry scan) and its key count
-    // (guards the broadcast probe) — RIDE the checkpoint
-    // materialization as observed metrics instead of costing their own
-    // job (guide §1.2: the op used to pay ~15 tiny jobs; every fused
-    // aggregate is one fewer dispatch)
-    val probeObs = org.apache.spark.sql.Observation()
-    val deduped = batch
-      .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
-      // duplicate ids within one batch resolve to the lexicographically
-      // greatest text — an arbitrary but DETERMINISTIC winner
-      // (dropDuplicates keeps whichever row a partition scan meets
-      // first, which need not repeat across a crash replay)
-      .groupBy("doc_id").agg(F.max("text").as("text"))
-      .observe(probeObs,
-        F.collect_set(rkOf).as("rks"), F.count(F.lit(1)).as("n"))
-      .localCheckpoint() // reused: admission + appends
-    val probe = probeObs.get
-    val rks = probe("rks").asInstanceOf[Seq[Any]]
-    val pruned = liveRegistry(snap).filter(F.col("rk").isin(rks: _*)).select("doc_id")
+    // (guards the broadcast probe) — ride the batch checkpoint
+    val probe = family.probe("doc_lengths", dedupe(batch))
+    val pruned = family.live(snap, "doc_lengths").filter(probe.prune).select("doc_id")
     // the commit stats RIDE the admission checkpoint as observed
     // metrics (the observe node sits in the checkpoint action's result
     // stage — exactly-once under task retries, unlike an observe below
     // a write's repartition exchange) — the old 1-row agg job
     // re-tokenized `admitted` a third time
     val statsObs = org.apache.spark.sql.Observation()
-    val admitted = Upsert.newRowsSized(deduped, pruned, "doc_id",
-        probe("n").asInstanceOf[Long])
+    val admitted = Upsert.newRowsSized(probe.rows, pruned, "doc_id", probe("n"))
       .observe(statsObs,
         F.count(F.lit(1)).as("n_docs"),
         F.coalesce(F.sum(Retrieval.dlOf(F.col("text"))), F.lit(0L))
           .as("total_dl"))
       .localCheckpoint() // referenced by both appends below
-    val dls = Retrieval.docLengths(admitted).withColumn("seq", F.lit(seq))
-    cat.appendPartitioned("postings",
-      Retrieval.postingsWithDl(admitted)
-        .withColumn("seq", F.lit(seq)).withColumn("bk", bucketOf),
-      Seq("bk"), clusterInto = Some(writeWidth), sortWithin = Seq("term"))
-    cat.appendPartitioned("doc_lengths", dls.withColumn("rk", rkOf), Seq("rk"),
-      clusterInto = Some(writeWidth))
+    appendDocs(admitted, seq)
     val st = statsObs.get
     Seq(st("n_docs").asInstanceOf[Long], st("total_dl").asInstanceOf[Long])
   }
@@ -181,21 +145,16 @@ final class Bm25Index(
     * not manage its own sequence.
     */
   def delete(ids: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
-    // the rk probe rides the id-set checkpoint as an observed metric
-    // (one fewer job; the observe sits in the checkpoint's result stage)
-    val rkObs = org.apache.spark.sql.Observation()
-    val idsD = ids.select(F.col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates("doc_id")
-      .observe(rkObs, F.collect_set(rkOf).as("rks"))
-      .localCheckpoint() // reused: victim join + (lazily) nothing else
-    // prune the registry scan to the delete set's id-hash partitions
-    // (≤ `buckets` values); join strategy is left to AQE — a takedown
-    // batch is usually broadcast-sized but need not be
-    val rks = rkObs.get("rks").asInstanceOf[Seq[Any]]
-    // the NEGATIVE commit stats ride the victim checkpoint the same way
+    // the rk probe rides the id-set checkpoint; the registry scan is
+    // pruned to the delete set's id-hash partitions (≤ `buckets`
+    // values); join strategy is left to AQE — a takedown batch is
+    // usually broadcast-sized but need not be
+    val probe = family.probe("doc_lengths",
+      ids.select(F.col("doc_id").cast("long").as("doc_id")).dropDuplicates("doc_id"))
+    // the NEGATIVE commit stats ride the victim checkpoint
     val statsObs = org.apache.spark.sql.Observation()
-    val victims = liveRegistry(snap).filter(F.col("rk").isin(rks: _*))
-      .join(idsD, Seq("doc_id"), "leftsemi")
+    val victims = family.live(snap, "doc_lengths").filter(probe.prune)
+      .join(probe.rows, Seq("doc_id"), "leftsemi")
       .observe(statsObs,
         F.count(F.lit(1)).as("n"),
         F.coalesce(F.sum("dl"), F.lit(0L)).as("sdl"))
@@ -224,58 +183,37 @@ final class Bm25Index(
     * converge by the standard scrub-then-redo.
     */
   def replace(batch: DataFrame, seq: Long): Unit = family.op(Some(seq)) { (snap, _) =>
-    // the rk probe and the ADDED-side stats ride the batch checkpoint
-    // as observed metrics; the KILLED-side stats ride the victim
-    // checkpoint — the old form paid three extra jobs (probe, added
-    // agg, killed agg via the commit's 1-row head). Every observe sits
-    // in its checkpoint action's result stage (exactly-once).
-    val addObs = org.apache.spark.sql.Observation()
-    val deduped = batch
-      .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
-      .groupBy("doc_id").agg(F.max("text").as("text"))
-      .observe(addObs,
-        F.collect_set(rkOf).as("rks"),
-        F.count(F.lit(1)).as("an"),
-        F.coalesce(F.sum(Retrieval.dlOf(F.col("text"))), F.lit(0L)).as("adl"))
-      .localCheckpoint() // reused: victims + appends
-    val add = addObs.get
-    val rks = add("rks").asInstanceOf[Seq[Any]]
+    // the rk probe and the ADDED-side stats ride the batch checkpoint;
+    // the KILLED-side stats ride the victim checkpoint — the old form
+    // paid three extra jobs (probe, added agg, killed agg via the
+    // commit's 1-row head)
+    val add = family.probe("doc_lengths", dedupe(batch),
+      F.coalesce(F.sum(Retrieval.dlOf(F.col("text"))), F.lit(0L)).as("adl"))
     // the batch ids' currently-live generations: these die at `seq`
     // (their dl leaves the global stats); the probe shape is the same
     // zero-state-shuffle admission plan, semi instead of anti
     val killObs = org.apache.spark.sql.Observation()
-    val victims = liveRegistry(snap).filter(F.col("rk").isin(rks: _*))
-      .join(F.broadcast(deduped.select("doc_id")), Seq("doc_id"), "leftsemi")
+    val victims = family.live(snap, "doc_lengths").filter(add.prune)
+      .join(F.broadcast(add.rows.select("doc_id")), Seq("doc_id"), "leftsemi")
       .observe(killObs,
         F.count(F.lit(1)).as("kn"),
         F.coalesce(F.sum("dl"), F.lit(0L)).as("kdl"))
       .localCheckpoint() // referenced by tombstone append
-    val dls = Retrieval.docLengths(deduped).withColumn("seq", F.lit(seq))
-    cat.appendPartitioned("postings",
-      Retrieval.postingsWithDl(deduped)
-        .withColumn("seq", F.lit(seq)).withColumn("bk", bucketOf),
-      Seq("bk"), clusterInto = Some(writeWidth), sortWithin = Seq("term"))
-    cat.appendPartitioned("doc_lengths", dls.withColumn("rk", rkOf), Seq("rk"),
-      clusterInto = Some(writeWidth))
+    appendDocs(add.rows, seq)
     cat.append("tombstones",
       victims.select(F.col("doc_id"), F.lit(seq).as("seq")))
     // ONE commit row carries the net delta: adds minus kills
     val kill = killObs.get
-    Seq(add("an").asInstanceOf[Long] - kill("kn").asInstanceOf[Long],
-      add("adl").asInstanceOf[Long] - kill("kdl").asInstanceOf[Long])
+    Seq(add("n") - kill("kn").asInstanceOf[Long],
+      add("adl") - kill("kdl").asInstanceOf[Long])
   }
 
-  /** A continuous ingestion stream: each micro-batch runs [[ingest]]
-    * (or, with `replaceMode`, [[replace]] — the RECRAWL stream: a
-    * re-fetched page overwrites its live generation instead of being
-    * dropped as already-present) at `base + batchId`, where `base` is
-    * DERIVED from the op log's high-water mark at writer
-    * construction — so a restarted stream (from its checkpoint or from
-    * scratch) can never collide with a committed op. A caller-supplied
-    * `baseSeq` is validated loudly against the same mark instead of
-    * silently no-opping every batch. Replayed in-flight batches run
-    * under the new base's seq and converge via committed-only reads
-    * (class doc).
+  /** A continuous ingestion stream ([[Generations.Family.writer]]):
+    * each micro-batch runs [[ingest]] (or, with `replaceMode`,
+    * [[replace]] — the RECRAWL stream: a re-fetched page overwrites its
+    * live generation instead of being dropped as already-present) at
+    * `base + batchId`, with `base` derived from (or `baseSeq` validated
+    * against) the op log's high-water mark.
     *
     * Replace-mode tombstone cadence: every batch tombstones its live
     * victims, so a recrawl-heavy stream accretes tombstones at the
@@ -288,17 +226,10 @@ final class Bm25Index(
       docs: DataFrame,
       checkpoint: String,
       baseSeq: Option[Long] = None,
-      replaceMode: Boolean = false): DataStreamWriter[Row] = {
-    family.heal()
-    val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (replaceMode) replace(batch, base + id)
-        else ingest(batch, base + id)
-      }
-  }
+      replaceMode: Boolean = false): DataStreamWriter[Row] =
+    family.writer(docs, checkpoint, baseSeq) { (batch, seq) =>
+      if (replaceMode) replace(batch, seq) else ingest(batch, seq)
+    }
 
   /** Top-k BM25 over the CURRENT live corpus, served purely from the
     * index — bit-equal to [[Retrieval.bm25TopK]] over the equivalent
@@ -314,16 +245,11 @@ final class Bm25Index(
     require(terms.nonEmpty, "serve needs at least one query term")
     family.heal(lenient = true)
     val snap = log.snapshot()
-    // the query terms' bucket ids — same hash the writer used, so
-    // pruning can never disagree with placement; one 1-row collect
-    val bkRow = spark.range(1).select(terms.map(t =>
-      F.pmod(F.xxhash64(F.lit(t)), F.lit(buckets.toLong)).cast("int").as(t)): _*)
-      .head()
-    val bks = terms.indices.map(bkRow.getInt).distinct
-    val hits = Tombstones.live(
-      snap.visible(postings
-        .filter(F.col("bk").isin(bks: _*) && F.col("term").isin(terms: _*))),
-      snap.visible(tombs))
+    // the query terms' bucket ids — the writer's hash, computed
+    // driver-side, so pruning can never disagree with placement
+    val bks = terms.map(family.partitionOf("postings", _)).distinct
+    val hits = family.live(snap, "postings",
+      _.filter(F.col("bk").isin(bks: _*) && F.col("term").isin(terms: _*)))
     val tfAggs = terms.zipWithIndex.map { case (t, i) =>
       F.coalesce(F.sum(F.when(F.col("term") === t, F.col("tf"))), F.lit(0L))
         .as(s"tf$i")
@@ -374,14 +300,11 @@ final class Bm25Index(
       .select(F.col("query_id").cast("long").as("query_id"), F.col("term"))
       .dropDuplicates("query_id", "term")
       .localCheckpoint() // reused: bk probe + term set + hit join
-    val bks = q.select(F.pmod(F.xxhash64(F.col("term")), F.lit(buckets.toLong))
-        .cast("int").as("bk")).distinct()
+    val bks = q.select(family.partition("postings")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val qterms = q.select("term").distinct()
-    val live = Tombstones.live(
-      snap.visible(postings.filter(F.col("bk").isin(bks: _*))
-        .join(F.broadcast(qterms), Seq("term"), "leftsemi")),
-      snap.visible(tombs))
+    val live = family.live(snap, "postings", _.filter(F.col("bk").isin(bks: _*))
+      .join(F.broadcast(qterms), Seq("term"), "leftsemi"))
     // one live row per (term, doc): df = per-term row count
     val dfs = live.groupBy("term").agg(F.count(F.lit(1)).as("df"))
     val global = snap.rows

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, functions => F}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import graft.operators.Tombstones
 import graft.sources.Catalog
 
@@ -14,9 +17,9 @@ import graft.sources.Catalog
   *
   * Partition-local by construction: each table's affected partitions
   * are derived DRIVER-SIDE from the collected tombstone ids when the
-  * table is id-hash-partitioned ([[Stamped.partOfId]] — zero probe
-  * jobs), or probed (bounded by the partition count) when the
-  * partition key is not a function of the id (the BM25 postings'
+  * table is id-hash-partitioned (its [[Stamped.hashCol]] is its id —
+  * zero probe jobs), or probed (bounded by the partition count) when
+  * the partition key is not a function of the id (the BM25 postings'
   * term-hash buckets); [[graft.sources.Catalog.compactPartitioned]]
   * rewrites those plus any partition over the small-file threshold —
   * untouched partitions' files are byte-identical afterwards
@@ -54,18 +57,18 @@ object Generations {
 
   /** One table of a stamped family: hive-partitioned on `partCol`, id
     * column `idCol` (what tombstones kill by), generation column `seq`.
-    * `partOfId` — present when `partCol` is a pure function of the id
-    * (the id-hash bucket tables) — maps an id to its partition value
-    * DRIVER-SIDE, replacing the doomed-partition probe job with a map
-    * over the already-collected tombstone ids. It MUST agree with the
-    * writer's hash (use [[idHashPartition]]); when absent the probe
-    * scan runs as before. */
+    * `partCol` holds the family's hash bucket of `hashCol`
+    * ([[Family.partition]]); when `hashCol` is the id, compaction maps a
+    * tombstone id to its partition DRIVER-SIDE ([[idHashPartition]])
+    * instead of probing. `sortWithin` clusters rows inside each written
+    * file (the postings' `term`, for row-group pruning). */
   final case class Stamped(
       table: String,
       partCol: String,
       schema: StructType,
       idCol: String,
-      partOfId: Option[Long => String] = None)
+      hashCol: String,
+      sortWithin: Seq[String] = Nil)
 
   /** One index family: its op log, its flat tombstone table
     * (`tombIdCol` is the id a tombstone kills) and its stamped
@@ -78,10 +81,17 @@ object Generations {
     *    partition swaps and the tombstone table's replace, before any
     *    probe or read;
     *  - [[scrub]] removes one crashed attempt's rows from every table;
-    *  - [[op]] runs an op body through [[OpLog.span]];
+    *  - [[op]] runs an op body through [[OpLog.span]], and [[writer]]
+    *    runs one op per micro-batch of a stream;
+    *  - inside an op, [[live]] reads a table's committed live rows,
+    *    [[probe]] checkpoints the op's batch and [[append]] writes a
+    *    generation;
     *  - [[Generations.compact]] is its maintenance pass.
-    * A view that omits a table (a delete, which writes tombstones only
-    * and reads the first table) heals and scrubs only what it names. */
+    * The hash modulus every stored partition value bakes in is the one
+    * the layout `stamp` records ([[stampBuckets]]), so the writer, the
+    * compaction and the serve prune read one definition. A view that
+    * omits a table (a delete, which writes tombstones only and reads
+    * the first table) heals and scrubs only what it names. */
   final case class Family(
       cat: Catalog,
       log: OpLog,
@@ -90,6 +100,17 @@ object Generations {
       tombIdCol: String,
       tables: Seq[Stamped],
       stamp: Option[String] = None) {
+
+    /** The hash modulus of the partition values, when the stamp is known. */
+    val buckets: Option[Int] = stampBuckets(stamp)
+
+    private def modulus: Int = buckets.getOrElse(throw new IllegalStateException(
+      s"family of '${tables.head.table}' was opened without its layout stamp, " +
+        "which records the partition hash modulus"))
+
+    private def stamped(table: String): Stamped = tables.find(_.table == table)
+      .getOrElse(throw new IllegalArgumentException(
+        s"'$table' is not a stamped table of this family view"))
 
     def ensure(): Unit = {
       tables.foreach(t => cat.ensurePartitionedTable(t.table))
@@ -137,6 +158,88 @@ object Generations {
     def op(seq: Option[Long])(body: (OpLog.Snapshot, Long) => Seq[Long]): Unit =
       log.span(seq, { heal(); ensure() }, scrub)(body)
 
+    /** A continuous op stream: micro-batch `id` runs `batchOp` at seq
+      * `base + id`, where `base` is DERIVED from the op log's high-water
+      * mark at writer construction — so a restarted stream (from its
+      * checkpoint or from scratch) can never collide with a committed
+      * op. A caller-supplied `baseSeq` is validated loudly against the
+      * same mark instead of silently no-opping every batch. Replayed
+      * in-flight batches run under the new base's seq and converge via
+      * committed-only reads. */
+    def writer(stream: DataFrame, checkpoint: String, baseSeq: Option[Long])(
+        batchOp: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+      heal()
+      ensure()
+      val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
+      stream.writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, id: Long) => batchOp(batch, base + id) }
+    }
+
+    /** The LIVE rows of `table` as of `snap`'s committed ops: committed
+      * generations minus committed tombstones. Uncommitted (crashed /
+      * in-flight) rows never influence admission, victim selection or
+      * serving — the property that makes replay-under-a-new-seq
+      * converge. Visibility is literal seq filters pushed into both
+      * parquet scans. `keep` narrows the table's rows before the
+      * tombstone join (a serve's query-term semi-join, which the
+      * optimizer does not push below that join itself). */
+    def live(snap: OpLog.Snapshot, table: String,
+        keep: DataFrame => DataFrame = identity): DataFrame = {
+      val t = stamped(table)
+      val tombs = snap.visible(cat.readWithSchema(tombTable, tombSchema))
+      Tombstones.live(snap.visible(keep(cat.readWithSchema(t.table, t.schema))),
+        if (t.idCol == tombIdCol) tombs else tombs.withColumnRenamed(tombIdCol, t.idCol),
+        t.idCol)
+    }
+
+    /** `table`'s partition value, the one partition expression of every
+      * stamped table: `pmod(xxhash64(hashCol), modulus)` as an int. */
+    def partition(table: String): Column =
+      F.pmod(F.xxhash64(F.col(stamped(table).hashCol)), F.lit(modulus.toLong))
+        .cast("int")
+
+    /** Driver-side twin of [[partition]] for one value of `table`'s
+      * hashed column. */
+    def partitionOf(table: String, value: Any): Int = {
+      val t = stamped(table)
+      hashPartition(modulus, CatalystTypeConverters.convertToCatalyst(value),
+        t.schema(t.hashCol).dataType)
+    }
+
+    /** Checkpoint an op's deduplicated batch (`deduped` carries
+      * `table`'s hashed column). Which of `table`'s partitions the batch
+      * touches (≤ the modulus) and its row count `n` — plus `extra`
+      * aggregates — RIDE the checkpoint materialization as observed
+      * metrics instead of costing their own jobs; the observe sits in
+      * the checkpoint action's result stage, so it counts exactly once
+      * under task retries. */
+    def probe(table: String, deduped: DataFrame, extra: Column*): Probe = {
+      val obs = org.apache.spark.sql.Observation()
+      val rows = deduped
+        .observe(obs, F.collect_set(partition(table)).as("parts"),
+          (F.count(F.lit(1)).as("n") +: extra): _*)
+        .localCheckpoint() // reused by the op's reads and appends
+      val observed = obs.get
+      Probe(rows, F.col(stamped(table).partCol)
+        .isin(observed("parts").asInstanceOf[Seq[Any]]: _*), observed)
+    }
+
+    /** Append `rows` to `table` as generation `seq`, partitioned by
+      * [[partition]]. The rows are clustered by partition into the
+      * session's shuffle width capped at the modulus (hashing by the
+      * partition column alone can never fill more tasks), so each
+      * partition value lands in one file per op. */
+    def append(table: String, rows: DataFrame, seq: Long): Unit = {
+      val t = stamped(table)
+      val width = math.min(
+        cat.spark.conf.get("spark.sql.shuffle.partitions").toInt, modulus)
+      cat.appendPartitioned(t.table,
+        rows.withColumn("seq", F.lit(seq)).withColumn(t.partCol, partition(table)),
+        Seq(t.partCol), clusterInto = Some(width), sortWithin = t.sortWithin)
+    }
+
     /** Delete ids as one op: tombstone the COMMITTED LIVE generations of
       * `ids` (a frame carrying `tombIdCol`) in the first table. One
       * tombstone row kills the id's generation in every table of the
@@ -148,10 +251,7 @@ object Generations {
       // the commit count rides the victim checkpoint as an observed
       // metric (result-stage observe: exactly-once) — one fewer job
       val countObs = org.apache.spark.sql.Observation()
-      val victims = Tombstones.live(
-          snap.visible(cat.readWithSchema(tables.head.table, tables.head.schema)),
-          snap.visible(cat.readWithSchema(tombTable, tombSchema)),
-          tombIdCol)
+      val victims = live(snap, tables.head.table)
         .join(ids.select(F.col(tombIdCol).cast("long").as(tombIdCol))
           .dropDuplicates(tombIdCol), Seq(tombIdCol), "leftsemi")
         .select(F.col(tombIdCol), F.lit(sv).as("seq"))
@@ -162,24 +262,33 @@ object Generations {
     }
   }
 
-  /** The driver-side twin of the writers' partition expression
-    * `pmod(xxhash64(id), lit(buckets)).cast("int")` — same XXH64 seed
-    * (42), same sign-safe modulus (spec-pinned against the Column form
-    * over a wide id range). */
-  def idHashPartition(buckets: Int): Long => String = { id =>
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      .hash(id, org.apache.spark.sql.types.LongType, 42L)
-    val b = buckets.toLong
-    (((h % b) + b) % b).toInt.toString
+  /** An op batch checkpointed by [[Family.probe]]: `prune` keeps the
+    * probed table's rows in the partitions the batch touches, and
+    * `observed` holds the batch's row count `n` and the extra
+    * aggregates. */
+  final case class Probe(rows: DataFrame, prune: Column, observed: Map[String, Any]) {
+    def apply(metric: String): Long = observed(metric).asInstanceOf[Long]
   }
 
-  /** Parse the id-hash modulus out of a family layout stamp
-    * (`... stateBuckets=N ...`) — how the dedup/vector compaction
-    * helpers recover the modulus their rows were written under without
-    * widening their signatures. None (→ probe fallback) when the stamp
-    * is absent or unparseable. */
-  def stampBuckets(stamp: Option[String]): Option[Int] =
-    stamp.flatMap("""stateBuckets=(\d+)""".r.findFirstMatchIn(_))
+  /** The driver-side twin of [[Family.partition]] over one catalyst value
+    * of `dataType` — same XXH64 seed (42), same sign-safe modulus
+    * (spec-pinned against what [[Family.append]] writes). */
+  def hashPartition(buckets: Int, value: Any, dataType: DataType): Int = {
+    val h = XxHash64Function.hash(value, dataType, 42L)
+    val b = buckets.toLong
+    (((h % b) + b) % b).toInt
+  }
+
+  /** [[hashPartition]] of a long id, as its stored partition value. */
+  def idHashPartition(buckets: Int): Long => String =
+    id => hashPartition(buckets, id, LongType).toString
+
+  /** Parse the hash modulus out of a family layout stamp
+    * (`... buckets=N ...` or `... stateBuckets=N ...`). None when the
+    * stamp is absent or unparseable: the family can then neither append
+    * nor map ids to partitions, and compaction probes instead. */
+  private def stampBuckets(stamp: Option[String]): Option[Int] =
+    stamp.flatMap("""[bB]uckets=(\d+)""".r.findFirstMatchIn(_))
       .map(_.group(1).toInt)
 
   def compact(
@@ -213,7 +322,7 @@ object Generations {
     val haveTombs = committedRows.nonEmpty
     val committedTombs = cat.spark.createDataFrame(
       java.util.Arrays.asList(committedRows: _*), tombSchema)
-    // per-table work: probe (only where partOfId can't answer) + the
+    // per-table work: probe (only for tables not hashed by id) + the
     // staged partition rewrite. Independent across tables — run them
     // CONCURRENTLY (guide §2.6) under lease delegation so the swap
     // points' fencing still sees the family lease from worker threads.
@@ -234,7 +343,9 @@ object Generations {
       // any partition of the batch that crashed — when any exist, a
       // pushed-filter probe names their partitions; tables without an
       // id→partition map keep the full doomed-probe join.
-      val forced: Seq[String] = t.partOfId match {
+      val partOfId =
+        if (t.hashCol == t.idCol) buckets.map(idHashPartition) else None
+      val forced: Seq[String] = partOfId match {
         case Some(f) =>
           val fromTombs: Seq[String] =
             if (!haveTombs) Nil

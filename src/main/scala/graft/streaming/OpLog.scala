@@ -51,7 +51,6 @@ import graft.sources.Catalog
   * committed seq).
   */
 final class OpLog(
-    spark: SparkSession,
     cat: Catalog,
     val table: String,
     payload: StructType) {
@@ -136,7 +135,7 @@ final class OpLog(
     * appends: nothing commits concurrently within the span. */
   def snapshot(): OpLog.Snapshot = {
     heal(lenient = true)
-    new OpLog.Snapshot(spark, schema, marker,
+    new OpLog.Snapshot(cat.spark, schema, marker,
       cat.readWithSchema(table, schema).collect())
   }
 
@@ -303,7 +302,7 @@ final class OpLog(
   private def rewrite(kept: Array[Row]): Unit = withWriter {
     ensure()
     cat.replaceTable(table,
-      spark.createDataFrame(java.util.Arrays.asList(kept: _*), schema).coalesce(1))
+      cat.spark.createDataFrame(java.util.Arrays.asList(kept: _*), schema).coalesce(1))
   }
 }
 

@@ -26,13 +26,6 @@ import graft.sources.Catalog
   */
 object Streams {
 
-  /** Writer width for clustered partitioned appends (see
-    * [[graft.sources.Catalog.appendPartitioned]]): the session's shuffle
-    * width capped at the family's bucket count — hashing by the bucket
-    * column alone can never fill more tasks than there are buckets. */
-  private def writeWidth(spark: SparkSession, buckets: Int): Int =
-    math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, buckets)
-
   /** Continuous CSV trip ingestion from a drop directory (S1/S8). */
   def tripFileStream(spark: SparkSession, dropDir: String, maxFilesPerTrigger: Int = 16): DataFrame =
     spark.readStream
@@ -73,8 +66,15 @@ object Streams {
   def docFileStream(spark: SparkSession, dropDir: String, maxFilesPerTrigger: Int = 16): DataFrame =
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .schema(StructType.fromDDL("doc_id BIGINT, text STRING"))
+      .schema(docSchema)
       .json(dropDir)
+
+  /** A document row, and the flat corpus table's layout. */
+  private val docSchema: StructType = StructType.fromDDL("doc_id BIGINT, text STRING")
+
+  /** The flat bucket table's layout ([[graft.operators.Dedup.bucketTableMd5]]). */
+  private val flatBucketSchema: StructType =
+    StructType.fromDDL("id BIGINT, band INT, bk BIGINT")
 
   /** Streaming incremental near-dup dedup — the production corpus-refresh
     * shape: each micro-batch probes the PERSISTED bucket table
@@ -216,9 +216,6 @@ object Streams {
         .localCheckpoint(false) // reused: bucket filter + corpus append
       (newBuckets, admitted)
     }
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
     tombTable match {
       case None =>
         // append-only mode on flat tables: probe-and-skip replay
@@ -236,49 +233,42 @@ object Streams {
         // ceiling only for backfill-sized batches, which belong in the
         // tombstone-aware mode below (full OpLog scrub-then-redo, no
         // atomicity requirement) — prefer it in production generally.
-        //
-        // Crash-window consistency (the two appends are not one atomic
-        // commit): ADMISSION AUTHORITY IS THE CORPUS (the id
-        // anti-join), the bucket table is a probe index. Buckets are
-        // written FIRST, so a crash between the writes leaves the index
-        // LEADING the corpus, never trailing it: on replay the batch
-        // re-admits (ids absent from the corpus), its stale bucket rows
-        // produce only self-pairs (filtered) or pairs the batch-batch
-        // rule resolves identically, and the bucket re-append
-        // anti-joins already-bucketed ids so replays never duplicate
-        // index rows. The reverse order would silently strand admitted
-        // docs without buckets — invisible to every future probe.
-        writer.foreachBatch { (batch: DataFrame, _: Long) =>
-          // a fired-empty micro-batch (batch 0 racing the first file
-          // drop) must not append: the one-file-per-batch atomic-commit
-          // pin counts FILES, and empty appends would add noise files
-          // with no rows (matching the guards in the serve paths)
-          if (!batch.isEmpty) {
-            catalog.recoverReplace(corpusTable)
-            catalog.recoverReplace(bucketTable)
-            val corpus = catalog.read(corpusTable)
-            // pairs are strictly a < b, so a re-dropped id can never
-            // pair with itself — id-level admission must happen first
-            val fresh = hygiene(Upsert.newRows(batch, corpus, "doc_id"))
-            val liveBuckets = catalog.read(bucketTable)
-            val (newBuckets, admitted) = screen(fresh, corpus, liveBuckets)
-            // an all-rejected batch admits nothing: skip the appends
-            // entirely — coalesce(1) on zero rows still writes a
-            // schema-only file, and the one-file-per-batch atomicity
-            // pin counts files (both appends are ⋉ admitted, so both
-            // are empty exactly when admitted is)
-            if (!admitted.isEmpty) {
-              val alreadyBucketed = liveBuckets.select("id")
-                .join(newBuckets.select("id").distinct(), Seq("id"), "leftsemi")
-              catalog.append(bucketTable, newBuckets
-                .join(admitted.select(F.col("doc_id").as("id")), Seq("id"), "leftsemi")
-                .join(alreadyBucketed, Seq("id"), "leftanti")
-                .coalesce(1))
-              catalog.append(corpusTable,
-                admitted.select("doc_id", "text").coalesce(1))
+        // Buckets are appended before the corpus (crash-window
+        // consistency: see the doc above).
+        docs.writeStream
+          .outputMode(OutputMode.Append)
+          .option("checkpointLocation", checkpoint)
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            // a fired-empty micro-batch (batch 0 racing the first file
+            // drop) must not append: the one-file-per-batch atomic-commit
+            // pin counts FILES, and empty appends would add noise files
+            // with no rows (matching the guards in the serve paths)
+            if (!batch.isEmpty) {
+              catalog.recoverReplace(corpusTable)
+              catalog.recoverReplace(bucketTable)
+              val corpus = catalog.readWithSchema(corpusTable, docSchema)
+              // pairs are strictly a < b, so a re-dropped id can never
+              // pair with itself — id-level admission must happen first
+              val fresh = hygiene(Upsert.newRows(batch, corpus, "doc_id"))
+              val liveBuckets = catalog.readWithSchema(bucketTable, flatBucketSchema)
+              val (newBuckets, admitted) = screen(fresh, corpus, liveBuckets)
+              // an all-rejected batch admits nothing: skip the appends
+              // entirely — coalesce(1) on zero rows still writes a
+              // schema-only file, and the one-file-per-batch atomicity
+              // pin counts files (both appends are ⋉ admitted, so both
+              // are empty exactly when admitted is)
+              if (!admitted.isEmpty) {
+                val alreadyBucketed = liveBuckets.select("id")
+                  .join(newBuckets.select("id").distinct(), Seq("id"), "leftsemi")
+                catalog.append(bucketTable, newBuckets
+                  .join(admitted.select(F.col("doc_id").as("id")), Seq("id"), "leftsemi")
+                  .join(alreadyBucketed, Seq("id"), "leftanti")
+                  .coalesce(1))
+                catalog.append(corpusTable,
+                  admitted.select("doc_id", "text").coalesce(1))
+              }
             }
           }
-        }
       case Some(tt) =>
         // tombstone-aware mode: the production lifecycle. Corpus and
         // bucket rows are generation-stamped and id-hash-partitioned
@@ -297,85 +287,46 @@ object Streams {
         // near-duplicates of all prior content (LayoutMismatch instead)
         val family = dedupFamily(catalog, corpusTable, Some(bucketTable), tt,
           Some(dedupLayoutStamp(stateBuckets, shingleLen, numHashes, bands)))
-        family.ensure()
-        val log = family.log
-        val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
-        def pbkOf(c: org.apache.spark.sql.Column) =
-          F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-        if (replaceMode)
-          // RECRAWL stream: each micro-batch is ONE editorial replace
-          // op ([[replaceDocsInDedup]]) — re-fetched pages overwrite
-          // their live generations; the near-dup screen and hygiene
-          // gates do NOT run (ON CONFLICT DO UPDATE semantics —
-          // callers wanting masking pre-mask the stream). Tombstones
-          // accrete at the recrawl rate until [[compactDocDedup]]
-          // applies them — compact on a cadence proportional to it
-          // (the Tombstones.live size guard makes an overdue
-          // compaction a throughput cost, never a correctness one)
-          return writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        family.writer(docs, checkpoint, baseSeq) { (batch, seq) =>
+          if (replaceMode)
+            // RECRAWL stream: each micro-batch is ONE editorial replace
+            // op ([[replaceDocsInDedup]]) — re-fetched pages overwrite
+            // their live generations; the near-dup screen and hygiene
+            // gates do NOT run (ON CONFLICT DO UPDATE semantics —
+            // callers wanting masking pre-mask the stream). Tombstones
+            // accrete at the recrawl rate until [[compactDocDedup]]
+            // applies them — compact on a cadence proportional to it
+            // (the Tombstones.live size guard makes an overdue
+            // compaction a throughput cost, never a correctness one)
             replaceDocsInDedup(catalog, corpusTable, bucketTable, tt,
-              batch, stateBuckets, seq = Some(base + batchId),
+              batch, stateBuckets, seq = Some(seq),
               shingleLen = shingleLen, numHashes = numHashes, bands = bands)
-          }
-        writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one op of the family (Generations.Family.op): the snapshot
-          // answers replay flags and all three tables' visibility as
-          // literal pushed filters
-          family.op(Some(base + batchId)) { (snap, seq) =>
-            val tomb = snap.visible(catalog.read(tt))
-            val corpus = graft.operators.Tombstones.live(
-              snap.visible(
-                catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
-              tomb, "doc_id")
-            val liveBuckets = graft.operators.Tombstones.live(
-              snap.visible(
-                catalog.readWithSchema(bucketTable, dedupBucketSchema)),
-              tomb.withColumnRenamed("doc_id", "id"), "id")
-            // duplicate ids within one batch resolve deterministically
-            // (see Bm25Index.ingest). The batch's id-hash partition
-            // values (prunes the corpus-side admission scan) and its
-            // key count (guards the broadcast probe) RIDE the
-            // checkpoint materialization as observed metrics — one
-            // fewer job per op (the observe sits in the checkpoint
-            // action's result stage: exactly-once under retries)
-            val probeObs = org.apache.spark.sql.Observation()
-            val deduped = batch
-              .groupBy("doc_id").agg(F.max("text").as("text"))
-              .observe(probeObs,
-                F.collect_set(pbkOf(F.col("doc_id"))).as("pbks"),
-                F.count(F.lit(1)).as("n"))
-              .localCheckpoint() // reused: admission + screen
-            val probe = probeObs.get
-            val pbks = probe("pbks").asInstanceOf[Seq[Any]]
-            val prunedIds = corpus
-              .filter(F.col("pbk").isin(pbks: _*)).select("doc_id")
-            val fresh = hygiene(Upsert.newRowsSized(deduped, prunedIds,
-              "doc_id", probe("n").asInstanceOf[Long]))
-            val (newBuckets, admitted) = screen(fresh, corpus, liveBuckets)
-            catalog.appendPartitioned(bucketTable, newBuckets
-                .join(admitted.select(F.col("doc_id").as("id")), Seq("id"), "leftsemi")
-                .withColumn("seq", F.lit(seq))
-                .withColumn("pbk", pbkOf(F.col("id"))),
-              Seq("pbk"),
-              clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-            catalog.appendPartitioned(corpusTable, admitted
-                .select("doc_id", "text")
-                .withColumn("seq", F.lit(seq))
-                .withColumn("pbk", pbkOf(F.col("doc_id"))),
-              Seq("pbk"),
-              clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-            Seq(admitted.count())
-          }
+          else
+            // one op of the family (Generations.Family.op): the snapshot
+            // answers replay flags and all three tables' visibility as
+            // literal pushed filters
+            family.op(Some(seq)) { (snap, sv) =>
+              val corpus = family.live(snap, corpusTable)
+              val liveBuckets = family.live(snap, bucketTable)
+              // duplicate ids within one batch resolve deterministically
+              // (see Bm25Index.ingest); the batch's id-hash partition
+              // values prune the corpus-side admission scan and its key
+              // count guards the broadcast probe
+              val probe = family.probe(corpusTable,
+                batch.groupBy("doc_id").agg(F.max("text").as("text")))
+              val prunedIds = corpus.filter(probe.prune).select("doc_id")
+              val fresh = hygiene(Upsert.newRowsSized(probe.rows, prunedIds,
+                "doc_id", probe("n")))
+              val (newBuckets, admitted) = screen(fresh, corpus, liveBuckets)
+              family.append(bucketTable, newBuckets
+                .join(admitted.select(F.col("doc_id").as("id")), Seq("id"), "leftsemi"), sv)
+              family.append(corpusTable, admitted.select("doc_id", "text"), sv)
+              Seq(admitted.count())
+            }
         }
     }
   }
 
-  /** Canonical layouts of the tombstone-aware dedup index family:
-    * corpus and bucket tables are generation-stamped (`seq`) and
-    * hive-partitioned by an id-hash bucket (`pbk`) so op scrubs and
-    * tombstone application rewrite only the partitions holding affected
-    * rows, and the per-batch admission scan prunes to the batch's
-    * buckets. */
   /** The dedup family's LAYOUT STAMP covers every parameter baked into
     * stored rows: `stateBuckets` shapes the `pbk` partition values, and
     * (shingleLen, numHashes, bands) shape every bucket row's
@@ -401,6 +352,12 @@ object Streams {
       stateBuckets: Int, nlist: Int, m: Int, ksub: Int): String =
     s"vector v2 stateBuckets=$stateBuckets nlist=$nlist m=$m ksub=$ksub"
 
+  /** Canonical layouts of the tombstone-aware dedup index family:
+    * corpus and bucket tables are generation-stamped (`seq`) and
+    * hive-partitioned by an id-hash bucket (`pbk`) so op scrubs and
+    * tombstone application rewrite only the partitions holding affected
+    * rows, and the per-batch admission scan prunes to the batch's
+    * buckets. */
   val dedupCorpusSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, text STRING, seq BIGINT, pbk INT")
   val dedupBucketSchema: StructType = StructType.fromDDL(
@@ -410,23 +367,23 @@ object Streams {
 
   /** A family's count-payload op log, named after its first table. */
   private def opsLog(catalog: Catalog, table: String): OpLog =
-    new OpLog(catalog.spark, catalog, table + "_ops", OpLog.countPayload)
+    new OpLog(catalog, table + "_ops", OpLog.countPayload)
 
   /** The tombstone-aware dedup family ([[Generations.Family]]). A
     * delete writes tombstones only and reads the corpus, so its view
-    * omits the bucket table (`bucketTable = None`); `stamp` is given by
-    * openers that know the banding scheme, `partOf` by compaction. */
+    * omits the bucket table (`bucketTable = None`); `stamp` (which
+    * records the `pbk` modulus) is given by openers that know the
+    * banding scheme, and read back from the corpus table by compaction. */
   def dedupFamily(
       catalog: Catalog,
       corpusTable: String,
       bucketTable: Option[String],
       tombTable: String,
-      stamp: Option[String] = None,
-      partOf: Option[Long => String] = None): Generations.Family =
+      stamp: Option[String] = None): Generations.Family =
     Generations.Family(catalog, opsLog(catalog, corpusTable),
       tombTable, dedupTombSchema, "doc_id",
-      Generations.Stamped(corpusTable, "pbk", dedupCorpusSchema, "doc_id", partOf) +:
-        bucketTable.toSeq.map(Generations.Stamped(_, "pbk", dedupBucketSchema, "id", partOf)),
+      Generations.Stamped(corpusTable, "pbk", dedupCorpusSchema, "doc_id", "doc_id") +:
+        bucketTable.toSeq.map(Generations.Stamped(_, "pbk", dedupBucketSchema, "id", "id")),
       stamp)
 
   /** The dedup family's SERVE path — the registry probe: the committed
@@ -450,11 +407,7 @@ object Streams {
       tombTable: String): DataFrame = {
     val family = dedupFamily(catalog, corpusTable, None, tombTable)
     family.heal(lenient = true)
-    val snap = family.log.snapshot()
-    graft.operators.Tombstones.live(
-      snap.visible(catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
-      snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
-      "doc_id")
+    family.live(family.log.snapshot(), corpusTable)
   }
 
   /** Delete documents from a tombstone-aware dedup corpus
@@ -507,52 +460,31 @@ object Streams {
       shingleLen: Int = 5,
       numHashes: Int = 64,
       bands: Int = 4): Unit = {
-    def pbkOf(c: org.apache.spark.sql.Column) =
-      F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-    dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable,
-      Some(dedupLayoutStamp(stateBuckets, shingleLen, numHashes, bands))
-    ).op(seq) { (snap, sv) =>
+    val family = dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable,
+      Some(dedupLayoutStamp(stateBuckets, shingleLen, numHashes, bands)))
+    family.op(seq) { (snap, sv) =>
       // in-batch id dups resolve deterministically (see Bm25Index.ingest);
-      // the pbk probe and the commit count ride the checkpoint as
-      // observed metrics (result-stage observe: exactly-once)
-      val probeObs = org.apache.spark.sql.Observation()
-      val deduped = batch
+      // the pbk probe and the commit count ride the batch checkpoint
+      val probe = family.probe(corpusTable, batch
         .select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
-        .groupBy("doc_id").agg(F.max("text").as("text"))
-        .observe(probeObs,
-          F.collect_set(pbkOf(F.col("doc_id"))).as("pbks"),
-          F.count(F.lit(1)).as("n"))
-        .localCheckpoint() // reused: victims + appends
-      val pbks = probeObs.get("pbks").asInstanceOf[Seq[Any]]
+        .groupBy("doc_id").agg(F.max("text").as("text")))
       // the batch ids' currently-live generations die at `sv`; same
       // zero-state-shuffle probe plan as admission, semi instead of anti
-      val victims = graft.operators.Tombstones.live(
-          snap.visible(catalog.readWithSchema(corpusTable, dedupCorpusSchema)),
-          snap.visible(catalog.readWithSchema(tombTable, dedupTombSchema)),
-          "doc_id")
-        .filter(F.col("pbk").isin(pbks: _*))
-        .join(F.broadcast(deduped.select("doc_id")), Seq("doc_id"), "leftsemi")
+      val victims = family.live(snap, corpusTable)
+        .filter(probe.prune)
+        .join(F.broadcast(probe.rows.select("doc_id")), Seq("doc_id"), "leftsemi")
         .select(F.col("doc_id"), F.lit(sv).as("seq"))
         .localCheckpoint() // referenced by tombstone append
-      catalog.appendPartitioned(bucketTable,
+      family.append(bucketTable,
         // MUST use the stream's banding scheme: bucket rows written under
         // different (shingleLen, numHashes, bands) would never join the
         // ingest path's (band, bk) probes — silently missing near-dups of
         // replaced content
-        graft.operators.Dedup.bucketTableMd5(deduped,
-            shingleLen = shingleLen, numHashes = numHashes, bands = bands)
-          .withColumn("seq", F.lit(sv))
-          .withColumn("pbk", pbkOf(F.col("id"))),
-        Seq("pbk"),
-        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-      catalog.appendPartitioned(corpusTable, deduped
-          .select("doc_id", "text")
-          .withColumn("seq", F.lit(sv))
-          .withColumn("pbk", pbkOf(F.col("doc_id"))),
-        Seq("pbk"),
-        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+        graft.operators.Dedup.bucketTableMd5(probe.rows,
+          shingleLen = shingleLen, numHashes = numHashes, bands = bands), sv)
+      family.append(corpusTable, probe.rows.select("doc_id", "text"), sv)
       catalog.append(tombTable, victims)
-      Seq(probeObs.get("n").asInstanceOf[Long])
+      Seq(probe("n"))
     }
   }
 
@@ -574,10 +506,9 @@ object Streams {
     // it, affected partitions derive driver-side from the tombstone ids
     // — zero probe jobs; a stamp-less family (pre-stamp warehouse)
     // falls back to the probe scan.
-    val partOf = Generations.stampBuckets(catalog.readLayoutMeta(corpusTable))
-      .map(Generations.idHashPartition)
     Generations.compact(
-      dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable, partOf = partOf),
+      dedupFamily(catalog, corpusTable, Some(bucketTable), tombTable,
+        catalog.readLayoutMeta(corpusTable)),
       maxFilesPerPartition, checkpointLog = checkpointOps)
   }
 
@@ -729,9 +660,6 @@ object Streams {
     require(pool.nonEmpty, "streamingIvfPqIndex needs a non-empty model")
     require(!replaceMode || tombTable.nonEmpty,
       "replaceMode needs the tombstone-aware layout (tombTable)")
-    val writer = vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
     tombTable match {
       case None =>
         // append-only mode on a flat table: probe-and-skip replay
@@ -745,16 +673,19 @@ object Streams {
         // table no compaction pass heals. Backfill-sized batches belong
         // in the tombstone-aware mode below (full OpLog scrub-then-redo,
         // multi-file appends fine) — prefer it in production generally.
-        writer.foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            catalog.recoverReplace(codesTable)
-            val codes = graft.operators.Similarity.ivfPqCodeTable(
-              batch, pool, nlist, m, ksub, idCol, vecCol)
-            catalog.append(codesTable,
-              Upsert.newRows(codes, catalog.read(codesTable), "neighbor_id")
+        vectors.writeStream
+          .outputMode(OutputMode.Append)
+          .option("checkpointLocation", checkpoint)
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            if (!batch.isEmpty) {
+              catalog.recoverReplace(codesTable)
+              val codes = graft.operators.Similarity.ivfPqCodeTable(
+                batch, pool, nlist, m, ksub, idCol, vecCol)
+              catalog.append(codesTable, Upsert.newRows(codes,
+                  catalog.readWithSchema(codesTable, codes.schema), "neighbor_id")
                 .coalesce(1))
+            }
           }
-        }
       case Some(tt) =>
         // tombstone-aware maintenance: codes are generation-stamped and
         // id-hash-partitioned (`pbk`), each micro-batch is one
@@ -772,61 +703,39 @@ object Streams {
         // bake in the PQ constants: refuse a mismatched reopen loudly
         val family = vectorFamily(catalog, codesTable, schema, tt,
           Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub)))
-        family.ensure()
-        val log = family.log
-        val base = baseSeq.map(log.requireFreshBase).getOrElse(log.nextBaseSeq)
-        def pbkOf(c: org.apache.spark.sql.Column) =
-          F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-        if (replaceMode)
-          // RECRAWL stream: each micro-batch is ONE replace op
-          // ([[replaceVectors]]) — re-embedded ids overwrite their
-          // live codes instead of being dropped as already-present.
-          // Tombstones accrete at the recrawl rate until
-          // [[compactVectorIndex]] applies them — compact on a cadence
-          // proportional to it
-          return writer.foreachBatch { (batch: DataFrame, id: Long) =>
+        family.writer(vectors, checkpoint, baseSeq) { (batch, seq) =>
+          if (replaceMode)
+            // RECRAWL stream: each micro-batch is ONE replace op
+            // ([[replaceVectors]]) — re-embedded ids overwrite their
+            // live codes instead of being dropped as already-present.
+            // Tombstones accrete at the recrawl rate until
+            // [[compactVectorIndex]] applies them — compact on a cadence
+            // proportional to it
             replaceVectors(catalog, codesTable, schema, tt, batch, model,
-              nlist, m, ksub, idCol, vecCol, stateBuckets,
-              seq = Some(base + id))
-          }
-        writer.foreachBatch { (batch: DataFrame, id: Long) =>
-          // one op of the family (Generations.Family.op): the snapshot
-          // answers replay flags and both tables' visibility
-          family.op(Some(base + id)) { (snap, seq) =>
-            val live = graft.operators.Tombstones.live(
-              snap.visible(catalog.readWithSchema(codesTable, schema)),
-              snap.visible(catalog.readWithSchema(tt, vectorTombSchema)),
-              "neighbor_id")
-            // coding is map-only against the frozen literal centroids;
-            // in-batch id dups resolve by dropDuplicates (a vector's
-            // code is a pure function of the embedding, so any winner
-            // codes identically). Probe values and the commit count
-            // ride their checkpoints as observed metrics — two fewer
-            // jobs per op (result-stage observes: exactly-once)
-            val probeObs = org.apache.spark.sql.Observation()
-            val deduped = graft.operators.Similarity.ivfPqCodeTable(
-                batch, pool, nlist, m, ksub, idCol, vecCol)
-              .dropDuplicates("neighbor_id")
-              .observe(probeObs,
-                F.collect_set(pbkOf(F.col("neighbor_id"))).as("pbks"),
-                F.count(F.lit(1)).as("n"))
-              .localCheckpoint() // reused: admission + append
-            val probe = probeObs.get
-            val pbks = probe("pbks").asInstanceOf[Seq[Any]]
-            val prunedIds = live
-              .filter(F.col("pbk").isin(pbks: _*)).select("neighbor_id")
-            val countObs = org.apache.spark.sql.Observation()
-            val admitted = Upsert.newRowsSized(deduped, prunedIds,
-                "neighbor_id", probe("n").asInstanceOf[Long])
-              .observe(countObs, F.count(F.lit(1)).as("n"))
-              .localCheckpoint() // referenced by the append below
-            catalog.appendPartitioned(codesTable, admitted
-                .withColumn("seq", F.lit(seq))
-                .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
-              Seq("pbk"),
-              clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
-            Seq(countObs.get("n").asInstanceOf[Long])
-          }
+              nlist, m, ksub, idCol, vecCol, stateBuckets, seq = Some(seq))
+          else
+            // one op of the family (Generations.Family.op): the snapshot
+            // answers replay flags and both tables' visibility
+            family.op(Some(seq)) { (snap, sv) =>
+              // coding is map-only against the frozen literal centroids;
+              // in-batch id dups resolve by dropDuplicates (a vector's
+              // code is a pure function of the embedding, so any winner
+              // codes identically). Probe values and the commit count
+              // ride their checkpoints as observed metrics
+              val probe = family.probe(codesTable,
+                graft.operators.Similarity.ivfPqCodeTable(
+                  batch, pool, nlist, m, ksub, idCol, vecCol)
+                  .dropDuplicates("neighbor_id"))
+              val prunedIds = family.live(snap, codesTable)
+                .filter(probe.prune).select("neighbor_id")
+              val countObs = org.apache.spark.sql.Observation()
+              val admitted = Upsert.newRowsSized(probe.rows, prunedIds,
+                  "neighbor_id", probe("n"))
+                .observe(countObs, F.count(F.lit(1)).as("n"))
+                .localCheckpoint() // referenced by the append below
+              family.append(codesTable, admitted, sv)
+              Seq(countObs.get("n").asInstanceOf[Long])
+            }
         }
     }
   }
@@ -841,18 +750,18 @@ object Streams {
       "seq BIGINT, pbk INT").fields)
 
   /** The tombstone-aware vector family ([[Generations.Family]]):
-    * `stamp` is given by openers that know the PQ constants, `partOf`
-    * by compaction. */
+    * `stamp` (which records the `pbk` modulus) is given by openers that
+    * know the PQ constants, and read back from the codes table by
+    * compaction. */
   def vectorFamily(
       catalog: Catalog,
       codesTable: String,
       codesSchema: StructType,
       tombTable: String,
-      stamp: Option[String] = None,
-      partOf: Option[Long => String] = None): Generations.Family =
+      stamp: Option[String] = None): Generations.Family =
     Generations.Family(catalog, opsLog(catalog, codesTable),
       tombTable, vectorTombSchema, "neighbor_id",
-      Seq(Generations.Stamped(codesTable, "pbk", codesSchema, "neighbor_id", partOf)),
+      Seq(Generations.Stamped(codesTable, "pbk", codesSchema, "neighbor_id", "neighbor_id")),
       stamp)
 
   /** Delete vectors from a tombstone-aware codes table
@@ -900,40 +809,24 @@ object Streams {
       seq: Option[Long] = None): Unit = {
     val pool = graft.operators.Similarity.collectPool(model)
     require(pool.nonEmpty, "replaceVectors needs a non-empty model")
-    def pbkOf(c: org.apache.spark.sql.Column) =
-      F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
-    vectorFamily(catalog, codesTable, codesSchema, tombTable,
-      Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub))
-    ).op(seq) { (snap, sv) =>
+    val family = vectorFamily(catalog, codesTable, codesSchema, tombTable,
+      Some(vectorLayoutStamp(stateBuckets, nlist, m, ksub)))
+    family.op(seq) { (snap, sv) =>
       // a vector's code is a pure function of the embedding, so any
       // in-batch dup winner codes identically; pbk probe + commit count
-      // ride the checkpoint as observed metrics (result-stage observe)
-      val probeObs = org.apache.spark.sql.Observation()
-      val coded = graft.operators.Similarity.ivfPqCodeTable(
+      // ride the batch checkpoint
+      val probe = family.probe(codesTable, graft.operators.Similarity.ivfPqCodeTable(
           batch, pool, nlist, m, ksub, idCol, vecCol)
-        .dropDuplicates("neighbor_id")
-        .observe(probeObs,
-          F.collect_set(pbkOf(F.col("neighbor_id"))).as("pbks"),
-          F.count(F.lit(1)).as("n"))
-        .localCheckpoint() // reused: victims + append
-      val probeVals = probeObs.get
-      val pbks = probeVals("pbks").asInstanceOf[Seq[Any]]
-      val victims = graft.operators.Tombstones.live(
-          snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
-          snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
-          "neighbor_id")
-        .filter(F.col("pbk").isin(pbks: _*))
-        .join(F.broadcast(coded.select("neighbor_id")), Seq("neighbor_id"),
+        .dropDuplicates("neighbor_id"))
+      val victims = family.live(snap, codesTable)
+        .filter(probe.prune)
+        .join(F.broadcast(probe.rows.select("neighbor_id")), Seq("neighbor_id"),
           "leftsemi")
         .select(F.col("neighbor_id"), F.lit(sv).as("seq"))
         .localCheckpoint() // referenced by tombstone append
-      catalog.appendPartitioned(codesTable, coded
-          .withColumn("seq", F.lit(sv))
-          .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
-        Seq("pbk"),
-        clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+      family.append(codesTable, probe.rows, sv)
       catalog.append(tombTable, victims)
-      Seq(probeVals("n").asInstanceOf[Long])
+      Seq(probe("n"))
     }
   }
 
@@ -955,8 +848,7 @@ object Streams {
     // driver-side from the tombstone ids (probe fallback if unstamped)
     Generations.compact(
       vectorFamily(catalog, codesTable, codesSchema, tombTable,
-        partOf = Generations.stampBuckets(catalog.readLayoutMeta(codesTable))
-          .map(Generations.idHashPartition)),
+        catalog.readLayoutMeta(codesTable)),
       maxFilesPerPartition, checkpointLog = checkpointOps)
 
   /** Model-table layout for the tombstone-aware vector index: one row
@@ -1074,10 +966,7 @@ object Streams {
         catalog.replaceTable(modelTable,
           mrows.filter(!F.col("seq").isin(garbage: _*)))
     }
-    val live = graft.operators.Tombstones.live(
-        snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
-        snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
-        "neighbor_id")
+    val live = family.live(snap, codesTable)
       .localCheckpoint() // reused: trigger aggregate + rebuild tombstones
     val row = live.groupBy("cell").agg(F.count(F.lit(1)).as("c"))
       .agg(F.coalesce(F.max("c"), F.lit(0L)).as("mx"),
@@ -1090,17 +979,11 @@ object Streams {
       // the derived seq (never attempted, so no scrub arm is needed — a
       // crashed rebuild's seq is never reused; the snapshot is still
       // current — nothing commits mid-span under the writer lease)
-      def pbkOf(c: org.apache.spark.sql.Column) =
-        F.pmod(F.xxhash64(c), F.lit(stateBuckets.toLong)).cast("int")
       log.derivedOp(snap) { sv =>
         val (newModel, newCodes) = graft.operators.Similarity.ivfPqIndex(
           vectors, nlist, m, ksub, idCol, vecCol)
         catalog.append(modelTable, newModel.withColumn("seq", F.lit(sv)))
-        catalog.appendPartitioned(codesTable, newCodes
-            .withColumn("seq", F.lit(sv))
-            .withColumn("pbk", pbkOf(F.col("neighbor_id"))),
-          Seq("pbk"),
-          clusterInto = Some(writeWidth(catalog.spark, stateBuckets)))
+        family.append(codesTable, newCodes, sv)
         catalog.append(tombTable,
           live.select(F.col("neighbor_id"), F.lit(sv).as("seq")))
         Seq(newCodes.count())
@@ -1135,13 +1018,9 @@ object Streams {
     // mid-serve can never pair a new model with old codes (or skew the
     // live set between the two scans)
     val snap = family.log.snapshot()
-    val live = graft.operators.Tombstones.live(
-      snap.visible(catalog.readWithSchema(codesTable, codesSchema)),
-      snap.visible(catalog.readWithSchema(tombTable, vectorTombSchema)),
-      "neighbor_id")
     graft.operators.Similarity.ivfPqTopKFromIndex(
       liveVectorModel(catalog, modelTable, snap),
-      live.drop("seq", "pbk"), queries, k, nlist, nprobe, m, ksub,
+      family.live(snap, codesTable).drop("seq", "pbk"), queries, k, nlist, nprobe, m, ksub,
       idCol, vecCol)
   }
 

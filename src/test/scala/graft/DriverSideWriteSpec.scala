@@ -58,7 +58,7 @@ class DriverSideWriteSpec extends SparkSpec {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val dir = Files.createTempDirectory("graft-driver-oplog").toString
     val cat = new Catalog(spark, dir)
-    val log = new OpLog(spark, cat, "ops",
+    val log = new OpLog(cat, "ops",
       StructType(Seq(StructField("n", LongType), StructField("bytes", LongType))))
     log.ensure()
     log.beginAttempt(1L)

@@ -8,17 +8,20 @@ import graft.sources.Catalog
 import graft.streaming.{Bm25Index, Streams}
 
 /** Pins the Spark jobs of one ingest, one delete and one replace op on a
-  * populated index family (BM25, near-dup dedup, IVF-PQ vectors). A
-  * stream ingest is counted as one whole `AvailableNow` run over one
-  * file: the op plus the stream's own start-up and source jobs. A change
-  * that adds a job to an op fails here; one that removes a job updates
+  * populated index family (BM25, near-dup dedup, IVF-PQ vectors), and
+  * the distinct SQL executions those jobs ran under. A stream ingest is
+  * counted as one whole `AvailableNow` run over one file: the op plus
+  * the stream's own start-up and source jobs. A change that adds a job
+  * or an execution to an op fails here; one that removes one updates
   * the pin.
   */
 class IndexOpJobsSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.{functions => F}
 
-  private def jobs(body: => Unit): Int = JobCount(spark.sparkContext)(body)
+  private def jobs(body: => Unit): JobCount.Tally =
+    JobCount.tally(spark.sparkContext)(body)
+  private def pin(jobs: Int, executions: Int) = JobCount.Tally(jobs, executions)
 
   private def docs(ids: Range, tag: String): DataFrame =
     ids.map(i => (i.toLong, s"$tag document $i body text with words w$i x${i % 3}"))
@@ -26,13 +29,14 @@ class IndexOpJobsSpec extends SparkSpec {
 
   test("BM25 ingest, delete and replace ops on a populated index launch their pinned jobs") {
     val cat = new Catalog(spark, Files.createTempDirectory("graft-opjobs-bm25").toString)
-    val idx = new Bm25Index(spark, cat, buckets = 8)
+    val idx = new Bm25Index(cat, buckets = 8)
     idx.ingest(docs(0 until 20, "seed"), seq = 0L)
     val counts = Seq(
       "ingest" -> jobs(idx.ingest(docs(20 until 30, "more"), seq = 1L)),
       "delete" -> jobs(idx.delete(Seq(3L, 7L, 25L).toDF("doc_id"), seq = 2L)),
       "replace" -> jobs(idx.replace(docs(1 until 4, "new"), seq = 3L)))
-    assert(counts === Seq("ingest" -> 12, "delete" -> 7, "replace" -> 13))
+    assert(counts === Seq(
+      "ingest" -> pin(12, 5), "delete" -> pin(7, 4), "replace" -> pin(13, 6)))
   }
 
   test("dedup ingest, delete and replace ops on a populated family launch their pinned jobs") {
@@ -54,7 +58,8 @@ class IndexOpJobsSpec extends SparkSpec {
         Seq(3L, 7L, 25L).toDF("doc_id"))),
       "replace" -> jobs(Streams.replaceDocsInDedup(cat, "corpus", "buckets", "tomb",
         docs(1 until 4, "new"))))
-    assert(counts === Seq("ingest" -> 33, "delete" -> 6, "replace" -> 12))
+    assert(counts === Seq(
+      "ingest" -> pin(32, 9), "delete" -> pin(6, 3), "replace" -> pin(12, 6)))
   }
 
   test("vector ingest, delete and replace ops on a populated family launch their pinned jobs") {
@@ -85,6 +90,7 @@ class IndexOpJobsSpec extends SparkSpec {
         vecs.filter($"vec_id".isin(1L, 2L, 3L)).select($"vec_id",
           F.transform($"embedding", x => -x).as("embedding")),
         model, nlist = 8, m = 4, ksub = 8)))
-    assert(counts === Seq("ingest" -> 13, "delete" -> 6, "replace" -> 13))
+    assert(counts === Seq(
+      "ingest" -> pin(13, 6), "delete" -> pin(6, 3), "replace" -> pin(13, 6)))
   }
 }

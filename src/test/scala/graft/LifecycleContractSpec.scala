@@ -89,17 +89,17 @@ class LifecycleContractSpec extends SparkSpec {
 
   test("bm25 family: delete, replace, compact each work as the first-ever op") {
     // DELETE first (no ensure() call — the op itself must materialize)
-    val i1 = new Bm25Index(spark, freshCat())
+    val i1 = new Bm25Index(freshCat())
     i1.delete(Seq(5L).toDF("doc_id"), 0L)
     assert(i1.serveBatch(Seq((1L, "any")).toDF("query_id", "term")).isEmpty)
     // REPLACE first: docs land and serve
-    val i2 = new Bm25Index(spark, freshCat())
+    val i2 = new Bm25Index(freshCat())
     i2.replace(Seq((1L, "spark spark engine"), (2L, "engine")).toDF("doc_id", "text"), 0L)
     val hits = i2.serve(Seq("spark"))
     assert(hits.select("doc_id").as[Long].collect().toSet === Set(1L),
       "replace-as-first-op must ingest and serve")
     // COMPACT first
-    val i3 = new Bm25Index(spark, freshCat())
+    val i3 = new Bm25Index(freshCat())
     i3.compact()
     assert(i3.serve(Seq("anything")).isEmpty)
   }
@@ -126,7 +126,7 @@ class LifecycleContractSpec extends SparkSpec {
       // writer-vs-maintenance shares the same scope, so the log rewrite
       // arms (compact/checkpoint) refuse too — a commit row can never be
       // appended inside a rewrite's stage→swap window
-      val log = new OpLog(spark, cat, "corpus_ops", OpLog.countPayload)
+      val log = new OpLog(cat, "corpus_ops", OpLog.countPayload)
       intercept[Catalog.MaintenanceLeaseHeld] { log.compact(log.snapshot()) }
       intercept[Catalog.MaintenanceLeaseHeld] { log.checkpoint(log.snapshot()) }
     }
@@ -142,7 +142,7 @@ class LifecycleContractSpec extends SparkSpec {
   test("bm25 op spans hold the writer lease; nested self re-entry still works") {
     val dir = Files.createTempDirectory("graft-bm25-lease").toString
     val cat = new Catalog(spark, s"$dir/wh")
-    val idx = new Bm25Index(spark, cat)
+    val idx = new Bm25Index(cat)
     idx.ensure()
     val foreign = new Catalog(spark, s"$dir/wh")
     foreign.withMaintenanceLease("ops") {
@@ -264,7 +264,7 @@ class LifecycleContractSpec extends SparkSpec {
     // silently publish UNFENCED — the commit point must refuse instead
     val dir = Files.createTempDirectory("graft-xthread").toString
     val cat = new Catalog(spark, s"$dir/wh")
-    val log = new OpLog(spark, cat, "ops", OpLog.countPayload)
+    val log = new OpLog(cat, "ops", OpLog.countPayload)
     log.ensure()
     @volatile var thrown: Throwable = null
     log.withWriter {
@@ -290,8 +290,8 @@ class LifecycleContractSpec extends SparkSpec {
     val cat = new Catalog(spark, s"$dir/wh")
     val short = new Catalog(spark, s"$dir/wh", ttlMs = 1L)
     val foreign = new Catalog(spark, s"$dir/wh")
-    val log = new OpLog(spark, cat, "ops", OpLog.countPayload)
-    val shortLog = new OpLog(spark, short, "ops", OpLog.countPayload)
+    val log = new OpLog(cat, "ops", OpLog.countPayload)
+    val shortLog = new OpLog(short, "ops", OpLog.countPayload)
     log.ensure()
     // overrun: a 1ms-TTL span sleeps past expiry, a contender breaks the
     // stale lease and runs its own span (then releases). The overrunner
@@ -320,7 +320,7 @@ class LifecycleContractSpec extends SparkSpec {
     // the fence is THREAD-scoped: another thread's healthy span must not
     // be aborted by THIS thread's lapsed lease (two streams on different
     // families in one process fail independently)
-    val otherLog = new OpLog(spark, short, "ops_b", OpLog.countPayload)
+    val otherLog = new OpLog(short, "ops_b", OpLog.countPayload)
     otherLog.ensure()
     @volatile var otherOk = false
     intercept[Catalog.WriterFenced] {
@@ -373,7 +373,7 @@ class LifecycleContractSpec extends SparkSpec {
     assert(live.select("doc_id").as[Long].collect().toSet === Set(2L))
     // fencing through the map: a TTL overrun broken by the other client
     val short = new Catalog(spark, s"$dir/wh", kv, ttlMs = 1L)
-    val log = new OpLog(spark, short, "corpus_ops", OpLog.countPayload)
+    val log = new OpLog(short, "corpus_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
       log.withWriter {
         Thread.sleep(10)
@@ -397,12 +397,12 @@ class LifecycleContractSpec extends SparkSpec {
     // ---- bm25 family
     val bcat = new Catalog(spark, s"$dir/bm", kv)
     val bother = new Catalog(spark, s"$dir/bm", kv)
-    val idx = new Bm25Index(spark, bcat)
+    val idx = new Bm25Index(bcat)
     idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
     // the layout stamp lives in the map and still refuses a
     // mismatched-bucket reopen through the OTHER client
     intercept[Catalog.LayoutMismatch] {
-      new Bm25Index(spark, bother, buckets = 32).ensure()
+      new Bm25Index(bother, buckets = 32).ensure()
     }
     bother.withMaintenanceLease("ops") {
       intercept[Catalog.MaintenanceLeaseHeld] {
@@ -446,7 +446,7 @@ class LifecycleContractSpec extends SparkSpec {
     Streams.deleteVectors(vcat, "codes", codesSchema, "codes_tomb",
       Seq(0L).toDF("neighbor_id"))
     Streams.compactVectorIndex(vcat, "codes", codesSchema, "codes_tomb")
-    val vsnap = new OpLog(spark, vcat, "codes_ops", OpLog.countPayload).snapshot()
+    val vsnap = new OpLog(vcat, "codes_ops", OpLog.countPayload).snapshot()
     val live = graft.operators.Tombstones.live(
       vsnap.visible(vcat.readWithSchema("codes", codesSchema)),
       vsnap.visible(vcat.readWithSchema("codes_tomb", Streams.vectorTombSchema)),
@@ -516,10 +516,10 @@ class LifecycleContractSpec extends SparkSpec {
 
     // ---- bm25 family
     val bcat = new Catalog(spark, s"$dir/bm", kv)
-    val idx = new Bm25Index(spark, bcat)
+    val idx = new Bm25Index(bcat)
     idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
     intercept[Catalog.LayoutMismatch] {
-      new Bm25Index(spark, new Catalog(spark, s"$dir/bm", kv),
+      new Bm25Index(new Catalog(spark, s"$dir/bm", kv),
         buckets = 32).ensure()
     }
     idx.delete(Seq(1L).toDF("doc_id"), idx.nextSeq)
@@ -562,7 +562,7 @@ class LifecycleContractSpec extends SparkSpec {
     val dforeign = new Catalog(spark, s"$dir/dd")
     Streams.replaceDocsInDedup(dcat, "corpus", "buckets", "tomb",
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"))
-    val dlog = new OpLog(spark,
+    val dlog = new OpLog(
       new Catalog(spark, s"$dir/dd", ttlMs = 1L), "corpus_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
       dlog.withWriter {
@@ -599,9 +599,9 @@ class LifecycleContractSpec extends SparkSpec {
     // ---- bm25 family
     val bcat = new Catalog(spark, s"$dir/bm")
     val bforeign = new Catalog(spark, s"$dir/bm")
-    val idx = new Bm25Index(spark, bcat)
+    val idx = new Bm25Index(bcat)
     idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L)
-    val blog = new OpLog(spark,
+    val blog = new OpLog(
       new Catalog(spark, s"$dir/bm", ttlMs = 1L), "ops", Bm25Index.statsPayload)
     intercept[Catalog.WriterFenced] {
       blog.withWriter {
@@ -640,7 +640,7 @@ class LifecycleContractSpec extends SparkSpec {
     val vforeign = new Catalog(spark, s"$dir/vv")
     Streams.replaceVectors(vcat, "codes", codesSchema, "codes_tomb",
       vecs, model, nlist = 4, m = 4, ksub = 8)
-    val vlog = new OpLog(spark,
+    val vlog = new OpLog(
       new Catalog(spark, s"$dir/vv", ttlMs = 1L), "codes_ops", OpLog.countPayload)
     intercept[Catalog.WriterFenced] {
       vlog.withWriter {
@@ -681,14 +681,14 @@ class LifecycleContractSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-layout").toString
     // bm25: bk/rk values are hash % buckets — a 32-bucket reopen of a
     // 16-bucket index would miss every stored row in the pruned scans
-    val i16 = new Bm25Index(spark, new Catalog(spark, s"$dir/bm"), buckets = 16)
+    val i16 = new Bm25Index(new Catalog(spark, s"$dir/bm"), buckets = 16)
     i16.ingest(Seq((1L, "alpha beta")).toDF("doc_id", "text"), 0L)
-    val i32 = new Bm25Index(spark, new Catalog(spark, s"$dir/bm"), buckets = 32)
+    val i32 = new Bm25Index(new Catalog(spark, s"$dir/bm"), buckets = 32)
     intercept[Catalog.LayoutMismatch] {
       i32.ingest(Seq((2L, "gamma")).toDF("doc_id", "text"), 1L)
     }
     // the original modulus reopens and keeps working
-    val again = new Bm25Index(spark, new Catalog(spark, s"$dir/bm"), buckets = 16)
+    val again = new Bm25Index(new Catalog(spark, s"$dir/bm"), buckets = 16)
     again.ingest(Seq((2L, "gamma alpha")).toDF("doc_id", "text"), 1L)
     assert(again.serve(Seq("alpha")).count() === 2L)
     // dedup family: pbk bakes in stateBuckets the same way

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.streaming.{Generations, OpLog}
 
 /** Pins for the r22 maintenance-pass optimizations: the driver-side
@@ -30,13 +32,43 @@ class MaintenanceFoldSpec extends SparkSpec {
         assert(f(r.getLong(0)) === r.getInt(1).toString,
           s"id ${r.getLong(0)} buckets $buckets")
       }
+      // ...and against the partition values Family.append stores, for a
+      // table hashed by its long id and one hashed by a string term (the
+      // serve-side bucket prune maps query terms the same way)
+      val cat = new graft.sources.Catalog(spark,
+        Files.createTempDirectory("graft-hashpart").toString)
+      val family = Generations.Family(cat,
+        new OpLog(cat, "t_ops", OpLog.countPayload), "t_tomb",
+        StructType.fromDDL("id BIGINT, seq BIGINT"), "id",
+        Seq(Generations.Stamped("ids", "p",
+            StructType.fromDDL("id BIGINT, seq BIGINT, p INT"), "id", "id"),
+          Generations.Stamped("terms", "p",
+            StructType.fromDDL("id BIGINT, term STRING, seq BIGINT, p INT"), "id", "term")),
+        stamp = Some(s"test buckets=$buckets"))
+      family.ensure()
+      family.append("ids", ids.toDF("id"), 0L)
+      val terms = ids.map(i => (i, s"t$i")) ++ Seq(-1L -> "", -2L -> "日本語", -3L -> "a b")
+      family.append("terms", terms.toDF("id", "term"), 0L)
+      val stored = cat.readWithSchema("ids", family.tables.head.schema).collect()
+      assert(stored.length === ids.size)
+      stored.foreach { r =>
+        assert(f(r.getLong(0)) === r.getInt(2).toString, s"stored id ${r.getLong(0)}")
+      }
+      val storedTerms = cat.readWithSchema("terms", family.tables(1).schema).collect()
+      assert(storedTerms.length === terms.size)
+      storedTerms.foreach { r =>
+        val t = r.getString(1)
+        assert(Generations.hashPartition(buckets, UTF8String.fromString(t), StringType)
+          === r.getInt(3), s"stored term '$t'")
+        assert(family.partitionOf("terms", t) === r.getInt(3), s"term '$t'")
+      }
     }
   }
 
   test("compactFromSnapshot preserves exactly what the job-form fold did") {
     val dir = Files.createTempDirectory("graft-foldsnap").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val log = new OpLog(spark, cat, "t_ops",
+    val log = new OpLog(cat, "t_ops",
       graft.streaming.Bm25Index.statsPayload)
     log.ensure()
     // committed 0 and 2, abandoned 1 (below HWM), open in-flight 3,
@@ -85,7 +117,7 @@ class MaintenanceFoldSpec extends SparkSpec {
     // uncommitted appends mid-op — refuse it like any stale seq
     val dir = Files.createTempDirectory("graft-snapguard").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val log = new OpLog(spark, cat, "t_ops", OpLog.countPayload)
+    val log = new OpLog(cat, "t_ops", OpLog.countPayload)
     log.ensure()
     log.beginAttempt(0L)
     log.commitCount(0L, 1L)

@@ -736,7 +736,7 @@ class StreamingSpec extends SparkSpec {
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
     graft.streaming.Streams.vectorFamily(
       cat, "codes", codesSchema, "codes_tomb").ensure()
-    val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
+    val log = new graft.streaming.OpLog(cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     val pool = graft.operators.Similarity.collectPool(model)
     def code(df: org.apache.spark.sql.DataFrame, seq: Long) =
@@ -803,7 +803,7 @@ class StreamingSpec extends SparkSpec {
     val codesSchema = graft.streaming.Streams.vectorCodesSchema(offline.schema)
     graft.streaming.Streams.vectorFamily(
       cat, "codes", codesSchema, "codes_tomb").ensure()
-    val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
+    val log = new graft.streaming.OpLog(cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     val pool = graft.operators.Similarity.collectPool(model)
     def code(df: org.apache.spark.sql.DataFrame, seq: Long) =
@@ -893,7 +893,7 @@ class StreamingSpec extends SparkSpec {
     reEmbedded.coalesce(1).write.parquet(s"$in2/b1")
     def src2 = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in2/b1")
-    val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
+    val log = new graft.streaming.OpLog(cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     def liveCodes = {
       val snap = log.snapshot()
@@ -945,7 +945,7 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.Streams.seedVectorIndexModel(
       cat, "codes", "model", model0, seq = 0L)
     val pool0 = graft.operators.Similarity.collectPool(model0)
-    val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
+    val log = new graft.streaming.OpLog(cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     cat.appendPartitioned("codes",
       graft.operators.Similarity
@@ -1076,7 +1076,7 @@ class StreamingSpec extends SparkSpec {
     val catalog = new graft.sources.Catalog(spark, s"$dir/wh")
     Streams.dedupFamily(
       catalog, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
-    val log = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
+    val log = new graft.streaming.OpLog(catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     def pbkOf(c: org.apache.spark.sql.Column) =
       F.pmod(F.xxhash64(c), F.lit(16L)).cast("int")
@@ -1174,7 +1174,7 @@ class StreamingSpec extends SparkSpec {
       catalog, "corpus", "corpus_buckets", s"$dir/cp2",
       tombTable = Some("corpus_tomb")).start()
     qAdmit.processAllAvailable(); qAdmit.stop()
-    val log = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
+    val log = new graft.streaming.OpLog(catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     def live = {
       val snap = log.snapshot()
@@ -1254,7 +1254,7 @@ class StreamingSpec extends SparkSpec {
     // base is burned), so the attempt's partial bucket rows survive as
     // INVISIBLE garbage until compaction — the visible view must
     // already be exactly-once
-    val ops = new graft.streaming.OpLog(spark, catalog, "corpus_ops",
+    val ops = new graft.streaming.OpLog(catalog, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     val snap = ops.snapshot()
     val corpus = snap.visible(
@@ -1286,7 +1286,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-partloc").toString
     val wh = s"$dir/wh"
     val cat = new graft.sources.Catalog(spark, wh)
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     // one unique term per doc so each doc's postings land in one bucket
     val docs = (0L until 20L).map(i => (i, s"tok$i tok$i uniq$i"))
@@ -1339,7 +1339,7 @@ class StreamingSpec extends SparkSpec {
     // cleared, and the serve never touches a corpus-sized sidecar
     val dir = Files.createTempDirectory("graft-bm25del").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     val docs = Seq(
       (1L, "alpha hash scan"), (2L, "hash hash merge beta"),
@@ -1395,7 +1395,7 @@ class StreamingSpec extends SparkSpec {
     // drop it as already-present
     val dir = Files.createTempDirectory("graft-bm25recrawl").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     idx.ingest(Seq(
       (1L, "alpha hash scan"), (2L, "hash hash merge beta"),
@@ -1449,8 +1449,8 @@ class StreamingSpec extends SparkSpec {
         super.appendPartitioned(table, df, partitionCols, clusterInto, sortWithin)
       }
     }
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
-    val crashingIdx = new graft.streaming.Bm25Index(spark, crashing, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
+    val crashingIdx = new graft.streaming.Bm25Index(crashing, buckets = 8)
     idx.ensure()
     val docs = Seq(
       (1L, "alpha hash scan"), (2L, "hash hash merge beta")).toDF("doc_id", "text")
@@ -1497,7 +1497,7 @@ class StreamingSpec extends SparkSpec {
     val wh = s"$dir/wh"
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     val cat = new graft.sources.Catalog(spark, wh)
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     val docs = Seq(
       (1L, "alpha hash scan"), (2L, "hash hash merge beta")).toDF("doc_id", "text")
@@ -1560,7 +1560,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bm25heal").toString
     val wh = s"$dir/wh"
     val cat = new graft.sources.Catalog(spark, wh)
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     val docs = Seq(
       (1L, "alpha hash scan"), (2L, "hash hash merge beta"),
@@ -1620,7 +1620,7 @@ class StreamingSpec extends SparkSpec {
   test("op log compaction: one file, sums/state/visibility preserved, attempts kept") {
     val dir = Files.createTempDirectory("graft-oplogcompact").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val log = new graft.streaming.OpLog(spark, cat, "t_ops",
+    val log = new graft.streaming.OpLog(cat, "t_ops",
       graft.streaming.Bm25Index.statsPayload)
     log.ensure()
     log.beginAttempt(0L); log.commitValues(0L, Seq(Some(5L), Some(50L)))
@@ -1680,11 +1680,11 @@ class StreamingSpec extends SparkSpec {
   test("op log checkpoint: history folds to one summary row; stale seqs refuse loudly") {
     val dir = Files.createTempDirectory("graft-oplogckpt").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
     (0 until 3).foreach(i => idx.ingest(
       Seq((i.toLong, s"alpha beta doc$i")).toDF("doc_id", "text"), i.toLong))
-    val log = new graft.streaming.OpLog(spark, cat, "ops",
+    val log = new graft.streaming.OpLog(cat, "ops",
       graft.streaming.Bm25Index.statsPayload)
     log.beginAttempt(3L) // crashed in-flight — must survive the fold
     val servedBefore = idx.serve(Seq("alpha", "beta"), k = 10)
@@ -1741,9 +1741,9 @@ class StreamingSpec extends SparkSpec {
     // corpus stays exactly the live one.
     val dir = Files.createTempDirectory("graft-flatserve").toString
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
-    val idx = new graft.streaming.Bm25Index(spark, cat, buckets = 8)
+    val idx = new graft.streaming.Bm25Index(cat, buckets = 8)
     idx.ensure()
-    val log = new graft.streaming.OpLog(spark, cat, "ops",
+    val log = new graft.streaming.OpLog(cat, "ops",
       graft.streaming.Bm25Index.statsPayload)
     val live = scala.collection.mutable.Map.empty[Long, String]
     def servedIds(): Set[Long] = {
@@ -1822,7 +1822,7 @@ class StreamingSpec extends SparkSpec {
       cat, "codes", codesSchema, "codes_tomb").ensure()
     graft.streaming.Streams.seedVectorIndexModel(
       cat, "codes", "model", model0, seq = 0L)
-    val log = new graft.streaming.OpLog(spark, cat, "codes_ops",
+    val log = new graft.streaming.OpLog(cat, "codes_ops",
       graft.streaming.OpLog.countPayload)
     val live = scala.collection.mutable.Map.empty[Long, Int]
     def ingest(rows: Seq[(Long, Int)]): Unit = {
@@ -1892,7 +1892,7 @@ class StreamingSpec extends SparkSpec {
     val cat = new graft.sources.Catalog(spark, s"$dir/wh")
     graft.streaming.Streams.dedupFamily(
       cat, "corpus", Some("corpus_buckets"), "corpus_tomb").ensure()
-    val log = new graft.streaming.OpLog(spark, cat, "corpus_ops",
+    val log = new graft.streaming.OpLog(cat, "corpus_ops",
       graft.streaming.OpLog.countPayload)
     val live = scala.collection.mutable.Map.empty[Long, String]
     def text(id: Long, rev: Int) =

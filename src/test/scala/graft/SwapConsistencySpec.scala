@@ -189,7 +189,7 @@ class SwapConsistencySpec extends SparkSpec {
     val coord = CommitCoordinator.copyDeleteRename(
       pause = () => Thread.sleep(1))
     val cat = new Catalog(spark, s"$dir/wh", coord)
-    val idx = new Bm25Index(spark, cat)
+    val idx = new Bm25Index(cat)
     idx.ensure()
     val tables = Seq("postings", "doc_lengths", "tombstones", "ops")
     // Validated at SCORE granularity (exact IEEE bits), not just doc_id
@@ -309,7 +309,7 @@ class SwapConsistencySpec extends SparkSpec {
     val codesSchema = Streams.vectorCodesSchema(offline.schema)
     val tables = Seq("codes", "codes_tomb", "codes_ops")
     def liveSet(): Set[Long] = {
-      val snap = new graft.streaming.OpLog(spark, cat, "codes_ops",
+      val snap = new graft.streaming.OpLog(cat, "codes_ops",
         graft.streaming.OpLog.countPayload).snapshot()
       graft.operators.Tombstones.live(
         snap.visible(cat.readWithSchema("codes", codesSchema)),
@@ -454,7 +454,7 @@ class SwapConsistencySpec extends SparkSpec {
 
     // bm25: ingest, delete, compact, serve
     val bcat = new Catalog(spark, s"$dir/bm", coord())
-    val idx = new Bm25Index(spark, bcat)
+    val idx = new Bm25Index(bcat)
     idx.ingest(Seq((1L, "alpha beta"), (2L, "alpha"), (3L, "beta gamma"))
       .toDF("doc_id", "text"), 0L)
     idx.delete(Seq(1L).toDF("doc_id"), idx.nextSeq)
@@ -475,7 +475,7 @@ class SwapConsistencySpec extends SparkSpec {
     Streams.deleteVectors(vcat, "codes", codesSchema, "codes_tomb",
       Seq(0L).toDF("neighbor_id"))
     Streams.compactVectorIndex(vcat, "codes", codesSchema, "codes_tomb")
-    val vsnap = new graft.streaming.OpLog(spark, vcat, "codes_ops",
+    val vsnap = new graft.streaming.OpLog(vcat, "codes_ops",
       graft.streaming.OpLog.countPayload).snapshot()
     val live = graft.operators.Tombstones.live(
       vsnap.visible(vcat.readWithSchema("codes", codesSchema)),
